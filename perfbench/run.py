@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Runs one benchmark workload and prints its figures as one JSON line.
 
-    python3 perfbench/run.py --workload extract_uniform --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload extract_uniform --seed 1 --seconds 8 --trace 0
 
 Run it from the repository root. The first run builds the program and the
 benchmark with sbt (offline) into the repository's `target/` directories;
@@ -25,18 +25,6 @@ ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
 RUN_TIMEOUT_S = 170
 BUILD_TIMEOUT_S = 800
-
-# JDK 17 module openings Spark needs outside spark-submit (as in build.sbt).
-ADD_OPENS = [
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-]
-
 
 def die(msg, code=2):
     print(f"[perfbench] {msg}", file=sys.stderr)
@@ -92,16 +80,17 @@ def sbt_env():
 
 
 def build(sha):
-    """Compiles program and benchmark; returns the runtime classpath."""
-    stamp = os.path.join(BUILD, "classpath.txt")
+    """Compiles program and benchmark; returns the runtime classpath and
+    the root build's JVM options, minus its heap size."""
+    stamp = os.path.join(BUILD, "build.json")
     if os.path.isfile(stamp):
         with open(stamp) as f:
-            got_sha, cp = f.read().split("\n", 1)
-        if got_sha == sha:
-            return cp.strip()
+            got = json.load(f)
+        if got["sha"] == sha:
+            return got["classpath"], got["java_options"]
     os.makedirs(BUILD, exist_ok=True)
     log = os.path.join(BUILD, "build.log")
-    cmd = ["sbt", "--batch", "-Dsbt.log.noformat=true", "compile",
+    cmd = ["sbt", "--batch", "-Dsbt.log.noformat=true", "compile", "show javaOptions",
            "export Runtime/fullClasspath"]
     with open(log, "w") as out:
         rc, _ = run_child(cmd, BUILD_TIMEOUT_S, cwd=HERE, env=sbt_env(), stdout=out,
@@ -113,9 +102,13 @@ def build(sha):
     cp = lines[-1]
     if "perfbench" not in cp or "[" in cp:
         die(f"build printed no classpath; see {log}", 1)
+    opts = [l[len("[info] * "):] for l in lines if l.startswith("[info] * ")]
+    opts = [o for o in opts if not o.startswith("-Xmx")]
+    if "--add-opens" not in opts:
+        die(f"build printed no JVM options; see {log}", 1)
     with open(stamp, "w") as f:
-        f.write(sha + "\n" + cp)
-    return cp
+        json.dump({"sha": sha, "classpath": cp, "java_options": opts}, f)
+    return cp, opts
 
 
 def run_child(cmd, timeout, **kw):
@@ -203,7 +196,7 @@ def main():
 
     sha = source_sha()
     t = time.time()
-    cp = build(sha)
+    cp, java_options = build(sha)
     build_s = time.time() - t
 
     tag = f"{args.workload}-seed{args.seed}-trace{args.trace}"
@@ -213,9 +206,8 @@ def main():
     for d in (work, os.path.join(work, "tmp"), results, logs):
         os.makedirs(d, exist_ok=True)
     artifact = os.path.join(results, tag + ".json")
-    cmd = (["java", f"-Xmx{heap}m", f"-Djava.io.tmpdir={work}/tmp", "-Duser.timezone=UTC",
-            "-Dspark.ui.enabled=false"]
-           + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
+    cmd = (["java", f"-Xmx{heap}m", f"-Djava.io.tmpdir={work}/tmp", "-Duser.timezone=UTC"]
+           + java_options
            + ["-cp", cp, "perfbench.Main",
               "--workload", args.workload, "--seed", str(args.seed),
               "--seconds", str(args.seconds), "--trace", str(args.trace),

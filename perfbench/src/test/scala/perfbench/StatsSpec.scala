@@ -2,7 +2,6 @@ package perfbench
 
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
-import graft.model.Span
 
 class StatsSpec extends AnyFunSuite {
 
@@ -71,14 +70,6 @@ class StatsSpec extends AnyFunSuite {
     assert(Checksum.rows(rows.updated(0, Row("a", 1L, 2.5, Seq(2, 1), Map("x" -> 1, "y" -> 2), null))) != h)
     val sameMap = rows.updated(0, Row("a", 1L, 2.5, Seq(1, 2), Map("y" -> 2, "x" -> 1), null))
     assert(Checksum.rows(sameMap) == h)
-  }
-
-  test("document checksum is order-sensitive over spans") {
-    val a = Span("text", "alpha", "", 0)
-    val b = Span("figure", "", "s3://m/1.png", 1)
-    assert(Checksum.doc("d1", Seq(a, b)) == Checksum.doc("d1", Seq(a, b)))
-    assert(Checksum.doc("d1", Seq(a, b)) != Checksum.doc("d1", Seq(b, a)))
-    assert(Checksum.doc("d1", Seq(a, b)) != Checksum.doc("d2", Seq(a, b)))
   }
 
   test("covered time merges overlapping intervals") {
