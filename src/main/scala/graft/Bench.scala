@@ -90,7 +90,7 @@ object Bench {
     val cfg = ExtractJob.Config(nBuckets = 32, groupSize = 32, runId = "bench",
       // skew A/B: "skew" forces the 1.2M-char megas through isolation,
       // "skew_noiso" disables isolation entirely; the production default
-      // (5M) would route them through the salted path (the measured winner
+      // (5M) would leave them in the light scan splits (the measured winner
       // at this mega size — see BASELINE.md)
       heavyWeight = if (isolateHeavy) 200000L else Long.MaxValue)
     val t0 = System.nanoTime()

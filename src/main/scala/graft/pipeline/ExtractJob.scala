@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TaskContext
@@ -24,27 +25,27 @@ import graft.tokenize.SpanTokenizer
   *    atomically renamed to `data/group=<buckets>` — a group is either fully
   *    visible or absent, so a kill loses at most one group of work. In
   *    production the rename is an Iceberg snapshot commit (Checkpoint.scala);
-  *    on re-run, group dirs whose buckets are not all manifest-committed are
-  *    swept away before processing, so output rows are exactly-once;
+  *    on re-run, group dirs (data and metrics) whose buckets are not all
+  *    manifest-committed are swept away before processing, so output rows
+  *    and metric rows are exactly-once;
   *  - file count is bounded by tasks-per-group (one file per non-empty task),
   *    NOT tasks x buckets: we deliberately do NOT partitionBy("bucket") at
-  *    write time — with a salted composite repartition every task would touch
-  *    every bucket and emit tasks x buckets small files per group, the classic
-  *    small-files failure at 1000 executors. Bucket stays a data column; the
-  *    manifest maps buckets -> group dirs for pruned reads;
+  *    write time — every scan split holds docs of every bucket, so each task
+  *    would emit one small file per bucket, tasks x buckets per group, the
+  *    classic small-files failure at 1000 executors. Bucket stays a data
+  *    column; the manifest maps buckets -> group dirs for pruned reads;
   *  - skew: doc_weight = total raw payload length; docs above `heavyWeight`
   *    are isolated onto their own partitions (a pathological mega-doc can't
-  *    hold a whole partition of normal docs hostage), everything else is
-  *    salted uniformly (hash(doc_id) is already uniform);
-  *  - per-group metrics read back only that group's files (O(group), not
-  *    O(total output) — re-reading the whole table per commit would be
-  *    quadratic across a run);
+  *    hold a whole partition of normal docs hostage), everything else stays
+  *    in the byte-balanced scan splits;
   *  - lineage: every output row carries extraction_path + the physical
-  *    partition id that produced it; per-(bucket, partition) metric rows
-  *    land next to the data (Provenance.extraction_path semantics,
-  *    reference src/pipeline/provenance.py:132-139). Metrics are append-only
-  *    history keyed by run_id; the authoritative totals live in the bucket
-  *    manifests.
+  *    partition id that produced it; the write task counts docs, spans and
+  *    error spans per (bucket, partition) as it emits the rows, and those
+  *    metric rows land in `metrics/group=<buckets>` next to the data
+  *    (Provenance.extraction_path semantics, reference
+  *    src/pipeline/provenance.py:132-139). Metrics are append-only history
+  *    keyed by run_id; the authoritative totals live in the bucket manifests,
+  *    which are summed from the same counts.
   */
 object ExtractJob {
 
@@ -68,7 +69,6 @@ object ExtractJob {
       nBuckets: Int = 32,
       groupSize: Int = 8,
       heavyWeight: Long = 5000000L,
-      saltMod: Int = 64,
       // Heavy-branch relocation: heavy docs are spread over this many PINNED
       // partitions (REPARTITION_BY_NUM, not AQE-coalescible) so a
       // kernel+write task carries ~1-2 mega-docs. The relocation shuffle is
@@ -84,16 +84,6 @@ object ExtractJob {
       // few partitions re-creates the funnel via hash-collision stragglers
       // (128 parts measured 35% slower at c16 than 512).
       heavyParts: Int = 256,
-      // Salted light-branch shuffle, OFF by default (round-6 measurement):
-      // with heavy docs isolated onto their own partitions, the remaining
-      // light work is byte-proportional and parquet scan splits are already
-      // byte-balanced (maxPartitionBytes packing), so the salt shuffle
-      // moved the full corpus bytes through a shuffle for no balance gain —
-      // removing it cut the c16 skew leg ~9% and left c4 unchanged (A/B in
-      // OPTIMIZATION_r06.md). Turn back on for sources whose per-row WORK
-      // is not byte-proportional (then byte-balanced splits are not
-      // work-balanced and the salt spread earns its shuffle).
-      saltLight: Boolean = false,
       // Output writer options. Dictionary encoding is disabled by default:
       // extracted span text is high-cardinality, so the dictionary pass
       // burns encoder CPU and memory only to overflow and fall back —
@@ -103,14 +93,17 @@ object ExtractJob {
         Map("parquet.enable.dictionary" -> "false"),
       tokenizer: SpanTokenizer.Config = SpanTokenizer.default,
       runId: String = "run",
-      // test hook: simulate a crash after N commit groups
-      failAfterGroups: Option[Int] = None,
-      // test hook: simulate a crash after N BUCKET manifest commits — lands
-      // inside the per-bucket commit loop, the window the sweep's manifest
-      // revocation exists for
+      // test hook: simulate a crash once N bucket manifests have been
+      // committed in this run (checked before each manifest commit)
       failAfterBucketCommits: Option[Int] = None)
 
-  /** Thrown by the failAfterBucketCommits test hook (simulated crash). */
+  /** Thrown by the `failAfterBucketCommits` test hook: a simulated crash
+    * right before a bucket manifest commit. When N is a multiple of
+    * `groupSize` it lands after the next group's data and metrics are in
+    * place but before any of its manifests (a torn group); otherwise it
+    * lands inside a group's per-bucket commit loop, the window the sweep's
+    * manifest revocation exists for.
+    */
   final class SimulatedCrash extends RuntimeException("simulated crash")
 
   final case class RunStats(
@@ -119,6 +112,16 @@ object ExtractJob {
       nDocs: Long,
       nSpans: Long,
       nErrors: Long)
+
+  /** One `metrics` table row (without its run_id): what one write task
+    * emitted for one bucket.
+    */
+  final case class MetricRow(
+      bucket: Int,
+      partition_id: Int,
+      n_docs: Long,
+      n_spans: Long,
+      n_errors: Long)
 
   /** One extracted output row (long-lived storage schema). */
   final case class OutRow(
@@ -139,9 +142,10 @@ object ExtractJob {
   private def deleteRecursively(p: Path): Unit = Manifests.deleteRecursively(p)
 
   /** Sweep stale state from a previous crashed run: temp dirs, and any group
-    * dir whose buckets are not ALL manifest-committed (a crash between the
-    * group rename and its manifest writes leaves such a dir; its buckets will
-    * be reprocessed, so the dir must go to keep output exactly-once).
+    * dir under `data/` or `metrics/` whose buckets are not ALL
+    * manifest-committed (a crash between the group rename and its manifest
+    * writes leaves such dirs; their buckets will be reprocessed, so the dirs
+    * must go to keep data and metric rows exactly-once).
     *
     * Crash WINDOW inside the per-bucket manifest loop: a group dir can exist
     * with only SOME of its buckets committed. Deleting the dir alone would
@@ -150,37 +154,33 @@ object ExtractJob {
     * also REVOKES the manifests of every bucket named in it, making the whole
     * group reprocess. The group is thus the atomic commit unit; bucket
     * manifests within a fully-present group remain the resume granularity.
-    * Returns the committed set after revocations.
+    * Each root is swept on its own, so a crash mid-sweep (data dir deleted,
+    * its metrics dir not yet) leaves an orphan that the next sweep removes
+    * by the same rule. Returns the committed set after revocations.
     */
   private def sweepUncommitted(outDir: String, store: SnapshotStore,
       committed: Set[Int]): Set[Int] = {
+    def list(dir: Path, prefix: String): Seq[Path] =
+      if (!Files.isDirectory(dir)) Nil
+      else scala.util.Using.resource(Files.list(dir))(
+        _.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix)).toSeq)
     val root = Paths.get(outDir)
-    if (!Files.isDirectory(root)) return committed
-    scala.util.Using.resource(Files.list(root))(
-      _.iterator().asScala
-        .filter(_.getFileName.toString.startsWith(".tmp-group-"))
-        .toSeq.foreach(deleteRecursively))
+    list(root, ".tmp-group-").foreach(deleteRecursively)
     var alive = committed
-    val dataDir = root.resolve("data")
-    if (!Files.isDirectory(dataDir)) return alive
-    scala.util.Using.resource(Files.list(dataDir))(
-      _.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("group="))
-        .toSeq)
-      .foreach { d =>
-        val buckets = d.getFileName.toString.stripPrefix("group=")
-          .split('-').flatMap(s => scala.util.Try(s.toInt).toOption)
-        if (!buckets.forall(committed.contains)) {
-          // Revoke FIRST, then delete: a crash after the revokes leaves a
-          // group dir with not-all-committed buckets, which the next sweep
-          // deletes and re-revokes safely (idempotent). The reverse order
-          // has a window where the data is gone but manifests still claim
-          // the committed buckets done — those rows would be lost forever.
-          buckets.foreach(store.revoke)
-          deleteRecursively(d)
-          alive = alive -- buckets
-        }
+    for (sub <- Seq("data", "metrics"); d <- list(root.resolve(sub), "group=")) {
+      val buckets = d.getFileName.toString.stripPrefix("group=")
+        .split('-').flatMap(s => scala.util.Try(s.toInt).toOption)
+      if (!buckets.forall(committed.contains)) {
+        // Revoke FIRST, then delete: a crash after the revokes leaves a
+        // group dir with not-all-committed buckets, which the next sweep
+        // deletes and re-revokes safely (idempotent). The reverse order
+        // has a window where the data is gone but manifests still claim
+        // the committed buckets done — those rows would be lost forever.
+        buckets.foreach(store.revoke)
+        deleteRecursively(d)
+        alive = alive -- buckets
       }
+    }
     alive
   }
 
@@ -217,94 +217,89 @@ object ExtractJob {
     val tok = cfg.tokenizer
 
     groups.zipWithIndex.foreach { case (group, gi) =>
-      if (cfg.failAfterGroups.forall(gi < _)) {
-        // At 10^12 scale this filter is partition pruning on the bucketed
-        // input table (each group scans only its own buckets); locally it
-        // re-derives the input per group — bench runs use one group.
-        val inGroup = keyed.filter(col("bucket").isin(group.map(Integer.valueOf): _*))
-        // Light docs: salted hash repartition (uniform). Heavy docs: their own
-        // repartition by doc_id. The union CONCATENATES the two partition
-        // sets without another shuffle, so no light doc ever shares a
-        // partition with a mega-doc — a straggler mega-doc can only delay
-        // its own partition. The two branches are two scans of the input; on
-        // the production table the weight predicate pushes into row-group
-        // stats (cluster by weight at ingest), so the heavy scan is ~free.
-        //
-        // The heavy repartition PINS its partition count (round-6 fix). A
-        // column-only repartition is an AQE-coalescible shuffle
-        // (REPARTITION_BY_COL), and AQE's byte-targeted coalescing was
-        // silently undoing this whole layout: measured on the skewed bench
-        // corpus at local[16] x 4 waves, the heavy branch's 64 partitions
-        // coalesced to SIX carrying 14-25 mega-docs EACH — the exact
-        // all-megas-through-one-task funnel the isolation exists to prevent,
-        // and the write-stage wall behind the sub-0.8 skew scaling readings
-        // of rounds 3-5. Pinned at `shuffle.partitions x heavyFanout`, each
-        // mega lands alone in its own kernel+write task (an empty heavy
-        // partition costs a no-op task launch). The light branch skips the
-        // shuffle entirely by default (see Config.saltLight): scan splits
-        // are byte-balanced, which IS the balance the salt bought, minus a
-        // full corpus pass through the shuffle machinery. AQE still
-        // coalesces every other shuffle in the job (metrics aggregation,
-        // the opt-in salted path).
-        val spNum = spark.sessionState.conf.numShufflePartitions
-        val lightRaw = inGroup.filter(col("weight") < heavy)
-        val light =
-          if (cfg.saltLight)
-            lightRaw.repartition(spNum, col("bucket"),
-              pmod(xxhash64(col("doc_id")), lit(cfg.saltMod)))
-          else lightRaw
-        val heavyDs = inGroup.filter(col("weight") >= heavy)
-          .repartition(cfg.heavyParts, col("doc_id"))
-        // heavy partitions FIRST: union concatenates partition lists and
-        // Spark schedules tasks in partition order — longest-processing-
-        // time-first lets the mega-doc tasks run while light tasks pack
-        // around them instead of starting after the lights drain
-        val part = heavyDs.unionByName(light)
-        val extracted = part.select(col("doc_id"), col("spans")).as[Doc]
-          .mapPartitions { it =>
-            val pid = TaskContext.getPartitionId()
-            SpanTokenizer.extractPartition(it, tok).map { e =>
-              OutRow(e.doc_id, e.spans, e.n_spans, e.n_errors, e.modalities,
-                e.extraction_path :+ s"commit_group:$gi", pid,
-                bucketOf(e.doc_id, nB))
-            }
+      // At 10^12 scale this filter is partition pruning on the bucketed
+      // input table (each group scans only its own buckets); locally it
+      // re-derives the input per group — bench runs use one group.
+      val inGroup = keyed.filter(col("bucket").isin(group.map(Integer.valueOf): _*))
+      // Light docs: the scan splits as they are. Heavy docs: their own
+      // repartition by doc_id. The union CONCATENATES the two partition
+      // sets without another shuffle, so no light doc ever shares a
+      // partition with a mega-doc — a straggler mega-doc can only delay
+      // its own partition. The two branches are two scans of the input; on
+      // the production table the weight predicate pushes into row-group
+      // stats (cluster by weight at ingest), so the heavy scan is ~free.
+      //
+      // The heavy repartition PINS its partition count (round-6 fix). A
+      // column-only repartition is an AQE-coalescible shuffle
+      // (REPARTITION_BY_COL), and AQE's byte-targeted coalescing was
+      // silently undoing this whole layout: measured on the skewed bench
+      // corpus at local[16] x 4 waves, the heavy branch's 64 partitions
+      // coalesced to SIX carrying 14-25 mega-docs EACH — the exact
+      // all-megas-through-one-task funnel the isolation exists to prevent,
+      // and the write-stage wall behind the sub-0.8 skew scaling readings
+      // of rounds 3-5. Pinned at the data-sized `Config.heavyParts` (256),
+      // a kernel+write task carries ~1-2 mega-docs (an empty heavy
+      // partition costs a no-op task launch). The light branch takes no
+      // shuffle: scan splits are byte-balanced (maxPartitionBytes packing)
+      // and, with heavy docs isolated, the light work is byte-proportional;
+      // a salted light repartition measured slower (OPTIMIZATION_r06.md).
+      val light = inGroup.filter(col("weight") < heavy)
+      val heavyDs = inGroup.filter(col("weight") >= heavy)
+        .repartition(cfg.heavyParts, col("doc_id"))
+      // heavy partitions FIRST: union concatenates partition lists and
+      // Spark schedules tasks in partition order — longest-processing-
+      // time-first lets the mega-doc tasks run while light tasks pack
+      // around them instead of starting after the lights drain
+      val part = heavyDs.unionByName(light)
+      // Each write task counts what it emits per bucket and publishes the
+      // counts when it ends. The write is the job's result stage, and Spark
+      // applies a successful result task's accumulator update exactly once
+      // (failed and duplicate attempts are dropped), so the metric rows
+      // match the committed files without reading them back.
+      val counted = spark.sparkContext.collectionAccumulator[MetricRow](s"metrics-$gi")
+      val extracted = part.select(col("doc_id"), col("spans")).as[Doc]
+        .mapPartitions { it =>
+          val ctx = TaskContext.get()
+          val pid = ctx.partitionId()
+          val counts = mutable.HashMap.empty[Int, Array[Long]] // docs, spans, errors
+          ctx.addTaskCompletionListener[Unit] { _ =>
+            counts.foreach { case (b, c) => counted.add(MetricRow(b, pid, c(0), c(1), c(2))) }
           }
-
-        val gname = group.mkString("-")
-        val tmp = Paths.get(outDir, s".tmp-group-$gname")
-        extracted.write.options(cfg.writeOptions)
-          .mode(SaveMode.Overwrite).parquet(tmp.toString)
-        val target = Paths.get(outDir, "data", s"group=$gname")
-        Files.createDirectories(target.getParent)
-        deleteRecursively(target) // stale uncommitted dir from a crashed run
-        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-
-        // metric rows at (bucket, partition) granularity — the per-partition
-        // lineage record written alongside each commit; reads ONLY this
-        // group's files. The read pins the just-written schema explicitly:
-        // schema inference otherwise merges footers across every output
-        // file, a driver-side fixed cost that grows with the task count and
-        // eats into the faster leg's scaling (Amdahl).
-        val metrics = spark.read.schema(extracted.schema).parquet(target.toString)
-          .groupBy(col("bucket"), col("partition_id"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("n_spans")).as("n_spans"),
-            sum(col("n_errors")).as("n_errors"))
-          .withColumn("run_id", lit(cfg.runId))
-        metrics.write.mode(SaveMode.Append).parquet(s"$outDir/metrics")
-
-        val perBucket = metrics.groupBy("bucket")
-          .agg(sum("n_docs").as("d"), sum("n_spans").as("s"), sum("n_errors").as("e"))
-          .collect()
-          .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-          .toMap
-        group.foreach { b =>
-          if (cfg.failAfterBucketCommits.exists(processed.length >= _))
-            throw new SimulatedCrash
-          val (d, s, e) = perBucket.getOrElse(b, (0L, 0L, 0L))
-          store.commit(BucketManifest(b, d, s, e, cfg.runId))
-          totDocs += d; totSpans += s; totErrors += e
-          processed = processed :+ b
+          SpanTokenizer.extractPartition(it, tok).map { e =>
+            val b = bucketOf(e.doc_id, nB)
+            val c = counts.getOrElseUpdate(b, new Array[Long](3))
+            c(0) += 1; c(1) += e.n_spans; c(2) += e.n_errors
+            OutRow(e.doc_id, e.spans, e.n_spans, e.n_errors, e.modalities,
+              e.extraction_path :+ s"commit_group:$gi", pid, b)
+          }
         }
+
+      val gname = group.mkString("-")
+      val tmp = Paths.get(outDir, s".tmp-group-$gname")
+      extracted.write.options(cfg.writeOptions)
+        .mode(SaveMode.Overwrite).parquet(tmp.toString)
+      val target = Paths.get(outDir, "data", s"group=$gname")
+      Files.createDirectories(target.getParent)
+      deleteRecursively(target) // stale uncommitted dir from a crashed run
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+
+      // Like the data dir, the group's metrics dir counts only once all its
+      // buckets' manifests are committed (the sweep removes it otherwise),
+      // so a crash mid-write needs no rename to stay exactly-once.
+      val rows = counted.value.asScala.toSeq
+      rows.toDF().withColumn("run_id", lit(cfg.runId)).coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/metrics/group=$gname")
+
+      val perBucket = rows.groupMapReduce(_.bucket)(r => (r.n_docs, r.n_spans, r.n_errors)) {
+        case ((d1, s1, e1), (d2, s2, e2)) => (d1 + d2, s1 + s2, e1 + e2)
+      }
+      group.foreach { b =>
+        if (cfg.failAfterBucketCommits.exists(processed.length >= _))
+          throw new SimulatedCrash
+        val (d, s, e) = perBucket.getOrElse(b, (0L, 0L, 0L))
+        store.commit(BucketManifest(b, d, s, e, cfg.runId))
+        totDocs += d; totSpans += s; totErrors += e
+        processed = processed :+ b
       }
     }
     RunStats(processed, committed.toSeq.sorted, totDocs, totSpans, totErrors)

@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{count, lit, sum}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Doc
 import graft.pipeline.{ExtractJob, LocalManifestStore}
@@ -29,20 +30,25 @@ class ExtractJobSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft_job").toString
     val nDocs = 600
     val cfg = ExtractJob.Config(nBuckets = 16, groupSize = 4, runId = "r1",
-      failAfterGroups = Some(2))
+      failAfterBucketCommits = Some(8))
 
-    val first = ExtractJob.run(spark, docs(nDocs), out, cfg)
-    assert(first.processedBuckets.length == 8)
-    assert(first.skippedBuckets.isEmpty)
+    // the crash lands after the third group's data and metrics are written
+    // but before any of its manifests, so the resume must sweep that group
+    intercept[ExtractJob.SimulatedCrash] {
+      ExtractJob.run(spark, docs(nDocs), out, cfg)
+    }
     val store = new LocalManifestStore(out)
-    assert(store.committedBuckets() == first.processedBuckets.toSet)
+    val firstBuckets = store.committedBuckets()
+    assert(firstBuckets.size == 8)
 
-    // resume: same job, no failure injection
+    // resume with no failure injection, in one group of 8: no same-named
+    // group overwrites the torn group's data and metrics dirs, so only the
+    // sweep can remove them
     val second = ExtractJob.run(spark, docs(nDocs), out,
-      cfg.copy(failAfterGroups = None, runId = "r2"))
-    assert(second.skippedBuckets.toSet == first.processedBuckets.toSet)
+      cfg.copy(groupSize = 8, failAfterBucketCommits = None, runId = "r2"))
+    assert(second.skippedBuckets.toSet == firstBuckets)
     assert(second.processedBuckets.length == 8)
-    assert((first.processedBuckets ++ second.processedBuckets).toSet == (0 until 16).toSet)
+    assert(firstBuckets ++ second.processedBuckets == (0 until 16).toSet)
 
     // every doc present exactly once
     val data = spark.read.parquet(s"$out/data")
@@ -50,7 +56,7 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(data.groupBy("doc_id").count().filter("count > 1").count() == 0)
 
     // first-run buckets carry run r1 manifests, second-run r2
-    assert(first.processedBuckets.forall(b => store.readManifest(b).exists(_.runId == "r1")))
+    assert(firstBuckets.forall(b => store.readManifest(b).exists(_.runId == "r1")))
     assert(second.processedBuckets.forall(b => store.readManifest(b).exists(_.runId == "r2")))
 
     // manifests agree with the data
@@ -61,7 +67,7 @@ class ExtractJobSpec extends AnyFunSuite {
     }
 
     // a third run is a no-op
-    val third = ExtractJob.run(spark, docs(nDocs), out, cfg.copy(failAfterGroups = None))
+    val third = ExtractJob.run(spark, docs(nDocs), out, cfg.copy(failAfterBucketCommits = None))
     assert(third.processedBuckets.isEmpty && third.skippedBuckets.length == 16)
 
     // span-order invariant on the stored output
@@ -74,10 +80,20 @@ class ExtractJobSpec extends AnyFunSuite {
     // per-partition lineage metrics exist and reconcile with totals
     val metrics = spark.read.parquet(s"$out/metrics")
     assert(metrics.columns.toSet ==
-      Set("bucket", "partition_id", "n_docs", "n_spans", "n_errors", "run_id"))
-    val mDocs = metrics.agg(org.apache.spark.sql.functions.sum("n_docs")).head.getLong(0)
-    assert(mDocs == nDocs)
+      Set("bucket", "partition_id", "n_docs", "n_spans", "n_errors", "run_id", "group"))
+    assert(metricDocs(out) == nDocs)
+    // ...and equal the output read back per (bucket, partition), row for row
+    def rows(df: DataFrame) = df.collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+      .toSeq.sorted
+    val readBack = data.groupBy("bucket", "partition_id")
+      .agg(count(lit(1)), sum("n_spans"), sum("n_errors"))
+    assert(rows(metrics.select("bucket", "partition_id", "n_docs", "n_spans", "n_errors")) ==
+      rows(readBack))
   }
+
+  private def metricDocs(out: String): Long =
+    spark.read.parquet(s"$out/metrics").agg(sum("n_docs")).head().getLong(0)
 
   test("crash INSIDE the per-bucket commit loop loses no data on resume") {
     // Window: group dir renamed into place, only some of its bucket
@@ -108,6 +124,8 @@ class ExtractJobSpec extends AnyFunSuite {
       assert(store.readManifest(b).map(_.nDocs).contains(perBucket.getOrElse(b, 0L)))
       assert(store.readManifest(b).exists(_.runId == "c2"))
     }
+    // the torn group's metric rows were swept with its data
+    assert(metricDocs(out) == nDocs)
   }
 
   test("mega-docs are isolated onto their own partitions") {
