@@ -163,15 +163,8 @@ object Bench {
     spark.stop()
   }
 
-  /** Bench temp root: tmpfs when available (a single shared disk is a
-    * local-only artifact — a real 4N cluster has 4N local disks).
-    */
-  private lazy val tmpBase: String = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) {
-      val d = new java.io.File(shm, "graft-bench"); d.mkdirs(); d.getAbsolutePath
-    } else System.getProperty("java.io.tmpdir")
-  }
+  /** Bench temp root (see [[TempRoot]]: a real 4N cluster has 4N local disks). */
+  private lazy val tmpBase: String = TempRoot("graft-bench").toString
 
   /** 1-minute system load average (contention evidence for the artifact). */
   private def loadAvg(): Double =

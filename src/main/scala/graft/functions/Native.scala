@@ -100,6 +100,11 @@ case class FloatVecDot(left: Expression, right: Expression)
   * score is bit-identical and the DuckDB oracle is unchanged. The subspace
   * width is derived as `q.length / code.length`.
   *
+  * Contract: `q.length` must be a multiple of `code.length` (both 0 is the
+  * empty distance 0.0); anything else fails the row with an
+  * IllegalArgumentException rather than silently dropping the trailing
+  * dimensions.
+  *
   * Why native (guide §4 / round-6 measurement): a Spark 4 Scala UDF pays
   * ~40µs PER CALL just converting its collection arguments (measured: a
   * `Seq[Int] => Double` UDF that only reads `.length` costs 1.7 s over the
@@ -199,7 +204,9 @@ object NativeKernels {
       cb: org.apache.spark.sql.catalyst.util.ArrayData): Double = {
     val n = q.numElements()
     val m = code.numElements()
-    val sd = if (m == 0) n else n / m
+    require(if (m == 0) n == 0 else n % m == 0,
+      s"pq_dist: query length $n is not a multiple of code length $m")
+    val sd = if (m == 0) 0 else n / m
     var sum = 0.0
     var s = 0
     while (s < m) {

@@ -341,14 +341,10 @@ object ExtractionQ {
     import graft.pipeline.ReviewSink
     // The dir must outlive this call (the returned DataFrame reads it
     // lazily), so cleanup is deferred to JVM exit rather than leaked.
-    // tmpfs when available: the queue write + read-back otherwise lands on
-    // the shared system disk (same per-executor-storage rationale as
-    // Bench.tmpBase and the streaming checkpoint root).
-    val shm = new java.io.File("/dev/shm")
+    // Rooted in graft.TempRoot so the queue write + read-back stays off the
+    // shared system disk when tmpfs is available.
     val outPath =
-      if (shm.isDirectory && shm.canWrite)
-        java.nio.file.Files.createTempDirectory(shm.toPath, "graft_review")
-      else java.nio.file.Files.createTempDirectory("graft_review")
+      java.nio.file.Files.createTempDirectory(graft.TempRoot("graft-review"), "x26")
     tempDirHook
     tempDirs.add(outPath.toFile)
     val out = outPath.toString

@@ -7,13 +7,11 @@ import T._
 
 /** Structured Streaming surface (SURVEY.md §2.10): the events table replayed
   * as a file stream through a windowed aggregation. Locally the stream is
-  * driven to completion synchronously (memory sink + processAllAvailable);
-  * in production the same plan runs continuously with
+  * driven to completion synchronously (`replay`: memory sink +
+  * awaitTermination); in production the same plan runs continuously with
   * `Trigger.AvailableNow` + a real sink and a watermark bounding state.
   */
 object StreamingQ {
-
-  private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Streaming checkpoint root on tmpfs when available. Without an explicit
     * location every stateful query checkpoints its offset/commit logs and
@@ -21,19 +19,12 @@ object StreamingQ {
     * disk — with 32 shuffle partitions a single replayed micro-batch
     * performs hundreds of small synchronous writes+renames there, and that
     * disk I/O (not the join/aggregation) dominated the replay harness's
-    * wall-clock in round 5. tmpfs models per-executor local storage exactly
-    * as the bench's scaling corpus does (Bench.tmpBase rationale); on a real
-    * cluster the checkpoint lives on each executor's local disk + a durable
-    * store, both of which scale with the cluster.
+    * wall-clock in round 5. See [[graft.TempRoot]] for why tmpfs stands in
+    * for per-executor local storage; on a real cluster the checkpoint lives
+    * on each executor's local disk + a durable store, both of which scale
+    * with the cluster.
     */
-  private lazy val ckptBase: java.nio.file.Path = {
-    val shm = new java.io.File("/dev/shm")
-    val root =
-      if (shm.isDirectory && shm.canWrite) new java.io.File(shm, "graft-stream-ckpt")
-      else new java.io.File(System.getProperty("java.io.tmpdir"), "graft-stream-ckpt")
-    root.mkdirs()
-    root.toPath
-  }
+  private lazy val ckptBase: java.nio.file.Path = graft.TempRoot("graft-stream-ckpt")
 
   /** Run `f` with a fresh checkpoint dir; the dir is deleted afterwards (the
     * memory sink holds the results in the driver, so nothing outlives it).
@@ -55,15 +46,45 @@ object StreamingQ {
     * alone dropped 3.5s -> 0.9s). Partition count does not affect any
     * result: state operators are key-partitioned and the watermark is
     * global. On a real cluster size this to keep per-store state in the
-    * 10⁴-10⁶-row band (SPARK_GRAFT_STREAM_SHUFFLE overrides). The session
-    * value is restored after the stream finishes — batch queries planned
-    * later are untouched.
+    * 10⁴-10⁶-row band.
     */
-  private def withStateParts[A](spark: SparkSession)(f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
-    try f finally spark.conf.set(key, prev)
+  private val StateParts = "8"
+
+  /** Replay the events table as a file stream (one file per trigger) through
+    * the plan `build` makes from it, run to completion into a memory sink,
+    * and return the sink's rows. `build` gets the replay session and an
+    * `events()` source factory (call it once per independent source).
+    *
+    * The stream runs on a session of its own: the caller's modifiable SQL
+    * settings (session time zone included) are copied in and the shuffle
+    * partitions set to [[StateParts]], so the caller's session conf is never
+    * touched (no set/restore race under concurrent use) and the sink's temp
+    * view lands in the replay session's catalog, not the caller's.
+    */
+  private def replay(spark: SparkSession, dir: String, outputMode: String)(
+      build: (SparkSession, () => DataFrame) => DataFrame): DataFrame = {
+    val ss = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (spark.conf.isModifiable(k)) ss.conf.set(k, v)
+    }
+    ss.conf.set("spark.sql.shuffle.partitions", StateParts)
+    val schema = load(ss, dir, "events").schema
+    val events = () => ss.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .option("pathGlobFilter", "events.parquet")
+      .parquet(dir)
+    val name = "graft_stream"
+    withCkpt { ckpt =>
+      build(ss, events).writeStream
+        .outputMode(outputMode)
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+    ss.table(name)
   }
 
   /** Hourly tumbling-window counts computed by a streaming query; returns the
@@ -76,29 +97,13 @@ object StreamingQ {
     * exists to pin the window-aggregation semantics against the q17 batch
     * oracle end-to-end.
     */
-  def s01StreamHourly(spark: SparkSession, dir: String): DataFrame = {
-    val schema = load(spark, dir, "events").schema
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), dbl(sum(dec(col("value")))).as("sum_value"))
-    withStateParts(spark) { withCkpt { ckpt =>
-      val q = stream.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    spark.table(name)
-      .select(col("window.start").as("hour"), col("event_type"), col("n"), col("sum_value"))
+  def s01StreamHourly(spark: SparkSession, dir: String): DataFrame =
+    replay(spark, dir, "complete") { (_, events) =>
+      events()
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"), dbl(sum(dec(col("value")))).as("sum_value"))
+    }.select(col("window.start").as("hour"), col("event_type"), col("n"), col("sum_value"))
       .orderBy("hour", "event_type")
-  }
 
   /** Watermarked append-mode stream: hourly windows emitted only once the
     * 2-hour event-time watermark passes the window end — the bounded-state
@@ -107,32 +112,16 @@ object StreamingQ {
     * exactly as they would be mid-stream; the oracle applies the same
     * cutoff: window_end <= max(ts) - 2h.
     */
-  def s03WatermarkAppend(spark: SparkSession, dir: String): DataFrame = {
-    val schema = load(spark, dir, "events").schema
-    val name = s"graft_stream_wm_${counter.incrementAndGet()}"
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      // event-time watermarks require TIMESTAMP (table stores NTZ; session TZ is UTC)
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    withStateParts(spark) { withCkpt { ckpt =>
-      val q = stream.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    spark.table(name)
-      .select(col("window.start").as("hour"), col("event_type"), col("n"))
+  def s03WatermarkAppend(spark: SparkSession, dir: String): DataFrame =
+    replay(spark, dir, "append") { (_, events) =>
+      events()
+        // event-time watermarks require TIMESTAMP (table stores NTZ; session TZ is UTC)
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .withWatermark("ts", "2 hours")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+    }.select(col("window.start").as("hour"), col("event_type"), col("n"))
       .orderBy("hour", "event_type")
-  }
 
   /** Streaming dedup: the replayed stream is artificially DOUBLED (each
     * event emitted twice) and `dropDuplicatesWithinWatermark` over event_id
@@ -148,34 +137,18 @@ object StreamingQ {
     * inside the horizon are withheld on a finite replay, exactly as they
     * would be mid-stream).
     */
-  def s04StreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val schema = load(spark, dir, "events").schema
-    val name = s"graft_stream_dd_${counter.incrementAndGet()}"
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withColumn("copy", explode(array(lit(1), lit(2)))) // plant duplicates
-      .drop("copy")
-      .withWatermark("ts", "2 hours")
-      .dropDuplicatesWithinWatermark("event_id")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    withStateParts(spark) { withCkpt { ckpt =>
-      val q = stream.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    spark.table(name)
-      .select(col("window.start").as("hour"), col("event_type"), col("n"))
+  def s04StreamDedup(spark: SparkSession, dir: String): DataFrame =
+    replay(spark, dir, "append") { (_, events) =>
+      events()
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .withColumn("copy", explode(array(lit(1), lit(2)))) // plant duplicates
+        .drop("copy")
+        .withWatermark("ts", "2 hours")
+        .dropDuplicatesWithinWatermark("event_id")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+    }.select(col("window.start").as("hour"), col("event_type"), col("n"))
       .orderBy("hour", "event_type")
-  }
 
   /** Stateful stream: per-user running event count + last event type,
     * computed by the ACTUAL streaming execution path — groupByKey +
@@ -191,41 +164,27 @@ object StreamingQ {
   def s02UserState(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    val schema = load(spark, dir, "events").schema
-    val name = s"graft_stream_st_${counter.incrementAndGet()}"
-    val events = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .select(col("user_id").cast("long"),
-        unix_micros(col("ts").cast("timestamp")).as("tsu"),
-        col("event_id").cast("long"), col("event_type"))
-      .as[(Long, Long, Long, String)]
-    val updated = events.groupByKey(_._1)
-      .mapGroupsWithState[(Long, Long, Long, String), (Long, Long, String)](
-        GroupStateTimeout.NoTimeout) { case (uid, it, state) =>
-        var (n, bestTs, bestId, bestType) =
-          state.getOption.getOrElse((0L, Long.MinValue, Long.MinValue, ""))
-        it.foreach { case (_, tsu, eid, et) =>
-          n += 1
-          if (tsu > bestTs || (tsu == bestTs && eid > bestId)) {
-            bestTs = tsu; bestId = eid; bestType = et
+    replay(spark, dir, "update") { (_, events) =>
+      events()
+        .select(col("user_id").cast("long"),
+          unix_micros(col("ts").cast("timestamp")).as("tsu"),
+          col("event_id").cast("long"), col("event_type"))
+        .as[(Long, Long, Long, String)]
+        .groupByKey(_._1)
+        .mapGroupsWithState[(Long, Long, Long, String), (Long, Long, String)](
+          GroupStateTimeout.NoTimeout) { case (uid, it, state) =>
+          var (n, bestTs, bestId, bestType) =
+            state.getOption.getOrElse((0L, Long.MinValue, Long.MinValue, ""))
+          it.foreach { case (_, tsu, eid, et) =>
+            n += 1
+            if (tsu > bestTs || (tsu == bestTs && eid > bestId)) {
+              bestTs = tsu; bestId = eid; bestType = et
+            }
           }
-        }
-        state.update((n, bestTs, bestId, bestType))
-        (uid, n, bestType)
-      }
-    withStateParts(spark) { withCkpt { ckpt =>
-      val q = updated.writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    spark.table(name).toDF("user_id", "n_events", "last_event_type")
+          state.update((n, bestTs, bestId, bestType))
+          (uid, n, bestType)
+        }.toDF()
+    }.toDF("user_id", "n_events", "last_event_type")
       .groupBy(col("user_id"))
       .agg(max(col("n_events")).as("n_events"),
         max_by(col("last_event_type"), col("n_events")).as("last_event_type"))
@@ -242,40 +201,23 @@ object StreamingQ {
     * found, nothing is withheld at termination, so the finite-replay result
     * equals the batch interval join (the oracle).
     */
-  def s05StreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val schema = load(spark, dir, "events").schema
-    val name = s"graft_stream_ssj_${counter.incrementAndGet()}"
-    def src(): DataFrame = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", col("ts").cast("timestamp"))
-    val clicks = src().filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "2 hours")
-    val purchases = src().filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"), col("value"))
-      .withWatermark("purchase_ts", "2 hours")
-    val joined = clicks.join(purchases,
-      col("user_id") === col("p_user_id") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("interval 1 hour"))
-    withStateParts(spark) { withCkpt { ckpt =>
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    spark.table(name)
-      .select(col("user_id"), col("click_id"), col("purchase_id"), col("value"))
+  def s05StreamJoin(spark: SparkSession, dir: String): DataFrame =
+    replay(spark, dir, "append") { (_, events) =>
+      def src(): DataFrame = events().withColumn("ts", col("ts").cast("timestamp"))
+      val clicks = src().filter(col("event_type") === "click")
+        .select(col("user_id"), col("event_id").as("click_id"),
+          col("ts").as("click_ts"))
+        .withWatermark("click_ts", "2 hours")
+      val purchases = src().filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
+          col("ts").as("purchase_ts"), col("value"))
+        .withWatermark("purchase_ts", "2 hours")
+      clicks.join(purchases,
+        col("user_id") === col("p_user_id") &&
+          col("purchase_ts") >= col("click_ts") &&
+          col("purchase_ts") <= col("click_ts") + expr("interval 1 hour"))
+    }.select(col("user_id"), col("click_id"), col("purchase_id"), col("value"))
       .orderBy("click_id", "purchase_id")
-  }
 
   /** Stream-static broadcast enrichment: the event stream joined to a
     * BATCH-computed per-type dimension (average value, exact decimal sum /
@@ -285,34 +227,17 @@ object StreamingQ {
     * read re-aggregates per type. At scale the static side is a small dim
     * refreshed per trigger epoch; the stream side never shuffles.
     */
-  def s06StreamEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val events = load(spark, dir, "events")
-    val typeStats = events.groupBy(col("event_type"))
-      .agg((dbl(sum(dec(col("value")))) / count(lit(1))).as("type_avg"))
-    val schema = events.schema
-    val name = s"graft_stream_en_${counter.incrementAndGet()}"
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .join(broadcast(typeStats), "event_type")
-      .filter(col("value") > col("type_avg"))
-    withStateParts(spark) { withCkpt { ckpt =>
-      val q = stream.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    spark.table(name)
-      .groupBy(col("event_type"), col("type_avg"))
+  def s06StreamEnrich(spark: SparkSession, dir: String): DataFrame =
+    replay(spark, dir, "append") { (ss, events) =>
+      val typeStats = load(ss, dir, "events").groupBy(col("event_type"))
+        .agg((dbl(sum(dec(col("value")))) / count(lit(1))).as("type_avg"))
+      events()
+        .join(broadcast(typeStats), "event_type")
+        .filter(col("value") > col("type_avg"))
+    }.groupBy(col("event_type"), col("type_avg"))
       .agg(count(lit(1)).as("n_above"))
       .select(col("event_type"), col("n_above"), col("type_avg"))
       .orderBy("event_type")
-  }
 
   /** Session-window streaming aggregation (s07): per-user sessions with a
     * 30-minute inactivity gap computed by Spark's native `session_window`
@@ -328,32 +253,16 @@ object StreamingQ {
     * same way. On the finite replay the tail sessions inside the horizon
     * are withheld exactly as they would be mid-stream.
     */
-  def s07SessionWindow(spark: SparkSession, dir: String): DataFrame = {
-    val schema = load(spark, dir, "events").schema
-    val name = s"graft_stream_sw_${counter.incrementAndGet()}"
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "2 hours")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-    withStateParts(spark) { withCkpt { ckpt =>
-      val q = stream.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    spark.table(name)
-      .select(col("user_id"),
+  def s07SessionWindow(spark: SparkSession, dir: String): DataFrame =
+    replay(spark, dir, "append") { (_, events) =>
+      events()
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .withWatermark("ts", "2 hours")
+        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"))
+    }.select(col("user_id"),
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("n_events"))
       .orderBy("user_id", "session_start")
-  }
 }

@@ -85,6 +85,14 @@ class NativeSpec extends AnyFunSuite {
       // exact double equality — the expression must replay the UDF op-for-op
       assert(got(id) == ref(q, code), s"pq_dist differs at id=$id")
     }
+    // a 7-dim query against 2 codes would drop its trailing dimension: rejected
+    val bad = intercept[Exception] {
+      Seq((0L, Array.tabulate(m * sd - 1)(f(0, _)), Array(0, 1))).toDF("id", "q", "code")
+        .select(call_function("pq_dist", col("q"), col("code"), cbCol)).collect()
+    }
+    val causes = Iterator.iterate[Throwable](bad)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("query length 7 is not a multiple of code length 2")), bad)
   }
 
   test("sq8_cos is bit-identical to the UDF-struct reference") {

@@ -32,6 +32,18 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == batch)
   }
 
+  test("a streaming query leaves the caller's catalog and shuffle partitions unchanged") {
+    // a caller whose partition count differs from the replay's 8
+    val caller = spark.newSession()
+    val key = "spark.sql.shuffle.partitions"
+    caller.conf.set(key, "3")
+    def tables() = caller.catalog.listTables().collect().map(_.name).toSet
+    val tablesBefore = tables()
+    assert(queries.StreamingQ.s03WatermarkAppend(caller, dir).count() > 0)
+    assert(tables() -- tablesBefore == Set.empty[String])
+    assert(caller.conf.get(key) == "3")
+  }
+
   test("mapGroupsWithState accumulates per-user state across micro-batches") {
     import spark.implicits._
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
