@@ -69,21 +69,6 @@ object ExtractJob {
       nBuckets: Int = 32,
       groupSize: Int = 8,
       heavyWeight: Long = 5000000L,
-      // Heavy-branch relocation: heavy docs are spread over this many PINNED
-      // partitions (REPARTITION_BY_NUM, not AQE-coalescible) so a
-      // kernel+write task carries ~1-2 mega-docs. The relocation shuffle is
-      // kept unconditionally: a scan-side-only heavy branch was A/B'd in
-      // round 6 (same corpus, same window) and lost ~30% at c16 — without
-      // relocation each heavy scan split funnels its ~20+ megas through one
-      // encode task. The count is sized from the DATA (expected heavies per
-      // group / target megas-per-task; at 10^12 docs set it from table
-      // stats), deliberately NOT from the core count: a cores-proportional
-      // count (an earlier round-6 shape) launches more tasks on bigger
-      // clusters for the same 390 megas, pure scheduling overhead on the
-      // wider leg. 256 ≈ 1.5 megas/task at the bench's mega density; too
-      // few partitions re-creates the funnel via hash-collision stragglers
-      // (128 parts measured 35% slower at c16 than 512).
-      heavyParts: Int = 256,
       // Output writer options. Dictionary encoding is disabled by default:
       // extracted span text is high-cardinality, so the dictionary pass
       // burns encoder CPU and memory only to overflow and fall back —
@@ -111,7 +96,8 @@ object ExtractJob {
       skippedBuckets: Seq[Int],
       nDocs: Long,
       nSpans: Long,
-      nErrors: Long)
+      nErrors: Long,
+      heavyDocs: Long)
 
   /** One `metrics` table row (without its run_id): what one write task
     * emitted for one bucket.
@@ -192,24 +178,28 @@ object ExtractJob {
     val allBuckets = 0 until cfg.nBuckets
     val remaining = allBuckets.filterNot(committed.contains)
     if (remaining.isEmpty)
-      return RunStats(Nil, committed.toSeq.sorted, 0L, 0L, 0L)
+      return RunStats(Nil, committed.toSeq.sorted, 0L, 0L, 0L, 0L)
 
     val nB = cfg.nBuckets
-    val heavy = cfg.heavyWeight
-    // weight + bucket computed as COLUMNS before the shuffle: a typed
-    // map-to-tuple here would deserialize + re-serialize every nested spans
-    // array once more per row; `aggregate` over the struct column and a
-    // string-only UDF stay on the columnar path
+    // bucket computed as a COLUMN: a typed map-to-tuple here would
+    // deserialize + re-serialize every nested spans array once more per row;
+    // a string-only UDF stays on the columnar path
     val bucketUdf = udf((id: String) => bucketOf(id, nB))
-    // octet_length, not length: byte count is O(1) on the UTF8 payload while
-    // character count rescans every byte, and the weight is a routing
-    // heuristic — bytes are, if anything, the truer cost proxy (threshold
-    // docs above updated to bytes).
-    val keyed = docs.toDF()
-      .withColumn("weight", aggregate(col("spans"), lit(0L), (acc, s) =>
+    val keyed = docs.toDF().withColumn("bucket", bucketUdf(col("doc_id")))
+    def inBuckets(bs: Seq[Int]) = col("bucket").isin(bs.map(Integer.valueOf): _*)
+    // Heavy pre-pass, once per run and after the sweep's revocations: the
+    // (doc_id, bucket) of every doc whose weight is at least heavyWeight.
+    // Weight = total raw payload bytes, an `aggregate` over the struct
+    // column; octet_length, not length: byte count is O(1) on the UTF8
+    // payload while character count rescans every byte, and the weight is a
+    // routing heuristic — bytes are, if anything, the truer cost proxy. The
+    // set is collected: each member is ~5% of a partition's byte budget.
+    val heavyIds = keyed.filter(inBuckets(remaining))
+      .filter(aggregate(col("spans"), lit(0L), (acc, s) =>
         acc + octet_length(s.getField("text")).cast("long") +
-          octet_length(s.getField("media_ref")).cast("long")))
-      .withColumn("bucket", bucketUdf(col("doc_id")))
+          octet_length(s.getField("media_ref")).cast("long")) >= cfg.heavyWeight)
+      .select(col("doc_id"), col("bucket")).as[(String, Int)].collect()
+      .groupMap(_._2)(_._1)
 
     val groups = remaining.grouped(cfg.groupSize).toSeq
     var processed = List.empty[Int]
@@ -220,37 +210,41 @@ object ExtractJob {
       // At 10^12 scale this filter is partition pruning on the bucketed
       // input table (each group scans only its own buckets); locally it
       // re-derives the input per group — bench runs use one group.
-      val inGroup = keyed.filter(col("bucket").isin(group.map(Integer.valueOf): _*))
-      // Light docs: the scan splits as they are. Heavy docs: their own
-      // repartition by doc_id. The union CONCATENATES the two partition
-      // sets without another shuffle, so no light doc ever shares a
-      // partition with a mega-doc — a straggler mega-doc can only delay
-      // its own partition. The two branches are two scans of the input; on
-      // the production table the weight predicate pushes into row-group
-      // stats (cluster by weight at ingest), so the heavy scan is ~free.
+      val inGroup = keyed.filter(inBuckets(group))
+      // Light docs: the scan splits as they are. Heavy docs: one partition
+      // EACH — `repartitionById` passes the doc's slot in `ids` straight
+      // through as its partition id, so no two mega-docs collide. The union
+      // CONCATENATES the two partition sets without another shuffle, so no
+      // light doc ever shares a partition with a mega-doc — a straggler
+      // mega-doc can only delay its own partition. Routing by id membership
+      // makes heavy and light an exact split of the group, and a group with
+      // no heavy doc is written as it is.
       //
-      // The heavy repartition PINS its partition count (round-6 fix). A
-      // column-only repartition is an AQE-coalescible shuffle
-      // (REPARTITION_BY_COL), and AQE's byte-targeted coalescing was
-      // silently undoing this whole layout: measured on the skewed bench
-      // corpus at local[16] x 4 waves, the heavy branch's 64 partitions
-      // coalesced to SIX carrying 14-25 mega-docs EACH — the exact
-      // all-megas-through-one-task funnel the isolation exists to prevent,
-      // and the write-stage wall behind the sub-0.8 skew scaling readings
-      // of rounds 3-5. Pinned at the data-sized `Config.heavyParts` (256),
-      // a kernel+write task carries ~1-2 mega-docs (an empty heavy
-      // partition costs a no-op task launch). The light branch takes no
-      // shuffle: scan splits are byte-balanced (maxPartitionBytes packing)
-      // and, with heavy docs isolated, the light work is byte-proportional;
-      // a salted light repartition measured slower (OPTIMIZATION_r06.md).
-      val light = inGroup.filter(col("weight") < heavy)
-      val heavyDs = inGroup.filter(col("weight") >= heavy)
-        .repartition(cfg.heavyParts, col("doc_id"))
-      // heavy partitions FIRST: union concatenates partition lists and
-      // Spark schedules tasks in partition order — longest-processing-
-      // time-first lets the mega-doc tasks run while light tasks pack
-      // around them instead of starting after the lights drain
-      val part = heavyDs.unionByName(light)
+      // The heavy partition count is PINNED (an explicit count makes the
+      // shuffle REPARTITION_BY_NUM). A column-only repartition is
+      // AQE-coalescible (REPARTITION_BY_COL), and AQE's byte-targeted
+      // coalescing was silently undoing this whole layout: measured on the
+      // skewed bench corpus at local[16] x 4 waves, the heavy branch's 64
+      // partitions coalesced to SIX carrying 14-25 mega-docs EACH — the
+      // exact all-megas-through-one-task funnel the isolation exists to
+      // prevent. The heavies are relocated rather than filtered in place
+      // for the same reason: a scan-side-only heavy branch lost ~30% at c16
+      // in round 6, each heavy scan split funnelling its megas through one
+      // task. The light branch takes no shuffle: scan splits are
+      // byte-balanced (maxPartitionBytes packing) and, with heavy docs
+      // isolated, the light work is byte-proportional; a salted light
+      // repartition measured slower (OPTIMIZATION_r06.md).
+      val ids = group.flatMap(heavyIds.get).flatten.sorted
+      val part = if (ids.isEmpty) inGroup else {
+        val isHeavy = col("doc_id").isin(ids: _*)
+        // heavy partitions FIRST: union concatenates partition lists and
+        // Spark schedules tasks in partition order — longest-processing-
+        // time-first lets the mega-doc tasks run while light tasks pack
+        // around them instead of starting after the lights drain
+        inGroup.filter(isHeavy)
+          .repartitionById(ids.length, element_at(typedLit(ids.zipWithIndex.toMap), col("doc_id")))
+          .unionByName(inGroup.filter(!isHeavy))
+      }
       // Each write task counts what it emits per bucket and publishes the
       // counts when it ends. The write is the job's result stage, and Spark
       // applies a successful result task's accumulator update exactly once
@@ -302,6 +296,7 @@ object ExtractJob {
         processed = processed :+ b
       }
     }
-    RunStats(processed, committed.toSeq.sorted, totDocs, totSpans, totErrors)
+    RunStats(processed, committed.toSeq.sorted, totDocs, totSpans, totErrors,
+      heavyIds.valuesIterator.map(_.size.toLong).sum)
   }
 }

@@ -99,33 +99,40 @@ class ExtractJobSpec extends AnyFunSuite {
     // Window: group dir renamed into place, only some of its bucket
     // manifests committed. The sweep must revoke those manifests along with
     // the dir so the whole group reprocesses (exactly-once either way).
-    val out = Files.createTempDirectory("graft_midcrash").toString
-    val nDocs = 400
-    val cfg = ExtractJob.Config(nBuckets = 8, groupSize = 4, runId = "c1",
-      failAfterBucketCommits = Some(2))
-    intercept[ExtractJob.SimulatedCrash] {
-      ExtractJob.run(spark, docs(nDocs), out, cfg)
-    }
-    val store = new LocalManifestStore(out)
-    assert(store.committedBuckets().size == 2) // the torn group, half committed
+    // At heavyWeight 5000 doc 0 (a 100x mega-doc) takes the heavy branch;
+    // it sits in bucket 2, which the 3-commit crash commits and the sweep
+    // revokes, so the resume's heavy pre-pass must run after the sweep.
+    for ((heavyWeight, crashAfter, heavyDocs) <-
+        Seq((ExtractJob.Config().heavyWeight, 2, 0L), (5000L, 3, 1L))) {
+      val out = Files.createTempDirectory("graft_midcrash").toString
+      val nDocs = 400
+      val cfg = ExtractJob.Config(nBuckets = 8, groupSize = 4, heavyWeight = heavyWeight,
+        runId = "c1", failAfterBucketCommits = Some(crashAfter))
+      intercept[ExtractJob.SimulatedCrash] {
+        ExtractJob.run(spark, docs(nDocs), out, cfg)
+      }
+      val store = new LocalManifestStore(out)
+      assert(store.committedBuckets().size == crashAfter) // the torn group, part committed
 
-    val second = ExtractJob.run(spark, docs(nDocs), out,
-      cfg.copy(failAfterBucketCommits = None, runId = "c2"))
-    // the torn group's committed buckets were revoked -> everything reran
-    assert(second.skippedBuckets.isEmpty)
-    assert(second.processedBuckets.toSet == (0 until 8).toSet)
-    val data = spark.read.parquet(s"$out/data")
-    assert(data.count() == nDocs)
-    assert(data.groupBy("doc_id").count().filter("count > 1").count() == 0)
-    // manifests agree with the data after the recovery run
-    val perBucket = data.groupBy("bucket").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    (0 until 8).foreach { b =>
-      assert(store.readManifest(b).map(_.nDocs).contains(perBucket.getOrElse(b, 0L)))
-      assert(store.readManifest(b).exists(_.runId == "c2"))
+      val second = ExtractJob.run(spark, docs(nDocs), out,
+        cfg.copy(failAfterBucketCommits = None, runId = "c2"))
+      // the torn group's committed buckets were revoked -> everything reran
+      assert(second.skippedBuckets.isEmpty)
+      assert(second.processedBuckets.toSet == (0 until 8).toSet)
+      assert(second.heavyDocs == heavyDocs)
+      val data = spark.read.parquet(s"$out/data")
+      assert(data.count() == nDocs)
+      assert(data.groupBy("doc_id").count().filter("count > 1").count() == 0)
+      // manifests agree with the data after the recovery run
+      val perBucket = data.groupBy("bucket").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      (0 until 8).foreach { b =>
+        assert(store.readManifest(b).map(_.nDocs).contains(perBucket.getOrElse(b, 0L)))
+        assert(store.readManifest(b).exists(_.runId == "c2"))
+      }
+      // the torn group's metric rows were swept with its data
+      assert(metricDocs(out) == nDocs)
     }
-    // the torn group's metric rows were swept with its data
-    assert(metricDocs(out) == nDocs)
   }
 
   test("mega-docs are isolated onto their own partitions") {
@@ -134,11 +141,8 @@ class ExtractJobSpec extends AnyFunSuite {
     // low heavy threshold so the synthetic mega tail definitely qualifies
     val cfg = ExtractJob.Config(nBuckets = 4, groupSize = 4, heavyWeight = 5000L,
       runId = "skew")
-    // choose n so the deterministic mega tail is definitely included
-    val firstMega = (0L until 20000L)
-      .find(i => DocGen.megaFactor(i) > 1)
-      .getOrElse(fail("no mega doc in generator range"))
-    val n = firstMega.toInt + 200
+    // three mega-docs in range: ids 0, 997 and 1994
+    val n = 2194
     val stats = ExtractJob.run(spark, docs(n), out, cfg)
     assert(stats.nDocs == n)
     val data = spark.read.parquet(s"$out/data")
@@ -146,15 +150,18 @@ class ExtractJobSpec extends AnyFunSuite {
       .filter(i => DocGen.syntheticDoc(i).spans.iterator
         .map(s => s.text.length.toLong + s.media_ref.length).sum >= 5000L)
       .map(i => f"doc_$i%09d")
-    assert(megaDocIds.nonEmpty, "expected at least one mega doc in range")
-    // no light doc shares a physical partition with a mega doc
-    val partOfMega = data
+    assert(megaDocIds.length == 3, s"expected three mega docs in range, got $megaDocIds")
+    assert(stats.heavyDocs == megaDocIds.length)
+    val megaParts = data
       .filter(org.apache.spark.sql.functions.col("doc_id").isin(megaDocIds: _*))
-      .select("partition_id").as[Int].collect().toSet
+      .select("partition_id").as[Int].collect().sorted.toSeq
+    // no light doc shares a physical partition with a mega doc
     val partOfLight = data
       .filter(!org.apache.spark.sql.functions.col("doc_id").isin(megaDocIds: _*))
       .select("partition_id").as[Int].collect().toSet
-    assert(partOfMega.nonEmpty && partOfMega.intersect(partOfLight).isEmpty,
-      s"mega partitions $partOfMega must be disjoint from light partitions")
+    assert(megaParts.nonEmpty && megaParts.toSet.intersect(partOfLight).isEmpty,
+      s"mega partitions $megaParts must be disjoint from light partitions")
+    // one mega-doc per partition, on exactly the first k partitions
+    assert(megaParts == megaDocIds.indices, s"mega partitions $megaParts")
   }
 }
