@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.pipeline.ExtractJob
-import graft.tokenize.DocGen
+import graft.tokenize.{DocGen, SpanTokenizer}
 
 /** Benchmark main. Emits ONE JSON line:
   *
@@ -11,24 +11,25 @@ import graft.tokenize.DocGen
   *             "query_passes":2,"per_query":"min"},
   *    "scaling":{"n_docs":...,"docs_per_sec_n":...,"docs_per_sec_4n":...,
   *               "speedup":...,"efficiency":...,"attempts":...,
+  *               "nproc":...,"mem_total_mb":...,"worker_heap_mb":...,
   *               "skew":{...same fields...,
   *                       "kernel":{...},"write":{...}},  // stage attribution
   *               "n_docs_4x":{...same fields...}}}
   *
   * The scaling phase is the BASELINE.json two-cluster-size criterion
-  * evidenced in-sandbox: the identical end-to-end extraction job
-  * (synthesize -> tokenize kernel -> salted repartition -> parquet write ->
-  * metrics + bucket commit) runs at local[4] and local[16] (N and 4N
-  * physical cores; 32-core box, no SMT — both sizes fit fully on physical
-  * cores and below the single-socket memory-bandwidth ceiling a real
-  * 4N-executor cluster would not share) on the same deterministic corpus.
-  * Each measurement runs in its own fresh JVM (same heap, same GC) so
-  * JIT/GC state can't leak between cluster sizes; each JVM warms up on a
-  * slice then reports best-of-N timed runs. Shuffle partitions and input
-  * splits scale with cores, as they would per-executor on a real cluster.
+  * evidenced in-sandbox: the shipped `ExtractJob.run` (read corpus ->
+  * heavy isolation -> tokenizer kernel -> parquet write -> metrics + bucket
+  * commit) runs at local[N] and local[4N] on the same deterministic corpus,
+  * with N = min(4, nproc/4) so both sizes fit on the box's cores. Each
+  * measurement runs in its own fresh JVM (same fixed heap, min(24 GB,
+  * total memory / 2), same GC) so JIT/GC state can't leak between cluster
+  * sizes; each JVM warms up on a slice then reports best-of-N timed runs.
+  * The phase fails before spawning below 4 cores or a 2 GB worker heap.
   * efficiency = (docsPerSec_4N/docsPerSec_N)/4. The `skew` and `n_docs_4x`
   * sub-objects repeat the pair on a skewed corpus (heavy-isolation path
-  * live) and at 4x data volume (flat per-doc cost evidence).
+  * live) and at 4x data volume (flat per-doc cost evidence); `skew.kernel`
+  * and `skew.write` attribute the skew pair to the tokenizer kernel and to
+  * the kernel plus its parquet write.
   *
   * The query phase times every SparkEntry query at local[32] with a
   * host-noise guard: min of two full passes, plus one extra attempt for any
@@ -42,25 +43,15 @@ import graft.tokenize.DocGen
   * burst-gate idle is capped cumulatively (SPARK_GRAFT_GATE_CAP_SEC, 300).
   * A pair whose final efficiency is > 1.1 (the bench's own corrupted-reading
   * class) carries `"suspect":true`. Partial/smoke invocations (any skip
-  * flag, non-full mode, or reduced doc count) write BENCH_SMOKE.json and
-  * refuse to overwrite a full committed artifact.
+  * flag or reduced doc count) write BENCH_SMOKE.json and refuse to
+  * overwrite a full committed artifact.
   */
 object Bench {
 
   private def session(cores: Int): SparkSession = {
-    // Shuffle partitions scale with cores TIMES a wave multiplier: with
-    // exactly one task per core (mult 1), task-duration variance from
-    // skewed docs directly extends the critical path — extra waves let the
-    // scheduler rebalance (measured on the skewed corpus: see BASELINE.md).
-    val mult = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_MULT", "1").toInt
     val s = SparkSession.builder()
       .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", (cores * mult).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_PQ_CODEC", "snappy"))
-      .config("spark.hadoop.parquet.enable.dictionary",
-        sys.env.getOrElse("SPARK_GRAFT_PQ_DICT", "true"))
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.local.dir",
         sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", System.getProperty("java.io.tmpdir")))
       .config("spark.ui.enabled", "false")
@@ -82,55 +73,34 @@ object Bench {
       .write.mode("overwrite").parquet(dir)
   }
 
-  /** End-to-end extraction run (read corpus -> extract -> write + commit). */
-  private def extractRun(spark: SparkSession, corpus: String, nDocs: Long,
-      outDir: String, isolateHeavy: Boolean = true): Double = {
-    import spark.implicits._
-    val docs = spark.read.parquet(corpus).as[graft.model.Doc]
-    val cfg = ExtractJob.Config(nBuckets = 32, groupSize = 32, runId = "bench",
-      // skew A/B: "skew" forces the 1.2M-char megas through isolation,
-      // "skew_noiso" disables isolation entirely; the production default
-      // (5M) would leave them in the light scan splits (the measured winner
-      // at this mega size — see BASELINE.md)
-      heavyWeight = if (isolateHeavy) 200000L else Long.MaxValue)
-    val t0 = System.nanoTime()
-    val stats = ExtractJob.run(spark, docs, outDir, cfg)
-    require(stats.nDocs == nDocs, s"extract run lost docs: ${stats.nDocs} != $nDocs")
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Stage-isolating variants for scaling diagnostics: `kernel` = synthesize +
-    * tokenize + aggregate only; `shuffle` = kernel + the salted repartition;
-    * `full` (the reported metric) = the whole ExtractJob including write,
-    * metrics and commit.
+  /** One timed scaling stage, each calling shipped code only: `job` =
+    * `ExtractJob.run` (the reported pairs), `kernel` = the tokenizer kernel
+    * over the scan splits, `write` = the kernel plus a parquet write with the
+    * job's writer options.
     */
-  private def stageRun(spark: SparkSession, runMode: String, corpus: String,
+  private def stageRun(spark: SparkSession, stage: String, corpus: String,
       nDocs: Long, outDir: String): Double = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit, pmod, sum, xxhash64}
+    import org.apache.spark.sql.functions.sum
     val docs = spark.read.parquet(corpus).as[graft.model.Doc]
-    runMode match {
-      case "full" | "skew" => extractRun(spark, corpus, nDocs, outDir)
-      case "skew_noiso" =>
-        extractRun(spark, corpus, nDocs, outDir, isolateHeavy = false)
-      case "kernel" | "skew_kernel" =>
-        val t0 = System.nanoTime()
-        docs.mapPartitions(graft.tokenize.SpanTokenizer.extractPartition(_))
-          .agg(sum("n_spans")).collect()
-        (System.nanoTime() - t0) / 1e9
-      case "shuffle" =>
-        val t0 = System.nanoTime()
-        docs.repartition(pmod(xxhash64(col("doc_id")), lit(2048)))
-          .mapPartitions(graft.tokenize.SpanTokenizer.extractPartition(_))
-          .agg(sum("n_spans")).collect()
-        (System.nanoTime() - t0) / 1e9
-      case "write" | "skew_write" =>
-        val t0 = System.nanoTime()
-        docs.repartition(pmod(xxhash64(col("doc_id")), lit(2048)))
-          .mapPartitions(graft.tokenize.SpanTokenizer.extractPartition(_))
-          .write.mode("overwrite").parquet(outDir)
-        (System.nanoTime() - t0) / 1e9
+    def extracted = docs.mapPartitions(SpanTokenizer.extractPartition(_))
+    val t0 = System.nanoTime()
+    stage match {
+      case "job" =>
+        // heavyWeight 200000: the skewed corpus's 1.2M-char megas take the
+        // heavy branch; the production default (5M) would leave them in the
+        // light scan splits
+        val cfg = ExtractJob.Config(nBuckets = 32, groupSize = 32, runId = "bench",
+          heavyWeight = 200000L)
+        val stats = ExtractJob.run(spark, docs, outDir, cfg)
+        require(stats.nDocs == nDocs, s"extract run lost docs: ${stats.nDocs} != $nDocs")
+      case "kernel" =>
+        extracted.agg(sum("n_spans")).collect()
+      case "write" =>
+        extracted.write.options(ExtractJob.Config().writeOptions)
+          .mode("overwrite").parquet(outDir)
     }
+    (System.nanoTime() - t0) / 1e9
   }
 
   /** Warm-up slice size: a third of the corpus, capped — JIT warm-up
@@ -138,7 +108,7 @@ object Bench {
     * (2.1M docs) was a pure wall-clock tax on the longest measurement legs.
     * Written by ensureCorpus; scalingWorker COUNTS the materialized warm
     * corpus instead of recomputing this formula (round-5 lesson: a cached
-    * corpus built by a previous code version tripped extractRun's lost-docs
+    * corpus built by a previous code version tripped the job's lost-docs
     * require when the formula changed — the parquet-footer count is free
     * and always matches the bytes actually on disk).
     */
@@ -147,17 +117,16 @@ object Bench {
 
   /** Scaling worker (runs in its own JVM): reads the parent-materialized
     * shared corpus (identical input bytes at both cluster sizes), warms up,
-    * then reports best-of-N timed runs (N via SPARK_GRAFT_SCALING_RUNS).
+    * then reports best-of-`runs` timed runs of `stage`.
     */
-  private def scalingWorker(cores: Int, nDocs: Long, corpusBase: String): Unit = {
-    val mode = sys.env.getOrElse("SPARK_GRAFT_SCALING_MODE", "full")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_SCALING_RUNS", "3").toInt
+  private def scalingWorker(stage: String, runs: Int, cores: Int, nDocs: Long,
+      corpusBase: String): Unit = {
     val spark = session(cores)
     val base = java.nio.file.Files.createTempDirectory(s"graft_bench_c$cores")
     val warmDocs = spark.read.parquet(s"$corpusBase/corpus_warm").count()
-    stageRun(spark, mode, s"$corpusBase/corpus_warm", warmDocs, s"$base/warmup")
+    stageRun(spark, stage, s"$corpusBase/corpus_warm", warmDocs, s"$base/warmup")
     val secs = (1 to runs).map(r =>
-      stageRun(spark, mode, s"$corpusBase/corpus", nDocs, s"$base/run$r"))
+      stageRun(spark, stage, s"$corpusBase/corpus", nDocs, s"$base/run$r"))
     org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
     println(f"GRAFT_SCALING_RESULT docs_per_sec=${nDocs / secs.min}%.1f")
     spark.stop()
@@ -201,26 +170,21 @@ object Bench {
   }
 
   /** Launch one measurement in a fresh JVM; returns docs/sec. */
-  private def spawnScaling(cores: Int, nDocs: Long, corpusBase: String,
-      mode: String = "full", runs: Int = 3, shuffleMult: Int = 1): Double = {
+  private def spawnScaling(stage: String, runs: Int, cores: Int, nDocs: Long,
+      corpusBase: String, heapMb: Long): Double = {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     // Fixed-size heap (-Xms=-Xmx): the allocation-heavy kernel otherwise
     // spends most of its cycles in kernel page-zeroing from adaptive heap
     // resizing (measured: >10x sys vs user time with a growable heap). G1
     // measured best on the write-heavy full pipeline (concurrent collection
     // overlaps the parquet writer's old-gen churn).
-    val gcFlags = sys.env.getOrElse("SPARK_GRAFT_WORKER_JVM",
-        "-Xms24g -Xmx24g -XX:+UseG1GC")
-      .split(' ').toSeq.filter(_.nonEmpty)
-    val cmd = Seq(javaBin) ++ gcFlags ++ Seq(s"-Djava.io.tmpdir=$tmpBase",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.Bench", "--scaling-worker", cores.toString, nDocs.toString, corpusBase)
+    val cmd = Seq(javaBin, s"-Xms${heapMb}m", s"-Xmx${heapMb}m", "-XX:+UseG1GC",
+      s"-Djava.io.tmpdir=$tmpBase", "-cp", System.getProperty("java.class.path"),
+      "graft.Bench", "--scaling-worker", stage, runs.toString, cores.toString,
+      nDocs.toString, corpusBase)
     val pb = new ProcessBuilder(cmd: _*)
       .redirectError(ProcessBuilder.Redirect.DISCARD)
     pb.environment().put("SPARK_LOCAL_IP", "127.0.0.1")
-    pb.environment().put("SPARK_GRAFT_SCALING_MODE", mode)
-    pb.environment().put("SPARK_GRAFT_SCALING_RUNS", runs.toString)
-    pb.environment().put("SPARK_GRAFT_SHUFFLE_MULT", shuffleMult.toString)
     if (!sys.env.contains("SPARK_GRAFT_LOCAL_DIR"))
       pb.environment().put("SPARK_GRAFT_LOCAL_DIR", tmpBase)
     val p = pb.start()
@@ -229,14 +193,15 @@ object Bench {
     "GRAFT_SCALING_RESULT docs_per_sec=([0-9.]+)".r
       .findFirstMatchIn(out)
       .map(_.group(1).toDouble)
-      .getOrElse(sys.error(s"scaling worker c$cores failed:\n$out"))
+      .getOrElse(sys.error(s"scaling worker $stage c$cores failed:\n$out"))
   }
 
   def main(args: Array[String]): Unit = {
     if (args.nonEmpty && args(0) == "--scaling-worker") {
-      require(args.length == 4,
-        s"usage: --scaling-worker <cores> <nDocs> <corpusBase>; got ${args.toSeq}")
-      scalingWorker(args(1).toInt, args(2).toLong, args(3))
+      require(args.length == 6 && Set("job", "kernel", "write")(args(1)),
+        "usage: --scaling-worker <job|kernel|write> <runs> <cores> <nDocs> " +
+          s"<corpusBase>; got ${args.toSeq}")
+      scalingWorker(args(1), args(2).toInt, args(3).toInt, args(4).toLong, args(5))
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -246,7 +211,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", defaultDocs.toString).toLong
     val skipScaling = sys.env.get("SPARK_GRAFT_SKIP_SCALING").contains("1")
     val skipQueries = sys.env.get("SPARK_GRAFT_SKIP_QUERIES").contains("1")
-    val scalingMode = sys.env.getOrElse("SPARK_GRAFT_SCALING_MODE", "full")
+    val skipExtras = sys.env.get("SPARK_GRAFT_SKIP_EXTRAS").contains("1")
     val laStart = loadAvg()
 
     // ---- total wall-clock budget (fail open, not closed) ----
@@ -276,8 +241,7 @@ object Bench {
     // (commit df6eec3 documents this actually happening). Partial runs
     // default to BENCH_SMOKE.json, and even an explicit BENCH_OUT pointing a
     // partial run at an existing FULL artifact gets redirected.
-    val isPartialRun = skipScaling || skipQueries || scalingMode != "full" ||
-      sys.env.get("SPARK_GRAFT_SKIP_EXTRAS").contains("1") || nDocs < defaultDocs
+    val isPartialRun = skipScaling || skipQueries || skipExtras || nDocs < defaultDocs
     // A full artifact is one whose scaling pair ran at (at least) the
     // default corpus size — n_docs is the first scaling field, so the first
     // match is the primary pair. (The old marker, presence of "n_docs_4x",
@@ -354,34 +318,32 @@ object Bench {
     def flushScaling(): Unit =
       writeArtifact(assemble(scalingJson, Seq.empty, incomplete = true))
     if (!skipScaling) {
-        val coresN = sys.env.getOrElse("SPARK_GRAFT_SCALING_N", "4").toInt
-        val mode = scalingMode
-        val skipExtras =
-          sys.env.get("SPARK_GRAFT_SKIP_EXTRAS").contains("1") || mode != "full"
+        // Sized from the box, checked before any corpus is written or worker
+        // spawned: a pair that cannot fit fails here and says why. Total
+        // memory is as the JVM sees it (the container limit when one is set).
+        val nproc = Runtime.getRuntime.availableProcessors
+        val memTotalMb = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+          .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+          .getTotalMemorySize / (1024 * 1024)
+        val heapMb = math.min(24L * 1024, memTotalMb / 2)
+        require(nproc >= 4, s"scaling needs >= 4 cores for local[N] vs local[4N]; nproc = $nproc")
+        require(heapMb >= 2048,
+          s"scaling needs a >= 2 GB worker heap (total memory / 2); total memory = $memTotalMb MB")
+        val coresN = math.min(4, nproc / 4)
 
-        // sub-0.8 retry ladder (reported metrics only, not the kernel/write
-        // diagnostic modes; corpus is cached so extra passes are cheap):
+        // sub-0.8 retry ladder (reported pairs and the kernel attribution,
+        // not the write pair; corpus is cached so extra passes are cheap):
         // a noisy neighbor on this shared host hits the higher-core side's
         // memory bandwidth hardest, and every (N,4N) pair is valid per the
         // criterion; the JSON reports which pair produced the number.
-        def measure(n: Long, m: String, runs: Int, maxAttempts: Int,
-            fallbackHalf: Boolean, bar: Double = 0.8): String = {
-          val corpusBase = ensureCorpus(n, m.startsWith("skew"))
-          // Skewed corpora run with 4 scheduling WAVES (shuffle partitions =
-          // 4x cores): with one task per core, mega-doc task-duration
-          // variance directly extends the critical path — measured A/B on
-          // the 1.6M skewed corpus: efficiency 0.69 (1 wave, isolated OR
-          // salted) vs 0.89 (4 waves). Uniform corpora keep 1 wave (no
-          // variance to absorb; eff ~1.0 measured). At 10^12 docs this is
-          // the shuffle-partition sizing rule: partitions >= 3-4x cores
-          // whenever per-partition work is skewed.
-          val mult = sys.env.get("SPARK_GRAFT_SHUFFLE_MULT").map(_.toInt)
-            .getOrElse(if (m.startsWith("skew")) 4 else 1)
+        def measure(n: Long, stage: String, skewed: Boolean, runs: Int,
+            maxAttempts: Int, fallbackHalf: Boolean, bar: Double = 0.8): String = {
+          val corpusBase = ensureCorpus(n, skewed)
           def passAt(c: Int): (Int, Double, Double, Double) = {
             waitQuiet()
-            val dpsN = spawnScaling(c, n, corpusBase, m, runs, mult)
+            val dpsN = spawnScaling(stage, runs, c, n, corpusBase, heapMb)
             waitQuiet()
-            val dps4N = spawnScaling(c * 4, n, corpusBase, m, runs, mult)
+            val dps4N = spawnScaling(stage, runs, c * 4, n, corpusBase, heapMb)
             (c, dpsN, dps4N, dps4N / dpsN / 4.0)
           }
           // Reading quality: efficiency > 1.1 is physically implausible
@@ -391,18 +353,18 @@ object Bench {
           def quality(eff: Double): Double = if (eff <= 1.1) eff else 2.2 - eff
           var best = passAt(coresN)
           var attempts = 1
-          // noise retries apply to the pass/fail-graded pairs: full, skew,
-          // and the skew kernel attribution (which measures ~1.0 on a quiet
-          // box — a low reading is co-tenant noise, and a noise-depressed
-          // kernel pair would falsely indict the kernel). The WRITE pair
-          // gets no threshold retry: its low efficiency IS the attribution
-          // signal; retrying it toward a bar would erase the evidence it
-          // exists to provide.
+          // noise retries apply to the pass/fail-graded pairs: the job
+          // pairs and the skew kernel attribution (which measures ~1.0 on a
+          // quiet box — a low reading is co-tenant noise, and a
+          // noise-depressed kernel pair would falsely indict the kernel).
+          // The WRITE pair gets no threshold retry: its low efficiency IS
+          // the attribution signal; retrying it toward a bar would erase the
+          // evidence it exists to provide.
           // Retries only where the criterion is judged: at tiny corpus
           // sizes efficiency is overhead-dominated (meaningless below
           // ~800k docs — see the verify skill), so a smoke run must not
           // burn the full retry ladder chasing a bar it can't reach.
-          if ((m == "full" || m == "skew" || m == "skew_kernel") && n >= 800000L) {
+          if (stage != "write" && n >= 800000L) {
             def ok(p: (Int, Double, Double, Double)) = p._4 >= bar && p._4 <= 1.1
             // a clean in-range pass beats ANY corrupted reading outright
             // (quality() alone would let eff in (1.1, 1.4] outrank clean
@@ -422,9 +384,9 @@ object Bench {
               attempts += 1
             }
           }
-          // the skewed corpus is shared by the skew/kernel/write trio —
+          // the skewed corpus is shared by the job/kernel/write trio —
           // keep it; only the one-shot corpora are dropped eagerly
-          if (!m.startsWith("skew"))
+          if (!skewed)
             org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(corpusBase))
           val (bc, dpsN, dps4N, eff) = best
           // efficiency > 1.1 is the bench's own definition of a corrupted
@@ -437,38 +399,30 @@ object Bench {
             f""""speedup":${eff * 4}%.3f,"efficiency":$eff%.3f,"attempts":$attempts$suspect}"""
         }
 
-        val primary = measure(nDocs, mode, runs = 3, maxAttempts = 3,
-          fallbackHalf = true)
+        val primary = measure(nDocs, "job", skewed = false, runs = 3,
+          maxAttempts = 3, fallbackHalf = true).dropRight(1) +
+          s""","nproc":$nproc,"mem_total_mb":$memTotalMb,"worker_heap_mb":$heapMb}"""
         scalingJson = primary
         flushScaling()
-        if (skipExtras) {
-          // skew diagnostic invocations clean their (kept-for-the-trio)
-          // corpus here; non-skew modes already deleted theirs in measure()
-          if (mode.startsWith("skew"))
-            org.apache.commons.io.FileUtils.deleteQuietly(
-              new java.io.File(tmpBase, s"corpus_skewed_$nDocs"))
-        } else {
+        if (!skipExtras) {
           // standing scale evidence beyond the headline pair: the same
           // N-vs-4N measurement on a skewed corpus (mega-docs cross the
           // isolation threshold, so the heavy path is live) and at 4x the
           // data volume (flat per-doc cost = no super-linear commit cost).
           // Best-of-2 runs, bounded retries — these bound wall-clock while
           // still surviving one noisy-neighbor window each.
-          val skew = measure(nDocs, "skew", runs = 2, maxAttempts = 3,
+          val skew = measure(nDocs, "job", skewed = true, runs = 2, maxAttempts = 3,
             fallbackHalf = false)
           // budget check AFTER the corpus-shared skew pair, BEFORE each
           // attribution pair and the 4x object: a sub-object that doesn't
           // fit is omitted (budget_exhausted flags it) — emitting the rest
           // beats timing out with nothing
           // Stage attribution for the skew pair, IN the artifact: the
-          // kernel-only and write-stage pairs on the SAME skewed corpus.
-          // The tokenizer kernel scales ~1.0 on skewed data (round-3
-          // finding); any sub-0.8 skew efficiency is the write/commit
-          // stage saturating this box's single shared tmpfs at 16 cores
-          // (mega output inflation ~2.4x) — a one-box artifact a real
-          // per-executor-disk cluster does not share. Emitting both pairs
-          // makes the artifact self-attributing instead of relying on
-          // prose in BASELINE.md.
+          // kernel-only and kernel+write pairs on the SAME skewed corpus and
+          // the same scan splits as the job's light branch, so the artifact
+          // says by itself whether a low skew efficiency sits in the kernel,
+          // in the parquet write, or in the job above them (isolation and
+          // commit).
           // kernel retry bar is the criterion's 0.95, not 0.8: the kernel
           // measures ~1.0 on a quiet box, so a 0.8-0.95 reading is still a
           // noise window, and the pair exists to certify kernel >= 0.95.
@@ -476,11 +430,11 @@ object Bench {
           // is what blew the driver's budget; one retry catches the common
           // single-burst case, a still-low second reading ships as-is)
           val skewKernel =
-            if (canSpend(250)) Some(measure(nDocs, "skew_kernel", runs = 2,
+            if (canSpend(250)) Some(measure(nDocs, "kernel", skewed = true, runs = 2,
               maxAttempts = 2, fallbackHalf = false, bar = 0.95))
             else None
           val skewWrite =
-            if (canSpend(250)) Some(measure(nDocs, "skew_write", runs = 2,
+            if (canSpend(250)) Some(measure(nDocs, "write", skewed = true, runs = 2,
               maxAttempts = 1, fallbackHalf = false))
             else None
           val attribution =
@@ -492,7 +446,7 @@ object Bench {
           scalingJson = primary.dropRight(1) + s""","skew":$skewFull}"""
           flushScaling()
           val big =
-            if (canSpend(600)) Some(measure(nDocs * 4, "full", runs = 2,
+            if (canSpend(600)) Some(measure(nDocs * 4, "job", skewed = false, runs = 2,
               maxAttempts = 2, fallbackHalf = false))
             else None
           big.foreach { b =>

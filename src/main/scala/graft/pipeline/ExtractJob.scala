@@ -49,21 +49,14 @@ import graft.tokenize.SpanTokenizer
   */
 object ExtractJob {
 
-  /** Shuffle-partition sizing rule (measured, BASELINE.md round-3 wave A/B):
-    * on skewed corpora run MULTIPLE scheduling waves — shuffle partitions
-    * >= 3-4x total cores — so mega-doc task-duration variance can be
-    * rebalanced by the scheduler instead of extending the critical path
-    * (N-vs-4N efficiency 0.69 with 1 wave vs 0.89 with 4 on the 1.6M
-    * skewed corpus). Uniform corpora are fine at 1 wave.
-    *
-    * heavyWeight sizing rule (measured, see BASELINE.md skew A/B): isolate a
+  /** heavyWeight sizing rule (measured, see BASELINE.md skew A/B): isolate a
     * document only when it is a meaningful fraction (~5%) of one partition's
-    * total char budget — below that, the salted uniform path absorbs the
-    * skew for free, and isolation's extra input scan + shuffle wave is a net
-    * loss (800k-doc corpus with 0.65k-x megas ran ~20% slower isolated).
+    * total char budget — below that, the byte-balanced scan splits absorb
+    * the skew for free, and isolation's extra input scan + shuffle wave is a
+    * net loss (800k-doc corpus with 0.65k-x megas ran ~20% slower isolated).
     * Default 5M chars ~ 5% of a 100M-char partition at the bench shape; at
     * 10^12 docs set it from table stats: heavyWeight ~ 0.05 * totalChars /
-    * shufflePartitions.
+    * inputSplits.
     */
   final case class Config(
       nBuckets: Int = 32,
@@ -76,7 +69,6 @@ object ExtractJob {
       // snappy page compression still applies).
       writeOptions: Map[String, String] =
         Map("parquet.enable.dictionary" -> "false"),
-      tokenizer: SpanTokenizer.Config = SpanTokenizer.default,
       runId: String = "run",
       // test hook: simulate a crash once N bucket manifests have been
       // committed in this run (checked before each manifest commit)
@@ -204,7 +196,6 @@ object ExtractJob {
     val groups = remaining.grouped(cfg.groupSize).toSeq
     var processed = List.empty[Int]
     var totDocs = 0L; var totSpans = 0L; var totErrors = 0L
-    val tok = cfg.tokenizer
 
     groups.zipWithIndex.foreach { case (group, gi) =>
       // At 10^12 scale this filter is partition pruning on the bucketed
@@ -259,7 +250,7 @@ object ExtractJob {
           ctx.addTaskCompletionListener[Unit] { _ =>
             counts.foreach { case (b, c) => counted.add(MetricRow(b, pid, c(0), c(1), c(2))) }
           }
-          SpanTokenizer.extractPartition(it, tok).map { e =>
+          SpanTokenizer.extractPartition(it).map { e =>
             val b = bucketOf(e.doc_id, nB)
             val c = counts.getOrElseUpdate(b, new Array[Long](3))
             c(0) += 1; c(1) += e.n_spans; c(2) += e.n_errors

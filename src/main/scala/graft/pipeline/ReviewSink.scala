@@ -74,7 +74,7 @@ object ReviewSink {
 
   def readManifest(outDir: String): Option[QueueManifest] = {
     val p = manifestPath(outDir)
-    if (!Files.exists(p)) return legacyManifest(outDir)
+    if (!Files.exists(p)) return None
     val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
     def field(k: String): Option[String] = Manifests.readField(s, k)
     for {
@@ -83,24 +83,8 @@ object ReviewSink {
     } yield QueueManifest(n.toLong, d.toLong, x.toLong, r)
   }
 
-  /** Backward compatibility with the pre-QueueManifest format: the sink's
-    * first version committed through `LocalManifestStore` as
-    * `_manifests/bucket-0.json` with the extraction field names overloaded
-    * (n_docs = entries, n_spans = delivered, n_errors = dead). Without this
-    * fallback an outDir committed by that version reads as uncommitted and
-    * the queue is silently rewritten (re-running delivery passes) once.
-    */
-  private def legacyManifest(outDir: String): Option[QueueManifest] =
-    new LocalManifestStore(outDir).readManifest(0)
-      .map(m => QueueManifest(m.nDocs, m.nSpans, m.nErrors, m.runId))
-
-  /** Revoke the queue commit (crash-window testing / forced reprocess) —
-    * both the current manifest and any legacy bucket-0 record.
-    */
-  def revoke(outDir: String): Unit = {
-    Files.deleteIfExists(manifestPath(outDir))
-    new LocalManifestStore(outDir).revoke(0)
-  }
+  /** Revoke the queue commit (crash-window testing / forced reprocess). */
+  def revoke(outDir: String): Unit = Files.deleteIfExists(manifestPath(outDir))
 
   private def deleteRecursively(p: Path): Unit = Manifests.deleteRecursively(p)
 

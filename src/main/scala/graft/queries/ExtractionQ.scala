@@ -325,34 +325,25 @@ object ExtractionQ {
     * through the durable review sink (pipeline/ReviewSink — DLQ status
     * machine, manifest-committed exactly-once write) and read back from the
     * committed queue table. The sink writes to a fresh temp dir per
-    * invocation; resume/idempotence are pinned by ReviewSinkSpec.
+    * invocation; resume/idempotence are pinned by ReviewSinkSpec. The read
+    * is materialized with `localCheckpoint` (as d06 and e03 do), so the dir
+    * is deleted before returning and nothing outlives the call on disk.
     */
-  /** Temp dirs cleaned at JVM exit by ONE shared hook (a hook per x26 call
-    * would accumulate threads in a long-lived driver).
-    */
-  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-  private lazy val tempDirHook: Unit = {
-    sys.addShutdownHook(
-      tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
-    ()
-  }
-
   def x26ReviewQueue(spark: SparkSession, dir: String): DataFrame = {
     import graft.pipeline.ReviewSink
-    // The dir must outlive this call (the returned DataFrame reads it
-    // lazily), so cleanup is deferred to JVM exit rather than leaked.
     // Rooted in graft.TempRoot so the queue write + read-back stays off the
     // shared system disk when tmpfs is available.
     val outPath =
       java.nio.file.Files.createTempDirectory(graft.TempRoot("graft-review"), "x26")
-    tempDirHook
-    tempDirs.add(outPath.toFile)
     val out = outPath.toString
-    ReviewSink.run(spark, x13Routing(spark, dir), out, "x26")
-    spark.read.parquet(s"$out/queue")
-      .select(col("doc_id"), col("queue"), col("confidence"), col("status"),
-        col("attempts"), col("delivered_pass"))
-      .orderBy("doc_id")
+    try {
+      ReviewSink.run(spark, x13Routing(spark, dir), out, "x26")
+      spark.read.parquet(s"$out/queue")
+        .select(col("doc_id"), col("queue"), col("confidence"), col("status"),
+          col("attempts"), col("delivered_pass"))
+        .orderBy("doc_id")
+        .localCheckpoint()
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(outPath.toFile)
   }
 
   /** Deterministic claim-record synthesis for the cross-field /

@@ -137,31 +137,43 @@ class ExtractJobSpec extends AnyFunSuite {
 
   test("mega-docs are isolated onto their own partitions") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_skew").toString
-    // low heavy threshold so the synthetic mega tail definitely qualifies
-    val cfg = ExtractJob.Config(nBuckets = 4, groupSize = 4, heavyWeight = 5000L,
-      runId = "skew")
     // three mega-docs in range: ids 0, 997 and 1994
     val n = 2194
-    val stats = ExtractJob.run(spark, docs(n), out, cfg)
-    assert(stats.nDocs == n)
-    val data = spark.read.parquet(s"$out/data")
     val megaDocIds: Seq[String] = (0L until n.toLong)
       .filter(i => DocGen.syntheticDoc(i).spans.iterator
         .map(s => s.text.length.toLong + s.media_ref.length).sum >= 5000L)
       .map(i => f"doc_$i%09d")
     assert(megaDocIds.length == 3, s"expected three mega docs in range, got $megaDocIds")
-    assert(stats.heavyDocs == megaDocIds.length)
-    val megaParts = data
-      .filter(org.apache.spark.sql.functions.col("doc_id").isin(megaDocIds: _*))
-      .select("partition_id").as[Int].collect().sorted.toSeq
-    // no light doc shares a physical partition with a mega doc
-    val partOfLight = data
-      .filter(!org.apache.spark.sql.functions.col("doc_id").isin(megaDocIds: _*))
-      .select("partition_id").as[Int].collect().toSet
-    assert(megaParts.nonEmpty && megaParts.toSet.intersect(partOfLight).isEmpty,
-      s"mega partitions $megaParts must be disjoint from light partitions")
-    // one mega-doc per partition, on exactly the first k partitions
-    assert(megaParts == megaDocIds.indices, s"mega partitions $megaParts")
+    val isMega = org.apache.spark.sql.functions.col("doc_id").isin(megaDocIds: _*)
+    // The layout is set by the scan splits and the heavy doc count alone:
+    // the job has no shuffle sized by spark.sql.shuffle.partitions, so two
+    // settings give the same partitions.
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    val partitionIds = try Seq("8", "64").map { shufflePartitions =>
+      spark.conf.set(key, shufflePartitions)
+      val out = Files.createTempDirectory("graft_skew").toString
+      // low heavy threshold so the synthetic mega tail definitely qualifies
+      val cfg = ExtractJob.Config(nBuckets = 4, groupSize = 4, heavyWeight = 5000L,
+        runId = "skew")
+      val stats = ExtractJob.run(spark, docs(n), out, cfg)
+      assert(stats.nDocs == n)
+      assert(stats.heavyDocs == megaDocIds.length)
+      val data = spark.read.parquet(s"$out/data")
+      val megaParts = data.filter(isMega)
+        .select("partition_id").as[Int].collect().sorted.toSeq
+      // no light doc shares a physical partition with a mega doc
+      val partOfLight = data.filter(!isMega)
+        .select("partition_id").as[Int].collect().toSet
+      assert(megaParts.nonEmpty && megaParts.toSet.intersect(partOfLight).isEmpty,
+        s"mega partitions $megaParts must be disjoint from light partitions " +
+          s"at $key=$shufflePartitions")
+      // one mega-doc per partition, on exactly the first k partitions
+      assert(megaParts == megaDocIds.indices,
+        s"mega partitions $megaParts at $key=$shufflePartitions")
+      megaParts.toSet ++ partOfLight
+    } finally spark.conf.set(key, saved)
+    assert(partitionIds.distinct.length == 1,
+      s"partition ids differ across shuffle partition settings: $partitionIds")
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.ReviewSink
@@ -73,5 +74,17 @@ class ReviewSinkSpec extends AnyFunSuite {
     val third = ReviewSink.run(spark, routed, out, "r3")
     assert(!third.committedBefore && third.nEntries == first.nEntries)
     assert(spark.read.parquet(s"$out/queue").count() == first.nEntries)
+  }
+
+  test("x26 leaves no queue dir behind once its result is collected") {
+    def entries(): Set[String] = {
+      val stream = Files.list(TempRoot("graft-review"))
+      try stream.iterator().asScala.map(_.getFileName.toString).toSet
+      finally stream.close()
+    }
+    val before = entries()
+    val rows = ExtractionQ.x26ReviewQueue(spark, dir).collect()
+    assert(rows.nonEmpty)
+    assert(entries() == before)
   }
 }
