@@ -7,6 +7,7 @@ import graft.tokenize.{DocGen, SpanTokenizer}
 /** Benchmark main. Emits ONE JSON line:
   *
   *   {"metric":"total","value":<sec>,"unit":"sec","queries":{...},"sf":...,
+  *    "jdk":...,"scala":...,"spark":...,
   *    "noise":{"loadavg_start":...,"loadavg_pre_queries":...,"loadavg_end":...,
   *             "query_passes":2,"per_query":"min"},
   *    "scaling":{"n_docs":...,"docs_per_sec_n":...,"docs_per_sec_4n":...,
@@ -31,9 +32,12 @@ import graft.tokenize.{DocGen, SpanTokenizer}
   * and `skew.write` attribute the skew pair to the tokenizer kernel and to
   * the kernel plus its parquet write.
   *
-  * The query phase times every SparkEntry query at local[32] with a
-  * host-noise guard: min of two full passes, plus one extra attempt for any
-  * query >3x its previous-round baseline; loadavg lands in `noise`.
+  * The query phase times every SparkEntry query, collecting every row and
+  * column, at local[nproc] with a host-noise guard: min of two full passes,
+  * plus one extra attempt for any query >3x its previous-round baseline;
+  * loadavg lands in `noise`. Every session in this harness (corpus writers
+  * and query phase alike) is sized from the box's cores; Spark's scratch
+  * dirs follow `java.io.tmpdir` unless `SPARK_LOCAL_DIRS` names others.
   *
   * Fail-open wall-clock discipline (round 5): the artifact file is written
   * INCREMENTALLY (after the scaling phase, after query pass 1, and at the
@@ -48,12 +52,13 @@ import graft.tokenize.{DocGen, SpanTokenizer}
   */
 object Bench {
 
-  private def session(cores: Int): SparkSession = {
+  /** Cores on this box: the query phase, corpus writers and Verify run here. */
+  def nproc: Int = Runtime.getRuntime.availableProcessors
+
+  def session(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", System.getProperty("java.io.tmpdir")))
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
@@ -185,8 +190,6 @@ object Bench {
     val pb = new ProcessBuilder(cmd: _*)
       .redirectError(ProcessBuilder.Redirect.DISCARD)
     pb.environment().put("SPARK_LOCAL_IP", "127.0.0.1")
-    if (!sys.env.contains("SPARK_GRAFT_LOCAL_DIR"))
-      pb.environment().put("SPARK_GRAFT_LOCAL_DIR", tmpBase)
     val p = pb.start()
     val out = new String(p.getInputStream.readAllBytes())
     p.waitFor()
@@ -205,7 +208,6 @@ object Bench {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val defaultDocs = 1600000L
     val nDocs =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", defaultDocs.toString).toLong
@@ -273,7 +275,10 @@ object Bench {
       val flags = (if (incomplete) List(""""incomplete":true""") else Nil) ++
         (if (budgetExhausted) List(""""budget_exhausted":true""") else Nil)
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
-        f""""sf":"$sfDir","noise":$noise,"scaling":$scaling""" +
+        f""""sf":"$sfDir","jdk":"${System.getProperty("java.version")}",""" +
+        f""""scala":"${scala.util.Properties.versionNumberString}",""" +
+        f""""spark":"${org.apache.spark.SPARK_VERSION}",""" +
+        f""""noise":$noise,"scaling":$scaling""" +
         flags.mkString(if (flags.isEmpty) "" else ",", ",", "") + "}"
     }
     def writeArtifact(json: String): Unit =
@@ -295,12 +300,12 @@ object Bench {
     }
 
     // shared corpus, materialized once (untimed): both cluster sizes read
-    // the identical input bytes
+    // the identical input bytes, 128 files each whatever the box
     def ensureCorpus(n: Long, skewed: Boolean): String = {
       val kind = if (skewed) "skewed" else "uniform"
       val d = new java.io.File(tmpBase, s"corpus_${kind}_$n")
       if (!new java.io.File(d, "corpus/_SUCCESS").exists()) {
-        val s = session(32)
+        val s = session(nproc)
         writeCorpus(s, warmSize(n), 128, s"$d/corpus_warm", skewed)
         writeCorpus(s, n, 128, s"$d/corpus", skewed)
         s.stop()
@@ -321,7 +326,6 @@ object Bench {
         // Sized from the box, checked before any corpus is written or worker
         // spawned: a pair that cannot fit fails here and says why. Total
         // memory is as the JVM sees it (the container limit when one is set).
-        val nproc = Runtime.getRuntime.availableProcessors
         val memTotalMb = java.lang.management.ManagementFactory.getOperatingSystemMXBean
           .asInstanceOf[com.sun.management.OperatingSystemMXBean]
           .getTotalMemorySize / (1024 * 1024)
@@ -470,12 +474,12 @@ object Bench {
     val results =
       if (skipQueries) Seq.empty[(String, Double)]
       else {
-        val spark = session(cpus)
+        val spark = session(nproc)
         try spark.read.parquet(s"$sfDir/nation.parquet").count() // scan warmup
         catch { case _: Throwable => }
         def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
           val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+          try { fn(spark, sfDir).collect(); (System.nanoTime() - t0) / 1e9 }
           catch { case _: Throwable => -1.0 }
         }
         val qs = SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph primitives for the dedup pipeline.
@@ -23,31 +23,29 @@ object GraphOps {
     * id reachable from `node`.
     *
     * Scale shape: each round is one co-partitioned join of the label table
-    * with the (symmetrized, persisted) edge list plus a min-aggregate —
+    * with the (symmetrized, checkpointed) edge list plus a min-aggregate —
     * shuffle volume O(|E|) longs per round, never any payload columns.
     * Rounds needed = graph DIAMETER (label information travels one hop per
-    * round), and the early-stop check (`changed == 0`) costs one count per
-    * round on the already-persisted next table. Near-dup graphs at corpus
-    * scale are forests of tiny star/chain clusters (diameter ≤ ~3), so this
-    * converges in 3-4 rounds; for adversarial long-path graphs switch the
-    * propagation rule to large-star/small-star (Kiveris et al., "Connected
-    * Components in MapReduce"), which is O(log n) rounds of the same
-    * join+min shape — the rule, not the machinery, is what changes.
-    * Persist discipline: labels are persisted per round and the previous
-    * round unpersisted; every `maxHops` rounds the lineage is truncated
-    * with localCheckpoint so plan depth stays bounded on long chains.
+    * round), and the early-stop check (`changed == 0`) rides on the round's
+    * own job as an Observation. Near-dup graphs at corpus scale are forests
+    * of tiny star/chain clusters (diameter ≤ ~3), so this converges in 3-4
+    * rounds; for adversarial long-path graphs switch the propagation rule to
+    * large-star/small-star (Kiveris et al., "Connected Components in
+    * MapReduce"), which is O(log n) rounds of the same join+min shape — the
+    * rule, not the machinery, is what changes.
+    * Materialization: every frame the loop reads is an eager
+    * localCheckpoint, so lineage stays one round deep and nothing lands in
+    * the CacheManager; unreferenced checkpoint blocks are reclaimed by the
+    * ContextCleaner.
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
-      maxIter: Int = 20, checkpointEvery: Int = 8): DataFrame = {
+      maxIter: Int = 20): DataFrame = {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .persist()
+      .localCheckpoint()
     var labels = nodes.select(col("node"), col("node").as("component_id"))
-      .persist()
-    labels.count() // materialize before the loop so unpersist bookkeeping is uniform
-    // the frame actually held in the cache (labels may be a projection of it)
-    var cached = labels
+      .localCheckpoint()
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
@@ -56,31 +54,21 @@ object GraphOps {
         .join(labels.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node"))
         .agg(min("component_id").as("nbr_min"))
-      // carry the previous label through the join so the early-stop check
-      // is a filter+count on the persisted frame, not a second join back
-      // onto the label table (one shuffle per round instead of two)
-      var next = labels.join(nbrMin, Seq("node"), "left")
+      // carry the previous label through the join so the early-stop count
+      // is observed on the round's own checkpoint job, not a second join
+      // back onto the label table (one job per round)
+      val obs = Observation()
+      val next = labels.join(nbrMin, Seq("node"), "left")
         .select(col("node"), col("component_id").as("prev"),
           least(col("component_id"), coalesce(col("nbr_min"), col("component_id")))
             .as("component_id"))
-      if ((iter + 1) % checkpointEvery == 0) next = next.localCheckpoint()
-      next = next.persist()
-      changed = next.filter(col("component_id") =!= col("prev")).count()
-      cached.unpersist()
-      cached = next
+        .observe(obs, count(when(col("component_id") =!= col("prev"), true)).as("changed"))
+        .localCheckpoint()
+      changed = obs.get("changed").asInstanceOf[Long]
       labels = next.select(col("node"), col("component_id"))
       iter += 1
     }
-    sym.unpersist()
-    // Hand back a frame that is materialized but NOT registered in the
-    // CacheManager: returning the persisted `labels` leaked one cached
-    // DataFrame per call for the session lifetime (the caller has no way to
-    // unpersist it). localCheckpoint is eager — the copy costs one pass over
-    // the already-cached labels — and its blocks are reclaimed by the
-    // ContextCleaner once the result is dropped.
-    val out = labels.localCheckpoint()
-    cached.unpersist()
-    out
+    labels
   }
 
   /** Component summary + representative selection: per node, its component,

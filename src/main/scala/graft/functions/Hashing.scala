@@ -170,12 +170,4 @@ object Hashing {
   }
 
   def hammingDistance64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
-  /** Stable content id: FNV-1a of normalized text, hex — the Spark-side
-    * column analog is sha2/xxhash64 (reference hash_for_deduplication,
-    * src/utils/hash_utils.py:126-282 uses sha256 of normalized content).
-    */
-  def contentId(text: String): String =
-    java.lang.Long.toHexString(fnv1a64(Strings.normalizeWhitespace(
-      if (text == null) "" else text.toLowerCase)))
 }

@@ -284,18 +284,22 @@ object NativeKernels {
 /** Session-level registration helpers for the native expression library. */
 object NativeFunctions {
 
+  /** The native functions as (SQL name, expression class, builder): the one
+    * list both [[graft.plans.GraftExtensions]] and [[ensureRegistered]] read.
+    */
+  val All: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("ws_token_count", classOf[WsTokenCount], e => WsTokenCount(e.head)),
+    ("float_vec_dot", classOf[FloatVecDot], e => FloatVecDot(e.head, e(1))),
+    ("pq_dist", classOf[PqDist], e => PqDist(e.head, e(1), e(2))),
+    ("sq8_cos", classOf[Sq8Cos], e => Sq8Cos(e.head, e(1))))
+
   /** Idempotently register the native functions on an existing session —
     * covers harnesses that build the SparkSession without
     * `spark.sql.extensions` wired.
     */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ws_token_count", exprs => WsTokenCount(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_vec_dot", exprs => FloatVecDot(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_dist", exprs => PqDist(exprs.head, exprs(1), exprs(2)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq8_cos", exprs => Sq8Cos(exprs.head, exprs(1)), "scala_udf")
-  }
+  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
+    All.foreach { case (name, _, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, builder, "scala_udf")
+    }
 }

@@ -234,10 +234,6 @@ object Strings {
     Some(text.substring(from, ei))
   }
 
-  /** None/blank check. Reference: string_utils.py:516-530. */
-  def isEmptyOrWhitespace(text: String): Boolean =
-    text == null || text.trim.isEmpty
-
   /** Pad/truncate to a fixed length (string_utils.py:463-490). */
   def padString(text: String, length: Int, padChar: Char = ' ',
       align: String = "left"): String = {

@@ -117,8 +117,6 @@ object ExtractJob {
     (((h % nBuckets) + nBuckets) % nBuckets).toInt
   }
 
-  private def deleteRecursively(p: Path): Unit = Manifests.deleteRecursively(p)
-
   /** Sweep stale state from a previous crashed run: temp dirs, and any group
     * dir under `data/` or `metrics/` whose buckets are not ALL
     * manifest-committed (a crash between the group rename and its manifest
@@ -143,7 +141,7 @@ object ExtractJob {
       else scala.util.Using.resource(Files.list(dir))(
         _.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix)).toSeq)
     val root = Paths.get(outDir)
-    list(root, ".tmp-group-").foreach(deleteRecursively)
+    list(root, ".tmp-group-").foreach(Manifests.deleteRecursively)
     var alive = committed
     for (sub <- Seq("data", "metrics"); d <- list(root.resolve(sub), "group=")) {
       val buckets = d.getFileName.toString.stripPrefix("group=")
@@ -155,7 +153,7 @@ object ExtractJob {
         // has a window where the data is gone but manifests still claim
         // the committed buckets done — those rows would be lost forever.
         buckets.foreach(store.revoke)
-        deleteRecursively(d)
+        Manifests.deleteRecursively(d)
         alive = alive -- buckets
       }
     }
@@ -265,7 +263,7 @@ object ExtractJob {
         .mode(SaveMode.Overwrite).parquet(tmp.toString)
       val target = Paths.get(outDir, "data", s"group=$gname")
       Files.createDirectories(target.getParent)
-      deleteRecursively(target) // stale uncommitted dir from a crashed run
+      Manifests.deleteRecursively(target) // stale uncommitted dir from a crashed run
       Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
 
       // Like the data dir, the group's metrics dir counts only once all its

@@ -46,9 +46,6 @@ object ReviewSink {
   val MaxAttempts = 3
   val Passes = 4
 
-  /** STUB — deterministic stand-in for the webhook delivery attempt. */
-  def deliverySucceeds(id: Long, pass: Int): Boolean = (id + 7L * pass) % 5 == 0
-
   /** The queue's durability record — named queue-domain fields, so no reader
     * can confuse delivered/dead counts with extraction doc/span totals.
     */
@@ -86,8 +83,6 @@ object ReviewSink {
   /** Revoke the queue commit (crash-window testing / forced reprocess). */
   def revoke(outDir: String): Unit = Files.deleteIfExists(manifestPath(outDir))
 
-  private def deleteRecursively(p: Path): Unit = Manifests.deleteRecursively(p)
-
   /** Enqueue `routed`'s non-complete rows, drive `Passes` redelivery passes,
     * and commit the final queue table to `outDir/queue`. Idempotent: a
     * committed manifest short-circuits the whole run.
@@ -100,7 +95,7 @@ object ReviewSink {
     Using.resource(Files.list(root))(
       _.iterator().asScala
         .filter(_.getFileName.toString.startsWith(".tmp-queue"))
-        .toSeq.foreach(deleteRecursively))
+        .toSeq.foreach(Manifests.deleteRecursively))
     val queueDir = root.resolve("queue")
     readManifest(outDir) match {
       case Some(m) =>
@@ -108,7 +103,7 @@ object ReviewSink {
       case None => ()
     }
     // uncommitted queue dir = crash between rename and manifest: rewrite
-    deleteRecursively(queueDir)
+    Manifests.deleteRecursively(queueDir)
 
     var q = routed.filter(col("route") =!= "complete")
       .select(col("doc_id"), col("route").as("queue"), col("confidence"),

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{FloatVecDot, PqDist, Sq8Cos, WsTokenCount}
+import graft.functions.NativeFunctions
 
 /** Production wiring for the native expression library:
   *
@@ -15,26 +15,9 @@ import graft.functions.{FloatVecDot, PqDist, Sq8Cos, WsTokenCount}
   * a bare session instead call [[graft.functions.NativeFunctions.ensureRegistered]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("ws_token_count"),
-      new ExpressionInfo(classOf[WsTokenCount].getName, "ws_token_count"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WsTokenCount(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("float_vec_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "float_vec_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FloatVecDot(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("pq_dist"),
-      new ExpressionInfo(classOf[PqDist].getName, "pq_dist"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        PqDist(exprs.head, exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("sq8_cos"),
-      new ExpressionInfo(classOf[Sq8Cos].getName, "sq8_cos"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Sq8Cos(exprs.head, exprs(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    NativeFunctions.All.foreach { case (name, cls, builder) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
 }

@@ -36,6 +36,8 @@ class GraphOpsSpec extends AnyFunSuite {
     val edges = (10L until 19L).map(i => (i, i + 1))
     val got = cc(nodes, edges)
     assert(got == nodes.map(_ -> 10L).toMap)
+    // every round materializes by localCheckpoint: nothing is left cached
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("separate components, singleton, and duplicate/self edges") {
