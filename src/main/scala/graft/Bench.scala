@@ -477,19 +477,23 @@ object Bench {
         val spark = session(nproc)
         try spark.read.parquet(s"$sfDir/nation.parquet").count() // scan warmup
         catch { case _: Throwable => }
-        def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+        def timeOne(name: String,
+            fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
           val t0 = System.nanoTime()
           try { fn(spark, sfDir).collect(); (System.nanoTime() - t0) / 1e9 }
-          catch { case _: Throwable => -1.0 }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: $e")
+            -1.0
+          }
         }
         val qs = SparkEntry.queries.toSeq.sortBy(_._1)
-        val pass1 = qs.map { case (n, f) => n -> timeOne(f) }.toMap
+        val pass1 = qs.map { case (n, f) => n -> timeOne(n, f) }.toMap
         // land pass-1 numbers immediately — a kill during pass 2 keeps them
         writeArtifact(assemble(scalingJson,
           qs.map { case (n, _) => n -> math.max(pass1(n), 0.0) },
           incomplete = true))
         val pass2 =
-          if (canSpend(90)) qs.map { case (n, f) => n -> timeOne(f) }.toMap
+          if (canSpend(90)) qs.map { case (n, f) => n -> timeOne(n, f) }.toMap
           else Map.empty[String, Double]
         val r = qs.map { case (name, fn) =>
           val t = (pass1(name), pass2.getOrElse(name, -1.0)) match {
@@ -499,7 +503,7 @@ object Bench {
           }
           val tFinal = queryBaseline.get(name) match {
             case Some(base) if base > 0 && t > base * 3 && canSpend(30) =>
-              val again = timeOne(fn)
+              val again = timeOne(name, fn)
               if (again >= 0) math.min(t, again) else t
             case _ => t
           }

@@ -168,6 +168,4 @@ object Hashing {
     }
     out
   }
-
-  def hammingDistance64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -293,13 +294,16 @@ object NativeFunctions {
     ("pq_dist", classOf[PqDist], e => PqDist(e.head, e(1), e(2))),
     ("sq8_cos", classOf[Sq8Cos], e => Sq8Cos(e.head, e(1))))
 
-  /** Idempotently register the native functions on an existing session —
-    * covers harnesses that build the SparkSession without
-    * `spark.sql.extensions` wired.
+  /** Register each native function the session does not have yet — covers
+    * harnesses that build the SparkSession without `spark.sql.extensions`
+    * wired. A function already present (injected by the extensions, or by
+    * an earlier call) is left as it is, so per-query calls cost one lookup.
     */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
+  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     All.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "scala_udf")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
+  }
 }

@@ -62,17 +62,17 @@ object ExtractJob {
       nBuckets: Int = 32,
       groupSize: Int = 8,
       heavyWeight: Long = 5000000L,
-      // Output writer options. Dictionary encoding is disabled by default:
-      // extracted span text is high-cardinality, so the dictionary pass
-      // burns encoder CPU and memory only to overflow and fall back —
-      // measured +13% on the 16-core skew leg with no c4 change (guide §6;
-      // snappy page compression still applies).
-      writeOptions: Map[String, String] =
-        Map("parquet.enable.dictionary" -> "false"),
       runId: String = "run",
       // test hook: simulate a crash once N bucket manifests have been
       // committed in this run (checked before each manifest commit)
-      failAfterBucketCommits: Option[Int] = None)
+      failAfterBucketCommits: Option[Int] = None) {
+    // Output writer options. Dictionary encoding is disabled: extracted
+    // span text is high-cardinality, so the dictionary pass burns encoder
+    // CPU and memory only to overflow and fall back — measured +13% on the
+    // 16-core skew leg with no c4 change (guide §6; snappy page compression
+    // still applies).
+    def writeOptions: Map[String, String] = Map("parquet.enable.dictionary" -> "false")
+  }
 
   /** Thrown by the `failAfterBucketCommits` test hook: a simulated crash
     * right before a bucket manifest commit. When N is a multiple of

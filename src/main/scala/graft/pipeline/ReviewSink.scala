@@ -7,6 +7,7 @@ import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.tokenize.DocGen
 
 /** Review-queue sink with dead-letter semantics — the durable landing zone
   * for rows the routing ladder (ExtractionQ.x13Routing) sends away from
@@ -109,7 +110,7 @@ object ReviewSink {
       .select(col("doc_id"), col("route").as("queue"), col("confidence"),
         lit(0).as("attempts"), lit("pending").as("status"),
         lit(0).as("delivered_pass"),
-        substring(col("doc_id"), 5, 9).cast("long").as("idnum"))
+        DocGen.docIdNum(col("doc_id")).as("idnum"))
     (1 to Passes).foreach { p =>
       // claim_due analog: only pending entries are attempted
       val pending = col("status") === "pending"

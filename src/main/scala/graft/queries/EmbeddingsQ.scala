@@ -31,6 +31,21 @@ object EmbeddingsQ {
   private def norm(spark: SparkSession, a: Column): Column =
     sqrt(dot(spark, a, a))
 
+  /** Exact cosine of a broadcast query (`q_emb`, `q_norm`) against a corpus
+    * row (`embedding`, `e_norm`), from norms each side computed once before
+    * the join.
+    */
+  private def cosine(spark: SparkSession): Column =
+    dot(spark, col("q_emb"), col("embedding")) / (col("q_norm") * col("e_norm"))
+
+  /** Per-query top-k: neighbours ranked by `order`, ties broken by
+    * neighbor_id (a total order both engines agree on), `rank` as a long.
+    */
+  private def topK(scored: DataFrame, order: Column, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(order, col("neighbor_id"))).cast("long"))
+      .filter(col("rank") <= k)
+
   /** L2 norms (map-only; sanity surface for the ANN paths). */
   def e01Norms(spark: SparkSession, dir: String): DataFrame =
     load(spark, dir, "embeddings")
@@ -50,13 +65,8 @@ object EmbeddingsQ {
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("e_norm").as("q_norm"))
     val scored = emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(spark, col("q_emb"), col("embedding")) /
-          (col("q_norm") * col("e_norm"))).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("cos_sim"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .orderBy("query_id", "rank")
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), cosine(spark).as("cos_sim"))
+    topK(scored, desc("cos_sim"), 5).orderBy("query_id", "rank")
   }
 
   /** Deterministic random hyperplanes: component j of plane p is a signed
@@ -67,12 +77,13 @@ object EmbeddingsQ {
   private[graft] def planeSign(p: Int, j: Int): Double =
     if (Hashing.mix64(p.toLong * 131071L + j.toLong) >= 0L) 1.0 else -1.0
 
-  private[graft] val lshBits = 8
-
-  private val lshSigUdf = udf { (emb: Seq[Float]) =>
+  /** `bits`-bit random-hyperplane signature: bit p is set iff the vector
+    * lies on the non-negative side of plane p.
+    */
+  private def signatureUdf(bits: Int) = udf { (emb: Seq[Float]) =>
     var sig = 0
     var p = 0
-    while (p < lshBits) {
+    while (p < bits) {
       var s = 0.0
       var j = 0
       while (j < emb.length) { s += planeSign(p, j) * emb(j); j += 1 }
@@ -81,6 +92,8 @@ object EmbeddingsQ {
     }
     sig
   }
+
+  private[graft] val lshBits = 8
 
   /** All XOR masks within Hamming distance 2 of zero over lshBits bits —
     * standard multi-probe LSH probe sequence (probe the query's bucket and
@@ -106,7 +119,7 @@ object EmbeddingsQ {
     // one evaluation per row (the optimizer otherwise duplicates it into
     // each branch and can relocate it above the join — guide §4.4).
     val emb = load(spark, dir, "embeddings")
-      .withColumn("bucket", lshSigUdf(col("embedding")))
+      .withColumn("bucket", signatureUdf(lshBits)(col("embedding")))
       .withColumn("e_norm", norm(spark, col("embedding")))
       .localCheckpoint()
     val queries = emb.filter(col("vec_id") < 20)
@@ -121,12 +134,8 @@ object EmbeddingsQ {
     val cands = emb.join(broadcast(probes),
       col("bucket") === col("probe_bucket") && col("vec_id") =!= col("query_id"))
     val scored = cands.select(col("query_id"), col("vec_id").as("neighbor_id"),
-      (dot(spark, col("q_emb"), col("embedding")) /
-        (col("q_norm") * col("e_norm"))).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("cos_sim"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .orderBy("query_id", "rank")
+      cosine(spark).as("cos_sim"))
+    topK(scored, desc("cos_sim"), 5).orderBy("query_id", "rank")
   }
 
   /** kNN majority-label classification for the first 100 vectors. */
@@ -138,11 +147,8 @@ object EmbeddingsQ {
         col("e_norm").as("q_norm"))
     val scored = emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("label"),
-        (dot(spark, col("q_emb"), col("embedding")) /
-          (col("q_norm") * col("e_norm"))).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("cos_sim"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 10)
+        cosine(spark).as("cos_sim"))
+    topK(scored, desc("cos_sim"), 10)
       .groupBy(col("query_id"), col("label"))
       .agg(count(lit(1)).as("votes"))
       .withColumn("vote_rank", row_number().over(
@@ -158,19 +164,6 @@ object EmbeddingsQ {
     * vectors size bits ~ log2(n) so within-bucket pair counts stay bounded).
     */
   private[graft] val dedupBits = 16
-
-  private val dedupSigUdf = udf { (emb: Seq[Float]) =>
-    var sig = 0
-    var p = 0
-    while (p < dedupBits) {
-      var s = 0.0
-      var j = 0
-      while (j < emb.length) { s += planeSign(p, j) * emb(j); j += 1 }
-      if (s >= 0) sig |= (1 << p)
-      p += 1
-    }
-    sig
-  }
 
   /** Embedding-cosine near-duplicate detection (training-data dedup
     * surface), LSH-bucketed — NO all-pairs join at any scale: corpus is
@@ -190,7 +183,7 @@ object EmbeddingsQ {
     // (see the e03 note; without it the 16-bit signature UDF runs twice per
     // row and can migrate into the join)
     val corpus = emb.unionByName(dups)
-      .withColumn("bucket", dedupSigUdf(col("embedding")))
+      .withColumn("bucket", signatureUdf(dedupBits)(col("embedding")))
       .withColumn("e_norm", norm(spark, col("embedding")))
       .localCheckpoint()
     val left = corpus.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"),
@@ -250,13 +243,8 @@ object EmbeddingsQ {
         explode(probesUdf(col("embedding"))).as("probe_cell"))
     val scored = corpus.join(broadcast(queries),
       col("cell") === col("probe_cell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        (dot(spark, col("q_emb"), col("embedding")) /
-          (col("q_norm") * col("e_norm"))).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("cos_sim"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .orderBy("query_id", "rank")
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), cosine(spark).as("cos_sim"))
+    topK(scored, desc("cos_sim"), 5).orderBy("query_id", "rank")
   }
 
   /** Per-label centroid norms — elementwise mean via posexplode + re-agg,
@@ -328,10 +316,7 @@ object EmbeddingsQ {
     val scored = quant.join(broadcast(qs), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         call_function("sq8_cos", col("q_qv"), col("qv")).as("cos_sq8"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("cos_sq8"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .orderBy("query_id", "rank")
+    topK(scored, desc("cos_sq8"), 5).orderBy("query_id", "rank")
   }
 
   /** Product-quantization ANN (e09): the FAISS PQ storage path — each
@@ -396,10 +381,6 @@ object EmbeddingsQ {
     val scored = corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         call_function("pq_dist", col("q_emb"), col("code"), cbCol).as("approx_dist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_dist"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .orderBy("query_id", "rank")
+    topK(scored, col("approx_dist"), 5).orderBy("query_id", "rank")
   }
 }

@@ -17,15 +17,26 @@ import T._
   */
 object ExtractionQ {
 
-  /** Raw interleaved docs derived 1:1 from the documents table. */
-  def rawDocs(spark: SparkSession, dir: String): Dataset[Doc] = {
+  /** The documents table as typed (numeric doc id, text) rows. */
+  def docTexts(spark: SparkSession, dir: String): Dataset[(Long, String)] = {
     import spark.implicits._
     load(spark, dir, "documents")
       .select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        DocGen.synthesize(id, text)
-      })
+  }
+
+  /** The documents table's numeric doc ids (the scan prunes to doc_id). */
+  def docIds(spark: SparkSession, dir: String): Dataset[Long] = {
+    import spark.implicits._
+    load(spark, dir, "documents").select(col("doc_id").cast("long")).as[Long]
+  }
+
+  /** Raw interleaved docs derived 1:1 from the documents table. */
+  def rawDocs(spark: SparkSession, dir: String): Dataset[Doc] = {
+    import spark.implicits._
+    docTexts(spark, dir).mapPartitions(_.map { case (id, text) =>
+      DocGen.synthesize(id, text)
+    })
   }
 
   /** Tokenized docs — the extraction kernel over typed partitions with a
@@ -140,8 +151,7 @@ object ExtractionQ {
       .withColumn("fn", greatest(col("n_spans_1") - col("n_agree"), lit(0)))
       .withColumn("doc_f1",
         when(col("tp") * 2 + col("fp") + col("fn") === 0, 1.0)
-          .otherwise(col("tp").cast("double") * 2 /
-            (col("tp") * 2 + col("fp") + col("fn"))))
+          .otherwise(f1(col("tp"), col("fp"), col("fn"))))
     per.agg(
       sum(col("tp")).as("tp"), sum(col("fp")).as("fp"), sum(col("fn")).as("fn"),
       // rounded: double summation order varies with shuffle arrival; noise
@@ -149,8 +159,7 @@ object ExtractionQ {
       // oracle-exact (micro_f1 is exact integer arithmetic, no rounding)
       round(avg(col("doc_f1")), 6).as("macro_f1"),
       count(lit(1)).as("n_docs"))
-      .withColumn("micro_f1", col("tp").cast("double") * 2 /
-        (col("tp") * 2 + col("fp") + col("fn")))
+      .withColumn("micro_f1", f1(col("tp"), col("fp"), col("fn")))
   }
 
   /** Hallucination-pattern suspicion per document over extracted text spans
@@ -277,7 +286,7 @@ object ExtractionQ {
         yield (p, t) -> Calibration.fitIsotonic(Calibration.plantedSample(p, t))).toMap
     val isoUdf = udf { (p: Long, t: Long, x: Double) => fits((p, t))(x) }
     val linUdf = udf { (x: Double) => Calibration.applyLinear(x) }
-    val idnum = substring(col("doc_id"), 5, 9).cast("long")
+    val idnum = DocGen.docIdNum(col("doc_id"))
     scoredAll(spark, dir)
       .select(col("doc_id"),
         (idnum % 3).as("profile"),
@@ -309,8 +318,7 @@ object ExtractionQ {
         when(col("confidence") >= 0.85, "high")
           .when(col("confidence") >= 0.5, "medium")
           .otherwise("low"))
-      .withColumn("retries_left",
-        substring(col("doc_id"), 5, 9).cast("long") % 3 > 0)
+      .withColumn("retries_left", DocGen.docIdNum(col("doc_id")) % 3 > 0)
       .withColumn("route",
         when(col("is_likely_hallucination"), "human_review")
           .when(col("conf_level") === "high", "complete")
@@ -354,7 +362,6 @@ object ExtractionQ {
     * by $2.00 every 11th.
     */
   private[queries] def claimFields(id: Long): Map[String, String] = {
-    import graft.tokenize.DocGen
     val birth = java.time.LocalDate.of(1950, 1, 1).plusDays(id % 28000)
     val from = java.time.LocalDate.of(2020, 1, 1).plusDays(id % 365)
     val to = from.plusDays(id % 7 - 1)
@@ -385,13 +392,11 @@ object ExtractionQ {
     import spark.implicits._
     import graft.functions.CrossField
     val rules = CrossField.cms1500Rules
-    load(spark, dir, "documents")
-      .select(col("doc_id").cast("long"))
-      .as[Long]
+    docIds(spark, dir)
       .mapPartitions { it =>
         it.map { id =>
           val r = CrossField.validate(rules, claimFields(id))
-          (f"doc_$id%09d", r.rulesChecked, r.rulesPassed,
+          (DocGen.docIdStr(id), r.rulesChecked, r.rulesPassed,
             r.errors.length, r.passed,
             r.violations.map(_.ruleName).sorted.mkString(","))
         }
@@ -411,9 +416,7 @@ object ExtractionQ {
     val fieldNames = Seq("patient_name", "npi", "total_charges", "service_date")
     val primes = Seq((3, 7), (5, 11), (13, 17), (19, 23))
     val critical = Set("patient_name", "npi")
-    load(spark, dir, "documents")
-      .select(col("doc_id").cast("long"))
-      .as[Long]
+    docIds(spark, dir)
       .mapPartitions { it =>
         it.map { id =>
           val fields = fieldNames.zip(primes).zipWithIndex.map {
@@ -426,7 +429,7 @@ object ExtractionQ {
                 hasPatternFlag = (id + k) % 13 == 0)
           }
           val o = Confidence.overall(fields, critical, retryCount = (id % 4).toInt)
-          (f"doc_$id%09d", o.overallConfidence, o.overallLevel, o.action,
+          (DocGen.docIdStr(id), o.overallConfidence, o.overallLevel, o.action,
             o.nHigh, o.nMedium, o.nLow)
         }
       }
@@ -449,7 +452,7 @@ object ExtractionQ {
     }
     scoredAll(spark, dir)
       .withColumn("trust",
-        (substring(col("doc_id"), 5, 9).cast("long") * 13 % 101).cast("double") / 100.0)
+        (DocGen.docIdNum(col("doc_id")) * 13 % 101).cast("double") / 100.0)
       .withColumn("c", combineUdf(col("agreement_rate"), col("trust"), col("modalities")))
       .select(col("doc_id"), col("c._1").as("dual_pass"), col("c._2").as("critic"),
         col("c._3").as("modality_penalty"), col("c._4").as("raw_combined"))
@@ -479,7 +482,6 @@ object ExtractionQ {
     */
   private[queries] def goldenPairs(id: Long, words: IndexedSeq[String])
       : Seq[(String, String, String, String)] = {
-    import graft.tokenize.DocGen
     val did = DocGen.docIdStr(id)
     def money(c: Long): String = f"$$${c / 100}%d.${c % 100}%02d"
     def plain(c: Long): String = f"${c / 100}%d.${c % 100}%02d"
@@ -528,14 +530,12 @@ object ExtractionQ {
   def x17GoldenEval(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.functions.GoldenEval
-    load(spark, dir, "documents")
-      .select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
+    docTexts(spark, dir)
       .flatMap { case (id, text) =>
         val w = evalWords(text)
         goldenPairsOpt(id, w).map { case (field, level, g, x) =>
           val r = GoldenEval.compareField(g, x, level)
-          (graft.tokenize.DocGen.docIdStr(id), field, level,
+          (DocGen.docIdStr(id), field, level,
             g.isDefined, x.isDefined, r.isMatch, r.similarity)
         }
       }
@@ -618,15 +618,13 @@ object ExtractionQ {
     */
   def x19RecordSuspicion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    load(spark, dir, "documents")
-      .select(col("doc_id").cast("long"))
-      .as[Long]
+    docIds(spark, dir)
       .mapPartitions { it =>
         it.map { id =>
           val data = recordFields(id)
           val flags = Patterns.recordFlags(data)
           val susp = Patterns.recordSuspicion(data)
-          (graft.tokenize.DocGen.docIdStr(id),
+          (DocGen.docIdStr(id),
             flags.count(_ == "critical"), flags.count(_ == "high"),
             flags.count(_ == "medium"), susp,
             susp >= Patterns.hallucinationThreshold)
@@ -650,9 +648,7 @@ object ExtractionQ {
     val taxos = Array("207Q00000X", "207q00000x", "12345", "ABCD567890")
     val carcs = Array("45", "CO-45", "PR 3", "B45", "XX45", "4567")
     val rarcs = Array("MA01", "N1", "M12", "ma 130", "X1", "MA1234")
-    load(spark, dir, "documents")
-      .select(col("doc_id").cast("long"))
-      .as[Long]
+    docIds(spark, dir)
       .mapPartitions { it =>
         it.map { id =>
           val mod = mods((id % 6).toInt)
@@ -661,7 +657,7 @@ object ExtractionQ {
           val carc = carcs((id % 6).toInt)
           val rarc = rarcs((id % 6).toInt)
           val rarcNorm = Codes.normalizeRarc(rarc)
-          (graft.tokenize.DocGen.docIdStr(id),
+          (DocGen.docIdStr(id),
             mod, fmtOk, known,
             taxo, Codes.validTaxonomy(taxo),
             carc, Codes.normalizeCarc(carc).orNull,
@@ -737,9 +733,7 @@ object ExtractionQ {
     */
   def x23DocMetadata(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    load(spark, dir, "documents")
-      .select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
+    docTexts(spark, dir)
       .mapPartitions { it =>
         val digest = java.security.MessageDigest.getInstance("SHA-256")
         it.map { case (id, text) =>
@@ -769,9 +763,7 @@ object ExtractionQ {
     import spark.implicits._
     import graft.functions.Reconcile
     import graft.model.Bbox
-    load(spark, dir, "documents")
-      .select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
+    docTexts(spark, dir)
       .flatMap { case (id, text) =>
         val w0 = Strings.splitWs(text).toIndexedSeq
         val w = if (w0.length >= 4) w0 else IndexedSeq("a", "b", "c", "d")
@@ -816,9 +808,7 @@ object ExtractionQ {
   def x25RunComparison(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.GoldenEval
     import spark.implicits._
-    val perRun = load(spark, dir, "documents")
-      .select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
+    val perRun = docTexts(spark, dir)
       .flatMap { case (id, text) =>
         val w = evalWords(text)
         val base = goldenPairs(id, w)
@@ -831,7 +821,7 @@ object ExtractionQ {
               if (id % 11 == 0) { if (w.length >= 6) w(5) else "other" } else g
             case "provider" => if (id % 31 == 0) g.dropRight(1) else g
             case _ => // total_charges: strip the $ (numeric-equal), rarely break
-              val cents = graft.tokenize.DocGen.tableAmtCents(id, 0).toLong
+              val cents = DocGen.tableAmtCents(id, 0).toLong
               val c2 = if (id % 37 == 0) cents + cents / 5 else cents
               f"${c2 / 100}%d.${c2 % 100}%02d"
           }
@@ -848,18 +838,14 @@ object ExtractionQ {
       .agg(
         sum(col("is_match").cast("long")).as("tp"),
         sum((!col("is_match")).cast("long")).as("fpfn"))
-      .withColumn("f1", col("tp").cast("double") * 2 /
-        (col("tp") * 2 + col("fpfn") + col("fpfn")))
+      .withColumn("f1", f1(col("tp"), col("fpfn"), col("fpfn")))
     val b = perRun.filter(col("run") === "baseline")
       .select(col("field"), col("f1").as("f1_baseline"))
     val c = perRun.filter(col("run") === "candidate")
       .select(col("field"), col("f1").as("f1_candidate"))
     b.join(c, "field")
       .withColumn("delta", col("f1_candidate") - col("f1_baseline"))
-      .withColumn("status",
-        when(col("delta") < -0.02, "regression")
-          .when(col("delta") > 0.02, "improvement")
-          .otherwise("stable"))
+      .withColumn("status", deltaStatus(col("delta")))
       .orderBy("field")
   }
 
@@ -893,9 +879,7 @@ object ExtractionQ {
     import spark.implicits._
     import graft.functions.PhiMask
     import graft.pipeline.Export
-    val ids = load(spark, dir, "documents")
-      .select(col("doc_id").cast("long"))
-      .as[Long]
+    val ids = docIds(spark, dir)
     val perDoc = ids
       .mapPartitions { it =>
         it.map { id =>
@@ -904,7 +888,7 @@ object ExtractionQ {
           val maskedFields = rec.keys.toSeq.sorted
             .filter(k => masked(k) != rec(k))
           val c = Export.validateCompleteness(rec, consolidatedSchema)
-          (graft.tokenize.DocGen.docIdStr(id), primaryNorm(id),
+          (DocGen.docIdStr(id), primaryNorm(id),
             maskedFields.mkString(","), c.isComplete,
             c.completenessScore, c.emptyFields.length)
         }
@@ -1103,9 +1087,7 @@ object ExtractionQ {
   def x30AbTest(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.GoldenEval
     import spark.implicits._
-    val rows = load(spark, dir, "documents")
-      .select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
+    val rows = docTexts(spark, dir)
       .flatMap { case (id, text) =>
         val w = evalWords(text)
         val p0 = goldenPairs(id, w)
@@ -1133,28 +1115,24 @@ object ExtractionQ {
         sum(when(col("side") === "a" && !col("is_match"), 1L).otherwise(0L)).as("ea"),
         sum(when(col("side") === "b" && col("is_match"), 1L).otherwise(0L)).as("tpb"),
         sum(when(col("side") === "b" && !col("is_match"), 1L).otherwise(0L)).as("eb"))
-      .withColumn("f1a",
-        col("tpa").cast("double") * 2 / (col("tpa") * 2 + col("ea") + col("ea")))
-      .withColumn("f1b",
-        col("tpb").cast("double") * 2 / (col("tpb") * 2 + col("eb") + col("eb")))
+      .withColumn("f1a", f1(col("tpa"), col("ea"), col("ea")))
+      .withColumn("f1b", f1(col("tpb"), col("eb"), col("eb")))
       .withColumn("fdelta", col("f1b") - col("f1a"))
     perField
       .groupBy(col("test_name"))
       .agg(
-        (sum("tpa").cast("double") * 2 /
-          (sum("tpa") * 2 + sum("ea") + sum("ea"))).as("f1_a"),
-        (sum("tpb").cast("double") * 2 /
-          (sum("tpb") * 2 + sum("eb") + sum("eb"))).as("f1_b"),
+        f1(sum("tpa"), sum("ea"), sum("ea")).as("f1_a"),
+        f1(sum("tpb"), sum("eb"), sum("eb")).as("f1_b"),
         concat_ws(",",
-          array_sort(collect_list(when(col("fdelta") < -0.02, col("field")))))
+          array_sort(collect_list(when(col("fdelta") < -DeltaGate, col("field")))))
           .as("regressions"),
         concat_ws(",",
-          array_sort(collect_list(when(col("fdelta") > 0.02, col("field")))))
+          array_sort(collect_list(when(col("fdelta") > DeltaGate, col("field")))))
           .as("improvements"))
       .withColumn("f1_delta", col("f1_b") - col("f1_a"))
       .withColumn("outcome",
-        when(col("f1_delta") > 0.02, "b_wins")
-          .when(col("f1_delta") < -0.02, "a_wins")
+        when(col("f1_delta") > DeltaGate, "b_wins")
+          .when(col("f1_delta") < -DeltaGate, "a_wins")
           .otherwise("no_difference"))
       .select("test_name", "f1_a", "f1_b", "f1_delta", "outcome",
         "regressions", "improvements")
@@ -1174,9 +1152,7 @@ object ExtractionQ {
   def x32SchemaVersioning(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.SchemaVersioning._
     import spark.implicits._
-    load(spark, dir, "documents")
-      .select(col("doc_id").cast("long"))
-      .as[Long]
+    docIds(spark, dir)
       .map { id =>
         val v1 = Seq(
           Field("claim_id", "string", required = true),
@@ -1197,7 +1173,7 @@ object ExtractionQ {
         val (ver, changed) = registerVersion("1.0.0", v1, v2)
         val migrated = migrate(
           v1.map(f => f.name -> (Some("v"): Option[String])).toMap, d)
-        (graft.tokenize.DocGen.docIdStr(id), schemaHash(v1), schemaHash(v2),
+        (DocGen.docIdStr(id), schemaHash(v1), schemaHash(v2),
           changed, d.changes.map(_.changeType).sorted.mkString(","),
           d.isBreaking, ver, d.summary,
           migrated.keys.toSeq.sorted.mkString(","),
@@ -1210,20 +1186,23 @@ object ExtractionQ {
   }
 
   /** The persisted regression baseline (`regression.py:208-224`
-    * save_baseline/load_baseline): a committed classpath resource in the
-    * reference's stored-baseline JSON shape, parsed once per JVM.
+    * save_baseline/load_baseline) in the reference's stored-baseline JSON
+    * shape, committed as a constant so every launch reads the same bytes
+    * whatever its classpath or working directory; parsed once per JVM.
     */
   private[graft] lazy val regressionBaseline: (Double, Seq[(String, Double)]) = {
-    // classpath first (sbt test / packaged runs); fall back to the source
-    // tree for bare `java -cp classes` invocations where `sbt compile`
-    // hasn't copied resources
-    val txt = Option(getClass.getResourceAsStream("/graft/regression_baseline.json"))
-      .map(in => scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      .getOrElse {
-        val p = java.nio.file.Paths.get("src/main/resources/graft/regression_baseline.json")
-        require(java.nio.file.Files.exists(p), "missing committed baseline fixture")
-        java.nio.file.Files.readString(p)
-      }
+    val txt = """{
+      |  "run_id": "baseline_r4_frozen",
+      |  "dataset_name": "golden_synthetic",
+      |  "micro_f1": 0.9463,
+      |  "per_field_f1": {
+      |    "claim_id": 0.965,
+      |    "patient_name": 0.9659,
+      |    "provider": 0.935,
+      |    "total_charges": 0.9513,
+      |    "auth_code": 0.8808
+      |  }
+      |}""".stripMargin
     val micro = """"micro_f1"\s*:\s*([0-9.]+)""".r
       .findFirstMatchIn(txt).map(_.group(1).toDouble).get
     val fields = """"([a-z_]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(txt)
@@ -1248,9 +1227,7 @@ object ExtractionQ {
     import graft.functions.GoldenEval
     import spark.implicits._
     val (baseMicro, baseFields) = regressionBaseline
-    val current = load(spark, dir, "documents")
-      .select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
+    val current = docTexts(spark, dir)
       .flatMap { case (id, text) =>
         abCandPairs(id, evalWords(text)).map { case (f, l, g, x) =>
           (f, GoldenEval.compareField(Some(g), Some(x), l).isMatch)
@@ -1263,16 +1240,12 @@ object ExtractionQ {
         sum(when(!col("is_match"), 1L).otherwise(0L)).as("e"))
     val baseline = baseFields.toDF("field", "baseline_f1")
     val pf = current
-      .withColumn("current_f1",
-        col("tp").cast("double") * 2 / (col("tp") * 2 + col("e") + col("e")))
+      .withColumn("current_f1", f1(col("tp"), col("e"), col("e")))
       .join(broadcast(baseline), Seq("field"), "full_outer")
       .withColumn("baseline_f1", coalesce(col("baseline_f1"), lit(0.0)))
       .withColumn("current_f1", coalesce(col("current_f1"), lit(0.0)))
       .withColumn("delta", col("current_f1") - col("baseline_f1"))
-      .withColumn("status",
-        when(col("delta") < -0.02, "regression")
-          .when(col("delta") > 0.02, "improvement")
-          .otherwise("stable"))
+      .withColumn("status", deltaStatus(col("delta")))
       .withColumn("severity",
         when(col("status") === "regression",
           when(abs(col("delta")) >= 0.10, "critical").otherwise("warning"))
@@ -1280,8 +1253,7 @@ object ExtractionQ {
     val overall = pf.agg(
       max(when(col("status") === "regression", 1L).otherwise(0L)).as("any_reg"),
       max(when(col("severity") === "critical", 1L).otherwise(0L)).as("any_crit"),
-      (sum("tp").cast("double") * 2 /
-        (sum("tp") * 2 + sum("e") + sum("e"))).as("cur_micro"))
+      f1(sum("tp"), sum("e"), sum("e")).as("cur_micro"))
     pf.crossJoin(broadcast(overall))
       .withColumn("has_regression", col("any_reg") === 1L)
       .withColumn("overall_severity",

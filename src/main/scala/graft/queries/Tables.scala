@@ -26,4 +26,23 @@ object T {
 
   /** sum over exact decimals, emitted as double. */
   def dsum(c: Column): Column = dbl(sum(dec(c)))
+
+  /** F1 from true-positive, false-positive and false-negative counts
+    * (metrics.py: 2tp / (2tp + fp + fn)) — exact integer arithmetic until
+    * the one double divide. Callers guard the all-zero case where they
+    * need a value there.
+    */
+  def f1(tp: Column, fp: Column, fn: Column): Column =
+    tp.cast("double") * 2 / (tp * 2 + fp + fn)
+
+  /** The ±0.02 F1-delta bar of run comparison (benchmark.py:310-355), the
+    * A/B decision rule and the regression ladder.
+    */
+  val DeltaGate = 0.02
+
+  /** regression / improvement / stable of an F1 delta against DeltaGate. */
+  def deltaStatus(delta: Column): Column =
+    when(delta < -DeltaGate, "regression")
+      .when(delta > DeltaGate, "improvement")
+      .otherwise("stable")
 }

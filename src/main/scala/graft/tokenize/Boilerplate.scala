@@ -6,9 +6,9 @@ import graft.functions.{Strings, TextAnalysis}
   * link-density boilerplate classification.
   *
   * Algorithm follows the published Boilerpipe/Kohlschütter block-level
-  * text-density + link-density approach with a jusText-style stopword-density
-  * signal (see PAPERS.md); the reference repo has no HTML stripper — this is
-  * the capability-equivalent reinterpretation mandated by SURVEY.md §0.
+  * text-density + link-density approach (see PAPERS.md); the reference repo
+  * has no HTML stripper — this is the capability-equivalent
+  * reinterpretation mandated by SURVEY.md §0.
   *
   * Implementation is a hand-rolled single-pass scanner (block finding, tag
   * stripping, entity decoding, whitespace collapsing and OCR cleanup fused
@@ -30,8 +30,7 @@ object Boilerplate {
 
   final case class Config(
       linkDensityThreshold: Double = 0.33,
-      minWords: Int = 3,
-      stopwordDensityFloor: Double = 0.0)
+      minWords: Int = 3)
 
   private val blockTags = Set(
     "nav", "footer", "header", "h1", "h2", "h3", "h4", "h5", "h6", "p", "li", "div")
@@ -181,8 +180,9 @@ object Boilerplate {
     var found = findBlockBounds(html, pos, n)
     while (found != null) {
       val (tag, innerStart, innerEnd, matchEnd) = found
-      // skip container matches that contain nested block tags (children are
-      // matched separately; counting the parent would double-count text)
+      // a container holding a nested block tag is dropped whole: scanning
+      // resumes after its close tag, so its children are never matched
+      // either (`<div><p>a</p></div>` yields no block)
       val nested = innerEnd > innerStart &&
         findBlockBounds(html, innerStart, innerEnd) != null
       if (!nested) {
@@ -201,17 +201,13 @@ object Boilerplate {
   def isHeading(b: Block): Boolean = b.tag.length == 2 && b.tag.charAt(0) == 'h'
 
   /** Boilerplate iff: structural chrome tag, OR link density above threshold,
-    * OR too few words (headings exempt from the word floor), OR stopword
-    * density below the configured floor (jusText signal; 0 disables).
+    * OR too few words (headings exempt from the word floor).
     */
   def isBoilerplate(b: Block, cfg: Config = Config()): Boolean = {
     if (b.tag == "nav" || b.tag == "footer" || b.tag == "header") return true
     if (b.text.isEmpty) return true
     if (b.linkDensity > cfg.linkDensityThreshold) return true
-    if (!isHeading(b) && b.words < cfg.minWords) return true
-    if (cfg.stopwordDensityFloor > 0.0 && !isHeading(b) &&
-      TextAnalysis.stopwordRatio(b.text) < cfg.stopwordDensityFloor) return true
-    false
+    !isHeading(b) && b.words < cfg.minWords
   }
 
   /** Main-content blocks with their kinds: (kind in {heading, text}, text). */

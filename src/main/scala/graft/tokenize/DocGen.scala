@@ -1,5 +1,7 @@
 package graft.tokenize
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.substring
 import graft.functions.Hashing
 import graft.model.{Doc, Span, SpanKind}
 
@@ -132,6 +134,12 @@ object DocGen {
   /** Numeric id back out of a docIdStr ("doc_%09d"); 0 for foreign ids. */
   def docIdNum(docId: String): Long =
     try docId.stripPrefix("doc_").toLong catch { case _: Exception => 0L }
+
+  /** docIdNum as a Column over a docIdStr column (the nine digits after
+    * "doc_"); the query layer and the review sink derive id arithmetic
+    * from their string doc_id columns through it.
+    */
+  def docIdNum(c: Column): Column = substring(c, 5, 9).cast("long")
 
   /** Synthesize the raw interleaved document for (doc_id, seed text). */
   def synthesize(id: Long, seedText: String): Doc = {

@@ -25,7 +25,6 @@ object SpanTokenizer {
 
   final case class Config(
       boilerplate: Boilerplate.Config = Boilerplate.Config(),
-      maxSpansPerDoc: Int = 1 << 20,
       pathTag: String = "tokenize:v1")
 
   val default: Config = Config()
@@ -35,6 +34,8 @@ object SpanTokenizer {
     pathTag = "tokenize:v2")
 
   private val headingMax = 60
+  /** Spans kept per document; the rest of a runaway doc is dropped. */
+  private val maxSpansPerDoc = 1 << 20
 
   private val blankLineRe = java.util.regex.Pattern.compile("\\n\\s*\\n")
   private val starRe = java.util.regex.Pattern.compile("\\*")
@@ -234,7 +235,7 @@ object SpanTokenizer {
           case e: Exception => Seq((SpanKind.Error, s"tokenize_failed:${e.getClass.getSimpleName}", ""))
         }
       expanded.foreach { case (k, t, m) =>
-        if (n < cfg.maxSpansPerDoc) {
+        if (n < maxSpansPerDoc) {
           if (k == SpanKind.Error) errors += 1
           out += Span(k, t, m, n)
           n += 1

@@ -30,6 +30,19 @@ class NativeSpec extends AnyFunSuite {
     assert(NativeKernels.wsTokenCount(null) == 0)
   }
 
+  test("ensureRegistered adds each native function once per session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val registry = spark.sessionState.functionRegistry
+    def infos = NativeFunctions.All.map { case (name, _, _) =>
+      registry.lookupFunction(FunctionIdentifier(name)).get
+    }
+    NativeFunctions.ensureRegistered(spark)
+    val first = infos
+    NativeFunctions.ensureRegistered(spark)
+    // a re-registration would mint a fresh ExpressionInfo per function
+    assert(infos.zip(first).forall { case (a, b) => a eq b })
+  }
+
   test("expression matches split-idiom through SQL (extensions route) and codegen") {
     import spark.implicits._
     val df = Seq("one two three", "  lead", "trail  ", "", "多字节 字符 here x")

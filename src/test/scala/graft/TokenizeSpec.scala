@@ -52,6 +52,14 @@ class TokenizeSpec extends AnyFunSuite {
     assert(main == Seq(("text", "Tom & Jerry ran far away together")))
   }
 
+  test("boilerplate: a container with a nested block is dropped with its children") {
+    // scanning resumes after the container's close tag, so the inner <p>
+    // is never matched on its own; only the following sibling survives
+    assert(Boilerplate.blocks(
+      "<div><p>hello world foo bar</p></div><p>after block here now</p>") ==
+      Seq(Boilerplate.Block("p", "after block here now", 0.0, 4)))
+  }
+
   test("zero-width chars between whitespace collapse to one space (fused rule)") {
     // documented divergence from the staged regex pipeline, which left
     // "alpha  beta" (double space) here — see Boilerplate.extractText
