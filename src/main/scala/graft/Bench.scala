@@ -1,5 +1,8 @@
 package graft
 
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import graft.pipeline.ExtractJob
 import graft.tokenize.{DocGen, SpanTokenizer}
@@ -137,6 +140,10 @@ object Bench {
     spark.stop()
   }
 
+  /** `x` rounded to `places` decimals and written with exactly that many. */
+  private def dec(x: Double, places: Int): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(x).setScale(places, java.math.RoundingMode.HALF_UP)
+
   /** Bench temp root (see [[TempRoot]]: a real 4N cluster has 4N local disks). */
   private lazy val tmpBase: String = TempRoot("graft-bench").toString
 
@@ -244,15 +251,13 @@ object Bench {
     // default to BENCH_SMOKE.json, and even an explicit BENCH_OUT pointing a
     // partial run at an existing FULL artifact gets redirected.
     val isPartialRun = skipScaling || skipQueries || skipExtras || nDocs < defaultDocs
-    // A full artifact is one whose scaling pair ran at (at least) the
-    // default corpus size — n_docs is the first scaling field, so the first
-    // match is the primary pair. (The old marker, presence of "n_docs_4x",
-    // missed budget-exhausted full runs that skipped the 4x sub-object,
-    // and matched reduced-doc smoke output which also carries the 4x key.)
+    // A full artifact is one whose primary scaling pair ran at (at least)
+    // the default corpus size. (Presence of "n_docs_4x" is no marker:
+    // budget-exhausted full runs skip the 4x sub-object, and reduced-doc
+    // smoke output carries it too.)
     def looksFullArtifact(p: String): Boolean =
-      try """"n_docs":(\d+)""".r
-        .findFirstMatchIn(java.nio.file.Files.readString(java.nio.file.Paths.get(p)))
-        .exists(_.group(1).toLong >= defaultDocs)
+      try Json.mapper.readTree(new java.io.File(p))
+        .path("scaling").path("n_docs").asLong >= defaultDocs
       catch { case _: Throwable => false }
     val outPath = sys.env.get("BENCH_OUT") match {
       case Some(p) if isPartialRun && looksFullArtifact(p) =>
@@ -264,23 +269,21 @@ object Bench {
     }
 
     var laPreQueries = -1.0
-    def assemble(scaling: String, queries: Seq[(String, Double)],
-        incomplete: Boolean): String = {
-      val qs =
-        queries.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-      val total = queries.map(_._2).sum
-      val noise =
-        f"""{"loadavg_start":$laStart%.2f,"loadavg_pre_queries":$laPreQueries%.2f,""" +
-          f""""loadavg_end":${loadAvg()}%.2f,"query_passes":2,"per_query":"min"}"""
-      val flags = (if (incomplete) List(""""incomplete":true""") else Nil) ++
-        (if (budgetExhausted) List(""""budget_exhausted":true""") else Nil)
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
-        f""""sf":"$sfDir","jdk":"${System.getProperty("java.version")}",""" +
-        f""""scala":"${scala.util.Properties.versionNumberString}",""" +
-        f""""spark":"${org.apache.spark.SPARK_VERSION}",""" +
-        f""""noise":$noise,"scaling":$scaling""" +
-        flags.mkString(if (flags.isEmpty) "" else ",", ",", "") + "}"
-    }
+    // the scaling object as measured so far; null in the artifact when the
+    // phase is skipped
+    var scaling: Option[ListMap[String, Any]] = None
+    def assemble(queries: Seq[(String, Double)], incomplete: Boolean): String =
+      Json.mapper.writeValueAsString(ListMap(
+        "metric" -> "total", "value" -> dec(queries.map(_._2).sum, 3), "unit" -> "sec",
+        "queries" -> ListMap.from(queries.map { case (k, v) => k -> dec(v, 3) }),
+        "sf" -> sfDir, "jdk" -> System.getProperty("java.version"),
+        "scala" -> scala.util.Properties.versionNumberString,
+        "spark" -> org.apache.spark.SPARK_VERSION,
+        "noise" -> ListMap("loadavg_start" -> dec(laStart, 2),
+          "loadavg_pre_queries" -> dec(laPreQueries, 2), "loadavg_end" -> dec(loadAvg(), 2),
+          "query_passes" -> 2, "per_query" -> "min"),
+        "scaling" -> scaling.orNull) ++
+        Seq("incomplete" -> incomplete, "budget_exhausted" -> budgetExhausted).filter(_._2))
     def writeArtifact(json: String): Unit =
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json + "\n")
       catch { case e: Throwable =>
@@ -292,11 +295,9 @@ object Bench {
     // queries object.
     val queryBaseline: Map[String, Double] = {
       val path = sys.env.getOrElse("BENCH_BASELINE", "BENCH_LAST.json")
-      try {
-        val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-        """"([a-z0-9_]+)":(-?[0-9][0-9.]*)""".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Throwable => Map.empty[String, Double] }
+      try Json.mapper.readTree(new java.io.File(path)).path("queries").properties().asScala
+        .map(e => e.getKey -> e.getValue.asDouble).toMap
+      catch { case _: Throwable => Map.empty[String, Double] }
     }
 
     // shared corpus, materialized once (untimed): both cluster sizes read
@@ -319,9 +320,7 @@ object Bench {
     // worker throughput when the query phase ran in-process first).
     // Built stepwise, flushed to disk after every sub-phase: a kill during
     // the skew trio must still leave the primary pair on disk, etc.
-    var scalingJson = "null"
-    def flushScaling(): Unit =
-      writeArtifact(assemble(scalingJson, Seq.empty, incomplete = true))
+    def flushScaling(): Unit = writeArtifact(assemble(Seq.empty, incomplete = true))
     if (!skipScaling) {
         // Sized from the box, checked before any corpus is written or worker
         // spawned: a pair that cannot fit fails here and says why. Total
@@ -341,7 +340,7 @@ object Bench {
         // memory bandwidth hardest, and every (N,4N) pair is valid per the
         // criterion; the JSON reports which pair produced the number.
         def measure(n: Long, stage: String, skewed: Boolean, runs: Int,
-            maxAttempts: Int, fallbackHalf: Boolean, bar: Double = 0.8): String = {
+            maxAttempts: Int, fallbackHalf: Boolean, bar: Double = 0.8): ListMap[String, Any] = {
           val corpusBase = ensureCorpus(n, skewed)
           def passAt(c: Int): (Int, Double, Double, Double) = {
             waitQuiet()
@@ -397,16 +396,16 @@ object Bench {
           // reading (depressed N leg). If retries exhausted without an
           // in-range pair, the emitted number must carry that classification
           // so a >1.1 reading can never silently satisfy the >=0.8 criterion.
-          val suspect = if (eff > 1.1) ""","suspect":true""" else ""
-          f"""{"n_docs":$n,"cores_n":$bc,"cores_4n":${bc * 4},""" +
-            f""""docs_per_sec_n":$dpsN%.1f,"docs_per_sec_4n":$dps4N%.1f,""" +
-            f""""speedup":${eff * 4}%.3f,"efficiency":$eff%.3f,"attempts":$attempts$suspect}"""
+          ListMap("n_docs" -> n, "cores_n" -> bc, "cores_4n" -> bc * 4,
+            "docs_per_sec_n" -> dec(dpsN, 1), "docs_per_sec_4n" -> dec(dps4N, 1),
+            "speedup" -> dec(eff * 4, 3), "efficiency" -> dec(eff, 3),
+            "attempts" -> attempts) ++ (if (eff > 1.1) Seq("suspect" -> true) else Nil)
         }
 
         val primary = measure(nDocs, "job", skewed = false, runs = 3,
-          maxAttempts = 3, fallbackHalf = true).dropRight(1) +
-          s""","nproc":$nproc,"mem_total_mb":$memTotalMb,"worker_heap_mb":$heapMb}"""
-        scalingJson = primary
+          maxAttempts = 3, fallbackHalf = true) ++
+          Seq("nproc" -> nproc, "mem_total_mb" -> memTotalMb, "worker_heap_mb" -> heapMb)
+        scaling = Some(primary)
         flushScaling()
         if (!skipExtras) {
           // standing scale evidence beyond the headline pair: the same
@@ -441,21 +440,17 @@ object Bench {
             if (canSpend(250)) Some(measure(nDocs, "write", skewed = true, runs = 2,
               maxAttempts = 1, fallbackHalf = false))
             else None
-          val attribution =
-            skewKernel.map(k => s""","kernel":$k""").getOrElse("") +
-              skewWrite.map(w => s""","write":$w""").getOrElse("")
-          val skewFull = skew.dropRight(1) + attribution + "}"
+          val skewFull = skew ++ skewKernel.map("kernel" -> _) ++ skewWrite.map("write" -> _)
           org.apache.commons.io.FileUtils.deleteQuietly(
             new java.io.File(tmpBase, s"corpus_skewed_$nDocs"))
-          scalingJson = primary.dropRight(1) + s""","skew":$skewFull}"""
+          val withSkew = primary + ("skew" -> skewFull)
+          scaling = Some(withSkew)
           flushScaling()
           val big =
             if (canSpend(600)) Some(measure(nDocs * 4, "job", skewed = false, runs = 2,
               maxAttempts = 2, fallbackHalf = false))
             else None
-          big.foreach { b =>
-            scalingJson = scalingJson.dropRight(1) + s""","n_docs_4x":$b}"""
-          }
+          scaling = Some(withSkew ++ big.map("n_docs_4x" -> _))
           flushScaling()
         }
     } else flushScaling()
@@ -489,9 +484,8 @@ object Bench {
         val qs = SparkEntry.queries.toSeq.sortBy(_._1)
         val pass1 = qs.map { case (n, f) => n -> timeOne(n, f) }.toMap
         // land pass-1 numbers immediately — a kill during pass 2 keeps them
-        writeArtifact(assemble(scalingJson,
-          qs.map { case (n, _) => n -> math.max(pass1(n), 0.0) },
-          incomplete = true))
+        writeArtifact(assemble(
+          qs.map { case (n, _) => n -> math.max(pass1(n), 0.0) }, incomplete = true))
         val pass2 =
           if (canSpend(90)) qs.map { case (n, f) => n -> timeOne(n, f) }.toMap
           else Map.empty[String, Double]
@@ -513,7 +507,7 @@ object Bench {
         r
       }
 
-    val json = assemble(scalingJson, results, incomplete = false)
+    val json = assemble(results, incomplete = false)
     println(json)
     // Also land the JSON in a file: the driver's log-scrape of the sbt
     // stdout stream is lossy (round 1 got "parsed": null from an [error]

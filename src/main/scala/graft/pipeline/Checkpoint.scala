@@ -1,8 +1,11 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.reflect.{ClassTag, classTag}
+import scala.util.Using
+
+import com.fasterxml.jackson.core.JsonProcessingException
 
 /** Per-bucket commit manifest — the local stand-in for Iceberg
   * snapshot-per-partition checkpointing (SURVEY.md §7: no Iceberg runtime
@@ -23,26 +26,48 @@ final case class BucketManifest(
     nErrors: Long,
     runId: String)
 
-/** Shared manifest-file machinery (atomic temp-write + rename commit, the
-  * tolerant flat-JSON field parser, recursive delete) — one implementation
-  * for every typed manifest record (BucketManifest here, ReviewSink's
-  * QueueManifest), so protocol hardening lands in one place.
+/** The commit protocol's file machinery, shared by every committer
+  * (ExtractJob's group dirs and BucketManifest here, ReviewSink's queue dir
+  * and QueueManifest): the record codec (atomic temp-write + rename of the
+  * record's JSON, read back as `None` when absent, torn or lacking a field),
+  * the prefixed listing that sweeps find stale dirs with, the temp-dir
+  * publish and the recursive delete — so protocol hardening lands in one
+  * place.
   */
 private[pipeline] object Manifests {
-  def atomicWriteJson(path: Path, json: String): Unit = {
+  def atomicWriteJson(path: Path, record: AnyRef): Unit = {
     Files.createDirectories(path.getParent)
     val tmp = path.getParent.resolve("." + path.getFileName.toString + ".tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, graft.Json.mapper.writeValueAsBytes(record))
     Files.move(tmp, path,
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  def readField(json: String, k: String): Option[String] =
-    s"""\"$k\":\\s*("?)([^,}\"]*)\\1""".r.findFirstMatchIn(json).map(_.group(2))
+  /** The record at `path`; None when absent, torn or lacking a field. */
+  def read[T: ClassTag](path: Path): Option[T] =
+    if (!Files.exists(path)) None
+    else try Some(graft.Json.mapper.readValue(path.toFile,
+      classTag[T].runtimeClass.asInstanceOf[Class[T]]))
+    catch { case _: JsonProcessingException => None }
+
+  /** Entries of `dir` whose names start with `prefix`; none if `dir` is absent. */
+  def list(dir: Path, prefix: String): Seq[Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else Using.resource(Files.list(dir))(
+      _.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix)).toSeq)
+
+  /** Move a fully written temp dir into place. A target already there is an
+    * uncommitted dir from a crashed run (its manifest is absent) and goes.
+    */
+  def publish(tmp: Path, target: Path): Unit = {
+    Files.createDirectories(target.getParent)
+    deleteRecursively(target)
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+  }
 
   def deleteRecursively(p: Path): Unit =
     if (Files.exists(p))
-      scala.util.Using.resource(Files.walk(p))(
+      Using.resource(Files.walk(p))(
         _.iterator().asScala.toSeq.reverseIterator.foreach(Files.deleteIfExists(_)))
 }
 
@@ -59,34 +84,20 @@ trait SnapshotStore {
 
 final class LocalManifestStore(outDir: String) extends SnapshotStore {
   private val dir: Path = Paths.get(outDir, "_manifests")
+  private def path(bucket: Int): Path = dir.resolve(s"bucket-$bucket.json")
 
-  override def committedBuckets(): Set[Int] = {
-    if (!Files.isDirectory(dir)) return Set.empty
-    scala.util.Using.resource(Files.list(dir))(
-      _.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case s if s.startsWith("bucket-") && s.endsWith(".json") =>
-          s.stripPrefix("bucket-").stripSuffix(".json").toInt
-        }
-        .toSet)
-  }
+  override def committedBuckets(): Set[Int] =
+    Manifests.list(dir, "bucket-").map(_.getFileName.toString)
+      .collect { case s if s.endsWith(".json") =>
+        s.stripPrefix("bucket-").stripSuffix(".json").toInt
+      }
+      .toSet
 
   override def commit(m: BucketManifest): Unit =
-    Manifests.atomicWriteJson(dir.resolve(s"bucket-${m.bucket}.json"),
-      s"""{"bucket":${m.bucket},"n_docs":${m.nDocs},"n_spans":${m.nSpans},""" +
-        s""""n_errors":${m.nErrors},"run_id":"${m.runId}"}""")
+    Manifests.atomicWriteJson(path(m.bucket), m)
 
-  override def revoke(bucket: Int): Unit =
-    Files.deleteIfExists(dir.resolve(s"bucket-$bucket.json"))
+  override def revoke(bucket: Int): Unit = Files.deleteIfExists(path(bucket))
 
-  override def readManifest(bucket: Int): Option[BucketManifest] = {
-    val p = dir.resolve(s"bucket-$bucket.json")
-    if (!Files.exists(p)) return None
-    val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    def field(k: String): Option[String] = Manifests.readField(s, k)
-    for {
-      b <- field("bucket"); d <- field("n_docs"); sp <- field("n_spans")
-      e <- field("n_errors"); r <- field("run_id")
-    } yield BucketManifest(b.toInt, d.toLong, sp.toLong, e.toLong, r)
-  }
+  override def readManifest(bucket: Int): Option[BucketManifest] =
+    Manifests.read[BucketManifest](path(bucket))
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.Paths
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -136,14 +136,10 @@ object ExtractJob {
     */
   private def sweepUncommitted(outDir: String, store: SnapshotStore,
       committed: Set[Int]): Set[Int] = {
-    def list(dir: Path, prefix: String): Seq[Path] =
-      if (!Files.isDirectory(dir)) Nil
-      else scala.util.Using.resource(Files.list(dir))(
-        _.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix)).toSeq)
     val root = Paths.get(outDir)
-    list(root, ".tmp-group-").foreach(Manifests.deleteRecursively)
+    Manifests.list(root, ".tmp-group-").foreach(Manifests.deleteRecursively)
     var alive = committed
-    for (sub <- Seq("data", "metrics"); d <- list(root.resolve(sub), "group=")) {
+    for (sub <- Seq("data", "metrics"); d <- Manifests.list(root.resolve(sub), "group=")) {
       val buckets = d.getFileName.toString.stripPrefix("group=")
         .split('-').flatMap(s => scala.util.Try(s.toInt).toOption)
       if (!buckets.forall(committed.contains)) {
@@ -261,10 +257,7 @@ object ExtractJob {
       val tmp = Paths.get(outDir, s".tmp-group-$gname")
       extracted.write.options(cfg.writeOptions)
         .mode(SaveMode.Overwrite).parquet(tmp.toString)
-      val target = Paths.get(outDir, "data", s"group=$gname")
-      Files.createDirectories(target.getParent)
-      Manifests.deleteRecursively(target) // stale uncommitted dir from a crashed run
-      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+      Manifests.publish(tmp, Paths.get(outDir, "data", s"group=$gname"))
 
       // Like the data dir, the group's metrics dir counts only once all its
       // buckets' manifests are committed (the sweep removes it otherwise),

@@ -1,9 +1,6 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
-import scala.util.Using
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -65,21 +62,8 @@ object ReviewSink {
   private def manifestPath(outDir: String): Path =
     Paths.get(outDir, "_manifests", "queue.json")
 
-  private def commitManifest(outDir: String, m: QueueManifest): Unit =
-    Manifests.atomicWriteJson(manifestPath(outDir),
-      s"""{"n_entries":${m.nEntries},"n_delivered":${m.nDelivered},""" +
-        s""""n_dead":${m.nDead},"run_id":"${m.runId}"}""")
-
-  def readManifest(outDir: String): Option[QueueManifest] = {
-    val p = manifestPath(outDir)
-    if (!Files.exists(p)) return None
-    val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    def field(k: String): Option[String] = Manifests.readField(s, k)
-    for {
-      n <- field("n_entries"); d <- field("n_delivered")
-      x <- field("n_dead"); r <- field("run_id")
-    } yield QueueManifest(n.toLong, d.toLong, x.toLong, r)
-  }
+  def readManifest(outDir: String): Option[QueueManifest] =
+    Manifests.read[QueueManifest](manifestPath(outDir))
 
   /** Revoke the queue commit (crash-window testing / forced reprocess). */
   def revoke(outDir: String): Unit = Files.deleteIfExists(manifestPath(outDir))
@@ -93,18 +77,13 @@ object ReviewSink {
     val root = Paths.get(outDir)
     Files.createDirectories(root)
     // sweep temp debris from a crashed run
-    Using.resource(Files.list(root))(
-      _.iterator().asScala
-        .filter(_.getFileName.toString.startsWith(".tmp-queue"))
-        .toSeq.foreach(Manifests.deleteRecursively))
+    Manifests.list(root, ".tmp-queue").foreach(Manifests.deleteRecursively)
     val queueDir = root.resolve("queue")
     readManifest(outDir) match {
       case Some(m) =>
         return SinkStats(m.nEntries, m.nDelivered, m.nDead, committedBefore = true)
       case None => ()
     }
-    // uncommitted queue dir = crash between rename and manifest: rewrite
-    Manifests.deleteRecursively(queueDir)
 
     var q = routed.filter(col("route") =!= "complete")
       .select(col("doc_id"), col("route").as("queue"), col("confidence"),
@@ -135,7 +114,8 @@ object ReviewSink {
     val outParts = math.max(1, spark.sparkContext.defaultParallelism / 8)
     q.drop("idnum").coalesce(outParts)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    Files.move(tmp, queueDir, StandardCopyOption.ATOMIC_MOVE)
+    // replaces an uncommitted queue dir (crash between rename and manifest)
+    Manifests.publish(tmp, queueDir)
     // counts read back from ONLY the committed files (O(queue), bounded)
     val counts = spark.read.parquet(queueDir.toString)
       .groupBy(col("status")).count().collect()
@@ -143,8 +123,8 @@ object ReviewSink {
     val n = counts.values.sum
     val stats = SinkStats(n, counts.getOrElse("delivered", 0L),
       counts.getOrElse("dead", 0L), committedBefore = false)
-    commitManifest(outDir, QueueManifest(stats.nEntries, stats.nDelivered,
-      stats.nDead, runId))
+    Manifests.atomicWriteJson(manifestPath(outDir),
+      QueueManifest(stats.nEntries, stats.nDelivered, stats.nDead, runId))
     stats
   }
 }

@@ -1,5 +1,7 @@
 package graft.queries
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Patterns, Strings}
@@ -1203,12 +1205,10 @@ object ExtractionQ {
       |    "auth_code": 0.8808
       |  }
       |}""".stripMargin
-    val micro = """"micro_f1"\s*:\s*([0-9.]+)""".r
-      .findFirstMatchIn(txt).map(_.group(1).toDouble).get
-    val fields = """"([a-z_]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(txt)
-      .map(m => m.group(1) -> m.group(2).toDouble)
-      .filter(_._1 != "micro_f1").toSeq
-    (micro, fields)
+    val tree = graft.Json.mapper.readTree(txt)
+    val fields = tree.get("per_field_f1").properties().asScala.toSeq
+      .map(e => e.getKey -> e.getValue.asDouble)
+    (tree.get("micro_f1").asDouble, fields)
   }
 
   /** Regression-detection severity ladder (x31, `regression.py:24-29,
@@ -1241,7 +1241,7 @@ object ExtractionQ {
     val baseline = baseFields.toDF("field", "baseline_f1")
     val pf = current
       .withColumn("current_f1", f1(col("tp"), col("e"), col("e")))
-      .join(broadcast(baseline), Seq("field"), "full_outer")
+      .join(baseline, Seq("field"), "full_outer")
       .withColumn("baseline_f1", coalesce(col("baseline_f1"), lit(0.0)))
       .withColumn("current_f1", coalesce(col("current_f1"), lit(0.0)))
       .withColumn("delta", col("current_f1") - col("baseline_f1"))

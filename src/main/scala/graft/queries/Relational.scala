@@ -272,15 +272,14 @@ object Relational {
     */
   def q21RangeJoin(spark: SparkSession, dir: String): DataFrame = {
     val ev = load(spark, dir, "events")
-    val signups = ev.filter(col("event_type") === "signup")
-      .select(col("user_id"), col("event_id").as("signup_id"), col("ts").as("signup_ts"))
-    val others = ev.select(col("user_id"), col("ts"), col("event_id"))
-    signups.join(others,
-        signups("user_id") === others("user_id") &&
-          others("ts") > signups("signup_ts") &&
-          others("ts") <= signups("signup_ts") + expr("INTERVAL 1 HOUR"))
-      .groupBy(signups("user_id").as("user_id"), col("signup_id"))
-      .agg(count(lit(1)).as("n_following"), min(col("event_id")).as("first_event_id"))
+    // both sides are `events`: aliased, so each key names its own side
+    val signups = ev.filter(col("event_type") === "signup").as("s")
+    signups.join(ev.as("o"),
+        col("s.user_id") === col("o.user_id") &&
+          col("o.ts") > col("s.ts") &&
+          col("o.ts") <= col("s.ts") + expr("INTERVAL 1 HOUR"))
+      .groupBy(col("s.user_id").as("user_id"), col("s.event_id").as("signup_id"))
+      .agg(count(lit(1)).as("n_following"), min(col("o.event_id")).as("first_event_id"))
       .orderBy("user_id", "signup_id")
   }
 }

@@ -189,9 +189,10 @@ object DocGen {
   }
 
   /** Skewed bench corpus (FIXTURES.md §5 bench-skewed): every 4096th doc is
-    * a pathological ~2000-page mega-document whose raw weight (~1.2 MB)
-    * crosses ExtractJob's default heavyWeight, so the isolation path is
-    * actually exercised — the regular 100x tail of syntheticDoc does not.
+    * a pathological ~2000-page mega-document of raw weight ~1.2 MB. That is
+    * below ExtractJob's default heavyWeight (5M), so the benches that run
+    * this corpus pass `heavyWeight = 200000` to exercise the isolation path;
+    * every other doc is syntheticDoc's and stays light under either.
     */
   def syntheticSkewedDoc(i: Long): Doc = {
     val base = syntheticDoc(i)

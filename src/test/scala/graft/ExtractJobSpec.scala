@@ -1,11 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{count, lit, sum}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Doc
-import graft.pipeline.{ExtractJob, LocalManifestStore}
+import graft.pipeline.{BucketManifest, ExtractJob, LocalManifestStore}
 import graft.tokenize.DocGen
 
 /** Resume fixture (FIXTURES.md §6): a run killed after K of B buckets commit
@@ -133,6 +133,25 @@ class ExtractJobSpec extends AnyFunSuite {
       // the torn group's metric rows were swept with its data
       assert(metricDocs(out) == nDocs)
     }
+  }
+
+  test("bucket manifests round-trip any run id; torn or partial ones read as absent") {
+    val out = Files.createTempDirectory("graft_manifest").toString
+    val store = new LocalManifestStore(out)
+    val ids = Seq("a,b", "x}y", "q\"z")
+    ids.zipWithIndex.foreach { case (id, b) => store.commit(BucketManifest(b, 5, 7, 0, id)) }
+    ids.zipWithIndex.foreach { case (id, b) =>
+      assert(store.readManifest(b).contains(BucketManifest(b, 5, 7, 0, id)))
+    }
+    // the on-disk form that manifests of earlier runs and perfbench's check share
+    store.commit(BucketManifest(3, 5, 7, 0, "run"))
+    val dir = Paths.get(out, "_manifests")
+    assert(Files.readString(dir.resolve("bucket-3.json")) ==
+      """{"bucket":3,"n_docs":5,"n_spans":7,"n_errors":0,"run_id":"run"}""")
+    Files.writeString(dir.resolve("bucket-4.json"), """{"bucket":4,"n_docs":5""")
+    Files.writeString(dir.resolve("bucket-5.json"),
+      """{"bucket":5,"n_docs":5,"n_spans":7,"n_errors":0}""")
+    assert(store.readManifest(4).isEmpty && store.readManifest(5).isEmpty)
   }
 
   test("mega-docs are isolated onto their own partitions") {

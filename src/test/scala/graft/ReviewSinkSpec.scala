@@ -69,10 +69,13 @@ class ReviewSinkSpec extends AnyFunSuite {
       "committed queue table was rewritten")
 
     // crash window: queue dir present but manifest missing -> next run
-    // rewrites the table (torn dir swept), exactly-once on the read side
+    // rewrites the table (torn dir swept), exactly-once on the read side;
+    // its run id holds JSON metacharacters, which the manifest must keep
     ReviewSink.revoke(out)
-    val third = ReviewSink.run(spark, routed, out, "r3")
+    val runId = "r3,\"}"
+    val third = ReviewSink.run(spark, routed, out, runId)
     assert(!third.committedBefore && third.nEntries == first.nEntries)
+    assert(ReviewSink.readManifest(out).map(_.runId).contains(runId))
     assert(spark.read.parquet(s"$out/queue").count() == first.nEntries)
   }
 
