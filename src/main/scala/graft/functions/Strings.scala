@@ -10,7 +10,7 @@ object Strings {
 
   /** Regex-\s class: [ \t\n\x0B\f\r] — the exact set `split("\\s+")` used. */
   @inline private[graft] def isWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
+    c <= ' ' && (c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r')
 
   /** Collapse all whitespace runs to single spaces and trim.
     * Reference: string_utils.py:14-33 (`" ".join(text.split())`).
@@ -203,24 +203,35 @@ object Strings {
     */
   def cleanOcrText(text: String): String = {
     if (text == null || text.isEmpty) return ""
-    // single pass (hot path): drop control chars (except \t \n \r) and
-    // zero-width chars, map smart quotes to ASCII
+    // single pass (hot path)
     val n = text.length
     val sb = new java.lang.StringBuilder(n)
     var i = 0
     while (i < n) {
       val c = text.charAt(i)
-      val drop = (c < ' ' && c != '\t' && c != '\n' && c != '\r') ||
-        (c >= '\u200B' && c <= '\u200D') || c == '\uFEFF'
-      if (!drop) {
-        if (c == '“' || c == '”') sb.append('"')
-        else if (c == '‘' || c == '’') sb.append('\'')
-        else sb.append(c)
-      }
+      if (!ocrDropped(c)) sb.append(ocrQuote(c))
       i += 1
     }
     sb.toString
   }
+
+  /** cleanOcrText's drop set: control chars except \t \n \r, and the
+    * zero-width chars U+200B..U+200D, U+FEFF.
+    */
+  @inline private[graft] def ocrDropped(c: Char): Boolean =
+    (c < ' ' && c != '\t' && c != '\n' && c != '\r') ||
+      (c >= '\u200B' && c <= '\u200D') || c == '\uFEFF'
+
+  /** Neither whitespace nor changed by cleanOcrText: the char is copied as
+    * is. Every char the two rules touch is at most ' ' or at least U+200B.
+    */
+  @inline private[graft] def ocrPlain(c: Char): Boolean = c > ' ' && c < '\u200B'
+
+  /** cleanOcrText's quote map: smart quotes to their ASCII forms. */
+  @inline private[graft] def ocrQuote(c: Char): Char =
+    if (c == '“' || c == '”') '"'
+    else if (c == '‘' || c == '’') '\''
+    else c
 
   /** Extract text between two markers. Reference: string_utils.py:419-462. */
   def extractBetween(text: String, start: String, end: String): Option[String] = {

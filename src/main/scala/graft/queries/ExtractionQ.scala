@@ -249,9 +249,11 @@ object ExtractionQ {
     import spark.implicits._
     rawDocs(spark, dir)
       .mapPartitions { it =>
+        val pass1 = new SpanTokenizer.Kernel(SpanTokenizer.default)
+        val pass2 = new SpanTokenizer.Kernel(SpanTokenizer.pass2)
         it.map { d =>
-          val e1 = SpanTokenizer.extract(d, SpanTokenizer.default)
-          val e2 = SpanTokenizer.extract(d, SpanTokenizer.pass2)
+          val e1 = pass1.extract(d)
+          val e2 = pass2.extract(d)
           val t1 = e1.spans.map(_.text)
           val s1 = t1.toSet
           val s2 = e2.spans.iterator.map(_.text).toSet

@@ -13,13 +13,18 @@ import graft.model._
   *   table_raw -> row-major table_cell spans (table_types.py:135-168 order)
   *   media     -> figure span carrying media_ref only (blob never inlined)
   *   edi       -> per-segment text spans (edi_processor.py segment split)
+  *   docx, sheet, dicom -> paragraph text, CSV cells, tag lines + pixel figure
   *   other     -> error span (total function; errors become data, not throws)
   *
   * Offsets are assigned INSIDE the kernel as the output ordinal — never from
   * row order after a shuffle (SURVEY.md §7.4 span-order determinism).
   *
-  * Pure and deterministic; instances are reused per partition via
-  * `mapPartitions` (north-rule mandate: reusable parser per partition).
+  * Pure and deterministic. A `Kernel` walks a document's raw spans once:
+  * each kind's scanner splits, cleans and normalizes its text in one pass
+  * and appends the spans straight into the kernel's buffer, and the same
+  * walk counts errors, words, tables and media quality. `extractPartition`
+  * makes one `Kernel` per partition (north-rule mandate: reusable parser
+  * per partition), so its builders and tables are allocated once.
   */
 object SpanTokenizer {
 
@@ -36,78 +41,6 @@ object SpanTokenizer {
   private val headingMax = 60
   /** Spans kept per document; the rest of a runaway doc is dropped. */
   private val maxSpansPerDoc = 1 << 20
-
-  private val blankLineRe = java.util.regex.Pattern.compile("\\n\\s*\\n")
-  private val starRe = java.util.regex.Pattern.compile("\\*")
-
-  /** pdf_text blocks: split on blank lines, reading order preserved; short
-    * unpunctuated blocks become headings. (Patterns precompiled — hot path.)
-    */
-  private def pdfBlocks(text: String): Seq[(String, String)] = {
-    if (text == null || text.trim.isEmpty) return Seq.empty
-    blankLineRe.split(text).toIndexedSeq
-      .map(b => Strings.normalizeWhitespace(Strings.cleanOcrText(b)))
-      .filter(_.nonEmpty)
-      .map { b =>
-        // b is whitespace-normalized: words = spaces + 1
-        var spaces = 0
-        var i = 0
-        while (i < b.length) { if (b.charAt(i) == ' ') spaces += 1; i += 1 }
-        val last = b.charAt(b.length - 1)
-        val heading = b.length <= headingMax && spaces <= 5 &&
-          last != '.' && last != '!' && last != '?'
-        (if (heading) SpanKind.Heading else SpanKind.Text, b)
-      }
-  }
-
-  /** EDI segments: split on `~`, fields on `*`, re-joined normalized. */
-  private def ediSegments(text: String): Seq[String] =
-    if (text == null || text.trim.isEmpty) Seq.empty
-    else text.split('~').toIndexedSeq
-      .map(_.trim).filter(_.nonEmpty)
-      .map(seg => starRe.split(seg, -1).map(Strings.normalizeWhitespace).mkString("*"))
-
-  /** Expand one raw span into extracted (kind, text, media_ref) triples. */
-  def expandRaw(raw: Span, cfg: Config): Seq[(String, String, String)] = raw.kind match {
-    case SpanKind.Html =>
-      Boilerplate.mainContent(raw.text, cfg.boilerplate).map { case (k, t) => (k, t, "") }
-    case SpanKind.PdfText =>
-      pdfBlocks(raw.text).map { case (k, t) => (k, t, "") }
-    case SpanKind.TableRaw =>
-      TableGrid.cellTexts(TableGrid.parse(raw.text))
-        .filter(_.nonEmpty)
-        .map(t => (SpanKind.TableCell, t, ""))
-    case SpanKind.Media =>
-      Seq((SpanKind.Figure, "", raw.media_ref))
-    case SpanKind.Edi =>
-      ediSegments(raw.text).map(t => (SpanKind.Text, t, ""))
-    case SpanKind.Docx =>
-      // docx_processor.py:34-50: paragraphs become text lines; no heading
-      // classification (layout understanding is the VLM's job there)
-      if (raw.text == null) Seq.empty
-      else raw.text.split('\n').toIndexedSeq
-        .map(Strings.normalizeWhitespace).filter(_.nonEmpty)
-        .map(t => (SpanKind.Text, t, ""))
-    case SpanKind.Sheet =>
-      // spreadsheet_processor.py: CSV rows -> cells, blank cells dropped,
-      // row-major order preserved
-      if (raw.text == null) Seq.empty
-      else raw.text.split('\n').toIndexedSeq.filter(_.nonEmpty)
-        .flatMap(_.split(',').toIndexedSeq
-          .map(Strings.normalizeWhitespace).filter(_.nonEmpty))
-        .map(t => (SpanKind.TableCell, t, ""))
-    case SpanKind.Dicom =>
-      // dicom_processor.py: patient/study tag=value metadata lines + the
-      // pixel-data frames (here: one figure span carrying the pointer)
-      val tags =
-        if (raw.text == null) Seq.empty
-        else raw.text.split('\n').toIndexedSeq
-          .map(Strings.normalizeWhitespace).filter(_.nonEmpty)
-          .map(t => (SpanKind.Text, t, ""))
-      tags :+ ((SpanKind.Figure, "", raw.media_ref))
-    case other =>
-      Seq((SpanKind.Error, s"unsupported_kind:$other", ""))
-  }
 
   /** (shard, index) parsed from a DocGen media_ref
     * ("s3://graft-corpus/media/<shard>/<doc>_<i>.png"); (0, 0) for foreign
@@ -211,54 +144,185 @@ object SpanTokenizer {
   /** Tokenize one document. Total: never throws; per-span failures become
     * error spans (error-channel mandate, SURVEY.md §2.1 PDF validation row).
     */
-  def extract(doc: Doc, cfg: Config = default): ExtractedDoc = {
-    // fast path: parquet/DocGen rows arrive offset-ordered — skip the
-    // per-doc sort allocation unless an out-of-order span is actually seen
-    val ordered = doc.spans match {
-      case s: scala.collection.IndexedSeq[Span] =>
-        var sorted = true
-        var i = 1
-        while (sorted && i < s.length) {
-          if (s(i).offset < s(i - 1).offset) sorted = false
-          i += 1
-        }
-        if (sorted) s else s.sortBy(_.offset)
-      case s => s.sortBy(_.offset)
-    }
-    val out = Seq.newBuilder[Span]
-    var n = 0
-    var errors = 0
-    ordered.foreach { raw =>
-      val expanded =
-        try expandRaw(raw, cfg)
-        catch {
-          case e: Exception => Seq((SpanKind.Error, s"tokenize_failed:${e.getClass.getSimpleName}", ""))
-        }
-      expanded.foreach { case (k, t, m) =>
-        if (n < maxSpansPerDoc) {
-          if (k == SpanKind.Error) errors += 1
-          out += Span(k, t, m, n)
-          n += 1
-        }
-      }
-    }
-    val spans = out.result()
-    // every raw span carrying a media pointer contributes quality metrics
-    // (plain media spans AND dicom pixel data)
-    val mediaRefs = ordered.filter(_.media_ref.nonEmpty).map(_.media_ref)
-    val quality = mediaRefs.map(fakeDecodeQuality)
-    val totalWords = spans.iterator.filter(s => s.kind == SpanKind.Text || s.kind == SpanKind.Heading)
-      .map(s => s.text.count(_ == ' ') + 1).sum
-    val analysis = Modality.Analysis(
-      hasTables = ordered.exists(_.kind == SpanKind.TableRaw),
-      textDensity = if (totalWords < 50) "low" else "moderate")
-    val modalities = Modality.deriveModalities(Some(analysis), quality)
-    ExtractedDoc(doc.doc_id, spans, spans.length, errors, modalities, Seq(cfg.pathTag))
+  def extract(doc: Doc, cfg: Config = default): ExtractedDoc = new Kernel(cfg).extract(doc)
+
+  /** Per-partition iterator form for `mapPartitions`: one `Kernel` for all
+    * the partition's docs.
+    */
+  def extractPartition(docs: Iterator[Doc], cfg: Config = default): Iterator[ExtractedDoc] = {
+    val kernel = new Kernel(cfg)
+    docs.map(kernel.extract)
   }
 
-  /** Per-partition iterator form for `mapPartitions` (no per-row setup). */
-  def extractPartition(docs: Iterator[Doc], cfg: Config = default): Iterator[ExtractedDoc] =
-    docs.map(extract(_, cfg))
+  /** The tokenizer with its scratch (span buffer, text builder, HTML
+    * scanner tables), reused across documents; not thread-safe.
+    */
+  final class Kernel(cfg: Config) {
+    private val out = new SpanBuffer(maxSpansPerDoc)
+    private val html = new Boilerplate.Scanner
+    private val path = Seq(cfg.pathTag)
+
+    def extract(doc: Doc): ExtractedDoc = {
+      // parquet/DocGen rows arrive offset-ordered: sort only when needed
+      val ordered = if (offsetOrdered(doc.spans)) doc.spans else doc.spans.sortBy(_.offset)
+      out.clear()
+      var hasTables = false
+      var quality = List.empty[QualityMetrics]
+      val it = ordered.iterator
+      while (it.hasNext) {
+        val raw = it.next()
+        out.mark()
+        try expand(raw)
+        catch {
+          case e: Exception =>
+            out.rollback()
+            out.add(SpanKind.Error, s"tokenize_failed:${e.getClass.getSimpleName}", "")
+        }
+        if (raw.kind == SpanKind.TableRaw) hasTables = true
+        // every raw span carrying a media pointer contributes quality
+        // metrics (plain media spans AND dicom pixel data)
+        val ref = raw.media_ref
+        if (ref != null && !ref.isEmpty) quality = fakeDecodeQuality(ref) :: quality
+      }
+      val analysis = Modality.Analysis(
+        hasTables = hasTables,
+        textDensity = if (out.words < 50) "low" else "moderate")
+      val modalities = Modality.deriveModalities(Some(analysis), quality.reverse)
+      ExtractedDoc(doc.doc_id, out.result(), out.size, out.errors, modalities, path)
+    }
+
+    private def expand(raw: Span): Unit = raw.kind match {
+      case SpanKind.Html => html.scan(raw.text, cfg.boilerplate, out)
+      case SpanKind.PdfText => pdfBlocks(raw.text)
+      case SpanKind.TableRaw => tableCells(raw.text)
+      case SpanKind.Media => out.add(SpanKind.Figure, "", refOf(raw))
+      case SpanKind.Edi => ediSegments(raw.text)
+      // docx_processor.py:34-50: paragraphs become text lines; no heading
+      // classification (layout understanding is the VLM's job there)
+      case SpanKind.Docx => pieces(raw.text, SpanKind.Text, '\n')
+      // spreadsheet_processor.py: CSV rows -> cells, blank cells dropped,
+      // row-major order preserved
+      case SpanKind.Sheet => pieces(raw.text, SpanKind.TableCell, ',')
+      case SpanKind.Dicom =>
+        // dicom_processor.py: patient/study tag=value metadata lines + the
+        // pixel-data frames (here: one figure span carrying the pointer)
+        pieces(raw.text, SpanKind.Text, '\n')
+        out.add(SpanKind.Figure, "", refOf(raw))
+      case other => out.add(SpanKind.Error, s"unsupported_kind:$other", "")
+    }
+
+    /** pdf_text blocks in reading order: the text split on blank lines (the
+      * regex `\n\s*\n`), each block OCR-cleaned then whitespace-normalized;
+      * short unpunctuated blocks become headings.
+      */
+    private def pdfBlocks(t: String): Unit = if (t != null) {
+      val tb = out.text
+      tb.reset()
+      val n = t.length
+      var i = 0
+      while (i < n) {
+        val c = t.charAt(i)
+        if (Strings.ocrPlain(c)) {
+          val from = i
+          i += 1
+          while (i < n && Strings.ocrPlain(t.charAt(i))) i += 1
+          tb.append(t, from, i)
+        } else if (c == '\n') {
+          // the whitespace run from here splits blocks iff it holds another
+          // '\n'; either way it adds nothing but a separator
+          var r = i + 1
+          var blank = false
+          while (r < n && Strings.isWs(t.charAt(r))) { if (t.charAt(r) == '\n') blank = true; r += 1 }
+          if (blank) { pdfBlock(); tb.reset() } else tb.space()
+          i = r
+        } else {
+          // cleanup before normalizing: \u000B and \f are dropped, not
+          // separators, inside a block
+          if (!Strings.ocrDropped(c)) {
+            if (Strings.isWs(c)) tb.space() else tb.char(Strings.ocrQuote(c))
+          }
+          i += 1
+        }
+      }
+      pdfBlock()
+    }
+
+    private def pdfBlock(): Unit = {
+      val tb = out.text
+      if (tb.length > 0) {
+        val last = tb.lastChar
+        val heading = tb.length <= headingMax && tb.spaces <= 5 &&
+          last != '.' && last != '!' && last != '?'
+        out.addText(if (heading) SpanKind.Heading else SpanKind.Text)
+      }
+    }
+
+    /** Row-major table cells: header and separator rows dropped, data and
+      * total rows kept, each cell normalized, blank cells dropped.
+      */
+    private def tableCells(t: String): Unit =
+      TableGrid.parse(t).rows.foreach { r =>
+        // a cell holds no '\n', so it is one piece
+        if (!r.isHeaderRow && !r.isSeparatorRow)
+          r.cells.foreach(c => pieces(c.text, SpanKind.TableCell, '\n'))
+      }
+
+    /** EDI segments: split on `~` and trimmed, fields (split on `*`)
+      * whitespace-normalized; blank segments dropped.
+      */
+    private def ediSegments(t: String): Unit = if (t != null) {
+      val tb = out.text
+      val n = t.length
+      var s = 0
+      while (s < n) {
+        var e = t.indexOf('~', s)
+        if (e < 0) e = n
+        var a = s
+        var b = e
+        while (a < b && t.charAt(a) <= ' ') a += 1 // String.trim
+        while (b > a && t.charAt(b - 1) <= ' ') b -= 1
+        tb.reset()
+        while (a < b) {
+          val c = t.charAt(a)
+          if (c == '*') tb.delimit('*') else if (Strings.isWs(c)) tb.space() else tb.char(c)
+          a += 1
+        }
+        out.addText(SpanKind.Text)
+        s = e + 1
+      }
+    }
+
+    /** `kind` spans for the pieces of t between '\n's or `sep`s, each
+      * whitespace-normalized; blank pieces dropped.
+      */
+    private def pieces(t: String, kind: String, sep: Char): Unit = if (t != null) {
+      val tb = out.text
+      tb.reset()
+      var i = 0
+      while (i < t.length) {
+        val c = t.charAt(i)
+        if (c == '\n' || c == sep) { out.addText(kind); tb.reset() }
+        else if (Strings.isWs(c)) tb.space()
+        else tb.char(c)
+        i += 1
+      }
+      out.addText(kind)
+    }
+  }
+
+  /** A null media_ref is absent, like an empty one. */
+  private def refOf(raw: Span): String = if (raw.media_ref == null) "" else raw.media_ref
+
+  private def offsetOrdered(spans: Seq[Span]): Boolean = {
+    val it = spans.iterator
+    var prev = Int.MinValue
+    while (it.hasNext) {
+      val o = it.next().offset
+      if (o < prev) return false
+      prev = o
+    }
+    true
+  }
 
   /** Per-span provenance (reference src/pipeline/provenance.py:66-171 leaf:
     * page + bbox + source_block_id + extraction_path). Page and bbox follow

@@ -1,7 +1,7 @@
 package graft.tokenize
 
-import graft.functions.Strings
 import graft.model.{Cell, Grid, GridRow}
+import scala.collection.immutable.ArraySeq
 
 /** Serialized table-grid parsing + row reconstruction.
   *
@@ -16,31 +16,47 @@ import graft.model.{Cell, Grid, GridRow}
   */
 object TableGrid {
 
-  private val pipeRe = java.util.regex.Pattern.compile("\\|")
-
   def parse(text: String): Grid = {
     if (text == null || text.trim.isEmpty) return Grid(Seq.empty, Seq.empty, 0)
-    val lines = text.split('\n').filter(_.nonEmpty)
     var headers = Seq.empty[String]
     val rows = Seq.newBuilder[GridRow]
+    var columns = 0
     var ri = 0
-    lines.foreach { line =>
-      val (flags, body) =
-        if (line.startsWith("H:")) ((true, false, false), line.substring(2))
-        else if (line.startsWith("S:")) ((false, false, true), line.substring(2))
-        else if (line.startsWith("T:")) ((false, true, false), line.substring(2))
-        else ((false, false, false), line)
-      val cells = pipeRe.split(body, -1).toIndexedSeq.zipWithIndex.map {
-        case (c, ci) => Cell(ri, ci, c)
+    val n = text.length
+    var ls = 0
+    while (ls < n) {
+      // one pass: non-empty lines between '\n's, cells between '|'s
+      // (trailing empty cells kept)
+      var le = text.indexOf('\n', ls)
+      if (le < 0) le = n
+      if (le > ls) {
+        val marker = if (le - ls >= 2 && text.charAt(ls + 1) == ':') text.charAt(ls) else ' '
+        val isHeader = marker == 'H'
+        val isTotal = marker == 'T'
+        val isSep = marker == 'S'
+        val body = if (isHeader || isTotal || isSep) ls + 2 else ls
+        var pipes = 0
+        var p = body
+        while (p < le) { if (text.charAt(p) == '|') pipes += 1; p += 1 }
+        val cells = new Array[Cell](pipes + 1)
+        var cs = body
+        var ci = 0
+        while (ci <= pipes) {
+          var ce = cs
+          while (ce < le && text.charAt(ce) != '|') ce += 1
+          cells(ci) = Cell(ri, ci, text.substring(cs, ce))
+          ci += 1
+          cs = ce + 1
+        }
+        val row = ArraySeq.unsafeWrapArray(cells)
+        if (isHeader && headers.isEmpty) headers = row.map(_.text.trim)
+        rows += GridRow(ri, row, isHeader, isTotal, isSep)
+        columns = math.max(columns, ci)
+        ri += 1
       }
-      val (isHeader, isTotal, isSep) = flags
-      if (isHeader && headers.isEmpty) headers = cells.map(_.text.trim)
-      rows += GridRow(ri, cells, isHeader, isTotal, isSep)
-      ri += 1
+      ls = le + 1
     }
-    val built = rows.result()
-    val colCount = if (built.isEmpty) 0 else built.map(_.cells.length).max
-    Grid(headers, built, colCount)
+    Grid(headers, rows.result(), columns)
   }
 
   /** `table_to_rows_dict` semantics: list of (header name -> cell text) maps. */
@@ -61,13 +77,4 @@ object TableGrid {
       .filter(_.nonEmpty)
       .toSeq
   }
-
-  /** Row-major cell texts for span emission: header + separator rows dropped,
-    * data + total rows kept in order, each cell normalized.
-    */
-  def cellTexts(grid: Grid): Seq[String] =
-    grid.rows.iterator
-      .filterNot(r => r.isHeaderRow || r.isSeparatorRow)
-      .flatMap(_.cells.iterator.map(c => Strings.normalizeWhitespace(c.text)))
-      .toSeq
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.{Doc, Span, SpanKind}
-import graft.tokenize.{Boilerplate, DocGen, SpanTokenizer, TableGrid}
+import graft.tokenize.{Boilerplate, DocGen, SpanBuffer, SpanTokenizer, TableGrid}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden span-sequence fixtures — the north-rule invariant is equality on
@@ -55,14 +55,47 @@ class TokenizeSpec extends AnyFunSuite {
   test("boilerplate: a container with a nested block is dropped with its children") {
     // scanning resumes after the container's close tag, so the inner <p>
     // is never matched on its own; only the following sibling survives
-    assert(Boilerplate.blocks(
-      "<div><p>hello world foo bar</p></div><p>after block here now</p>") ==
-      Seq(Boilerplate.Block("p", "after block here now", 0.0, 4)))
+    val html = "<div><p>hello world foo bar</p></div><p>after block here now</p>"
+    assert(KernelOracle.blocks(html) ==
+      Seq(KernelOracle.Block("p", "after block here now", 0.0, 4)))
+    assert(Boilerplate.mainContent(html) == Seq(("text", "after block here now")))
+  }
+
+  test("HTML scanner work is linear in the page, hostile inputs included") {
+    val lorem = "lorem ipsum dolor sit amet consectetur adipiscing "
+    def work(html: String): Long = {
+      val scanner = new Boilerplate.Scanner
+      val out = new SpanBuffer(Int.MaxValue)
+      scanner.scan(html, Boilerplate.Config(), out)
+      assert(out.size > 0)
+      scanner.work
+    }
+    val inputs: Seq[(String, Int => String)] = Seq(
+      "closed <p>" -> (n => s"<p>$lorem</p>" * n),
+      "unclosed <p>" -> (n => s"<p>$lorem" * n + "<p>last block here</p>"),
+      "unclosed <li>" -> (n => s"<li>$lorem" * n + "<li>last item here</li>"),
+      "nested <div>" -> (n => "<div>" * n + "<p>inner block here</p>" + "</div>" * n +
+        "<p>after block here</p>"),
+      "unclosed <a> in one <p>" -> (n => "<p>" + s"<a href=x>$lorem" * n + "</p>"))
+    inputs.foreach { case (name, page) =>
+      val (w1, w2) = (work(page(2000)), work(page(4000)))
+      assert(w2.toDouble / w1 <= 2.5, s"$name: work $w1 at n, $w2 at 2n")
+      assert(w2 <= 8L * page(4000).length, s"$name: $w2 for ${page(4000).length} chars")
+    }
+  }
+
+  test("a null media_ref counts as absent") {
+    def doc(ref: String) = Doc("d", Seq(
+      Span(SpanKind.Media, "", ref, 0), Span(SpanKind.PdfText, "Hello world.", ref, 1)))
+    val out = SpanTokenizer.extract(doc(null))
+    assert(out.spans == Seq(
+      Span(SpanKind.Figure, "", "", 0), Span(SpanKind.Text, "Hello world.", "", 1)))
+    assert(out == SpanTokenizer.extract(doc("")))
   }
 
   test("zero-width chars between whitespace collapse to one space (fused rule)") {
     // documented divergence from the staged regex pipeline, which left
-    // "alpha  beta" (double space) here — see Boilerplate.extractText
+    // "alpha  beta" (double space) here — see the Boilerplate scaladoc
     val main = Boilerplate.mainContent(
       "<p>alpha ​ beta gamma delta epsilon</p>")
     assert(main == Seq(("text", "alpha beta gamma delta epsilon")))
