@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.Doc
+import graft.model.{Doc, Span}
 import graft.tokenize.SpanTokenizer
 
 /** The end-to-end extraction job (SURVEY.md §4 physical plan):
@@ -20,7 +20,8 @@ import graft.tokenize.SpanTokenizer
   *  - documents stay single rows end-to-end (extraction is embarrassingly
   *    parallel, map-only; the ONLY planned shuffle is the repartition);
   *  - buckets = hash(doc_id) % B drive resumability (a bucket is the commit
-  *    unit recorded in the manifest store); buckets are processed in groups
+  *    unit recorded in the manifest store; one column, computed once per
+  *    row, which the write task reads); buckets are processed in groups
   *    of `groupSize`, and each group's output is written to a temp dir then
   *    atomically renamed to `data/group=<buckets>` — a group is either fully
   *    visible or absent, so a kill loses at most one group of work. In
@@ -104,18 +105,13 @@ object ExtractJob {
   /** One extracted output row (long-lived storage schema). */
   final case class OutRow(
       doc_id: String,
-      spans: Seq[graft.model.Span],
+      spans: Seq[Span],
       n_spans: Int,
       n_errors: Int,
       modalities: Seq[String],
       extraction_path: Seq[String],
       partition_id: Int,
       bucket: Int)
-
-  def bucketOf(docId: String, nBuckets: Int): Int = {
-    val h = graft.functions.Hashing.fnv1a64(docId)
-    (((h % nBuckets) + nBuckets) % nBuckets).toInt
-  }
 
   /** Sweep stale state from a previous crashed run: temp dirs, and any group
     * dir under `data/` or `metrics/` whose buckets are not ALL
@@ -167,10 +163,11 @@ object ExtractJob {
       return RunStats(Nil, committed.toSeq.sorted, 0L, 0L, 0L, 0L)
 
     val nB = cfg.nBuckets
-    // bucket computed as a COLUMN: a typed map-to-tuple here would
-    // deserialize + re-serialize every nested spans array once more per row;
-    // a string-only UDF stays on the columnar path
-    val bucketUdf = udf((id: String) => bucketOf(id, nB))
+    // bucket = fnv1a64(doc_id) mod nBuckets as a COLUMN: a typed
+    // map-to-tuple here would deserialize + re-serialize every nested spans
+    // array once more per row; a string-only UDF stays on the columnar path
+    val bucketUdf = udf((id: String) =>
+      Math.floorMod(graft.functions.Hashing.fnv1a64(id), nB.toLong).toInt)
     val keyed = docs.toDF().withColumn("bucket", bucketUdf(col("doc_id")))
     def inBuckets(bs: Seq[Int]) = col("bucket").isin(bs.map(Integer.valueOf): _*)
     // Heavy pre-pass, once per run and after the sweep's revocations: the
@@ -236,7 +233,8 @@ object ExtractJob {
       // (failed and duplicate attempts are dropped), so the metric rows
       // match the committed files without reading them back.
       val counted = spark.sparkContext.collectionAccumulator[MetricRow](s"metrics-$gi")
-      val extracted = part.select(col("doc_id"), col("spans")).as[Doc]
+      val extracted = part.select(col("doc_id"), col("spans"), col("bucket"))
+        .as[(String, Seq[Span], Int)]
         .mapPartitions { it =>
           val ctx = TaskContext.get()
           val pid = ctx.partitionId()
@@ -244,8 +242,9 @@ object ExtractJob {
           ctx.addTaskCompletionListener[Unit] { _ =>
             counts.foreach { case (b, c) => counted.add(MetricRow(b, pid, c(0), c(1), c(2))) }
           }
-          SpanTokenizer.extractPartition(it).map { e =>
-            val b = bucketOf(e.doc_id, nB)
+          val kernel = new SpanTokenizer.Kernel(SpanTokenizer.default)
+          it.map { case (id, spans, b) =>
+            val e = kernel.extract(Doc(id, spans))
             val c = counts.getOrElseUpdate(b, new Array[Long](3))
             c(0) += 1; c(1) += e.n_spans; c(2) += e.n_errors
             OutRow(e.doc_id, e.spans, e.n_spans, e.n_errors, e.modalities,

@@ -1,15 +1,18 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import T._
 
 /** Structured Streaming surface (SURVEY.md §2.10): the events table replayed
   * as a file stream through a windowed aggregation. Locally the stream is
-  * driven to completion synchronously (`replay`: memory sink +
-  * awaitTermination); in production the same plan runs continuously with
-  * `Trigger.AvailableNow` + a real sink and a watermark bounding state.
+  * driven to completion synchronously (`replay`: a `foreachBatch` sink that
+  * collects each micro-batch on the driver + awaitTermination); in
+  * production the same plan runs continuously with `Trigger.AvailableNow` +
+  * a real sink and a watermark bounding state.
   */
 object StreamingQ {
 
@@ -27,7 +30,7 @@ object StreamingQ {
   private lazy val ckptBase: java.nio.file.Path = graft.TempRoot("graft-stream-ckpt")
 
   /** Run `f` with a fresh checkpoint dir; the dir is deleted afterwards (the
-    * memory sink holds the results in the driver, so nothing outlives it).
+    * sink holds the results in the driver, so nothing outlives it).
     */
   private def withCkpt[A](f: String => A): A = {
     val dir = java.nio.file.Files.createTempDirectory(ckptBase, "q")
@@ -35,70 +38,57 @@ object StreamingQ {
     finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
-  /** State-partition sizing for the replayed stream (guide §2.2 — fewer,
-    * larger partitions — applied to state stores). Every stateful operator
-    * instantiates one state store PER shuffle partition PER batch, and each
-    * store pays fixed open/commit/delta-write costs; at the replay's state
-    * volume (~10⁵ rows) those fixed costs dominate the row work, so sizing
-    * partitions to the session core count (32) made every stateful query
-    * 1.5-2x slower than 8 partitions (measured A/B on the s05 join: 12.7s @
-    * 32, 10.1s @ 16, 7.0s @ 8, 7.8s @ 4 — batch-1's no-data eviction pass
-    * alone dropped 3.5s -> 0.9s). Partition count does not affect any
-    * result: state operators are key-partitioned and the watermark is
-    * global. On a real cluster size this to keep per-store state in the
-    * 10⁴-10⁶-row band.
-    */
-  private val StateParts = "8"
-
   /** Replay the events table as a file stream (one file per trigger) through
-    * the plan `build` makes from it, run to completion into a memory sink,
-    * and return the sink's rows. `build` gets the replay session and an
-    * `events()` source factory (call it once per independent source).
+    * the plan `build` makes from an `events()` source factory (call it once
+    * per independent source), run it to completion, and return its rows.
     *
-    * The stream runs on a session of its own: the caller's modifiable SQL
-    * settings (session time zone included) are copied in and the shuffle
-    * partitions set to [[StateParts]], so the caller's session conf is never
-    * touched (no set/restore race under concurrent use) and the sink's temp
-    * view lands in the replay session's catalog, not the caller's.
+    * The stream runs on the caller's session and sets nothing in it: no
+    * conf, no temp view. Each micro-batch is collected on the driver the way
+    * the memory sink does it — a complete-mode batch replaces the rows,
+    * append and update batches add to them.
+    *
+    * Its stateful operators take the caller's `spark.sql.shuffle.partitions`
+    * as their state-partition count. That count changes no result: state
+    * operators are key-partitioned and the watermark is global. It sets only
+    * the per-batch fixed cost, one state store per partition, each paying
+    * open/commit/delta-write costs. On a real cluster size it to keep
+    * per-store state in the 10⁴-10⁶-row band.
     */
   private def replay(spark: SparkSession, dir: String, outputMode: String)(
-      build: (SparkSession, () => DataFrame) => DataFrame): DataFrame = {
-    val ss = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      if (spark.conf.isModifiable(k)) ss.conf.set(k, v)
-    }
-    ss.conf.set("spark.sql.shuffle.partitions", StateParts)
-    val schema = load(ss, dir, "events").schema
-    val events = () => ss.readStream.schema(schema)
+      build: (() => DataFrame) => DataFrame): DataFrame = {
+    val schema = load(spark, dir, "events").schema
+    val events = () => spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)
-    val name = "graft_stream"
+    val stream = build(events)
+    var rows = Vector.empty[Row]
+    val sink: (DataFrame, Long) => Unit = (batch, _) =>
+      rows = (if (outputMode == "complete") Vector.empty else rows) ++ batch.collect()
     withCkpt { ckpt =>
-      build(ss, events).writeStream
+      stream.writeStream
         .outputMode(outputMode)
-        .format("memory")
-        .queryName(name)
+        .foreachBatch(sink)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .start()
         .awaitTermination()
     }
-    ss.table(name)
+    spark.createDataFrame(rows.asJava, stream.schema)
   }
 
   /** Hourly tumbling-window counts computed by a streaming query; returns the
     * final (complete-mode) result as a batch DataFrame. Batch twin: q17.
     *
     * DEMO SHAPE, deliberately: complete mode retains every window in state
-    * and the memory sink collects to the driver — correct on the finite
+    * and the sink collects to the driver — correct on the finite
     * replay, unbounded on an endless stream. The production variant is s03
     * (watermark + append: closed-window state dropped, bounded sink); s01
     * exists to pin the window-aggregation semantics against the q17 batch
     * oracle end-to-end.
     */
   def s01StreamHourly(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, "complete") { (_, events) =>
+    replay(spark, dir, "complete") { events =>
       events()
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), dbl(sum(dec(col("value")))).as("sum_value"))
@@ -113,7 +103,7 @@ object StreamingQ {
     * cutoff: window_end <= max(ts) - 2h.
     */
   def s03WatermarkAppend(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, "append") { (_, events) =>
+    replay(spark, dir, "append") { events =>
       events()
         // event-time watermarks require TIMESTAMP (table stores NTZ; session TZ is UTC)
         .withColumn("ts", col("ts").cast("timestamp"))
@@ -138,7 +128,7 @@ object StreamingQ {
     * would be mid-stream).
     */
   def s04StreamDedup(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, "append") { (_, events) =>
+    replay(spark, dir, "append") { events =>
       events()
         .withColumn("ts", col("ts").cast("timestamp"))
         .withColumn("copy", explode(array(lit(1), lit(2)))) // plant duplicates
@@ -152,7 +142,7 @@ object StreamingQ {
 
   /** Stateful stream: per-user running event count + last event type,
     * computed by the ACTUAL streaming execution path — groupByKey +
-    * mapGroupsWithState over the replayed stream (update mode, memory sink,
+    * mapGroupsWithState over the replayed stream (update mode,
     * AvailableNow). State per user is (count, latest (ts, event_id), its
     * event_type); each trigger folds its batch into the state and emits the
     * updated row. The final read takes each user's highest-count update
@@ -164,7 +154,7 @@ object StreamingQ {
   def s02UserState(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    replay(spark, dir, "update") { (_, events) =>
+    replay(spark, dir, "update") { events =>
       events()
         .select(col("user_id").cast("long"),
           unix_micros(col("ts").cast("timestamp")).as("tsu"),
@@ -202,7 +192,7 @@ object StreamingQ {
     * equals the batch interval join (the oracle).
     */
   def s05StreamJoin(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, "append") { (_, events) =>
+    replay(spark, dir, "append") { events =>
       def src(): DataFrame = events().withColumn("ts", col("ts").cast("timestamp"))
       val clicks = src().filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id").as("click_id"),
@@ -228,8 +218,8 @@ object StreamingQ {
     * refreshed per trigger epoch; the stream side never shuffles.
     */
   def s06StreamEnrich(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, "append") { (ss, events) =>
-      val typeStats = load(ss, dir, "events").groupBy(col("event_type"))
+    replay(spark, dir, "append") { events =>
+      val typeStats = load(spark, dir, "events").groupBy(col("event_type"))
         .agg((dbl(sum(dec(col("value")))) / count(lit(1))).as("type_avg"))
       events()
         .join(broadcast(typeStats), "event_type")
@@ -254,7 +244,7 @@ object StreamingQ {
     * are withheld exactly as they would be mid-stream.
     */
   def s07SessionWindow(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, "append") { (_, events) =>
+    replay(spark, dir, "append") { events =>
       events()
         .withColumn("ts", col("ts").cast("timestamp"))
         .withWatermark("ts", "2 hours")

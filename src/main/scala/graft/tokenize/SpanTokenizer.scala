@@ -163,26 +163,31 @@ object SpanTokenizer {
     private val path = Seq(cfg.pathTag)
 
     def extract(doc: Doc): ExtractedDoc = {
-      // parquet/DocGen rows arrive offset-ordered: sort only when needed
-      val ordered = if (offsetOrdered(doc.spans)) doc.spans else doc.spans.sortBy(_.offset)
+      // a null spans array (legal in a nullable parquet column) is an empty
+      // doc and a null element yields no span, like a null text. parquet/
+      // DocGen rows arrive offset-ordered: sort only when needed
+      val spans = if (doc.spans == null) Nil else doc.spans
+      val ordered = if (offsetOrdered(spans)) spans else spans.filter(_ != null).sortBy(_.offset)
       out.clear()
       var hasTables = false
       var quality = List.empty[QualityMetrics]
       val it = ordered.iterator
       while (it.hasNext) {
         val raw = it.next()
-        out.mark()
-        try expand(raw)
-        catch {
-          case e: Exception =>
-            out.rollback()
-            out.add(SpanKind.Error, s"tokenize_failed:${e.getClass.getSimpleName}", "")
+        if (raw != null) {
+          out.mark()
+          try expand(raw)
+          catch {
+            case e: Exception =>
+              out.rollback()
+              out.add(SpanKind.Error, s"tokenize_failed:${e.getClass.getSimpleName}", "")
+          }
+          if (raw.kind == SpanKind.TableRaw) hasTables = true
+          // every raw span carrying a media pointer contributes quality
+          // metrics (plain media spans AND dicom pixel data)
+          val ref = raw.media_ref
+          if (ref != null && !ref.isEmpty) quality = fakeDecodeQuality(ref) :: quality
         }
-        if (raw.kind == SpanKind.TableRaw) hasTables = true
-        // every raw span carrying a media pointer contributes quality
-        // metrics (plain media spans AND dicom pixel data)
-        val ref = raw.media_ref
-        if (ref != null && !ref.isEmpty) quality = fakeDecodeQuality(ref) :: quality
       }
       val analysis = Modality.Analysis(
         hasTables = hasTables,
@@ -313,11 +318,13 @@ object SpanTokenizer {
   /** A null media_ref is absent, like an empty one. */
   private def refOf(raw: Span): String = if (raw.media_ref == null) "" else raw.media_ref
 
+  /** Whether the non-null spans are in offset order. */
   private def offsetOrdered(spans: Seq[Span]): Boolean = {
     val it = spans.iterator
     var prev = Int.MinValue
     while (it.hasNext) {
-      val o = it.next().offset
+      val s = it.next()
+      val o = if (s == null) prev else s.offset
       if (o < prev) return false
       prev = o
     }

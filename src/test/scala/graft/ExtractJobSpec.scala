@@ -135,6 +135,36 @@ class ExtractJobSpec extends AnyFunSuite {
     }
   }
 
+  test("rows with a null spans array or null span elements keep manifests = metrics = data") {
+    import spark.implicits._
+    val nDocs = 200
+    val hostile = Seq(
+      Doc("null_spans", null),
+      Doc("null_element", Seq(null, graft.model.Span("pdf_text", "Hello world.", "", 1))),
+      Doc("only_nulls", Seq(null, null)))
+    val input = docs(nDocs).union(hostile.toDS())
+    val out = Files.createTempDirectory("graft_nulls").toString
+    val cfg = ExtractJob.Config(nBuckets = 4, groupSize = 2, runId = "n1")
+    val stats = ExtractJob.run(spark, input, out, cfg)
+    val total = nDocs + hostile.length
+    assert(stats.nDocs == total)
+    val data = spark.read.parquet(s"$out/data")
+    assert(data.count() == total)
+    val got = data.filter($"doc_id".isin(hostile.map(_.doc_id): _*))
+      .select("doc_id", "n_spans", "n_errors").as[(String, Int, Int)].collect().toSet
+    assert(got == Set(("null_spans", 0, 0), ("null_element", 1, 0), ("only_nulls", 0, 0)))
+    val store = new LocalManifestStore(out)
+    val perBucket = data.groupBy("bucket").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    (0 until 4).foreach { b =>
+      assert(store.readManifest(b).map(_.nDocs).contains(perBucket.getOrElse(b, 0L)))
+    }
+    val metrics = spark.read.parquet(s"$out/metrics")
+      .groupBy("bucket").agg(sum("n_docs")).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(metrics == perBucket)
+  }
+
   test("bucket manifests round-trip any run id; torn or partial ones read as absent") {
     val out = Files.createTempDirectory("graft_manifest").toString
     val store = new LocalManifestStore(out)

@@ -33,7 +33,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("a streaming query leaves the caller's catalog and shuffle partitions unchanged") {
-    // a caller whose partition count differs from the replay's 8
+    // a caller with a partition count of its own, which the replay runs
+    // with and must leave as it found it
     val caller = spark.newSession()
     val key = "spark.sql.shuffle.partitions"
     caller.conf.set(key, "3")
@@ -42,6 +43,18 @@ class StreamingSpec extends AnyFunSuite {
     assert(queries.StreamingQ.s03WatermarkAppend(caller, dir).count() > 0)
     assert(tables() -- tablesBefore == Set.empty[String])
     assert(caller.conf.get(key) == "3")
+  }
+
+  test("replays on one session add at most one streaming listener bus each") {
+    // Spark's stream execution registers one per query; anything above that
+    // (a session per replay adds another) is dispatched every Spark event
+    // for the rest of the JVM's life
+    def buses() = org.apache.spark.ListenerCount.streamingBuses(spark.sparkContext)
+    queries.StreamingQ.s01StreamHourly(spark, dir).collect()
+    val before = buses()
+    (1 to 3).foreach(_ => queries.StreamingQ.s01StreamHourly(spark, dir).collect())
+    val added = buses() - before
+    assert(added <= 4, s"3 replays added $added streaming listener buses")
   }
 
   test("mapGroupsWithState accumulates per-user state across micro-batches") {
