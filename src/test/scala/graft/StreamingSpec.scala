@@ -46,9 +46,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("replays on one session add at most one streaming listener bus each") {
-    // Spark's stream execution registers one per query; anything above that
-    // (a session per replay adds another) is dispatched every Spark event
-    // for the rest of the JVM's life
+    // Spark's stream execution registers one per query; every bus above
+    // that is dispatched each Spark event for the rest of the JVM's life
     def buses() = org.apache.spark.ListenerCount.streamingBuses(spark.sparkContext)
     queries.StreamingQ.s01StreamHourly(spark, dir).collect()
     val before = buses()
