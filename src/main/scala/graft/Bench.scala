@@ -130,12 +130,12 @@ object Bench {
   private def scalingWorker(stage: String, runs: Int, cores: Int, nDocs: Long,
       corpusBase: String): Unit = {
     val spark = session(cores)
-    val base = java.nio.file.Files.createTempDirectory(s"graft_bench_c$cores")
-    val warmDocs = spark.read.parquet(s"$corpusBase/corpus_warm").count()
-    stageRun(spark, stage, s"$corpusBase/corpus_warm", warmDocs, s"$base/warmup")
-    val secs = (1 to runs).map(r =>
-      stageRun(spark, stage, s"$corpusBase/corpus", nDocs, s"$base/run$r"))
-    org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+    val secs = TempRoot.scratch("graft-bench") { base =>
+      val warmDocs = spark.read.parquet(s"$corpusBase/corpus_warm").count()
+      stageRun(spark, stage, s"$corpusBase/corpus_warm", warmDocs, s"$base/warmup")
+      (1 to runs).map(r =>
+        stageRun(spark, stage, s"$corpusBase/corpus", nDocs, s"$base/run$r"))
+    }
     println(f"GRAFT_SCALING_RESULT docs_per_sec=${nDocs / secs.min}%.1f")
     spark.stop()
   }

@@ -16,4 +16,13 @@ object TempRoot {
     d.mkdirs()
     d.toPath
   }
+
+  /** Run `f` on a fresh dir under `TempRoot(name)`; the dir is deleted
+    * afterwards, whether `f` returns or throws.
+    */
+  def scratch[A](name: String)(f: java.nio.file.Path => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(apply(name), "s")
+    try f(dir)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.graft.Columns
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -22,9 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * This is the preference-order (b) path of the engine contract — a native
   * Catalyst Expression with `doGenCode` where a UDF would break whole-stage
-  * codegen. Registered for SQL via [[graft.plans.GraftExtensions]] (the
-  * `spark.sql.extensions` production route) or
-  * [[NativeFunctions.ensureRegistered]] (works on any already-built session).
+  * codegen. Queries build it as a column through [[NativeFunctions.apply]];
+  * SQL reaches it through [[graft.plans.GraftExtensions]] (the
+  * `spark.sql.extensions` route).
   */
 case class WsTokenCount(child: Expression) extends UnaryExpression {
 
@@ -282,11 +283,13 @@ object NativeKernels {
   }
 }
 
-/** Session-level registration helpers for the native expression library. */
+/** The native expression library: one list, read by the DataFrame builder
+  * below and by the SQL route.
+  */
 object NativeFunctions {
 
   /** The native functions as (SQL name, expression class, builder): the one
-    * list both [[graft.plans.GraftExtensions]] and [[ensureRegistered]] read.
+    * list both [[graft.plans.GraftExtensions]] and [[apply]] read.
     */
   val All: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
     ("ws_token_count", classOf[WsTokenCount], e => WsTokenCount(e.head)),
@@ -294,16 +297,12 @@ object NativeFunctions {
     ("pq_dist", classOf[PqDist], e => PqDist(e.head, e(1), e(2))),
     ("sq8_cos", classOf[Sq8Cos], e => Sq8Cos(e.head, e(1))))
 
-  /** Register each native function the session does not have yet — covers
-    * harnesses that build the SparkSession without `spark.sql.extensions`
-    * wired. A function already present (injected by the extensions, or by
-    * an earlier call) is left as it is, so per-query calls cost one lookup.
+  private val builders = All.map { case (name, _, builder) => name -> builder }.toMap
+
+  /** The native function `name` applied to `args`, as a column: the
+    * expression goes straight into the plan, so the session's function
+    * registry is neither read nor written.
     */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    All.foreach { case (name, _, builder) =>
-      if (!registry.functionExists(FunctionIdentifier(name)))
-        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
-  }
+  def apply(name: String, args: Column*): Column =
+    Columns.column(builders(name)(args.map(Columns.expression)))
 }

@@ -9,8 +9,8 @@ import com.fasterxml.jackson.core.JsonProcessingException
 
 /** Per-bucket commit manifest — the local stand-in for Iceberg
   * snapshot-per-partition checkpointing (SURVEY.md §7: no Iceberg runtime
-  * jar ships in this sandbox, so the storage layer sits behind this small
-  * trait; the production impl maps `commit` to an Iceberg snapshot commit of
+  * jar ships in this sandbox, so [[LocalManifestStore]] keeps one JSON file
+  * per bucket; an Iceberg store would map `commit` to a snapshot commit of
   * the bucket's data files and `committedBuckets` to a snapshot-manifest
   * scan).
   *
@@ -71,33 +71,26 @@ private[pipeline] object Manifests {
         _.iterator().asScala.toSeq.reverseIterator.foreach(Files.deleteIfExists(_)))
 }
 
-trait SnapshotStore {
-  def committedBuckets(): Set[Int]
-  def commit(m: BucketManifest): Unit
-  def readManifest(bucket: Int): Option[BucketManifest]
-
-  /** Revoke a bucket's commit (used by the crash sweep when its group's data
-    * dir had to be deleted: the bucket must reprocess). No-op if absent.
-    */
-  def revoke(bucket: Int): Unit
-}
-
-final class LocalManifestStore(outDir: String) extends SnapshotStore {
+/** The bucket manifests of one output dir, under `<outDir>/_manifests`. */
+final class LocalManifestStore(outDir: String) {
   private val dir: Path = Paths.get(outDir, "_manifests")
   private def path(bucket: Int): Path = dir.resolve(s"bucket-$bucket.json")
 
-  override def committedBuckets(): Set[Int] =
+  def committedBuckets(): Set[Int] =
     Manifests.list(dir, "bucket-").map(_.getFileName.toString)
       .collect { case s if s.endsWith(".json") =>
         s.stripPrefix("bucket-").stripSuffix(".json").toInt
       }
       .toSet
 
-  override def commit(m: BucketManifest): Unit =
+  def commit(m: BucketManifest): Unit =
     Manifests.atomicWriteJson(path(m.bucket), m)
 
-  override def revoke(bucket: Int): Unit = Files.deleteIfExists(path(bucket))
+  /** Revoke a bucket's commit (used by the crash sweep when its group's data
+    * dir had to be deleted: the bucket must reprocess). No-op if absent.
+    */
+  def revoke(bucket: Int): Unit = Files.deleteIfExists(path(bucket))
 
-  override def readManifest(bucket: Int): Option[BucketManifest] =
+  def readManifest(bucket: Int): Option[BucketManifest] =
     Manifests.read[BucketManifest](path(bucket))
 }

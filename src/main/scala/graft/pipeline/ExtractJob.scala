@@ -130,7 +130,7 @@ object ExtractJob {
     * its metrics dir not yet) leaves an orphan that the next sweep removes
     * by the same rule. Returns the committed set after revocations.
     */
-  private def sweepUncommitted(outDir: String, store: SnapshotStore,
+  private def sweepUncommitted(outDir: String, store: LocalManifestStore,
       committed: Set[Int]): Set[Int] = {
     val root = Paths.get(outDir)
     Manifests.list(root, ".tmp-group-").foreach(Manifests.deleteRecursively)

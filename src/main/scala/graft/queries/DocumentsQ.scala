@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.{Hashing, TextAnalysis}
+import graft.functions.{Hashing, NativeFunctions, TextAnalysis}
 import T._
 
 /** Training-data pipeline operators over the `documents` table:
@@ -115,15 +115,6 @@ object DocumentsQ {
     docs.unionByName(variants)
   }
 
-  /** MinHash + LSH near-dup detection: shingle -> 64-slot signature ->
-    * 16 bands of 4 -> band-bucket equi-join -> signature-estimated Jaccard
-    * -> planted-pair recall surface. The full candidate pipeline runs over
-    * base ∪ variants; the output keeps the planted (id, id+10^7) pairs —
-    * the only SQL-derivable truth — as the machine-checked recall claim
-    * (100% by the margin analysis on minhashVariants). Incidental base-base
-    * candidate pairs are real output of the same pipeline but depend on the
-    * signatures, so they're pinned by QueriesSpec, not the oracle.
-    */
   /** Hot-bucket cap for LSH candidate generation: a bucket with more than
     * `maxBucket` members contributes O(members^2) candidate pairs — at
     * corpus scale a single degenerate bucket (boilerplate-identical or
@@ -145,14 +136,6 @@ object DocumentsQ {
     bands.join(counts, keys)
   }
 
-  /** The operator's REAL output: every candidate pair surviving the
-    * signature-similarity gate, flagged `planted` (the SQL-derivable
-    * (id, id+10^7) recall rows) vs incidental base-base discoveries —
-    * production users consume this surface; d06 (the oracle row) is its
-    * planted projection, the only subset a SQL oracle can enumerate.
-    * Incidental behavior is spec-pinned (NearDupSurfaceSpec plants an
-    * exact-duplicate base pair and requires it here, unflagged).
-    */
   /** MinHash LSH candidate-pair pipeline over a (doc_id, sig) frame:
     * band-bucket equi-join (hot buckets capped) -> distinct pairs ->
     * signature-estimated Jaccard gate. Shuffles only (doc_id, band) pairs —
@@ -193,6 +176,14 @@ object DocumentsQ {
       .select(col("doc_a"), col("doc_b"))
   }
 
+  /** The operator's REAL output: every candidate pair surviving the
+    * signature-similarity gate, flagged `planted` (the SQL-derivable
+    * (id, id+10^7) recall rows) vs incidental base-base discoveries —
+    * production users consume this surface; d06 (the oracle row) is its
+    * planted projection, the only subset a SQL oracle can enumerate.
+    * Incidental behavior is spec-pinned (NearDupSurfaceSpec plants an
+    * exact-duplicate base pair and requires it here, unflagged).
+    */
   def d06MinhashLshAll(spark: SparkSession, dir: String): DataFrame = {
     val sigs = minhashVariants(spark, dir)
       .withColumn("sig", minhashUdf(col("text")))
@@ -202,6 +193,15 @@ object DocumentsQ {
         (col("doc_b") === col("doc_a") + 10000000L).as("planted"))
   }
 
+  /** MinHash + LSH near-dup detection: shingle -> 64-slot signature ->
+    * 16 bands of 4 -> band-bucket equi-join -> signature-estimated Jaccard
+    * -> planted-pair recall surface. The full candidate pipeline runs over
+    * base ∪ variants; the output keeps the planted (id, id+10^7) pairs —
+    * the only SQL-derivable truth — as the machine-checked recall claim
+    * (100% by the margin analysis on minhashVariants). Incidental base-base
+    * candidate pairs are real output of the same pipeline but depend on the
+    * signatures, so they're pinned by QueriesSpec, not the oracle.
+    */
   def d06MinhashLsh(spark: SparkSession, dir: String): DataFrame =
     d06MinhashLshAll(spark, dir)
       .filter(col("planted"))
@@ -277,11 +277,6 @@ object DocumentsQ {
     docs.unionByName(variants)
   }
 
-  /** SimHash near-dups: 64-bit sketch, 4x16-bit chunk candidate join,
-    * exact Hamming re-check <= 12, planted-pair recall surface (see
-    * simhashVariants — planted pairs are Hamming-0, so the oracle can
-    * enumerate them; incidental base-base near-dups are spec-pinned).
-    */
   /** Full SimHash pair surface (see d06MinhashLshAll): candidate pairs
     * within Hamming 12, `planted` distinguishing the provable recall rows
     * from incidental base-base near-dups (spec-pinned).
@@ -319,6 +314,11 @@ object DocumentsQ {
       .withColumn("planted", col("doc_b") === col("doc_a") + 10000000L)
   }
 
+  /** SimHash near-dups: 64-bit sketch, 4x16-bit chunk candidate join,
+    * exact Hamming re-check <= 12, planted-pair recall surface (see
+    * simhashVariants — planted pairs are Hamming-0, so the oracle can
+    * enumerate them; incidental base-base near-dups are spec-pinned).
+    */
   def d07Simhash(spark: SparkSession, dir: String): DataFrame =
     d07SimhashAll(spark, dir)
       .filter(col("planted"))
@@ -366,17 +366,15 @@ object DocumentsQ {
   /** Token counting through the native codegen'd Catalyst expression
     * (graft.functions.WsTokenCount): stays inside whole-stage codegen with
     * zero per-row regex/array allocation, unlike the split() idiom of d02 or
-    * a Scala UDF. Registered on the session idempotently (production route:
-    * spark.sql.extensions=graft.plans.GraftExtensions).
+    * a Scala UDF. The expression is built as a column, so the session's
+    * function registry is left as it is.
     */
-  def d13NativeTokens(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.NativeFunctions.ensureRegistered(spark)
+  def d13NativeTokens(spark: SparkSession, dir: String): DataFrame =
     load(spark, dir, "documents")
       .select(col("doc_id"),
-        call_function("ws_token_count", col("text")).cast("long").as("n_tokens"))
+        NativeFunctions("ws_token_count", col("text")).cast("long").as("n_tokens"))
       .withColumn("is_short", col("n_tokens") < 20L)
       .orderBy("doc_id")
-  }
 
   /** 13-format date round-trip: every order date is formatted into one of
     * the reference's 13 accepted input formats (chosen by key) and parsed

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.Hashing
+import graft.functions.{Hashing, NativeFunctions}
 import T._
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
@@ -23,20 +23,16 @@ object EmbeddingsQ {
     * list_sum (oracle-exact), but HOFs are CodegenFallback — on all-pairs
     * similarity the native expression keeps the inner loop compiled.
     */
-  private def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    graft.functions.NativeFunctions.ensureRegistered(spark)
-    call_function("float_vec_dot", a, b)
-  }
+  private def dot(a: Column, b: Column): Column = NativeFunctions("float_vec_dot", a, b)
 
-  private def norm(spark: SparkSession, a: Column): Column =
-    sqrt(dot(spark, a, a))
+  private def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Exact cosine of a broadcast query (`q_emb`, `q_norm`) against a corpus
     * row (`embedding`, `e_norm`), from norms each side computed once before
     * the join.
     */
-  private def cosine(spark: SparkSession): Column =
-    dot(spark, col("q_emb"), col("embedding")) / (col("q_norm") * col("e_norm"))
+  private val cosine: Column =
+    dot(col("q_emb"), col("embedding")) / (col("q_norm") * col("e_norm"))
 
   /** Per-query top-k: neighbours ranked by `order`, ties broken by
     * neighbor_id (a total order both engines agree on), `rank` as a long.
@@ -49,7 +45,7 @@ object EmbeddingsQ {
   /** L2 norms (map-only; sanity surface for the ANN paths). */
   def e01Norms(spark: SparkSession, dir: String): DataFrame =
     load(spark, dir, "embeddings")
-      .select(col("vec_id"), col("label"), norm(spark, col("embedding")).as("l2_norm"))
+      .select(col("vec_id"), col("label"), norm(col("embedding")).as("l2_norm"))
       .orderBy("vec_id")
 
   /** Brute-force cosine top-5 for the first 20 query vectors: corpus scanned
@@ -60,12 +56,12 @@ object EmbeddingsQ {
     */
   def e02AnnBruteForce(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-      .withColumn("e_norm", norm(spark, col("embedding")))
+      .withColumn("e_norm", norm(col("embedding")))
     val queries = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("e_norm").as("q_norm"))
     val scored = emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), cosine(spark).as("cos_sim"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), cosine.as("cos_sim"))
     topK(scored, desc("cos_sim"), 5).orderBy("query_id", "rank")
   }
 
@@ -120,7 +116,7 @@ object EmbeddingsQ {
     // each branch and can relocate it above the join — guide §4.4).
     val emb = load(spark, dir, "embeddings")
       .withColumn("bucket", signatureUdf(lshBits)(col("embedding")))
-      .withColumn("e_norm", norm(spark, col("embedding")))
+      .withColumn("e_norm", norm(col("embedding")))
       .localCheckpoint()
     val queries = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
@@ -134,20 +130,20 @@ object EmbeddingsQ {
     val cands = emb.join(broadcast(probes),
       col("bucket") === col("probe_bucket") && col("vec_id") =!= col("query_id"))
     val scored = cands.select(col("query_id"), col("vec_id").as("neighbor_id"),
-      cosine(spark).as("cos_sim"))
+      cosine.as("cos_sim"))
     topK(scored, desc("cos_sim"), 5).orderBy("query_id", "rank")
   }
 
   /** kNN majority-label classification for the first 100 vectors. */
   def e04KnnClassify(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
-      .withColumn("e_norm", norm(spark, col("embedding")))
+      .withColumn("e_norm", norm(col("embedding")))
     val queries = emb.filter(col("vec_id") < 100)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("e_norm").as("q_norm"))
     val scored = emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("label"),
-        cosine(spark).as("cos_sim"))
+        cosine.as("cos_sim"))
     topK(scored, desc("cos_sim"), 10)
       .groupBy(col("query_id"), col("label"))
       .agg(count(lit(1)).as("votes"))
@@ -184,7 +180,7 @@ object EmbeddingsQ {
     // row and can migrate into the join)
     val corpus = emb.unionByName(dups)
       .withColumn("bucket", signatureUdf(dedupBits)(col("embedding")))
-      .withColumn("e_norm", norm(spark, col("embedding")))
+      .withColumn("e_norm", norm(col("embedding")))
       .localCheckpoint()
     val left = corpus.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"),
       col("e_norm").as("norm_a"), col("bucket"))
@@ -193,7 +189,7 @@ object EmbeddingsQ {
     left.join(right, Seq("bucket"))
       .filter(col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"),
-        (dot(spark, col("emb_a"), col("emb_b")) /
+        (dot(col("emb_a"), col("emb_b")) /
           (col("norm_a") * col("norm_b"))).as("cos_sim"))
       .filter(col("cos_sim") >= 0.999)
       .orderBy("vec_a", "vec_b")
@@ -235,7 +231,7 @@ object EmbeddingsQ {
     // materialized once — the cell assignment feeds the corpus scan, the
     // query branch AND the equi-join key (see the e03 note)
     val corpus = emb.withColumn("cell", cellUdf(col("embedding")))
-      .withColumn("e_norm", norm(spark, col("embedding")))
+      .withColumn("e_norm", norm(col("embedding")))
       .localCheckpoint()
     val queries = corpus.filter(col("vec_id") < 20)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
@@ -243,7 +239,7 @@ object EmbeddingsQ {
         explode(probesUdf(col("embedding"))).as("probe_cell"))
     val scored = corpus.join(broadcast(queries),
       col("cell") === col("probe_cell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), cosine(spark).as("cos_sim"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), cosine.as("cos_sim"))
     topK(scored, desc("cos_sim"), 5).orderBy("query_id", "rank")
   }
 
@@ -265,12 +261,6 @@ object EmbeddingsQ {
       .orderBy("label")
   }
 
-  // One-pass quantized cosine: exact Long sums over the int8 codes then one
-  // final double divide/sqrt, as the codegen'd `sq8_cos` native expression
-  // (graft.functions.Sq8Cos — round 6; the former two-ARRAY<BIGINT>-argument
-  // Scala UDF paid ~40µs/call in argument conversion alone, which dominated
-  // the scoring join). Values bit-identical; DuckDB oracle unchanged.
-
   /** Scalar-quantized (SQ8) ANN: per-dimension min/max over the corpus
     * give a 256-level code per component — the memory-compression path for
     * billion-vector search (4x less IO than float32; FAISS's SQ8 storage).
@@ -285,6 +275,13 @@ object EmbeddingsQ {
     * scoring pass is the e02 broadcast-query scan over CODES (1/4 the
     * bytes). Top-5 ties broken by neighbor_id (coarse integer scores tie
     * more often than floats — the total order keeps both engines aligned).
+    *
+    * The quantized cosine is one pass: exact Long sums over the int8 codes,
+    * then one final double divide/sqrt, in the codegen'd `sq8_cos` native
+    * expression (graft.functions.Sq8Cos). The Scala UDF it replaced took two
+    * ARRAY<BIGINT> arguments and paid ~40µs per call converting them, which
+    * dominated the scoring join. Values are bit-identical and the DuckDB
+    * oracle is unchanged.
     */
   def e08AnnSq8(spark: SparkSession, dir: String): DataFrame = {
     val emb = load(spark, dir, "embeddings")
@@ -312,10 +309,9 @@ object EmbeddingsQ {
       .localCheckpoint()
     val qs = quant.filter(col("vec_id") < 20)
       .select(col("vec_id").as("query_id"), col("qv").as("q_qv"))
-    graft.functions.NativeFunctions.ensureRegistered(spark)
     val scored = quant.join(broadcast(qs), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        call_function("sq8_cos", col("q_qv"), col("qv")).as("cos_sq8"))
+        NativeFunctions("sq8_cos", col("q_qv"), col("qv")).as("cos_sq8"))
     topK(scored, desc("cos_sq8"), 5).orderBy("query_id", "rank")
   }
 
@@ -365,7 +361,6 @@ object EmbeddingsQ {
     // conversion dominated the scoring join; scores are op-for-op
     // identical). The codebook travels as a constant-folded nested-array
     // literal.
-    graft.functions.NativeFunctions.ensureRegistered(spark)
     val cbCol = array(cents.toIndexedSeq.map(c =>
       array(c.toIndexedSeq.map(v => lit(v)): _*)): _*)
     // codes materialized once: without this the optimizer relocates the
@@ -380,7 +375,7 @@ object EmbeddingsQ {
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val scored = corpus.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        call_function("pq_dist", col("q_emb"), col("code"), cbCol).as("approx_dist"))
+        NativeFunctions("pq_dist", col("q_emb"), col("code"), cbCol).as("approx_dist"))
     topK(scored, col("approx_dist"), 5).orderBy("query_id", "rank")
   }
 }

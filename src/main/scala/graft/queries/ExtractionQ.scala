@@ -345,17 +345,14 @@ object ExtractionQ {
     import graft.pipeline.ReviewSink
     // Rooted in graft.TempRoot so the queue write + read-back stays off the
     // shared system disk when tmpfs is available.
-    val outPath =
-      java.nio.file.Files.createTempDirectory(graft.TempRoot("graft-review"), "x26")
-    val out = outPath.toString
-    try {
-      ReviewSink.run(spark, x13Routing(spark, dir), out, "x26")
+    graft.TempRoot.scratch("graft-review") { out =>
+      ReviewSink.run(spark, x13Routing(spark, dir), out.toString, "x26")
       spark.read.parquet(s"$out/queue")
         .select(col("doc_id"), col("queue"), col("confidence"), col("status"),
           col("attempts"), col("delivered_pass"))
         .orderBy("doc_id")
         .localCheckpoint()
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(outPath.toFile)
+    }
   }
 
   /** Deterministic claim-record synthesis for the cross-field /

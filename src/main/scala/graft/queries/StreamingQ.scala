@@ -16,28 +16,6 @@ import T._
   */
 object StreamingQ {
 
-  /** Streaming checkpoint root on tmpfs when available. Without an explicit
-    * location every stateful query checkpoints its offset/commit logs and
-    * per-partition state-store deltas to a temp dir on the shared system
-    * disk — with 32 shuffle partitions a single replayed micro-batch
-    * performs hundreds of small synchronous writes+renames there, and that
-    * disk I/O (not the join/aggregation) dominated the replay harness's
-    * wall-clock in round 5. See [[graft.TempRoot]] for why tmpfs stands in
-    * for per-executor local storage; on a real cluster the checkpoint lives
-    * on each executor's local disk + a durable store, both of which scale
-    * with the cluster.
-    */
-  private lazy val ckptBase: java.nio.file.Path = graft.TempRoot("graft-stream-ckpt")
-
-  /** Run `f` with a fresh checkpoint dir; the dir is deleted afterwards (the
-    * sink holds the results in the driver, so nothing outlives it).
-    */
-  private def withCkpt[A](f: String => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory(ckptBase, "q")
-    try f(dir.toString)
-    finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-  }
-
   /** Replay the events table as a file stream (one file per trigger) through
     * the plan `build` makes from an `events()` source factory (call it once
     * per independent source), run it to completion, and return its rows.
@@ -53,6 +31,15 @@ object StreamingQ {
     * the per-batch fixed cost, one state store per partition, each paying
     * open/commit/delta-write costs. On a real cluster size it to keep
     * per-store state in the 10⁴-10⁶-row band.
+    *
+    * The checkpoint goes to a fresh `graft.TempRoot.scratch` dir, on tmpfs
+    * when available, deleted when the replay ends: the sink holds the rows
+    * on the driver, so nothing outlives it. Without an explicit location
+    * each stateful query checkpoints its logs and state-store deltas to the
+    * shared system disk, and those small synchronous writes and renames,
+    * not the join or aggregation, dominated the replay's wall clock in
+    * round 5. On a real cluster the checkpoint lives on each executor's
+    * local disk and a durable store.
     */
   private def replay(spark: SparkSession, dir: String, outputMode: String)(
       build: (() => DataFrame) => DataFrame): DataFrame = {
@@ -65,11 +52,11 @@ object StreamingQ {
     var rows = Vector.empty[Row]
     val sink: (DataFrame, Long) => Unit = (batch, _) =>
       rows = (if (outputMode == "complete") Vector.empty else rows) ++ batch.collect()
-    withCkpt { ckpt =>
+    graft.TempRoot.scratch("graft-stream-ckpt") { ckpt =>
       stream.writeStream
         .outputMode(outputMode)
         .foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", ckpt.toString)
         .trigger(Trigger.AvailableNow())
         .start()
         .awaitTermination()

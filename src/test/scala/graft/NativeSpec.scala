@@ -1,7 +1,9 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{NativeFunctions, NativeKernels}
@@ -30,31 +32,23 @@ class NativeSpec extends AnyFunSuite {
     assert(NativeKernels.wsTokenCount(null) == 0)
   }
 
-  test("ensureRegistered adds each native function once per session") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val registry = spark.sessionState.functionRegistry
-    def infos = NativeFunctions.All.map { case (name, _, _) =>
-      registry.lookupFunction(FunctionIdentifier(name)).get
-    }
-    NativeFunctions.ensureRegistered(spark)
-    val first = infos
-    NativeFunctions.ensureRegistered(spark)
-    // a re-registration would mint a fresh ExpressionInfo per function
-    assert(infos.zip(first).forall { case (a, b) => a eq b })
-  }
-
   test("expression matches split-idiom through SQL (extensions route) and codegen") {
     import spark.implicits._
-    val df = Seq("one two three", "  lead", "trail  ", "", "多字节 字符 here x")
-      .toDF("text")
-    df.createOrReplaceTempView("t_native")
-    // Extensions-injected SQL function. spark.sql.extensions is a STATIC
-    // conf: if another suite's bare session won the shared-JVM getOrCreate
-    // race, the injection never ran — fall back to ensureRegistered (the
-    // documented bare-session route) so this test is order-independent.
-    if (!spark.catalog.functionExists("ws_token_count"))
-      NativeFunctions.ensureRegistered(spark)
-    val viaSql = spark.sql(
+    val texts = Seq("one two three", "  lead", "trail  ", "", "多字节 字符 here x")
+    val df = texts.toDF("text")
+    // Extensions-injected SQL function, on a session of this test's own.
+    // spark.sql.extensions is a STATIC conf: if another suite's bare session
+    // won the shared-JVM getOrCreate race, the injection never ran — then
+    // register the same list in this session, so the test is order-independent.
+    val sqlSession = spark.newSession()
+    if (!sqlSession.catalog.functionExists("ws_token_count"))
+      NativeFunctions.All.foreach { case (name, cls, builder) =>
+        sqlSession.sessionState.functionRegistry.registerFunction(
+          FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+      }
+    sqlSession.createDataset(texts)(Encoders.STRING).toDF("text")
+      .createOrReplaceTempView("t_native")
+    val viaSql = sqlSession.sql(
       "SELECT text, ws_token_count(text) AS n FROM t_native").collect()
       .map(r => r.getString(0) -> r.getInt(1)).toMap
     // split() idiom reference (blank-guarded)
@@ -63,17 +57,15 @@ class NativeSpec extends AnyFunSuite {
           .otherwise(size(split(trim(col("text")), "\\s+"))).as("n"))
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(viaSql == viaSplit)
-    // ensureRegistered path (bare session) agrees
-    NativeFunctions.ensureRegistered(spark)
+    // the column builder the queries use agrees
     val viaCall = df.select(col("text"),
-        call_function("ws_token_count", col("text")).as("n"))
+        NativeFunctions("ws_token_count", col("text")).as("n"))
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(viaCall == viaSplit)
   }
 
   test("pq_dist is bit-identical to the scalar reference loop") {
     import spark.implicits._
-    NativeFunctions.ensureRegistered(spark)
     val k = 4; val sd = 4; val m = 2 // 8-dim vectors, 2 subspaces of 4
     def f(i: Int, j: Int): Float = ((i * 31 + j * 7) % 17 - 8) / 9.0f
     val cents: Array[Array[Float]] = Array.tabulate(k)(c => Array.tabulate(m * sd)(f(c, _)))
@@ -92,7 +84,7 @@ class NativeSpec extends AnyFunSuite {
     val cbCol = array(cents.toIndexedSeq.map(c =>
       array(c.toIndexedSeq.map(v => lit(v)): _*)): _*)
     val got = rows.toDF("id", "q", "code")
-      .select(col("id"), call_function("pq_dist", col("q"), col("code"), cbCol).as("d"))
+      .select(col("id"), NativeFunctions("pq_dist", col("q"), col("code"), cbCol).as("d"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     rows.foreach { case (id, q, code) =>
       // exact double equality — the expression must replay the UDF op-for-op
@@ -101,7 +93,7 @@ class NativeSpec extends AnyFunSuite {
     // a 7-dim query against 2 codes would drop its trailing dimension: rejected
     val bad = intercept[Exception] {
       Seq((0L, Array.tabulate(m * sd - 1)(f(0, _)), Array(0, 1))).toDF("id", "q", "code")
-        .select(call_function("pq_dist", col("q"), col("code"), cbCol)).collect()
+        .select(NativeFunctions("pq_dist", col("q"), col("code"), cbCol)).collect()
     }
     val causes = Iterator.iterate[Throwable](bad)(_.getCause).takeWhile(_ != null).toSeq
     assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
@@ -110,7 +102,6 @@ class NativeSpec extends AnyFunSuite {
 
   test("sq8_cos is bit-identical to the UDF-struct reference") {
     import spark.implicits._
-    NativeFunctions.ensureRegistered(spark)
     val rows = (0 until 30).map { i =>
       (i.toLong,
         Array.tabulate(16)(j => ((i * 13 + j * 5) % 256).toLong),
@@ -125,7 +116,7 @@ class NativeSpec extends AnyFunSuite {
       else dt.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
     }
     val got = rows.toDF("id", "a", "b")
-      .select(col("id"), call_function("sq8_cos", col("a"), col("b")).as("c"))
+      .select(col("id"), NativeFunctions("sq8_cos", col("a"), col("b")).as("c"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     rows.foreach { case (id, a, b) =>
       assert(got(id) == ref(a, b), s"sq8_cos differs at id=$id")
@@ -133,10 +124,9 @@ class NativeSpec extends AnyFunSuite {
   }
 
   test("expression stays inside whole-stage codegen") {
-    NativeFunctions.ensureRegistered(spark)
     import spark.implicits._
     val exec = spark.range(100)
-      .select(call_function("ws_token_count",
+      .select(NativeFunctions("ws_token_count",
         concat(lit("tok "), col("id").cast("string"))))
       .queryExecution.executedPlan
     val codegenProjects = exec.collect {
@@ -147,7 +137,6 @@ class NativeSpec extends AnyFunSuite {
   }
 
   test("float_vec_dot matches the HOF chain bit-exactly and stays codegen'd") {
-    NativeFunctions.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(0.5f, -1.5f, 2.0f)),
@@ -155,7 +144,7 @@ class NativeSpec extends AnyFunSuite {
       (Array.empty[Float], Array.empty[Float]))
       .toDF("a", "b")
     val both = df.select(
-      call_function("float_vec_dot", col("a"), col("b")).as("native"),
+      NativeFunctions("float_vec_dot", col("a"), col("b")).as("native"),
       aggregate(zip_with(col("a"), col("b"),
         (x, y) => x.cast("double") * y.cast("double")),
         lit(0.0), (acc, v) => acc + v).as("hof"))
@@ -163,7 +152,7 @@ class NativeSpec extends AnyFunSuite {
     both.foreach(r => assert(r.getDouble(0) == r.getDouble(1),
       s"native ${r.getDouble(0)} != hof ${r.getDouble(1)}"))
     val exec = spark.range(10)
-      .select(call_function("float_vec_dot",
+      .select(NativeFunctions("float_vec_dot",
         array(col("id").cast("float")), array(col("id").cast("float"))))
       .queryExecution.executedPlan
     assert(exec.collect {
@@ -173,7 +162,6 @@ class NativeSpec extends AnyFunSuite {
   }
 
   test("float_vec_dot null semantics mirror the HOF chain") {
-    NativeFunctions.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq(
       (Some(Array(Option(1.0f), Option(2.0f))), Some(Array(Option(3.0f), Option(4.0f)))),
@@ -182,7 +170,7 @@ class NativeSpec extends AnyFunSuite {
       (None, Some(Array(Option(1.0f)))))                                          // null array
       .toDF("a", "b")
     val rows = df.select(
-      call_function("float_vec_dot", col("a"), col("b")).as("native"),
+      NativeFunctions("float_vec_dot", col("a"), col("b")).as("native"),
       aggregate(zip_with(col("a"), col("b"),
         (x, y) => x.cast("double") * y.cast("double")),
         lit(0.0), (acc, v) => acc + v).as("hof"))

@@ -211,4 +211,18 @@ class PlanSpec extends AnyFunSuite {
         "raw embeddings shuffled — the scoring join must broadcast the small side")
     }
   }
+
+  test("d13, e01, e08 and e09 plan their native expressions directly") {
+    import graft.functions.{FloatVecDot, PqDist, Sq8Cos, WsTokenCount}
+    val native = Set[Class[_]](classOf[WsTokenCount], classOf[FloatVecDot],
+      classOf[PqDist], classOf[Sq8Cos])
+    def nativeIn(df: org.apache.spark.sql.DataFrame): Set[Class[_]] =
+      df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+        case e if native(e.getClass) => e.getClass
+      })).toSet
+    assert(nativeIn(DocumentsQ.d13NativeTokens(spark, dir)) == Set(classOf[WsTokenCount]))
+    assert(nativeIn(EmbeddingsQ.e01Norms(spark, dir)) == Set(classOf[FloatVecDot]))
+    assert(nativeIn(EmbeddingsQ.e08AnnSq8(spark, dir)) == Set(classOf[Sq8Cos]))
+    assert(nativeIn(EmbeddingsQ.e09AnnPq(spark, dir)) == Set(classOf[PqDist]))
+  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,12 +20,59 @@ class QueriesSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  test("every SparkEntry query returns rows on sf0.001") {
-    val counts = SparkEntry.queries.map { case (name, fn) =>
-      name -> fn(spark, dir).count()
+  /** The session-global state a query could leave behind, by name. Two
+    * things are left out on purpose:
+    *  - `localCheckpoint` blocks: they are reclaimed only when the
+    *    ContextCleaner runs after a GC (ROADMAP item 8), so a count taken
+    *    right after the queries says nothing about a leak;
+    *  - streaming listener buses: each replay's stateful operator calls
+    *    `streams.stateStoreCoordinator` on the per-query session clone
+    *    (`StreamExecution.sparkSessionForStream`). That builds the clone's
+    *    lazy `StreamingQueryManager`, whose constructor adds a
+    *    `StreamingQueryListenerBus` to the SparkContext's bus, and nothing
+    *    removes it. A stateless stream adds none (ROADMAP item 5;
+    *    StreamingSpec bounds it at one per replay).
+    */
+  private def globalState(s: SparkSession): Map[String, Set[String]] = {
+    def entries(root: String) = scala.util.Using.resource(
+      java.nio.file.Files.list(TempRoot(root)))(_.iterator().asScala.map(_.getFileName.toString).toSet)
+    Map(
+      "functions" -> s.sessionState.functionRegistry.listFunction().map(_.unquotedString).toSet,
+      "conf" -> s.conf.getAll.map { case (k, v) => s"$k=$v" }.toSet,
+      "tables" -> s.catalog.listTables().collect().map(_.name).toSet,
+      "active streams" -> s.streams.active.map(_.id.toString).toSet,
+      "cache empty" -> Set(s.sharedState.cacheManager.isEmpty.toString),
+      "graft-stream-ckpt" -> entries("graft-stream-ckpt"),
+      "graft-review" -> entries("graft-review"))
+  }
+
+  /** Every SparkEntry query counted once on a fresh session, with the state
+    * above taken before and after. The native functions are dropped from
+    * the session's registry first: the shared context may have been built
+    * with `spark.sql.extensions`, and a query that registered them would
+    * then go unseen.
+    */
+  private lazy val isolatedRun = {
+    val s = spark.newSession()
+    graft.functions.NativeFunctions.All.foreach { case (name, _, _) =>
+      s.sessionState.functionRegistry.dropFunction(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name))
     }
-    val empty = counts.filter(_._2 == 0L)
+    val before = globalState(s)
+    val counts = SparkEntry.queries.map { case (name, fn) => name -> fn(s, dir).count() }
+    (counts, before, globalState(s))
+  }
+
+  test("every SparkEntry query returns rows on sf0.001") {
+    val empty = isolatedRun._1.filter(_._2 == 0L)
     assert(empty.isEmpty, s"empty results: ${empty.keys.mkString(",")}")
+  }
+
+  test("no SparkEntry query mutates session-global state") {
+    val (_, before, after) = isolatedRun
+    val changed = before.keys.filter(k => before(k) != after(k)).map(k =>
+      s"$k: added ${after(k) -- before(k)}, removed ${before(k) -- after(k)}")
+    assert(changed.isEmpty, changed.mkString("; "))
   }
 
   test("entry flagship returns rows") {
