@@ -52,11 +52,14 @@ object ExtractJob {
 
   /** heavyWeight sizing rule (measured, see BASELINE.md skew A/B): isolate a
     * document only when it is a meaningful fraction (~5%) of one partition's
-    * total char budget — below that, the byte-balanced scan splits absorb
+    * total byte budget — below that, the byte-balanced scan splits absorb
     * the skew for free, and isolation's extra input scan + shuffle wave is a
     * net loss (800k-doc corpus with 0.65k-x megas ran ~20% slower isolated).
-    * Default 5M chars ~ 5% of a 100M-char partition at the bench shape; at
-    * 10^12 docs set it from table stats: heavyWeight ~ 0.05 * totalChars /
+    * A doc's weight is its payload in UTF-8 bytes (`octet_length` of every
+    * span's text and media_ref). The 5M default is ~5% of a 100 MB
+    * partition. Both benches (Bench and perfbench) pass 200,000, so that
+    * their skewed corpora's ~1.2 MB mega-docs take the heavy branch. At
+    * 10^12 docs set it from table stats: heavyWeight ~ 0.05 * totalBytes /
     * inputSplits.
     */
   final case class Config(
@@ -189,9 +192,9 @@ object ExtractJob {
     var totDocs = 0L; var totSpans = 0L; var totErrors = 0L
 
     groups.zipWithIndex.foreach { case (group, gi) =>
-      // At 10^12 scale this filter is partition pruning on the bucketed
-      // input table (each group scans only its own buckets); locally it
-      // re-derives the input per group — bench runs use one group.
+      // Every group rescans the whole input, at any scale: `bucket` is a
+      // Scala-UDF column, and Spark pushes a filter on such a column into no
+      // scan, so no input layout prunes it. The benches run one group.
       val inGroup = keyed.filter(inBuckets(group))
       // Light docs: the scan splits as they are. Heavy docs: one partition
       // EACH — `repartitionById` passes the doc's slot in `ids` straight

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tokenize.DocGen
 
@@ -112,17 +112,21 @@ object ReviewSink {
     // fraction of the parallelism — scales with the cluster, and coalesce
     // is a narrow dependency (no extra shuffle).
     val outParts = math.max(1, spark.sparkContext.defaultParallelism / 8)
-    q.drop("idnum").coalesce(outParts)
+    // The write counts what it commits: the observed aggregates are merged
+    // from the successful write tasks, so no job reads the queue back.
+    // `count` of a `when` without `otherwise` is 0, not null, on no rows.
+    val written = Observation()
+    q.drop("idnum")
+      .observe(written, count(lit(1)).as("rows"),
+        count(when(col("status") === "delivered", 1)).as("delivered"),
+        count(when(col("status") === "dead", 1)).as("dead"))
+      .coalesce(outParts)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    val counts = written.get
     // replaces an uncommitted queue dir (crash between rename and manifest)
     Manifests.publish(tmp, queueDir)
-    // counts read back from ONLY the committed files (O(queue), bounded)
-    val counts = spark.read.parquet(queueDir.toString)
-      .groupBy(col("status")).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val n = counts.values.sum
-    val stats = SinkStats(n, counts.getOrElse("delivered", 0L),
-      counts.getOrElse("dead", 0L), committedBefore = false)
+    def n(k: String) = counts(k).asInstanceOf[Long]
+    val stats = SinkStats(n("rows"), n("delivered"), n("dead"), committedBefore = false)
     Manifests.atomicWriteJson(manifestPath(outDir),
       QueueManifest(stats.nEntries, stats.nDelivered, stats.nDead, runId))
     stats

@@ -721,7 +721,7 @@ object ExtractionQ {
         min_by(col("doc_type"), col("page")).as("document_type"),
         count(lit(1)).as("n_pages"),
         (sum(col("conf_pct")).cast("double") / count(lit(1)) / 100.0).as("confidence"))
-      .select(concat(lit("doc_"), lpad(col("id").cast("string"), 9, "0")).as("doc_id"),
+      .select(DocGen.docIdStr(col("id")).as("doc_id"),
         col("segment").cast("int").as("segment"), col("start_page"), col("end_page"),
         col("document_type"), col("n_pages"), col("confidence"))
       .orderBy("doc_id", "segment")

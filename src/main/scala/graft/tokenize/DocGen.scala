@@ -1,7 +1,7 @@
 package graft.tokenize
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.substring
+import org.apache.spark.sql.functions.{format_string, substring}
 import graft.functions.Hashing
 import graft.model.{Doc, Span, SpanKind}
 
@@ -30,6 +30,11 @@ object DocGen {
     if (words.isEmpty) Seq.empty else words.grouped(size).toSeq
 
   def docIdStr(id: Long): String = f"doc_$id%09d"
+
+  /** docIdStr as a Column over a numeric id column (the same format string,
+    * which the DuckDB oracle spells `printf('doc_%09d', ...)`).
+    */
+  def docIdStr(c: Column): Column = format_string("doc_%09d", c)
 
   /** Build an HTML raw span: nav/footer boilerplate around real paragraphs
     * with a heading — exercises the text-density + link-density classifier.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.ExtractionQ
 
@@ -11,16 +10,9 @@ import graft.queries.ExtractionQ
   * vanished-field critical case. The value-level correctness is carried by
   * the DuckDB oracle (SparkEntry.oracleSql x30/x31).
   */
-class AbRegressionSpec extends AnyFunSuite {
+class AbRegressionSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private lazy val ab: Map[String, org.apache.spark.sql.Row] =
     ExtractionQ.x30AbTest(spark, dir).collect()

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Calibration
 
 /** Calibrator goldens (reference calibration.py:139-326 semantics). */
-class CalibrationSpec extends AnyFunSuite {
+class CalibrationSpec extends AnyFunSuite with SparkSpec {
 
   test("PAV pools adjacent violators into a monotone step function") {
     // classic PAV example: y = [1, 0] at x = [0.1, 0.2] pools to 0.5
@@ -114,20 +114,13 @@ class CalibrationSpec extends AnyFunSuite {
   }
 
   test("x11 output is byte-identical across shuffle parallelism (deterministic fit)") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val dir = "/root/testdata/sf0.001"
-    def run(parts: String): Seq[String] = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
+    def run(parts: String): Seq[String] = withConf("spark.sql.shuffle.partitions", parts) {
       graft.queries.ExtractionQ.x11Calibration(spark, dir)
         .collect().map(_.toString).toSeq
     }
     val a = run("3")
     val b = run("13")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     assert(a == b, "x11 fit sample / outputs depend on partitioning")
   }
 

@@ -1,28 +1,18 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.Export
 import graft.tokenize.{DocGen, SpanTokenizer}
 
 /** Export sinks: round-trip through JSON/parquet and span-order invariance. */
-class ExportSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExportSpec extends AnyFunSuite with SparkSpec {
 
   private def extracted = {
     import spark.implicits._
     spark.range(50).map(i => SpanTokenizer.extract(DocGen.syntheticDoc(i)))
   }
 
-  test("flat JSON export round-trips with span order intact") {
-    val out = Files.createTempDirectory("graft_export").toString
+  test("flat JSON export round-trips with span order intact")(scratch { out =>
     Export.writeJson(extracted, s"$out/flat")
     val back = spark.read.json(s"$out/flat")
     assert(back.count() == Export.flatSpans(extracted).count())
@@ -34,17 +24,16 @@ class ExportSpec extends AnyFunSuite {
         rows.map(_._2).sorted.toSeq != (0L until rows.length).toSeq
       }
     assert(bad == 0)
-  }
+  })
 
-  test("nested JSON export keeps one object per document") {
-    val out = Files.createTempDirectory("graft_export_n").toString
+  test("nested JSON export keeps one object per document")(scratch { out =>
     Export.writeJsonNested(extracted, s"$out/nested")
     val back = spark.read.json(s"$out/nested")
     assert(back.count() == 50)
     assert(back.columns.contains("spans"))
-  }
+  })
 
-  test("markdown export renders headings/figures/cells and round-trips") {
+  test("markdown export renders headings/figures/cells and round-trips")(scratch { out =>
     import graft.model.{Doc, ExtractedDoc, Span}
     val doc = ExtractedDoc("doc_x", Seq(
       Span("heading", "Title Here", "", 0),
@@ -56,11 +45,10 @@ class ExportSpec extends AnyFunSuite {
     assert(md.startsWith("# doc_x\n"))
     assert(md.contains("\n## Title Here\n") && md.contains("\nBody paragraph.\n"))
     assert(md.contains("| 42 ") && md.contains("![media](s3://m/1.png)"))
-    val out = Files.createTempDirectory("graft_export_md").toString
     Export.writeMarkdown(extracted, s"$out/md")
     val back = spark.read.parquet(s"$out/md")
     assert(back.count() == 50 && back.columns.toSet == Set("doc_id", "markdown"))
-  }
+  })
 
   test("HMAC receipts: mint, verify, tamper detection, keyless path") {
     val artefacts = Map(
@@ -80,13 +68,12 @@ class ExportSpec extends AnyFunSuite {
     assert(Export.verifyReceipt(unsigned, artefacts, None))
   }
 
-  test("flat parquet export matches the flat DataFrame exactly") {
-    val out = Files.createTempDirectory("graft_export_p").toString
+  test("flat parquet export matches the flat DataFrame exactly")(scratch { out =>
     Export.writeFlatParquet(extracted, s"$out/flat")
     val back = spark.read.parquet(s"$out/flat")
     assert(back.exceptAll(Export.flatSpans(extracted)).isEmpty)
     assert(Export.flatSpans(extracted).exceptAll(back).isEmpty)
-  }
+  })
 
   test("overlay contract: confidence palette, label format, pixel rects") {
     import graft.model.Bbox
@@ -120,13 +107,12 @@ class ExportSpec extends AnyFunSuite {
       pageW = 100, pageH = 100).isEmpty)
   }
 
-  test("overlay draw-list export over x27 provenance + x13 confidence") {
+  test("overlay draw-list export over x27 provenance + x13 confidence")(scratch { out =>
     import org.apache.spark.sql.functions.col
     val dir = "/root/testdata/sf0.001"
     val prov = graft.queries.ExtractionQ.x27SpanProvenance(spark, dir)
     val conf = graft.queries.ExtractionQ.x13Routing(spark, dir)
       .select(col("doc_id"), col("confidence"))
-    val out = Files.createTempDirectory("graft_overlay").toString
     Export.writeOverlayDrawList(prov.join(conf, "doc_id"), s"$out/overlays")
     val back = spark.read.parquet(s"$out/overlays")
     assert(back.count() > 0)
@@ -138,5 +124,5 @@ class ExportSpec extends AnyFunSuite {
     assert(back.select("fill_alpha").distinct().collect()
       .map(_.getInt(0)).toSeq == Seq(64))
     assert(row.isEmpty || row.head.getAs[String]("label").endsWith("%)"))
-  }
+  })
 }

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{count, lit, sum}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Doc
@@ -12,22 +12,14 @@ import graft.tokenize.DocGen
   * must, on re-run, reprocess only B-K buckets; output must contain every
   * doc exactly once with the span-order invariant intact.
   */
-class ExtractJobSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExtractJobSpec extends AnyFunSuite with SparkSpec {
 
   private def docs(n: Int) = {
     import spark.implicits._
     spark.range(n).map(i => DocGen.syntheticDoc(i)).as[Doc]
   }
 
-  test("kill after 2 commit groups, resume processes only the remainder") {
-    val out = Files.createTempDirectory("graft_job").toString
+  test("kill after 2 commit groups, resume processes only the remainder")(scratch { out =>
     val nDocs = 600
     val cfg = ExtractJob.Config(nBuckets = 16, groupSize = 4, runId = "r1",
       failAfterBucketCommits = Some(8))
@@ -90,7 +82,7 @@ class ExtractJobSpec extends AnyFunSuite {
       .agg(count(lit(1)), sum("n_spans"), sum("n_errors"))
     assert(rows(metrics.select("bucket", "partition_id", "n_docs", "n_spans", "n_errors")) ==
       rows(readBack))
-  }
+  })
 
   private def metricDocs(out: String): Long =
     spark.read.parquet(s"$out/metrics").agg(sum("n_docs")).head().getLong(0)
@@ -103,8 +95,7 @@ class ExtractJobSpec extends AnyFunSuite {
     // it sits in bucket 2, which the 3-commit crash commits and the sweep
     // revokes, so the resume's heavy pre-pass must run after the sweep.
     for ((heavyWeight, crashAfter, heavyDocs) <-
-        Seq((ExtractJob.Config().heavyWeight, 2, 0L), (5000L, 3, 1L))) {
-      val out = Files.createTempDirectory("graft_midcrash").toString
+        Seq((ExtractJob.Config().heavyWeight, 2, 0L), (5000L, 3, 1L))) scratch { out =>
       val nDocs = 400
       val cfg = ExtractJob.Config(nBuckets = 8, groupSize = 4, heavyWeight = heavyWeight,
         runId = "c1", failAfterBucketCommits = Some(crashAfter))
@@ -135,6 +126,42 @@ class ExtractJobSpec extends AnyFunSuite {
     }
   }
 
+  test("a crash at every hook point resumes to exactly-once data, manifests and metrics") {
+    // Every groupSize dividing 4 buckets, and a crash before each of the 4
+    // manifest commits. Doc 0 is a 100x mega-doc: at heavyWeight 5000 it
+    // takes the heavy branch in whichever run processes its bucket.
+    val nDocs = 200
+    val mega = DocGen.docIdStr(0)
+    for (g <- Seq(1, 2, 4); c <- 0 to 3) scratch { out =>
+      val at = s"groupSize $g, crash after $c commits"
+      val cfg = ExtractJob.Config(nBuckets = 4, groupSize = g, heavyWeight = 5000L,
+        runId = "k1", failAfterBucketCommits = Some(c))
+      intercept[ExtractJob.SimulatedCrash](ExtractJob.run(spark, docs(nDocs), out, cfg))
+      val resumed = ExtractJob.run(spark, docs(nDocs), out,
+        cfg.copy(failAfterBucketCommits = None, runId = "k2"))
+      // the sweep revokes a torn group, so only whole groups stay committed
+      assert(resumed.skippedBuckets == (0 until c / g * g), at)
+      val data = spark.read.parquet(s"$out/data")
+        .select("doc_id", "bucket", "partition_id", "n_spans", "n_errors").collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3).toLong, r.getInt(4).toLong))
+      assert(data.map(_._1).sorted.toSeq == (0 until nDocs).map(DocGen.docIdStr(_)), at)
+      val store = new LocalManifestStore(out)
+      (0 until 4).foreach { b =>
+        assert(store.readManifest(b).map(_.nDocs).contains(data.count(_._2 == b).toLong),
+          s"$at, bucket $b")
+      }
+      val metrics = spark.read.parquet(s"$out/metrics")
+        .select("bucket", "partition_id", "n_docs", "n_spans", "n_errors").collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+      val fromData = data.groupBy(d => (d._2, d._3)).map { case ((b, p), ds) =>
+        (b, p, ds.length.toLong, ds.map(_._4).sum, ds.map(_._5).sum)
+      }
+      assert(metrics.toSeq.sorted == fromData.toSeq.sorted, at)
+      val megaBucket = data.collectFirst { case (`mega`, b, _, _, _) => b }.get
+      assert(resumed.heavyDocs == (if (resumed.skippedBuckets.contains(megaBucket)) 0 else 1), at)
+    }
+  }
+
   test("rows with a null spans array or null span elements keep manifests = metrics = data") {
     import spark.implicits._
     val nDocs = 200
@@ -143,30 +170,30 @@ class ExtractJobSpec extends AnyFunSuite {
       Doc("null_element", Seq(null, graft.model.Span("pdf_text", "Hello world.", "", 1))),
       Doc("only_nulls", Seq(null, null)))
     val input = docs(nDocs).union(hostile.toDS())
-    val out = Files.createTempDirectory("graft_nulls").toString
-    val cfg = ExtractJob.Config(nBuckets = 4, groupSize = 2, runId = "n1")
-    val stats = ExtractJob.run(spark, input, out, cfg)
-    val total = nDocs + hostile.length
-    assert(stats.nDocs == total)
-    val data = spark.read.parquet(s"$out/data")
-    assert(data.count() == total)
-    val got = data.filter($"doc_id".isin(hostile.map(_.doc_id): _*))
-      .select("doc_id", "n_spans", "n_errors").as[(String, Int, Int)].collect().toSet
-    assert(got == Set(("null_spans", 0, 0), ("null_element", 1, 0), ("only_nulls", 0, 0)))
-    val store = new LocalManifestStore(out)
-    val perBucket = data.groupBy("bucket").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    (0 until 4).foreach { b =>
-      assert(store.readManifest(b).map(_.nDocs).contains(perBucket.getOrElse(b, 0L)))
+    scratch { out =>
+      val cfg = ExtractJob.Config(nBuckets = 4, groupSize = 2, runId = "n1")
+      val stats = ExtractJob.run(spark, input, out, cfg)
+      val total = nDocs + hostile.length
+      assert(stats.nDocs == total)
+      val data = spark.read.parquet(s"$out/data")
+      assert(data.count() == total)
+      val got = data.filter($"doc_id".isin(hostile.map(_.doc_id): _*))
+        .select("doc_id", "n_spans", "n_errors").as[(String, Int, Int)].collect().toSet
+      assert(got == Set(("null_spans", 0, 0), ("null_element", 1, 0), ("only_nulls", 0, 0)))
+      val store = new LocalManifestStore(out)
+      val perBucket = data.groupBy("bucket").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      (0 until 4).foreach { b =>
+        assert(store.readManifest(b).map(_.nDocs).contains(perBucket.getOrElse(b, 0L)))
+      }
+      val metrics = spark.read.parquet(s"$out/metrics")
+        .groupBy("bucket").agg(sum("n_docs")).collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      assert(metrics == perBucket)
     }
-    val metrics = spark.read.parquet(s"$out/metrics")
-      .groupBy("bucket").agg(sum("n_docs")).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(metrics == perBucket)
   }
 
-  test("bucket manifests round-trip any run id; torn or partial ones read as absent") {
-    val out = Files.createTempDirectory("graft_manifest").toString
+  test("bucket manifests round-trip any run id; torn or partial ones read as absent")(scratch { out =>
     val store = new LocalManifestStore(out)
     val ids = Seq("a,b", "x}y", "q\"z")
     ids.zipWithIndex.foreach { case (id, b) => store.commit(BucketManifest(b, 5, 7, 0, id)) }
@@ -182,7 +209,7 @@ class ExtractJobSpec extends AnyFunSuite {
     Files.writeString(dir.resolve("bucket-5.json"),
       """{"bucket":5,"n_docs":5,"n_spans":7,"n_errors":0}""")
     assert(store.readManifest(4).isEmpty && store.readManifest(5).isEmpty)
-  }
+  })
 
   test("mega-docs are isolated onto their own partitions") {
     import spark.implicits._
@@ -191,37 +218,36 @@ class ExtractJobSpec extends AnyFunSuite {
     val megaDocIds: Seq[String] = (0L until n.toLong)
       .filter(i => DocGen.syntheticDoc(i).spans.iterator
         .map(s => s.text.length.toLong + s.media_ref.length).sum >= 5000L)
-      .map(i => f"doc_$i%09d")
+      .map(DocGen.docIdStr)
     assert(megaDocIds.length == 3, s"expected three mega docs in range, got $megaDocIds")
     val isMega = org.apache.spark.sql.functions.col("doc_id").isin(megaDocIds: _*)
     // The layout is set by the scan splits and the heavy doc count alone:
     // the job has no shuffle sized by spark.sql.shuffle.partitions, so two
     // settings give the same partitions.
     val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
-    val partitionIds = try Seq("8", "64").map { shufflePartitions =>
-      spark.conf.set(key, shufflePartitions)
-      val out = Files.createTempDirectory("graft_skew").toString
-      // low heavy threshold so the synthetic mega tail definitely qualifies
-      val cfg = ExtractJob.Config(nBuckets = 4, groupSize = 4, heavyWeight = 5000L,
-        runId = "skew")
-      val stats = ExtractJob.run(spark, docs(n), out, cfg)
-      assert(stats.nDocs == n)
-      assert(stats.heavyDocs == megaDocIds.length)
-      val data = spark.read.parquet(s"$out/data")
-      val megaParts = data.filter(isMega)
-        .select("partition_id").as[Int].collect().sorted.toSeq
-      // no light doc shares a physical partition with a mega doc
-      val partOfLight = data.filter(!isMega)
-        .select("partition_id").as[Int].collect().toSet
-      assert(megaParts.nonEmpty && megaParts.toSet.intersect(partOfLight).isEmpty,
-        s"mega partitions $megaParts must be disjoint from light partitions " +
-          s"at $key=$shufflePartitions")
-      // one mega-doc per partition, on exactly the first k partitions
-      assert(megaParts == megaDocIds.indices,
-        s"mega partitions $megaParts at $key=$shufflePartitions")
-      megaParts.toSet ++ partOfLight
-    } finally spark.conf.set(key, saved)
+    val partitionIds = Seq("8", "64").map { shufflePartitions =>
+      withConf(key, shufflePartitions)(scratch { out =>
+        // low heavy threshold so the synthetic mega tail definitely qualifies
+        val cfg = ExtractJob.Config(nBuckets = 4, groupSize = 4, heavyWeight = 5000L,
+          runId = "skew")
+        val stats = ExtractJob.run(spark, docs(n), out, cfg)
+        assert(stats.nDocs == n)
+        assert(stats.heavyDocs == megaDocIds.length)
+        val data = spark.read.parquet(s"$out/data")
+        val megaParts = data.filter(isMega)
+          .select("partition_id").as[Int].collect().sorted.toSeq
+        // no light doc shares a physical partition with a mega doc
+        val partOfLight = data.filter(!isMega)
+          .select("partition_id").as[Int].collect().toSet
+        assert(megaParts.nonEmpty && megaParts.toSet.intersect(partOfLight).isEmpty,
+          s"mega partitions $megaParts must be disjoint from light partitions " +
+            s"at $key=$shufflePartitions")
+        // one mega-doc per partition, on exactly the first k partitions
+        assert(megaParts == megaDocIds.indices,
+          s"mega partitions $megaParts at $key=$shufflePartitions")
+        megaParts.toSet ++ partOfLight
+      })
+    }
     assert(partitionIds.distinct.length == 1,
       s"partition ids differ across shuffle partition settings: $partitionIds")
   }

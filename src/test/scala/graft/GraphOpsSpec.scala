@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.GraphOps
 import graft.queries.DocumentsQ
@@ -11,14 +9,7 @@ import graft.queries.DocumentsQ
   * cannot solve, separate components, singletons, parallelism determinism)
   * plus the planted-chain query surface.
   */
-class GraphOpsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraphOpsSpec extends AnyFunSuite with SparkSpec {
 
   import spark.implicits._
 
@@ -73,11 +64,12 @@ class GraphOpsSpec extends AnyFunSuite {
 
   test("d17 on a crafted corpus: eligible doc forms a 3-chain, short doc a singleton") {
     val a = (1 to 50).map(k => s"alpha$k").mkString(" ")
-    val out = Files.createTempDirectory("graft_cc").toString
-    Seq((1L, a), (2L, "short doc")).toDF("doc_id", "text")
-      .write.parquet(s"$out/documents.parquet")
-    val got = DocumentsQ.d17DedupComponents(spark, out)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toList
+    val got = scratch { out =>
+      Seq((1L, a), (2L, "short doc")).toDF("doc_id", "text")
+        .write.parquet(s"$out/documents.parquet")
+      DocumentsQ.d17DedupComponents(spark, out)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toList
+    }
     assert(got == List(
       (1L, 1L, 3L, true), (2L, 2L, 1L, true),
       (10000001L, 1L, 3L, false), (20000001L, 1L, 3L, false)))

@@ -1,24 +1,14 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.{Encoders, InjectedFunctions, SparkSessionExtensions}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{NativeFunctions, NativeKernels}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd expression (WsTokenCount) + as-of join edge semantics. */
-class NativeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NativeSpec extends AnyFunSuite with SparkSpec {
 
   private def u(s: String) = UTF8String.fromString(s)
 
@@ -36,16 +26,14 @@ class NativeSpec extends AnyFunSuite {
     import spark.implicits._
     val texts = Seq("one two three", "  lead", "trail  ", "", "多字节 字符 here x")
     val df = texts.toDF("text")
-    // Extensions-injected SQL function, on a session of this test's own.
-    // spark.sql.extensions is a STATIC conf: if another suite's bare session
-    // won the shared-JVM getOrCreate race, the injection never ran — then
-    // register the same list in this session, so the test is order-independent.
+    // The SQL route on a session of this test's own: GraftExtensions
+    // applied to extensions of their own, whose functions are registered as
+    // a session built with spark.sql.extensions registers them at start.
+    val ext = new SparkSessionExtensions
+    new graft.plans.GraftExtensions().apply(ext)
     val sqlSession = spark.newSession()
-    if (!sqlSession.catalog.functionExists("ws_token_count"))
-      NativeFunctions.All.foreach { case (name, cls, builder) =>
-        sqlSession.sessionState.functionRegistry.registerFunction(
-          FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
-      }
+    assert(!sqlSession.catalog.functionExists("ws_token_count"))
+    InjectedFunctions.register(ext, sqlSession.sessionState.functionRegistry)
     sqlSession.createDataset(texts)(Encoders.STRING).toDF("text")
       .createOrReplaceTempView("t_native")
     val viaSql = sqlSession.sql(
@@ -191,11 +179,12 @@ class NativeSpec extends AnyFunSuite {
       (12L, Timestamp.valueOf("2024-01-01 01:00:00"), 1L, "purchase", 3.0, "{}"),
       (13L, Timestamp.valueOf("2024-01-01 02:00:00"), 1L, "purchase", 4.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_asof").toString
-    rows.write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val out = graft.queries.Relational.q20AsofJoin(spark, tmp).collect()
-      .map(r => r.getLong(1) -> Option(r.get(2)).map(_.asInstanceOf[Long]))
-      .toMap
+    val out = scratch { tmp =>
+      rows.write.mode("overwrite").parquet(s"$tmp/events.parquet")
+      graft.queries.Relational.q20AsofJoin(spark, tmp).collect()
+        .map(r => r.getLong(1) -> Option(r.get(2)).map(_.asInstanceOf[Long]))
+        .toMap
+    }
     assert(out(10L).isEmpty, "purchase before any view must not match")
     assert(out(12L).contains(11L), "equal-timestamp view must match (inclusive)")
     assert(out(13L).contains(11L), "later purchase matches latest prior view")

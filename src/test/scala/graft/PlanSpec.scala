@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -14,16 +13,9 @@ import graft.queries.{DocumentsQ, EmbeddingsQ, Relational}
   * tokenizer pipeline must shuffle exactly once. These pin the shapes so a
   * refactor that silently regresses them fails the build.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def executed(df: org.apache.spark.sql.DataFrame) = {
     df.collect() // materialize so AQE finalizes the plan

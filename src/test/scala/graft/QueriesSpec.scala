@@ -9,16 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * returns rows; semantic assertions on the kernel-backed (rows-only)
   * queries that have no DuckDB oracle.
   */
-class QueriesSpec extends AnyFunSuite {
+class QueriesSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** The session-global state a query could leave behind, by name. Two
     * things are left out on purpose:
@@ -47,17 +40,10 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   /** Every SparkEntry query counted once on a fresh session, with the state
-    * above taken before and after. The native functions are dropped from
-    * the session's registry first: the shared context may have been built
-    * with `spark.sql.extensions`, and a query that registered them would
-    * then go unseen.
+    * above taken before and after.
     */
   private lazy val isolatedRun = {
     val s = spark.newSession()
-    graft.functions.NativeFunctions.All.foreach { case (name, _, _) =>
-      s.sessionState.functionRegistry.dropFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name))
-    }
     val before = globalState(s)
     val counts = SparkEntry.queries.map { case (name, fn) => name -> fn(s, dir).count() }
     (counts, before, globalState(s))
@@ -70,6 +56,10 @@ class QueriesSpec extends AnyFunSuite {
 
   test("no SparkEntry query mutates session-global state") {
     val (_, before, after) = isolatedRun
+    // the shared session carries no spark.sql.extensions, so a query that
+    // registered a native function would show up as an added one
+    val native = graft.functions.NativeFunctions.All.map(_._1).toSet
+    assert(before("functions").intersect(native).isEmpty)
     val changed = before.keys.filter(k => before(k) != after(k)).map(k =>
       s"$k: added ${after(k) -- before(k)}, removed ${before(k) -- after(k)}")
     assert(changed.isEmpty, changed.mkString("; "))

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.ReviewSink
 import graft.queries.ExtractionQ
@@ -11,19 +10,11 @@ import graft.queries.ExtractionQ
   * src/queue/webhook_dlq.py status machine: pending -> delivered /
   * pending(attempts+1) / dead at max_attempts; dead entries never claimed).
   */
-class ReviewSinkSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ReviewSinkSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  test("sink enqueues exactly the non-complete routes with DLQ outcomes") {
-    val out = Files.createTempDirectory("graft_rs").toString
+  test("sink enqueues exactly the non-complete routes with DLQ outcomes")(scratch { out =>
     val routed = ExtractionQ.x13Routing(spark, dir)
     val expected = routed.filter(org.apache.spark.sql.functions.col("route") =!= "complete").count()
     val stats = ReviewSink.run(spark, routed, out, "t1")
@@ -52,10 +43,9 @@ class ReviewSinkSpec extends AnyFunSuite {
     // both death classes actually occur
     assert(rows.exists(r => r.getString(0).stripPrefix("doc_").toLong % 5 == 2
       && r.getString(2) == "dead"))
-  }
+  })
 
-  test("re-run over a committed outDir is a no-op; torn dirs are swept") {
-    val out = Files.createTempDirectory("graft_rs2").toString
+  test("re-run over a committed outDir is a no-op; torn dirs are swept")(scratch { out =>
     val routed = ExtractionQ.x13Routing(spark, dir)
     val first = ReviewSink.run(spark, routed, out, "r1")
     val mtime = Files.getLastModifiedTime(
@@ -77,7 +67,7 @@ class ReviewSinkSpec extends AnyFunSuite {
     assert(!third.committedBefore && third.nEntries == first.nEntries)
     assert(ReviewSink.readManifest(out).map(_.runId).contains(runId))
     assert(spark.read.parquet(s"$out/queue").count() == first.nEntries)
-  }
+  })
 
   test("x26 leaves no queue dir behind once its result is collected") {
     def entries(): Set[String] = {
@@ -90,4 +80,12 @@ class ReviewSinkSpec extends AnyFunSuite {
     assert(rows.nonEmpty)
     assert(entries() == before)
   }
+
+  test("an empty queue commits zero counts")(scratch { out =>
+    val routed = ExtractionQ.x13Routing(spark, dir)
+      .filter(org.apache.spark.sql.functions.col("route") === "complete")
+    val stats = ReviewSink.run(spark, routed, out, "e1")
+    assert(stats == ReviewSink.SinkStats(0L, 0L, 0L, committedBefore = false))
+    assert(ReviewSink.readManifest(out).contains(ReviewSink.QueueManifest(0L, 0L, 0L, "e1")))
+  })
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,16 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the per-user running state the reference keeps in its checkpoint store
   * (runner.py:251-306) re-expressed as stream state.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("streaming hourly agg equals the batch twin") {
     // normalize the hour to a string: the streaming window and the batch
@@ -140,41 +132,41 @@ class StreamingSpec extends AnyFunSuite {
     assert(pairs.nonEmpty, "no in-session event pair to straddle")
     val (a, b) = pairs.head
     val splitUs = a + (b - a) / 2
-    val tmp = java.nio.file.Files.createTempDirectory("s07split").toString
-    val usCol = unix_micros(col("ts").cast("timestamp"))
-    ev.filter(usCol <= splitUs).coalesce(1).write.parquet(s"$tmp/f1")
-    ev.filter(usCol > splitUs).coalesce(1).write.parquet(s"$tmp/f2")
-    // the file source replays oldest-mtime first; pin the order so f2 can
-    // never be processed before f1 (which would make f1's data late)
-    def touch(d: String, t: Long): Unit =
-      new java.io.File(d).listFiles().foreach(_.setLastModified(t))
-    touch(s"$tmp/f1", System.currentTimeMillis() - 60000)
-    touch(s"$tmp/f2", System.currentTimeMillis())
-    // one file per trigger, in mtime order: f1's batch puts the open session
-    // into state, f2's batch must MERGE into it, not start a fresh session
-    val schema = ev.schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-      .parquet(s"$tmp/f*")
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "2 hours")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-    val q = stream.writeStream.outputMode("append").format("memory")
-      .queryName("graft_s07_split").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val split = spark.table("graft_s07_split")
-      .select(col("user_id"), unix_micros(col("session_window.start")).as("s"),
-        unix_micros(col("session_window.end")).as("e"), col("n_events"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(t => (t._1, t._2))
-    val whole = queries.StreamingQ.s07SessionWindow(spark, dir)
-      .select(col("user_id"), unix_micros(col("session_start")).as("s"),
-        unix_micros(col("session_end")).as("e"), col("n_events"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(t => (t._1, t._2))
-    assert(split.toSeq == whole.toSeq)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+    scratch { tmp =>
+      val usCol = unix_micros(col("ts").cast("timestamp"))
+      ev.filter(usCol <= splitUs).coalesce(1).write.parquet(s"$tmp/f1")
+      ev.filter(usCol > splitUs).coalesce(1).write.parquet(s"$tmp/f2")
+      // the file source replays oldest-mtime first; pin the order so f2 can
+      // never be processed before f1 (which would make f1's data late)
+      def touch(d: String, t: Long): Unit =
+        new java.io.File(d).listFiles().foreach(_.setLastModified(t))
+      touch(s"$tmp/f1", System.currentTimeMillis() - 60000)
+      touch(s"$tmp/f2", System.currentTimeMillis())
+      // one file per trigger, in mtime order: f1's batch puts the open session
+      // into state, f2's batch must MERGE into it, not start a fresh session
+      val schema = ev.schema
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
+        .parquet(s"$tmp/f*")
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .withWatermark("ts", "2 hours")
+        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"))
+      val q = stream.writeStream.outputMode("append").format("memory")
+        .queryName("graft_s07_split").trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val split = spark.table("graft_s07_split")
+        .select(col("user_id"), unix_micros(col("session_window.start")).as("s"),
+          unix_micros(col("session_window.end")).as("e"), col("n_events"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .sortBy(t => (t._1, t._2))
+      val whole = queries.StreamingQ.s07SessionWindow(spark, dir)
+        .select(col("user_id"), unix_micros(col("session_start")).as("s"),
+          unix_micros(col("session_end")).as("e"), col("n_events"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .sortBy(t => (t._1, t._2))
+      assert(split.toSeq == whole.toSeq)
+    }
   }
 
   test("stream-stream interval join equals the batch interval join") {
