@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.{count, lit, sum}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Doc
 import graft.pipeline.{BucketManifest, ExtractJob, LocalManifestStore}
+import graft.pipeline.ExtractJob.CrashPoint
 import graft.tokenize.DocGen
 
 /** Resume fixture (FIXTURES.md §6): a run killed after K of B buckets commit
@@ -22,7 +23,7 @@ class ExtractJobSpec extends AnyFunSuite with SparkSpec {
   test("kill after 2 commit groups, resume processes only the remainder")(scratch { out =>
     val nDocs = 600
     val cfg = ExtractJob.Config(nBuckets = 16, groupSize = 4, runId = "r1",
-      failAfterBucketCommits = Some(8))
+      crashAt = Some(CrashPoint.BeforeManifest(8)))
 
     // the crash lands after the third group's data and metrics are written
     // but before any of its manifests, so the resume must sweep that group
@@ -37,7 +38,7 @@ class ExtractJobSpec extends AnyFunSuite with SparkSpec {
     // group overwrites the torn group's data and metrics dirs, so only the
     // sweep can remove them
     val second = ExtractJob.run(spark, docs(nDocs), out,
-      cfg.copy(groupSize = 8, failAfterBucketCommits = None, runId = "r2"))
+      cfg.copy(groupSize = 8, crashAt = None, runId = "r2"))
     assert(second.skippedBuckets.toSet == firstBuckets)
     assert(second.processedBuckets.length == 8)
     assert(firstBuckets ++ second.processedBuckets == (0 until 16).toSet)
@@ -59,7 +60,7 @@ class ExtractJobSpec extends AnyFunSuite with SparkSpec {
     }
 
     // a third run is a no-op
-    val third = ExtractJob.run(spark, docs(nDocs), out, cfg.copy(failAfterBucketCommits = None))
+    val third = ExtractJob.run(spark, docs(nDocs), out, cfg.copy(crashAt = None))
     assert(third.processedBuckets.isEmpty && third.skippedBuckets.length == 16)
 
     // span-order invariant on the stored output
@@ -93,12 +94,12 @@ class ExtractJobSpec extends AnyFunSuite with SparkSpec {
     // the dir so the whole group reprocesses (exactly-once either way).
     // At heavyWeight 5000 doc 0 (a 100x mega-doc) takes the heavy branch;
     // it sits in bucket 2, which the 3-commit crash commits and the sweep
-    // revokes, so the resume's heavy pre-pass must run after the sweep.
+    // revokes, so the resume must route it to the heavy write again.
     for ((heavyWeight, crashAfter, heavyDocs) <-
         Seq((ExtractJob.Config().heavyWeight, 2, 0L), (5000L, 3, 1L))) scratch { out =>
       val nDocs = 400
       val cfg = ExtractJob.Config(nBuckets = 8, groupSize = 4, heavyWeight = heavyWeight,
-        runId = "c1", failAfterBucketCommits = Some(crashAfter))
+        runId = "c1", crashAt = Some(CrashPoint.BeforeManifest(crashAfter)))
       intercept[ExtractJob.SimulatedCrash] {
         ExtractJob.run(spark, docs(nDocs), out, cfg)
       }
@@ -106,7 +107,7 @@ class ExtractJobSpec extends AnyFunSuite with SparkSpec {
       assert(store.committedBuckets().size == crashAfter) // the torn group, part committed
 
       val second = ExtractJob.run(spark, docs(nDocs), out,
-        cfg.copy(failAfterBucketCommits = None, runId = "c2"))
+        cfg.copy(crashAt = None, runId = "c2"))
       // the torn group's committed buckets were revoked -> everything reran
       assert(second.skippedBuckets.isEmpty)
       assert(second.processedBuckets.toSet == (0 until 8).toSet)
@@ -127,20 +128,35 @@ class ExtractJobSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("a crash at every hook point resumes to exactly-once data, manifests and metrics") {
-    // Every groupSize dividing 4 buckets, and a crash before each of the 4
-    // manifest commits. Doc 0 is a 100x mega-doc: at heavyWeight 5000 it
-    // takes the heavy branch in whichever run processes its bucket.
+    // Every groupSize dividing 4 buckets, and a crash at each point of each
+    // group: after its light write, after its publish, after its metrics
+    // file, before each of the 4 manifest commits, and after the heavy write
+    // of the group that holds doc 0. Doc 0 is a 100x mega-doc: at
+    // heavyWeight 5000 it takes the heavy branch in whichever run processes
+    // its bucket.
     val nDocs = 200
     val mega = DocGen.docIdStr(0)
-    for (g <- Seq(1, 2, 4); c <- 0 to 3) scratch { out =>
-      val at = s"groupSize $g, crash after $c commits"
+    val megaBucket = Math.floorMod(graft.functions.Hashing.fnv1a64(mega), 4L).toInt
+    val crashes = for {
+      g <- Seq(1, 2, 4)
+      groupPoints = (0 until 4 / g).flatMap { gi =>
+        Seq(CrashPoint.AfterLightWrite(gi), CrashPoint.AfterPublish(gi),
+          CrashPoint.AfterMetrics(gi)).map(_ -> gi * g)
+      }
+      heavyPoint = CrashPoint.AfterHeavyWrite(megaBucket / g) -> megaBucket / g * g
+      manifestPoints = (0 to 3).map(c => CrashPoint.BeforeManifest(c) -> c / g * g)
+      // each point with the number of buckets the crashed run leaves committed
+      (point, kept) <- groupPoints ++ (heavyPoint +: manifestPoints)
+    } yield (g, point, kept)
+    for ((g, point, kept) <- crashes) scratch { out =>
+      val at = s"groupSize $g, crash at $point"
       val cfg = ExtractJob.Config(nBuckets = 4, groupSize = g, heavyWeight = 5000L,
-        runId = "k1", failAfterBucketCommits = Some(c))
+        runId = "k1", crashAt = Some(point))
       intercept[ExtractJob.SimulatedCrash](ExtractJob.run(spark, docs(nDocs), out, cfg))
       val resumed = ExtractJob.run(spark, docs(nDocs), out,
-        cfg.copy(failAfterBucketCommits = None, runId = "k2"))
+        cfg.copy(crashAt = None, runId = "k2"))
       // the sweep revokes a torn group, so only whole groups stay committed
-      assert(resumed.skippedBuckets == (0 until c / g * g), at)
+      assert(resumed.skippedBuckets == (0 until kept), at)
       val data = spark.read.parquet(s"$out/data")
         .select("doc_id", "bucket", "partition_id", "n_spans", "n_errors").collect()
         .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3).toLong, r.getInt(4).toLong))
@@ -157,7 +173,6 @@ class ExtractJobSpec extends AnyFunSuite with SparkSpec {
         (b, p, ds.length.toLong, ds.map(_._4).sum, ds.map(_._5).sum)
       }
       assert(metrics.toSeq.sorted == fromData.toSeq.sorted, at)
-      val megaBucket = data.collectFirst { case (`mega`, b, _, _, _) => b }.get
       assert(resumed.heavyDocs == (if (resumed.skippedBuckets.contains(megaBucket)) 0 else 1), at)
     }
   }
@@ -242,13 +257,56 @@ class ExtractJobSpec extends AnyFunSuite with SparkSpec {
         assert(megaParts.nonEmpty && megaParts.toSet.intersect(partOfLight).isEmpty,
           s"mega partitions $megaParts must be disjoint from light partitions " +
             s"at $key=$shufflePartitions")
-        // one mega-doc per partition, on exactly the first k partitions
-        assert(megaParts == megaDocIds.indices,
+        // one mega-doc per partition, on the k partitions right after the
+        // light write's
+        val firstHeavy = partOfLight.max + 1
+        assert(megaParts == (firstHeavy until firstHeavy + megaDocIds.length),
           s"mega partitions $megaParts at $key=$shufflePartitions")
         megaParts.toSet ++ partOfLight
       })
     }
     assert(partitionIds.distinct.length == 1,
       s"partition ids differ across shuffle partition settings: $partitionIds")
+  }
+
+  test("a doc_id with a heavy row and a light row has each row written once") {
+    import spark.implicits._
+    // doc 0 is a 100x mega-doc; a second, light row reuses its doc_id
+    val twin = DocGen.syntheticDoc(1).copy(doc_id = DocGen.docIdStr(0))
+    val input = docs(200).union(Seq(twin).toDS())
+    scratch { out =>
+      val stats = ExtractJob.run(spark, input, out,
+        ExtractJob.Config(nBuckets = 4, groupSize = 4, heavyWeight = 5000L, runId = "d1"))
+      assert(stats.nDocs == 201 && stats.heavyDocs == 1)
+      val data = spark.read.parquet(s"$out/data")
+        .select("doc_id", "n_spans", "n_errors", "partition_id").as[(String, Int, Int, Int)]
+        .collect().toSeq
+      val direct = input.collect().toSeq.map(graft.tokenize.SpanTokenizer.extract(_))
+        .map(e => (e.doc_id, e.n_spans, e.n_errors))
+      assert(data.map(d => (d._1, d._2, d._3)).sorted == direct.sorted)
+      // the heavy row alone on its partition, the light twin among the light docs
+      val megaPart = data.filter(_._1 == twin.doc_id).maxBy(_._2)._4
+      assert(data.count(_._4 == megaPart) == 1)
+    }
+  }
+
+  test("a one-group run with no heavy doc is one Spark job") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    scratch { out =>
+      org.apache.spark.ListenerCount.drain(sc)
+      sc.addSparkListener(listener)
+      try {
+        val stats = ExtractJob.run(spark, docs(400), out,
+          ExtractJob.Config(nBuckets = 4, groupSize = 4, runId = "j1"))
+        assert(stats.nDocs == 400 && stats.heavyDocs == 0)
+        org.apache.spark.ListenerCount.drain(sc)
+      } finally sc.removeSparkListener(listener)
+      assert(jobs.get == 1)
+    }
   }
 }

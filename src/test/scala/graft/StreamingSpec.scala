@@ -154,18 +154,26 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         .agg(count(lit(1)).as("n_events"))
       val q = stream.writeStream.outputMode("append").format("memory")
         .queryName("graft_s07_split").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val split = spark.table("graft_s07_split")
-        .select(col("user_id"), unix_micros(col("session_window.start")).as("s"),
-          unix_micros(col("session_window.end")).as("e"), col("n_events"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .sortBy(t => (t._1, t._2))
+      // the memory sink registers a temp view in the session every suite
+      // shares: drop it, and stop the query if an assertion cut it short
+      val split = try {
+        q.awaitTermination()
+        spark.table("graft_s07_split")
+          .select(col("user_id"), unix_micros(col("session_window.start")).as("s"),
+            unix_micros(col("session_window.end")).as("e"), col("n_events"))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+          .sortBy(t => (t._1, t._2))
+      } finally {
+        if (q.isActive) q.stop()
+        spark.catalog.dropTempView("graft_s07_split")
+      }
       val whole = queries.StreamingQ.s07SessionWindow(spark, dir)
         .select(col("user_id"), unix_micros(col("session_start")).as("s"),
           unix_micros(col("session_end")).as("e"), col("n_events"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .sortBy(t => (t._1, t._2))
       assert(split.toSeq == whole.toSeq)
+      assert(!spark.catalog.tableExists("graft_s07_split"))
     }
   }
 
