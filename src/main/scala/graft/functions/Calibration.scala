@@ -1,14 +1,13 @@
 package graft.functions
 
 /** Confidence calibrators, semantics mirroring the reference's
-  * src/validation/calibration.py:139-326 (Platt / Isotonic / Linear,
-  * fit on small collected calibration sets, applied row-wise).
+  * src/validation/calibration.py:139-326 (Isotonic / Linear, fit on small
+  * collected calibration sets, applied row-wise).
   *
   * Fit is driver-side on a collected sample — the reference caps its
   * calibration points in SQLite the same way; at cluster scale the sample is
   * a bounded `limit()` collect, the APPLY side is a broadcast binary-search
-  * per row. Isotonic uses classic PAV (pool adjacent violators); Platt is a
-  * deterministic fixed-iteration Newton fit of a 1-feature logistic.
+  * per row. Isotonic uses classic PAV (pool adjacent violators).
   */
 object Calibration {
 
@@ -75,38 +74,6 @@ object Calibration {
     Isotonic(kx.toArray, ky.toArray)
   }
 
-  /** Platt scaling: sigmoid(a*x + b) fit by fixed-iteration Newton descent
-    * on log-loss. Deterministic (fixed start, fixed 25 iterations).
-    * Reference analog: calibration.py logistic fit.
-    */
-  def fitPlatt(points: Seq[(Double, Double)], iters: Int = 25): (Double, Double) = {
-    var a = 1.0
-    var b = 0.0
-    if (points.isEmpty) return (a, b)
-    var it = 0
-    while (it < iters) {
-      var ga = 0.0; var gb = 0.0
-      var haa = 1e-9; var hbb = 1e-9; var hab = 0.0
-      points.foreach { case (x, y) =>
-        val p = 1.0 / (1.0 + math.exp(-(a * x + b)))
-        val d = p - y
-        ga += d * x; gb += d
-        val w = p * (1 - p)
-        haa += w * x * x; hbb += w; hab += w * x
-      }
-      val det = haa * hbb - hab * hab
-      if (det.abs > 1e-12) {
-        a -= (hbb * ga - hab * gb) / det
-        b -= (haa * gb - hab * ga) / det
-      }
-      it += 1
-    }
-    (a, b)
-  }
-
-  def applyPlatt(ab: (Double, Double), x: Double): Double =
-    1.0 / (1.0 + math.exp(-(ab._1 * x + ab._2)))
-
   /** The reference's linear fallback calibrator (0.85x + 0.05, clamped). */
   def applyLinear(x: Double): Double = math.min(1.0, math.max(0.0, 0.85 * x + 0.05))
 
@@ -126,40 +93,5 @@ object Calibration {
     val thr = 20 + 3 * profile + 2 * tenant
     for (k <- 0 to 20; j <- 0 to 1)
       yield (k / 20.0, if (2 * k + j >= thr) 1.0 else 0.0)
-  }
-
-  /** Planted PLATT sample with an ANALYTIC maximum-likelihood solution: the
-    * scores take exactly two values (0.2 / 0.8) with mixed labels at each,
-    * so the 1-feature logistic MLE is the saturated model — the fitted
-    * probability at each score equals that score's empirical label mean,
-    * giving closed-form coefficients
-    *   a* = (logit(ph) - logit(pl)) / (xh - xl),  b* = logit(pl) - a*·xl.
-    * The label mixes are keyed per (profile, tenant) — pl = (1+profile)/8,
-    * ph = (5+tenant)/8 — so every partition's fit is distinct. The Newton
-    * fit (fitPlatt) must converge to this analytic optimum; CalibrationSpec
-    * machine-checks both the closed-form match and the log-loss score
-    * equations at ~1e-12 (not golden values). Mixed labels also keep the
-    * sample non-separable, so the MLE exists (the monotone isotonic sample
-    * above is separable — its logistic MLE diverges, which is why Platt
-    * gets its own planted design). Ref: calibration.py:200-260.
-    */
-  def plantedPlattSample(profile: Long, tenant: Long): Seq[(Double, Double)] = {
-    // the documented non-separability invariant holds only while both label
-    // mixes stay strictly inside (0, 1): profile 7 would make onesLo = 8
-    // (all-ones at x=0.2), the sample separable, the MLE divergent, and
-    // analyticPlatt's logit(1.0) infinite — enforce the domain at the API
-    require(profile >= 0 && profile <= 6 && tenant >= 0 && tenant <= 2,
-      s"plantedPlattSample domain: profile in [0,6], tenant in [0,2]; got ($profile, $tenant)")
-    val onesLo = (1 + profile).toInt // of 8 points at x = 0.2
-    val onesHi = (5 + tenant).toInt  // of 8 points at x = 0.8
-    (0 until 8).map(j => (0.2, if (j < onesLo) 1.0 else 0.0)) ++
-      (0 until 8).map(j => (0.8, if (j < onesHi) 1.0 else 0.0))
-  }
-
-  /** The analytic MLE for a two-score sample (see plantedPlattSample). */
-  def analyticPlatt(xl: Double, pl: Double, xh: Double, ph: Double): (Double, Double) = {
-    def logit(p: Double): Double = math.log(p / (1.0 - p))
-    val a = (logit(ph) - logit(pl)) / (xh - xl)
-    (a, logit(pl) - a * xl)
   }
 }

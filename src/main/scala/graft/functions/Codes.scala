@@ -41,54 +41,9 @@ object Codes {
   def validCpt(code: String): Boolean =
     code != null && cptRe.findFirstIn(code.trim).isDefined
 
-  private val icd10Re = "(?i)^[A-TV-Z]\\d{2}(?:\\.?\\d{0,4})?$".r
-  /** ICD-10-CM: letter (not U) + 2 digits + optional .#### (validators.py:155). */
-  def validIcd10(code: String): Boolean =
-    code != null && icd10Re.findFirstIn(code.trim).isDefined
-
-  private val hcpcsRe = "^[A-Z][0-9]{4}$".r
-  /** HCPCS level II: letter + 4 digits (medical_codes.py:157). */
-  def validHcpcs(code: String): Boolean =
-    code != null && hcpcsRe.findFirstIn(code.trim).isDefined
-
-  private val ndcRes = Seq(
-    "^\\d{5}-\\d{4}-\\d{2}$".r, "^\\d{5}-\\d{3}-\\d{2}$".r,
-    "^\\d{4}-\\d{4}-\\d{2}$".r, "^\\d{11}$".r)
-  /** NDC: 4 accepted formats (medical_codes.py:160-165). */
-  def validNdc(code: String): Boolean =
-    code != null && ndcRes.exists(_.findFirstIn(code.trim).isDefined)
-
-  /** Place-of-service whitelist (medical_codes.py:166-216). */
-  val posCodes: Set[String] = Set(
-    "01", "02", "03", "04", "05", "06", "07", "08", "09", "10", "11", "12",
-    "13", "14", "15", "16", "17", "18", "19", "20", "21", "22", "23", "24",
-    "25", "26", "31", "32", "33", "34", "41", "42", "49", "50", "51", "52",
-    "53", "54", "55", "56", "57", "58", "60", "61", "62", "65", "71", "72",
-    "81", "99")
-  def validPos(code: String): Boolean = code != null && posCodes.contains(code.trim)
-
-  private val phoneRe = "^\\(?(\\d{3})\\)?[-.\\s]?(\\d{3})[-.\\s]?(\\d{4})$".r
-  /** US phone; returns normalized 10 digits. Reference: validators.py:945-981. */
-  def normalizePhone(phone: String): Option[String] =
-    if (phone == null) None
-    else phoneRe.findFirstMatchIn(phone.trim).map(m => m.group(1) + m.group(2) + m.group(3))
-
-  private val ssnRe = "^(\\d{3})[-\\s]?(\\d{2})[-\\s]?(\\d{4})$".r
-  /** SSN shape + invalid-area checks (validators.py:983-996). */
-  def validSsn(ssn: String): Boolean = {
-    if (ssn == null) return false
-    ssnRe.findFirstMatchIn(ssn.trim) match {
-      case Some(m) =>
-        val area = m.group(1)
-        area != "000" && area != "666" && area.head != '9' &&
-          m.group(2) != "00" && m.group(3) != "0000"
-      case None => false
-    }
-  }
-
   /** CPT/HCPCS modifier whitelist (medical_codes.py VALID_MODIFIERS —
     * published CMS set). At cluster scale this set ships as a broadcast
-    * lookup, exactly like posCodes.
+    * lookup.
     */
   val validModifiers: Set[String] = Set(
     "22", "23", "24", "25", "26", "27", "32", "33", "47", "50", "51", "52",

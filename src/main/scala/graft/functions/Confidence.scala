@@ -130,21 +130,4 @@ object Confidence {
     val raw = math.max(0.0, math.min(1.0, wd * dp + wc * ct + wm * modalityTerm))
     Combined(dp, ct, pen, raw)
   }
-
-  // ---- record confidence calibration (multi_record.py:351-397) ----
-
-  /** 0.40*raw + 0.25*validation + 0.20*completeness + 0.15*consensus with
-    * the consensus floor 0.7 when only one record agrees (multi_record.py
-    * record-confidence blend).
-    */
-  def recordConfidence(
-      rawConf: Double,
-      validationScore: Double,
-      completeness: Double,
-      consensus: Double): Double = {
-    val cons = math.max(0.7, consensus)
-    val v = 0.40 * rawConf + 0.25 * validationScore +
-      0.20 * completeness + 0.15 * cons
-    math.max(0.0, math.min(1.0, v))
-  }
 }

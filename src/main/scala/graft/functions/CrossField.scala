@@ -7,8 +7,8 @@ import java.util.Locale
 /** Cross-field rule engine — logical consistency across extracted fields
   * that single-field validation cannot see. Semantics pinned to the
   * reference's src/validation/cross_field.py:142-912 (rule types, empty /
-  * float / date coercions, severity routing) and the CMS-1500 / UB-04 / EOB
-  * rule packs (:920-1068, exercised by tests/unit/test_cross_field.py).
+  * float / date coercions, severity routing) and the CMS-1500 rule pack
+  * (:920-1068, exercised by tests/unit/test_cross_field.py).
   *
   * Values arrive as strings (the extraction surface's field map); nested
   * arrays as sequences of field maps. All checks are pure — the Spark
@@ -22,7 +22,7 @@ import java.util.Locale
   */
 object CrossField {
 
-  object Sev { val Error = "error"; val Warning = "warning"; val Info = "info" }
+  object Sev { val Error = "error" }
 
   final case class Rule(
       name: String,
@@ -52,7 +52,6 @@ object CrossField {
       rulesChecked: Int,
       rulesPassed: Int) {
     def errors: Seq[Violation] = violations.filter(_.severity == Sev.Error)
-    def warnings: Seq[Violation] = violations.filter(_.severity == Sev.Warning)
     def passed: Boolean = errors.isEmpty
   }
 
@@ -191,38 +190,4 @@ object CrossField {
       (1 to 6).map(i => s"line_${i}_charges") :+ "total_charges",
       componentFields = (1 to 6).map(i => s"line_${i}_charges"),
       totalField = "total_charges", tolerance = 0.01))
-
-  val ub04Rules: Seq[Rule] = Seq(
-    Rule("admission_before_discharge", "date_order",
-      Seq("admission_date", "discharge_date"), allowEqual = true),
-    Rule("statement_from_to", "date_order",
-      Seq("statement_from_date", "statement_to_date"), allowEqual = true),
-    Rule("occurrence_code_date", "mutual_required",
-      Seq("occurrence_code", "occurrence_date")),
-    Rule("attending_npi_with_name", "required_if",
-      Seq("attending_physician_name", "attending_physician_npi"),
-      triggerField = "attending_physician_name",
-      requiredField = "attending_physician_npi"),
-    Rule("revenue_totals", "nested_sum_validation",
-      Seq("service_lines", "total_charges"),
-      arrayField = "service_lines", itemField = "total_charges",
-      totalField = "total_charges", tolerance = 0.01),
-    Rule("non_covered_totals", "nested_sum_validation",
-      Seq("service_lines", "total_non_covered_charges"),
-      arrayField = "service_lines", itemField = "non_covered_charges",
-      totalField = "total_non_covered_charges", tolerance = 0.01),
-    Rule("total_charges_positive", "value_range", Seq("total_charges"),
-      valueField = "total_charges", minValue = Some(0.0)))
-
-  val eobRules: Seq[Rule] = Seq(
-    Rule("service_before_payment", "date_order",
-      Seq("service_date", "payment_date"), allowEqual = true),
-    Rule("payment_calculation", "sum_validation",
-      Seq("allowed_amount", "patient_responsibility", "billed_amount"),
-      componentFields = Seq("allowed_amount", "patient_responsibility"),
-      totalField = "billed_amount", tolerance = 5.0),
-    Rule("denial_requires_reason", "required_if", Seq("denial_code", "denial_reason"),
-      triggerField = "denial_code", requiredField = "denial_reason"),
-    Rule("adjustment_code_amount", "mutual_required",
-      Seq("adjustment_code", "adjustment_amount")))
 }

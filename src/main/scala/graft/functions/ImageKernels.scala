@@ -1,27 +1,16 @@
 package graft.functions
 
-/** Real image-enhancement kernels over grayscale pixel grids (row-major
-  * Array[Int], values 0-255) — the published algorithms of the reference's
-  * enhancement chain, implemented directly (no image libraries needed):
+/** Grayscale pixel grids (row-major Array[Int], values 0-255) and the
+  * decoded-pixel operators that ExtractionQ's media-quality queries run:
+  * the deterministic synthetic pages (`syntheticPage`, pure (shard, index)
+  * arithmetic), their lossless PNG encode and real decode via
+  * `javax.imageio` (DocGen.encodePng / decodePng round-trip), the quality
+  * metrics of image_enhancer.py:855-928 (`qualityOf`) and the 2×2
+  * box-downsample statistics (`downsampleStats2`).
   *
-  *   - Otsu global threshold + binarization
-  *     (reference src/preprocessing/image_enhancer.py:575-589)
-  *   - morphological opening, 2x2 kernel (erosion then dilation, :591-603)
-  *   - despeckle via 8-connected components below a min area (:605-643)
-  *   - 4-way orientation classifier from row-density variance with the
-  *     letterhead upper-half heuristic (:645-720)
-  *   - deskew via shear-projection-profile angle estimation + expanded-canvas
-  *     rotation (:410-518 contract)
-  *   - Non-Local Means denoise at strength 10 / 5-light (:520-573 contract)
-  *   - CLAHE, clip 2.0 on an 8x8 tile grid with bilinear LUT blending
-  *     (:175-182, 725+)
-  *
-  * ALL SEVEN kernels are real algorithms — `enhance` dispatches every plan
-  * step. Pixels arrive either from real PNG bytes via `javax.imageio`
-  * (DocGen.encodePng / decodePng round-trip) or from the deterministic
-  * synthetic pages (`syntheticPage`, pure (shard, index) arithmetic) that
-  * those PNGs encode. Spec goldens mirror the reference's
-  * tests/unit/test_phase5_preprocessing.py:102-280.
+  * The reference's seven enhancement kernels (Otsu, opening, despeckle,
+  * orientation, deskew, NLM denoise, CLAHE) are not carried: x05 emits
+  * its enhancement plan as a string column and nothing executes it.
   */
 object ImageKernels {
 
@@ -31,462 +20,11 @@ object ImageKernels {
     def apply(y: Int, x: Int): Int = px(y * width + x)
   }
 
-  /** Otsu's method: the threshold maximizing between-class variance of the
-    * 256-bin histogram (the classic exhaustive scan cv2.THRESH_OTSU runs).
-    */
-  def otsuThreshold(img: Gray): Int = {
-    val hist = new Array[Long](256)
-    img.px.foreach(v => hist(v) += 1)
-    val total = img.px.length.toLong
-    var sumAll = 0.0
-    var i = 0
-    while (i < 256) { sumAll += i.toDouble * hist(i); i += 1 }
-    var wB = 0L
-    var sumB = 0.0
-    var best = -1.0
-    var thr = 0
-    var t = 0
-    while (t < 256) {
-      wB += hist(t)
-      sumB += t.toDouble * hist(t)
-      val wF = total - wB
-      if (wB != 0 && wF != 0) {
-        val mB = sumB / wB
-        val mF = (sumAll - sumB) / wF
-        val between = wB.toDouble * wF.toDouble * (mB - mF) * (mB - mF)
-        if (between > best) { best = between; thr = t }
-      }
-      t += 1
-    }
-    thr
-  }
-
-  /** cv2.THRESH_BINARY: v > thr -> 255 else 0. */
-  def binarize(img: Gray, thr: Int): Gray =
-    Gray(img.width, img.height, img.px.map(v => if (v > thr) 255 else 0))
-
-  /** cv2.THRESH_BINARY_INV: v > thr -> 0 else 255 (text-as-foreground). */
-  def binarizeInv(img: Gray, thr: Int): Gray =
-    Gray(img.width, img.height, img.px.map(v => if (v > thr) 0 else 255))
-
-  def invert(img: Gray): Gray =
-    Gray(img.width, img.height, img.px.map(255 - _))
-
-  private def windowOp(img: Gray, pick: (Int, Int) => Int): Gray = {
-    // 2x2 structuring element anchored top-left (cv2's default anchor for
-    // an even kernel), replicate border
-    val w = img.width; val h = img.height
-    val out = new Array[Int](w * h)
-    var y = 0
-    while (y < h) {
-      val y1 = math.min(y + 1, h - 1)
-      var x = 0
-      while (x < w) {
-        val x1 = math.min(x + 1, w - 1)
-        val a = img.px(y * w + x); val b = img.px(y * w + x1)
-        val c = img.px(y1 * w + x); val d = img.px(y1 * w + x1)
-        out(y * w + x) = pick(pick(a, b), pick(c, d))
-        x += 1
-      }
-      y += 1
-    }
-    Gray(w, h, out)
-  }
-
-  def erode(img: Gray): Gray = windowOp(img, math.min)
-  def dilate(img: Gray): Gray = windowOp(img, math.max)
-
-  /** Morphological opening = erosion then dilation with the 2x2 kernel:
-    * removes isolated speckle pixels without thinning glyph strokes
-    * (image_enhancer.py:591-603).
-    */
-  def opening(img: Gray): Gray = dilate(erode(img))
-
-  /** 8-connected component labels over nonzero pixels; returns
-    * (labels array with 0 = background, component areas by label).
-    */
-  def connectedComponents(img: Gray): (Array[Int], Array[Int]) = {
-    val w = img.width; val h = img.height
-    val labels = new Array[Int](w * h)
-    val areas = scala.collection.mutable.ArrayBuffer[Int](0) // label 0 unused
-    val stack = new java.util.ArrayDeque[Int]()
-    var next = 0
-    var idx = 0
-    while (idx < w * h) {
-      if (img.px(idx) != 0 && labels(idx) == 0) {
-        next += 1
-        var area = 0
-        labels(idx) = next
-        stack.push(idx)
-        while (!stack.isEmpty) {
-          val cur = stack.pop()
-          area += 1
-          val cy = cur / w; val cx = cur % w
-          var dy = -1
-          while (dy <= 1) {
-            var dx = -1
-            while (dx <= 1) {
-              val ny = cy + dy; val nx = cx + dx
-              if ((dy != 0 || dx != 0) && ny >= 0 && ny < h && nx >= 0 && nx < w) {
-                val n = ny * w + nx
-                if (img.px(n) != 0 && labels(n) == 0) {
-                  labels(n) = next
-                  stack.push(n)
-                }
-              }
-              dx += 1
-            }
-            dy += 1
-          }
-        }
-        areas += area
-      }
-      idx += 1
-    }
-    (labels, areas.toArray)
-  }
-
-  /** Despeckle (image_enhancer.py:605-643): Otsu-binarize, invert so text
-    * is the nonzero foreground, drop 8-connected components below
-    * `minComponentArea`, re-invert to black-on-white.
-    */
-  def despeckle(img: Gray, minComponentArea: Int = 4): Gray = {
-    val inverted = binarizeInv(img, otsuThreshold(img))
-    val (labels, areas) = connectedComponents(inverted)
-    val keep = new Array[Int](inverted.px.length)
-    var i = 0
-    while (i < keep.length) {
-      val l = labels(i)
-      if (l != 0 && areas(l) >= minComponentArea) keep(i) = 255
-      i += 1
-    }
-    invert(Gray(img.width, img.height, keep))
-  }
-
-  private def rotate90cw(img: Gray): Gray = {
-    val w = img.width; val h = img.height
-    val out = new Array[Int](w * h)
-    var y = 0
-    while (y < w) { // new height = old width
-      var x = 0
-      while (x < h) { // new width = old height
-        out(y * h + x) = img.px((h - 1 - x) * w + y)
-        x += 1
-      }
-      y += 1
-    }
-    Gray(h, w, out)
-  }
-
-  private def rotate180(img: Gray): Gray =
-    Gray(img.width, img.height, img.px.reverse)
-
-  private def rotate90ccw(img: Gray): Gray = rotate180(rotate90cw(img))
-
-  /** Peakiness of the horizontal projection profile: population variance of
-    * max-normalized per-row pixel sums (image_enhancer.py _portrait_score).
-    */
-  def portraitScore(binary: Gray): Double = {
-    val h = binary.height; val w = binary.width
-    if (h == 0) return 0.0
-    val rows = new Array[Double](h)
-    var mx = 0.0
-    var y = 0
-    while (y < h) {
-      var s = 0.0
-      var x = 0
-      while (x < w) { s += binary.px(y * w + x); x += 1 }
-      rows(y) = s
-      if (s > mx) mx = s
-      y += 1
-    }
-    if (mx == 0.0) return 0.0
-    var mean = 0.0
-    rows.indices.foreach(i => { rows(i) /= mx; mean += rows(i) })
-    mean /= h
-    var v = 0.0
-    rows.foreach(r => v += (r - mean) * (r - mean))
-    v / h
-  }
-
-  /** 4-way orientation classifier (image_enhancer.py:645-720): Otsu-inverse
-    * binarize, score the four rotations by row-density variance, pick the
-    * max (ties resolved in 0/90/180/270 order, like the Python dict), then
-    * the letterhead heuristic — if the candidate is 0/180 and the upper
-    * half clearly dominates (>10%), stay upright. Returns the rotation the
-    * image needs to be upright; 0 when in doubt (never mis-rotate).
-    */
-  def classifyOrientation(img: Gray): Int = {
-    val binary = binarizeInv(img, otsuThreshold(img))
-    val rots = Seq(
-      0 -> binary,
-      90 -> rotate90cw(binary),
-      180 -> rotate180(binary),
-      270 -> rotate90ccw(binary))
-    val scores = rots.map { case (r, g) => r -> portraitScore(g) }
-    val best = scores.maxBy { case (r, s) => (s, -r) }._1 // first max wins ties
-    if (best == 0 || best == 180) {
-      val w = binary.width; val h = binary.height
-      val half = h / 2
-      var upper = 0L; var lower = 0L
-      var i = 0
-      while (i < w * h) {
-        if (i < half * w) upper += binary.px(i) else lower += binary.px(i)
-        i += 1
-      }
-      if (upper > lower * 1.1) return 0
-    }
-    best
-  }
-
-  /** Nearest-neighbor rotation with an expanded canvas (the reference's
-    * warpAffine-with-expanded-canvas deskew step,
-    * image_enhancer.py:410-518): every source pixel stays visible, new
-    * canvas area is `background`.
-    */
-  def rotate(img: Gray, deg: Double, background: Int = 255): Gray = {
-    val rad = math.toRadians(deg)
-    val c = math.cos(rad); val s = math.sin(rad)
-    val w = img.width; val h = img.height
-    val nw = math.ceil(w * math.abs(c) + h * math.abs(s)).toInt
-    val nh = math.ceil(w * math.abs(s) + h * math.abs(c)).toInt
-    val out = Array.fill(nw * nh)(background)
-    val cx = (w - 1) / 2.0; val cy = (h - 1) / 2.0
-    val ncx = (nw - 1) / 2.0; val ncy = (nh - 1) / 2.0
-    var y = 0
-    while (y < nh) {
-      var x = 0
-      while (x < nw) {
-        val dx = x - ncx; val dy = y - ncy
-        val sx = math.rint(c * dx + s * dy + cx).toInt
-        val sy = math.rint(-s * dx + c * dy + cy).toInt
-        if (sx >= 0 && sx < w && sy >= 0 && sy < h)
-          out(y * nw + x) = img.px(sy * w + sx)
-        x += 1
-      }
-      y += 1
-    }
-    Gray(nw, nh, out)
-  }
-
-  /** Sheared projection profile sharpness: text-line density sampled along
-    * lines of slope tan(deg) (rr = r + c·tan), scored by the sum of squared
-    * adjacent-bin differences — the classic projection-profile skew
-    * criterion (sharp, well-separated line profiles maximize it). No image
-    * resampling, so thin text lines aren't destroyed by rotation aliasing.
-    */
-  def shearProfileScore(binary: Gray, deg: Double): Double = {
-    val t = math.tan(math.toRadians(deg))
-    val w = binary.width; val h = binary.height
-    val sums = new Array[Double](h)
-    var c = 0
-    while (c < w) {
-      val off = math.rint(c * t).toInt
-      var r = 0
-      while (r < h) {
-        val rr = r + off
-        if (rr >= 0 && rr < h) sums(r) += binary.px(rr * w + c)
-        r += 1
-      }
-      c += 1
-    }
-    var s = 0.0
-    var i = 1
-    while (i < h) { val d = sums(i) - sums(i - 1); s += d * d; i += 1 }
-    s
-  }
-
-  /** Skew-angle estimation by shear-projection-profile maximization (the
-    * published projection-profile method). Same CONTRACT as the reference's
-    * Canny→Hough→median estimator (image_enhancer.py:410-518: dominant
-    * text-line angle, clamp ±45°) but with no edge-detector dependency — a
-    * deliberate re-expression, not a port. Coarse 1° scan then fine 0.1°
-    * around the winner. Returns the CONTENT's skew (the angle the page was
-    * rotated by); the correcting rotation is its negation.
-    */
-  def estimateSkewAngle(img: Gray, maxAngle: Double = 45.0): Double = {
-    val binary = binarizeInv(img, otsuThreshold(img))
-    def score(deg: Double): Double = shearProfileScore(binary, deg)
-    var best = 0.0
-    var bestScore = score(0.0)
-    var a = -maxAngle
-    while (a <= maxAngle + 1e-9) {
-      val sc = score(a)
-      if (sc > bestScore) { bestScore = sc; best = a }
-      a += 1.0
-    }
-    val center = best
-    a = center - 0.9
-    while (a <= center + 0.9 + 1e-9) {
-      val sc = score(a)
-      if (sc > bestScore) { bestScore = sc; best = a }
-      a += 0.1
-    }
-    math.max(-maxAngle, math.min(maxAngle, best))
-  }
-
-  /** Deskew (image_enhancer.py:410-518 contract): estimate the skew angle,
-    * skip below the reference's 0.5° threshold (never churn a straight
-    * page), rotate back by the negated estimate with an expanded canvas.
-    */
-  def deskew(img: Gray): Gray = {
-    val angle = estimateSkewAngle(img)
-    if (math.abs(angle) < 0.5) img else rotate(img, -angle)
-  }
-
-  /** Non-Local Means denoise (image_enhancer.py:520-573 contract:
-    * fastNlMeansDenoising, strength h 10 default — lowered for handwritten
-    * — 7px template, 21px search). The published NLM form: each pixel
-    * becomes the similarity-weighted mean of its search window, weights
-    * exp(-patchDist²/h²) over template-patch distances. Direct O(n·S²·T²)
-    * evaluation — fine at synthetic-grid sizes; production swaps the
-    * integral-image fast variant behind the same signature.
-    */
-  def nlMeansDenoise(img: Gray, strength: Double = 10.0,
-      templateSize: Int = 7, searchSize: Int = 21): Gray = {
-    val w = img.width; val h = img.height
-    val tr = templateSize / 2
-    val sr = searchSize / 2
-    val h2 = strength * strength
-    def px(y: Int, x: Int): Int = // replicate border
-      img.px(math.max(0, math.min(h - 1, y)) * w + math.max(0, math.min(w - 1, x)))
-    val out = new Array[Int](w * h)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        var wsum = 0.0
-        var acc = 0.0
-        var sy = y - sr
-        while (sy <= y + sr) {
-          var sx = x - sr
-          while (sx <= x + sr) {
-            // mean squared distance between the two template patches
-            var d2 = 0.0
-            var ty = -tr
-            while (ty <= tr) {
-              var tx = -tr
-              while (tx <= tr) {
-                val d = px(y + ty, x + tx) - px(sy + ty, sx + tx)
-                d2 += d * d
-                tx += 1
-              }
-              ty += 1
-            }
-            d2 /= (templateSize * templateSize)
-            val wgt = math.exp(-d2 / h2)
-            wsum += wgt
-            acc += wgt * px(sy, sx)
-            sx += 1
-          }
-          sy += 1
-        }
-        out(y * w + x) =
-          math.min(255, math.max(0, math.rint(acc / wsum).toInt))
-        x += 1
-      }
-      y += 1
-    }
-    Gray(w, h, out)
-  }
-
-  /** CLAHE — Contrast-Limited Adaptive Histogram Equalization (the
-    * reference's default-path enhancement: clipLimit 2.0, 8x8 tile grid on
-    * the luminance channel, image_enhancer.py:175-182, 725+ `_apply_clahe`,
-    * settings.py:442-449; grids here are single-channel so the kernel runs
-    * on the gray values directly). The published algorithm: per-tile
-    * histograms clipped at clipLimit * tileArea / 256 with the clipped
-    * excess redistributed uniformly, per-tile equalization LUTs from the
-    * clipped CDF, and bilinear interpolation between the four surrounding
-    * tile LUTs at every pixel (which is what keeps tile seams invisible
-    * and noise amplification bounded).
-    */
-  def clahe(img: Gray, clipLimit: Double = 2.0, tiles: Int = 8): Gray = {
-    val w = img.width; val h = img.height
-    val tw = math.max(1, (w + tiles - 1) / tiles)
-    val th = math.max(1, (h + tiles - 1) / tiles)
-    val nx = (w + tw - 1) / tw
-    val ny = (h + th - 1) / th
-    val luts = Array.ofDim[Array[Int]](ny, nx)
-    var ty = 0
-    while (ty < ny) {
-      var tx = 0
-      while (tx < nx) {
-        val x0 = tx * tw; val x1 = math.min(x0 + tw, w)
-        val y0 = ty * th; val y1 = math.min(y0 + th, h)
-        val area = (x1 - x0) * (y1 - y0)
-        val hist = new Array[Int](256)
-        var y = y0
-        while (y < y1) {
-          var x = x0
-          while (x < x1) { hist(img.px(y * w + x)) += 1; x += 1 }
-          y += 1
-        }
-        val limit = math.max(1, (clipLimit * area / 256).toInt)
-        var excess = 0
-        var i = 0
-        while (i < 256) {
-          if (hist(i) > limit) { excess += hist(i) - limit; hist(i) = limit }
-          i += 1
-        }
-        // redistribute: an even share to every bin, then the residual
-        // spread with a stride across the range (front-loading the residual
-        // into low bins would skew the CDF — on a flat tile it maps
-        // everything to white instead of ~identity)
-        val bonus = excess / 256
-        i = 0
-        while (i < 256) { hist(i) += bonus; i += 1 }
-        val rem = excess % 256
-        if (rem > 0) {
-          val step = 256 / rem
-          var added = 0
-          i = 0
-          while (i < 256 && added < rem) { hist(i) += 1; added += 1; i += step }
-        }
-        val lut = new Array[Int](256)
-        var cum = 0
-        i = 0
-        while (i < 256) {
-          cum += hist(i)
-          lut(i) = math.min(255, math.max(0, math.round(cum * 255.0 / area).toInt))
-          i += 1
-        }
-        luts(ty)(tx) = lut
-        tx += 1
-      }
-      ty += 1
-    }
-    val out = new Array[Int](w * h)
-    var y = 0
-    while (y < h) {
-      val fy = (y - th / 2.0) / th
-      val ty0 = math.max(0, math.min(ny - 1, math.floor(fy).toInt))
-      val ty1 = math.min(ny - 1, ty0 + 1)
-      val wy = math.max(0.0, math.min(1.0, fy - ty0))
-      var x = 0
-      while (x < w) {
-        val fx = (x - tw / 2.0) / tw
-        val tx0 = math.max(0, math.min(nx - 1, math.floor(fx).toInt))
-        val tx1 = math.min(nx - 1, tx0 + 1)
-        val wx = math.max(0.0, math.min(1.0, fx - tx0))
-        val v = img.px(y * w + x)
-        val top = (1 - wx) * luts(ty0)(tx0)(v) + wx * luts(ty0)(tx1)(v)
-        val bot = (1 - wx) * luts(ty1)(tx0)(v) + wx * luts(ty1)(tx1)(v)
-        out(y * w + x) =
-          math.min(255, math.max(0, math.round((1 - wy) * top + wy * bot).toInt))
-        x += 1
-      }
-      y += 1
-    }
-    Gray(w, h, out)
-  }
-
   /** Deterministic synthetic page for a media ref's (shard, index): light
     * background, dark glyph bands in the upper half (runs broken by column
     * gaps so components are glyph-sized), speckle pixels scattered in the
-    * blank lower half — a bimodal histogram with top-heavy row density, so
-    * every kernel's contract is exercised by a real algorithm run. Pure
-    * arithmetic: the same ref always yields the same page.
+    * blank lower half — a bimodal histogram with top-heavy row density.
+    * Pure arithmetic: the same ref always yields the same page.
     */
   def syntheticPage(shard: Long, index: Long, w: Int = 64, h: Int = 64): Gray = {
     val px = Array.fill(w * h)(235)
@@ -549,9 +87,9 @@ object ImageKernels {
     val raster = bi.getRaster
     // Gray samples are scaled to 8-bit by their declared sample depth: a
     // 16-bit grayscale PNG yields raster samples up to 65535, and passing
-    // those through unscaled would hand every downstream kernel (Otsu,
-    // CLAHE's LUT, qualityOf's flags) values outside the 0-255 range they
-    // assume. Color inputs already land in 0-255 via getRGB.
+    // those through unscaled would hand qualityOf and its flags values
+    // outside the 0-255 range they assume. Color inputs already land in
+    // 0-255 via getRGB.
     val grayShift = if (gray) math.max(raster.getSampleModel.getSampleSize(0) - 8, 0) else 0
     var y = 0
     while (y < h) {
@@ -670,26 +208,4 @@ object ImageKernels {
     val ex2 = s2.toDouble / n / 16.0
     ResizeStats(w2, h2, mean, math.sqrt(ex2 - mean * mean))
   }
-
-  /** Mode-dispatched enhancement executor for the x05 plan strings
-    * (image_enhancer.py:195-298 mode selection) — every step is now a real
-    * kernel: deskew (projection-profile angle + expanded-canvas rotate),
-    * denoise / denoise_light (NLM at strength 10 / 5 — the reference
-    * lowers strength for handwritten), otsu, open, despeckle, clahe.
-    * Upstream pixel decode is real (decodePng via javax.imageio, x29); the
-    * x05 fast path uses the documented metadata-derived fallback instead.
-    */
-  def enhance(img: Gray, plan: String): Gray =
-    plan.split('+').foldLeft(img) { (g, step) =>
-      step match {
-        case "deskew" => deskew(g)
-        case "denoise" => nlMeansDenoise(g, 10.0)
-        case "denoise_light" => nlMeansDenoise(g, 5.0)
-        case "otsu" => binarize(g, otsuThreshold(g))
-        case "open" => opening(g)
-        case "despeckle" => despeckle(g)
-        case "clahe" => clahe(g)
-        case _ => g
-      }
-    }
 }

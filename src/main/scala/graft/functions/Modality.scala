@@ -14,7 +14,6 @@ object Modality {
   val Form = "form"
   val Fax = "fax"
   val Visual = "visual"
-  val AllModes: Set[String] = Set(Printed, Handwritten, Table, Form, Fax, Visual)
 
   final case class Analysis(
       hasHandwriting: Boolean = false,
@@ -47,19 +46,5 @@ object Modality {
         modes += Fax
     }
     modes.toSeq.sorted
-  }
-
-  /** Override merge: None/empty -> derived; else valid overrides + printed,
-    * all-invalid -> derived (modality.py:108-133).
-    */
-  def applyOverrides(derived: Seq[String], overrideModes: Option[Seq[String]]): Seq[String] = {
-    overrideModes match {
-      case None => if (derived.nonEmpty) derived else Seq(Printed)
-      case Some(o) if o.isEmpty => if (derived.nonEmpty) derived else Seq(Printed)
-      case Some(o) =>
-        val valid = o.toSet.intersect(AllModes)
-        if (valid.isEmpty) { if (derived.nonEmpty) derived else Seq(Printed) }
-        else (valid + Printed).toSeq.sorted
-    }
   }
 }

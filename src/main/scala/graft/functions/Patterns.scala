@@ -55,15 +55,6 @@ object Patterns {
     testDataPatterns.exists(_.findFirstIn(v).isDefined)
   }
 
-  /** Suspicious round numbers per type (pattern_detector.py:214-218). */
-  private val roundThresholds: Map[String, Set[Double]] = Map(
-    "currency" -> Set(100, 500, 1000, 5000, 10000).map(_.toDouble),
-    "percentage" -> Set(10, 25, 50, 75, 100).map(_.toDouble),
-    "quantity" -> Set(10, 50, 100, 500, 1000).map(_.toDouble))
-
-  def isSuspiciousRoundNumber(value: Double, kind: String): Boolean =
-    roundThresholds.get(kind).exists(_.contains(value))
-
   /** Repeated-digit runs like 99999 / 00000 (pattern_detector.py:720). */
   private val repeatedDigitsRe = "(\\d)\\1{4,}".r
   def hasRepeatedDigits(value: String): Boolean =
@@ -89,10 +80,6 @@ object Patterns {
     anyIn(f, Seq("name", "patient", "provider", "physician", "subscriber"))
   def isAddressField(f: String): Boolean =
     anyIn(f, Seq("address", "street", "city", "addr", "location"))
-  def isDateField(f: String): Boolean =
-    anyIn(f, Seq("date", "dob", "birth", "service", "admission", "discharge"))
-  def isCurrencyField(f: String): Boolean =
-    anyIn(f, Seq("amount", "charge", "payment", "cost", "fee", "price", "total"))
   def isIdentifierField(f: String): Boolean =
     anyIn(f, Seq("id", "number", "npi", "ssn", "ein", "member", "policy", "claim"))
   def isTextField(f: String): Boolean =
@@ -208,7 +195,4 @@ object Patterns {
     val s = values.flatMap(fieldFlags).map(severityWeights.getOrElse(_, 0.0)).sum
     math.min(1.0, s)
   }
-
-  def isLikelyHallucination(values: Seq[String]): Boolean =
-    suspicionScore(values) >= hallucinationThreshold
 }

@@ -11,14 +11,13 @@ import java.util.regex.Pattern
   *    phi_mask.py:95-103) that fully redact a matching string value —
   *    defence-in-depth when a PHI value hides in a non-PHI field;
   *  - token shapes (JWT / Authorization header / token-in-query-string,
-  *    phi_mask.py:113-138) masked inline in free text and whole-value
-  *    redacted in records (a leaked bearer token compromises an account,
-  *    so it rides the same primitive).
+  *    phi_mask.py:113-138) whole-value redacted in records (a leaked
+  *    bearer token compromises an account, so it rides the same
+  *    primitive).
   */
 object PhiMask {
 
   val RedactedToken = "[REDACTED]"
-  val TokenMasked = "[TOKEN-MASKED]"
 
   /** phi_mask.py:42-78 — name fragments, case-insensitive substring. */
   val phiFieldPatterns: Seq[String] = Seq(
@@ -45,31 +44,19 @@ object PhiMask {
       Pattern.CASE_INSENSITIVE), // street address
     Pattern.compile("\\b(0?[1-9]|1[0-2])[/-](0?[1-9]|[12]\\d|3[01])[/-](19|20)\\d{2}\\b")) // date
 
-  /** phi_mask.py:113-138 — token shapes with inline replacements. */
-  val tokenPatternsWithReplacements: Seq[(Pattern, String)] = Seq(
-    Pattern.compile("eyJ[A-Za-z0-9_\\-]+\\.[A-Za-z0-9_\\-]+\\.[A-Za-z0-9_\\-]+") ->
-      TokenMasked,
+  /** phi_mask.py:113-138 — token shapes (search, whole-value redact). */
+  val tokenPatterns: Seq[Pattern] = Seq(
+    Pattern.compile("eyJ[A-Za-z0-9_\\-]+\\.[A-Za-z0-9_\\-]+\\.[A-Za-z0-9_\\-]+"),
     Pattern.compile("(Bearer|Token|Basic)\\s+[A-Za-z0-9_\\-.=+/]{4,}",
-      Pattern.CASE_INSENSITIVE) -> ("$1 " + TokenMasked),
+      Pattern.CASE_INSENSITIVE),
     Pattern.compile("(refresh_token|access_token|api_key|secret|token|password)=[^&\\s\"']+",
-      Pattern.CASE_INSENSITIVE) -> ("$1=" + TokenMasked))
-
-  /** Inline token masking for free text (audit/log scrubber form). The
-    * replacement strings contain no `$`/`\` beyond the intended `$1` group
-    * references, so they pass to replaceAll verbatim.
-    */
-  def maskTokensInText(text: String): String =
-    tokenPatternsWithReplacements.foldLeft(text) { case (t, (p, r)) =>
-      p.matcher(t).replaceAll(r)
-    }
+      Pattern.CASE_INSENSITIVE))
 
   /** Whole-value redaction when any PHI or token shape matches. */
-  def redactStringValue(value: String): String = {
-    if (phiValuePatterns.exists(_.matcher(value).find())) return RedactedToken
-    if (tokenPatternsWithReplacements.exists(_._1.matcher(value).find()))
-      RedactedToken
+  def redactStringValue(value: String): String =
+    if (phiValuePatterns.exists(_.matcher(value).find()) ||
+      tokenPatterns.exists(_.matcher(value).find())) RedactedToken
     else value
-  }
 
   /** enforce_mask_phi over a flat record (phi_mask.py:177-244; nested
     * walks reduce to this per-leaf rule): explicit field set OR name

@@ -4,7 +4,7 @@ import graft.model.Bbox
 
 /** Dual-pass reconciliation primitives. Semantics pinned to the reference's
   * src/agents/reconciler.py:153-205 (values_agree, IoU) and
-  * src/validation/dual_pass.py:390-531 (similarity ladder, merge strategies).
+  * src/validation/dual_pass.py:390-480 (similarity ladder).
   */
 object Reconcile {
 
@@ -85,39 +85,6 @@ object Reconcile {
     (extractNumber(s1), extractNumber(s2)) match {
       case (Some(a), Some(b)) => numericSimilarity(a, b)
       case _ => Strings.similarityRatio(s1, s2)
-    }
-  }
-
-  /** Comparison thresholds: exact .99, fuzzy .85, partial .50
-    * (dual_pass.py:160-219).
-    */
-  def comparisonResult(sim: Double): String =
-    if (sim >= 0.99) "exact_match"
-    else if (sim >= 0.85) "fuzzy_match"
-    else if (sim >= 0.50) "partial_match"
-    else "mismatch"
-
-  /** Merge strategies (dual_pass.py:482-531). */
-  def mergeValues(
-      strategy: String,
-      pass1: String,
-      pass2: String,
-      pass1Conf: Double,
-      pass2Conf: Double,
-      result: String): Option[String] = {
-    if (result == "exact_match") return Option(pass1)
-    strategy match {
-      case "prefer_pass1" => Option(pass1)
-      case "prefer_pass2" => Option(pass2)
-      case "prefer_longer" =>
-        val l1 = if (pass1 == null) 0 else pass1.length
-        val l2 = if (pass2 == null) 0 else pass2.length
-        Option(if (l1 >= l2) pass1 else pass2)
-      case "higher_confidence" =>
-        Option(if (pass1Conf >= pass2Conf) pass1 else pass2)
-      case "require_agreement" =>
-        if (result == "exact_match" || result == "fuzzy_match") Option(pass1) else None
-      case _ => Option(pass1)
     }
   }
 

@@ -100,51 +100,29 @@ object TextAnalysis {
     sa.intersect(sb).size.toDouble / sa.union(sb).size
   }
 
-  /** Rolling k-gram hashes of normalized text (Karp-Rabin with a mix64
-    * finalizer per window) — the shared kernel of the two fingerprints below.
-    */
-  private def rollingHashes(t: String, k: Int): scala.collection.mutable.ArrayBuffer[Long] = {
-    val base = 1000003L
-    var pow = 1L
-    var i = 0
-    while (i < k - 1) { pow *= base; i += 1 }
-    var h = 0L
-    val hashes = new scala.collection.mutable.ArrayBuffer[Long](t.length - k + 1)
-    i = 0
-    while (i < t.length) {
-      if (i >= k) h -= t.charAt(i - k).toLong * pow
-      h = h * base + t.charAt(i).toLong
-      if (i >= k - 1) hashes += Hashing.mix64(h)
-      i += 1
-    }
-    hashes
-  }
-
-  /** Karp-Rabin rolling-hash document fingerprint: min 8 hashes over char
-    * k-grams of the normalized text (winnowing-style selection), hex-encoded.
-    * A NEAR-DUP bucketing key: documents sharing their smallest k-gram
-    * hashes collide BY DESIGN (that is the bucketing), so this is not an
-    * exact content id — use fingerprintFull for exact-dedup grouping.
-    */
-  def fingerprint(text: String, k: Int = 16, keep: Int = 8): String = {
-    val t = Strings.normalizeWhitespace(if (text == null) "" else text.toLowerCase)
-    if (t.isEmpty) return "0" * 16
-    if (t.length <= k) return java.lang.Long.toHexString(Hashing.fnv1a64(t))
-    val sel = rollingHashes(t, k).sorted.take(keep)
-    java.lang.Long.toHexString(sel.foldLeft(0xcbf29ce484222325L)((a, x) => Hashing.mix64(a ^ x)))
-  }
-
-  /** Full-coverage rolling-hash fingerprint: order-sensitive fold of ALL
-    * k-gram hashes. Unlike the winnowed `fingerprint`, every character
-    * influences the result, so distinct normalized contents collide only
-    * cryptographically-rarely — the exact-dedup grouping key (equal iff
-    * normalized texts are equal, in practice).
+  /** Full-coverage rolling-hash fingerprint: Karp-Rabin k-gram hashes of
+    * the normalized text (a mix64 finalizer per window), folded in order.
+    * Every character influences the result, so distinct normalized contents
+    * collide only cryptographically-rarely — the exact-dedup grouping key
+    * (equal iff normalized texts are equal, in practice).
     */
   def fingerprintFull(text: String, k: Int = 16): String = {
     val t = Strings.normalizeWhitespace(if (text == null) "" else text.toLowerCase)
     if (t.isEmpty) return "0" * 16
     if (t.length <= k) return java.lang.Long.toHexString(Hashing.fnv1a64(t))
-    val hs = rollingHashes(t, k)
-    java.lang.Long.toHexString(hs.foldLeft(0xcbf29ce484222325L)((a, x) => Hashing.mix64(a ^ x)))
+    val base = 1000003L
+    var pow = 1L
+    var i = 0
+    while (i < k - 1) { pow *= base; i += 1 }
+    var h = 0L
+    var fp = 0xcbf29ce484222325L
+    i = 0
+    while (i < t.length) {
+      if (i >= k) h -= t.charAt(i - k).toLong * pow
+      h = h * base + t.charAt(i).toLong
+      if (i >= k - 1) fp = Hashing.mix64(fp ^ Hashing.mix64(h))
+      i += 1
+    }
+    java.lang.Long.toHexString(fp)
   }
 }

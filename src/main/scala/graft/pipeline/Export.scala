@@ -1,121 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
-import org.apache.spark.sql.functions._
-import graft.model.ExtractedDoc
-
-/** Export sinks (SURVEY.md §2.1 export row; reference
-  * src/export/json_exporter.py:105-185, 279): the reference's
-  * "dataframe-flat" JSON export is literally our long-format span table, so
-  * the exporters are thin writers over the two canonical shapes.
+/** Consolidated-export record checks (reference
+  * src/export/consolidated_export.py).
   */
 object Export {
-
-  /** Long-format ("dataframe-flat", json_exporter.py:279) span table:
-    * one row per span, document order preserved by (doc_id, offset).
-    */
-  def flatSpans(docs: Dataset[ExtractedDoc]): DataFrame =
-    docs.select(col("doc_id"), explode(col("spans")).as("s"),
-        col("modalities"), col("extraction_path"))
-      .select(col("doc_id"), col("s.offset").as("offset"), col("s.kind").as("kind"),
-        col("s.text").as("text"), col("s.media_ref").as("media_ref"),
-        col("modalities"), col("extraction_path"))
-
-  /** JSON-lines export of the flat table (minimal profile). */
-  def writeJson(docs: Dataset[ExtractedDoc], outDir: String): Unit =
-    flatSpans(docs).write.mode(SaveMode.Overwrite).json(outDir)
-
-  /** Nested-document JSON-lines export (standard profile: one object per
-    * document with its ordered span array).
-    */
-  def writeJsonNested(docs: Dataset[ExtractedDoc], outDir: String): Unit =
-    docs.toDF().write.mode(SaveMode.Overwrite).json(outDir)
-
-  /** Parquet export of the flat table (the analytics-facing sink). */
-  def writeFlatParquet(docs: Dataset[ExtractedDoc], outDir: String): Unit =
-    flatSpans(docs).write.mode(SaveMode.Overwrite).parquet(outDir)
-
-  /** Markdown rendering of one extracted document (reference
-    * src/export/markdown_exporter.py shape: heading levels, paragraph
-    * blocks, figures as links, table cells inline) — a pure row formatter,
-    * distributable with `.map(renderMarkdown)` over the typed Dataset.
-    */
-  def renderMarkdown(doc: ExtractedDoc): String = {
-    val sb = new StringBuilder(s"# ${doc.doc_id}\n")
-    doc.spans.foreach { s =>
-      s.kind match {
-        case "heading" => sb.append(s"\n## ${s.text}\n")
-        case "figure" => sb.append(s"\n![media](${s.media_ref})\n")
-        case "table_cell" => sb.append(s"| ${s.text} ")
-        case "error" => sb.append(s"\n> ERROR: ${s.text}\n")
-        case _ => sb.append(s"\n${s.text}\n")
-      }
-    }
-    sb.append('\n').toString
-  }
-
-  /** HMAC-SHA-256 export receipt (reference src/export/signed_receipt.py:
-    * 82-190): sha256 per artefact + an HMAC signature over the canonical
-    * "name:hash" payload with a shared secret; None key -> unsigned receipt
-    * (artefact hashes still present, matching the keyless path).
-    */
-  final case class Receipt(artefactHashes: Map[String, String], signature: Option[String])
-
-  def mintReceipt(artefacts: Map[String, Array[Byte]],
-      signingKey: Option[String]): Receipt = {
-    val sha = java.security.MessageDigest.getInstance("SHA-256")
-    val hashes = artefacts.map { case (name, bytes) =>
-      sha.reset()
-      name -> sha.digest(bytes).map("%02x".format(_)).mkString
-    }
-    val signature = signingKey.map { key =>
-      val mac = javax.crypto.Mac.getInstance("HmacSHA256")
-      mac.init(new javax.crypto.spec.SecretKeySpec(key.getBytes("UTF-8"), "HmacSHA256"))
-      val payload = hashes.toSeq.sorted.map { case (n, h) => s"$n:$h" }.mkString("\n")
-      mac.doFinal(payload.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    }
-    Receipt(hashes, signature)
-  }
-
-  /** Constant-time receipt verification (signed_receipt.py:216-272). */
-  def verifyReceipt(receipt: Receipt, artefacts: Map[String, Array[Byte]],
-      signingKey: Option[String]): Boolean = {
-    val fresh = mintReceipt(artefacts, signingKey)
-    fresh.artefactHashes == receipt.artefactHashes &&
-      ((fresh.signature, receipt.signature) match {
-        case (Some(a), Some(b)) =>
-          java.security.MessageDigest.isEqual(a.getBytes, b.getBytes)
-        case (None, None) => true
-        case _ => false
-      })
-  }
-
-  /** Markdown export: one .md document per row, written as (doc_id, md)
-    * text-friendly parquet (single markdown files per doc would be the
-    * classic small-files failure at corpus scale; consumers slice by id).
-    */
-  def writeMarkdown(docs: Dataset[ExtractedDoc], outDir: String): Unit = {
-    import docs.sparkSession.implicits._
-    docs.map(d => (d.doc_id, renderMarkdown(d)))
-      .toDF("doc_id", "markdown")
-      .write.mode(SaveMode.Overwrite).parquet(outDir)
-  }
-
-  // ---- consolidated export (reference src/export/consolidated_export.py) ----
-
-  /** Cross-page duplicate detection (consolidated_export.py:53-83): group
-    * record indices by the whitespace-collapsed lowercase primary
-    * identifier; keep groups with more than one member.
-    */
-  def detectDuplicates(primaryIdentifiers: Seq[String]): Map[String, Seq[Int]] =
-    primaryIdentifiers.zipWithIndex
-      .groupBy { case (ident, _) =>
-        graft.functions.Strings.splitWs(
-          (if (ident == null) "" else ident).toLowerCase).mkString(" ")
-      }
-      .collect { case (norm, members) if members.length > 1 =>
-        norm -> members.map(_._2)
-      }
 
   /** Record completeness vs schema (consolidated_export.py:86-118): missing
     * required fields, empty fields, completeness = non-empty / expected.
@@ -139,90 +27,5 @@ object Export {
       missingRequired = missingRequired,
       emptyFields = emptyFields,
       completenessScore = nonEmpty.toDouble / math.max(schemaFields.length, 1))
-  }
-
-  // ---- bbox-overlay export (reference src/export/bbox_overlay.py WS-8) ----
-
-  /** The reference's visual contract constants (bbox_overlay.py:60-68). */
-  val OverlayOutlineWidthPx = 3
-  val OverlayFillAlpha = 64
-  val OverlayOutlineAlpha = 220
-
-  /** Confidence -> Material palette band (bbox_overlay.py:71-79):
-    * >= 0.85 green (auto-accept), >= 0.50 amber (retry), else red
-    * (human review); unknown -> grey.
-    */
-  def confidenceColor(confidence: Option[Double]): (String, (Int, Int, Int)) =
-    confidence match {
-      case None => ("grey", (158, 158, 158))
-      case Some(c) if c >= 0.85 => ("green", (76, 175, 80))
-      case Some(c) if c >= 0.50 => ("amber", (255, 193, 7))
-      case _ => ("red", (244, 67, 54))
-    }
-
-  /** `field_name (cc%)` label; Python round() is half-even -> rint. */
-  def overlayLabel(fieldName: String, confidence: Option[Double]): String =
-    confidence match {
-      case None => fieldName
-      case Some(c) => s"$fieldName (${math.rint(c * 100).toInt}%)"
-    }
-
-  /** One translucent rectangle of a page's overlay draw list. */
-  final case class OverlayRect(
-      fieldName: String,
-      color: String,
-      r: Int, g: Int, b: Int,
-      x0: Int, y0: Int, x1: Int, y1: Int,
-      label: String)
-
-  /** Normalized bbox -> clamped pixel rect + colour + label
-    * (bbox_overlay.py:291-321 _resolve_pixel_rect semantics: derive from
-    * normalized coords x page dims, floor-to-int, min-1px extent, clamp to
-    * bounds, drop degenerate rects).
-    */
-  def overlayRect(fieldName: String, bbox: graft.model.Bbox,
-      confidence: Option[Double], pageW: Int, pageH: Int): Option[OverlayRect] = {
-    var x0 = (bbox.x1 * pageW).toInt
-    var y0 = (bbox.y1 * pageH).toInt
-    var x1 = x0 + math.max(1, ((bbox.x2 - bbox.x1) * pageW).toInt)
-    var y1 = y0 + math.max(1, ((bbox.y2 - bbox.y1) * pageH).toInt)
-    x0 = math.max(0, math.min(x0, pageW - 1))
-    y0 = math.max(0, math.min(y0, pageH - 1))
-    x1 = math.max(0, math.min(x1, pageW))
-    y1 = math.max(0, math.min(y1, pageH))
-    if (x1 <= x0 || y1 <= y0) None
-    else {
-      val (name, (r, g, b)) = confidenceColor(confidence)
-      Some(OverlayRect(fieldName, name, r, g, b, x0, y0, x1, y1,
-        overlayLabel(fieldName, confidence)))
-    }
-  }
-
-  /** Bbox-overlay export: per (doc, page) draw lists of confidence-coloured
-    * translucent rectangles over the provenance-tagged spans — everything
-    * the reference's Pillow renderer consumes (rect, RGB, alpha/outline
-    * constants, `name (cc%)` label). PNG rasterization itself is the
-    * decode-gated final step (no imaging runtime in-container — same
-    * boundary as media decode); pages with no boxed spans are naturally
-    * absent, matching the reference's sparse overlay dir. Input `prov`
-    * is the x27-shaped frame joined with a per-doc confidence column.
-    */
-  def writeOverlayDrawList(prov: DataFrame, outDir: String,
-      pageW: Int = 1700, pageH: Int = 2200): Unit = {
-    import prov.sparkSession.implicits._
-    prov.select(col("doc_id"), col("page"), col("block_id"),
-        col("x1"), col("y1"), col("x2"), col("y2"), col("confidence"))
-      .as[(String, Int, String, Double, Double, Double, Double, Double)]
-      .flatMap { case (docId, page, blockId, bx1, by1, bx2, by2, conf) =>
-        overlayRect(blockId, graft.model.Bbox(bx1, by1, bx2, by2),
-          Some(conf), pageW, pageH)
-          .map(r => (docId, page, r.fieldName, r.color, r.r, r.g, r.b,
-            r.x0, r.y0, r.x1, r.y1, r.label,
-            OverlayOutlineWidthPx, OverlayFillAlpha, OverlayOutlineAlpha))
-      }
-      .toDF("doc_id", "page", "field", "color", "r", "g", "b",
-        "x0", "y0", "x1", "y1", "label",
-        "outline_width", "fill_alpha", "outline_alpha")
-      .write.mode(SaveMode.Overwrite).parquet(outDir)
   }
 }

@@ -234,13 +234,16 @@ object ExtractJob {
       Math.floorMod(graft.functions.Hashing.fnv1a64(id), nB.toLong).toInt)
     val keyed = docs.toDF().withColumn("bucket", bucketUdf(col("doc_id")))
     // A doc is heavy when its weight, the total raw payload bytes, is at
-    // least heavyWeight; a null weight (null spans or a null field) is
-    // light. octet_length, not length: byte count is O(1) on the UTF8
-    // payload while character count rescans every byte, and the weight is a
-    // routing heuristic — bytes are, if anything, the truer cost proxy.
+    // least heavyWeight. A null text, null media_ref or null span element
+    // weighs 0 bytes, as the kernel reads each as absent; a null spans
+    // array has a null weight and is light. octet_length, not length: byte
+    // count is O(1) on the UTF8 payload while character count rescans every
+    // byte, and the weight is a routing heuristic — bytes are, if anything,
+    // the truer cost proxy.
     val isHeavy = coalesce(aggregate(col("spans"), lit(0L), (acc, s) =>
-      acc + octet_length(s.getField("text")).cast("long") +
-        octet_length(s.getField("media_ref")).cast("long")) >= cfg.heavyWeight, lit(false))
+      acc + coalesce(octet_length(s.getField("text")).cast("long"), lit(0L)) +
+        coalesce(octet_length(s.getField("media_ref")).cast("long"), lit(0L))) >=
+      cfg.heavyWeight, lit(false))
 
     val groups = remaining.grouped(cfg.groupSize).toSeq
     var processed = List.empty[Int]

@@ -349,9 +349,7 @@ object DocumentsQ {
     * min doc_id sharing this doc's full-coverage rolling-hash fingerprint,
     * which must equal the min doc_id sharing its md5-normalized text
     * (fingerprintFull is a function of normalized text, collision-free in
-    * practice). The winnowed near-dup variant (TextAnalysis.fingerprint)
-    * deliberately collides across similar docs and is spec-pinned instead.
-    * n_tokens_bpeish (letter-run ceil(len/4) + digits + punctuation) is
+    * practice). n_tokens_bpeish (letter-run ceil(len/4) + digits + punctuation) is
     * directly SQL-expressible.
     */
   def d10Fingerprints(spark: SparkSession, dir: String): DataFrame =

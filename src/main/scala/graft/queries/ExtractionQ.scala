@@ -94,11 +94,10 @@ object ExtractionQ {
 
   /** Media (figure) spans with metadata-derived (fallback) quality metrics
     * + the modality-dispatched enhancement plan (image_enhancer.py:195-298
-    * mode selection as a when/otherwise column). The plan strings are
-    * executable: graft.functions.ImageKernels.enhance dispatches ALL SEVEN
-    * real kernels (Otsu, opening, despeckle, orientation, deskew, NLM
-    * denoise, CLAHE). The quality metrics HERE stay ref-arithmetic (the
-    * fast modality fallback); decoded-PIXEL quality is the x29 surface.
+    * mode selection as a when/otherwise column). The plan is emitted as a
+    * string and not executed: the enhancement kernels it names are not
+    * carried. The quality metrics HERE stay ref-arithmetic (the fast
+    * modality fallback); decoded-PIXEL quality is the x29 surface.
     */
   def x05MediaQuality(spark: SparkSession, dir: String): DataFrame = {
     val qualityUdf = udf { (ref: String) =>
@@ -280,8 +279,7 @@ object ExtractionQ {
     * and — because the planted labels make the PAV solution closed-form —
     * the fitted isotonic is re-derivable in pure SQL: the whole query is a
     * machine-checked CORRECTNESS row (OracleX.x11), not just a spec golden.
-    * Platt (the non-SQL-expressible calibrator) stays spec-pinned in
-    * CalibrationSpec on the same planted samples.
+    * The reference's third calibrator, Platt, is not carried.
     */
   def x11Calibration(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Calibration

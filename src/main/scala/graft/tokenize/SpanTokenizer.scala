@@ -75,10 +75,7 @@ object SpanTokenizer {
     * REAL pixel-decoded quality lives in ImageKernels.decodePng +
     * ImageKernels.qualityOf (the x29 surface, image_enhancer.py:855-928):
     * PNG bytes through `javax.imageio`, then mean/std/Laplacian-variance on
-    * the decoded pixels. All seven enhancement kernels
-    * (graft.functions.ImageKernels: Otsu, opening, despeckle, orientation,
-    * deskew, NLM denoise, CLAHE) are real algorithms and run on decoded
-    * pixels in specs and on synthetic grids in the plan queries.
+    * the decoded pixels.
     */
   def fakeDecodeQuality(mediaRef: String): QualityMetrics = {
     val (s, i) = refNums(mediaRef)

@@ -50,15 +50,6 @@ class CalibrationSpec extends AnyFunSuite with SparkSpec {
     assert(a(0.3) == 0.5)
   }
 
-  test("Platt fit separates separable data and is deterministic") {
-    val pts = Seq((0.1, 0.0), (0.2, 0.0), (0.3, 0.0), (0.7, 1.0), (0.8, 1.0), (0.9, 1.0))
-    val ab = Calibration.fitPlatt(pts)
-    val lo = Calibration.applyPlatt(ab, 0.1)
-    val hi = Calibration.applyPlatt(ab, 0.9)
-    assert(lo < 0.5 && hi > 0.5 && lo < hi)
-    assert(Calibration.fitPlatt(pts) == ab) // fixed iterations -> deterministic
-  }
-
   test("planted sample fits to the closed-form per-knot-mean isotonic") {
     // The per-(profile, tenant) planted sample's labels are monotone in the
     // score, so PAV must do no pooling: knots are exactly (k/20, m_k) with
@@ -79,38 +70,6 @@ class CalibrationSpec extends AnyFunSuite with SparkSpec {
     val b = Calibration.fitIsotonic(Calibration.plantedSample(0, 1))
     val c = Calibration.fitIsotonic(Calibration.plantedSample(1, 0))
     assert(a(0.52) != b(0.52) && b(0.55) != c(0.55))
-    // Platt on the planted sample stays sane (spec-pinned; not SQL-oracled)
-    for (p <- 0L to 2L; t <- 0L to 1L) {
-      val ab = Calibration.fitPlatt(Calibration.plantedSample(p, t))
-      assert(Calibration.applyPlatt(ab, 0.0) < 0.5 && Calibration.applyPlatt(ab, 1.0) > 0.5)
-    }
-  }
-
-  test("Platt Newton fit reaches the analytic MLE (machine-checked, not golden)") {
-    // The two-score planted sample's logistic MLE is closed-form (the
-    // saturated model): fitted probability at each score = empirical label
-    // mean. Checks, per (profile, tenant):
-    //  1. the score equations: sum(p_i - y_i) ~ 0 and sum((p_i - y_i)·x_i)
-    //     ~ 0 at the fit (the MLE first-order conditions),
-    //  2. the fixed point: applyPlatt at 0.2 / 0.8 equals the planted
-    //     frequencies, and (a, b) equal the closed-form logit expressions.
-    for (p <- 0L to 2L; t <- 0L to 1L) {
-      val pts = Calibration.plantedPlattSample(p, t)
-      val ab = Calibration.fitPlatt(pts)
-      val (g0, g1) = pts.foldLeft((0.0, 0.0)) { case ((s0, s1), (x, y)) =>
-        val d = Calibration.applyPlatt(ab, x) - y
-        (s0 + d, s1 + d * x)
-      }
-      assert(math.abs(g0) < 1e-12 && math.abs(g1) < 1e-12,
-        s"($p,$t) score equations violated: g=($g0,$g1)")
-      val pl = (1.0 + p) / 8.0
-      val ph = (5.0 + t) / 8.0
-      assert(math.abs(Calibration.applyPlatt(ab, 0.2) - pl) < 1e-12, s"($p,$t) low")
-      assert(math.abs(Calibration.applyPlatt(ab, 0.8) - ph) < 1e-12, s"($p,$t) high")
-      val (aStar, bStar) = Calibration.analyticPlatt(0.2, pl, 0.8, ph)
-      assert(math.abs(ab._1 - aStar) < 1e-9 && math.abs(ab._2 - bStar) < 1e-9,
-        s"($p,$t) fit $ab != analytic ($aStar,$bStar)")
-    }
   }
 
   test("x11 output is byte-identical across shuffle parallelism (deterministic fit)") {

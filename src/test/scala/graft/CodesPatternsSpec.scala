@@ -13,8 +13,6 @@ class CodesPatternsSpec extends AnyFunSuite {
     assert(Patterns.isNameField("patient_name") && Patterns.isNameField("Subscriber"))
     assert(!Patterns.isNameField("total_charges"))
     assert(Patterns.isAddressField("billing_address") && !Patterns.isAddressField("notes"))
-    assert(Patterns.isDateField("service_date_from") && Patterns.isDateField("dob"))
-    assert(Patterns.isCurrencyField("total_charges") && !Patterns.isCurrencyField("npi"))
     assert(Patterns.isIdentifierField("member_id") && Patterns.isIdentifierField("claim_number"))
     assert(Patterns.isTextField("description") && !Patterns.isTextField("ref_a"))
   }
@@ -66,26 +64,6 @@ class CodesPatternsSpec extends AnyFunSuite {
     assert(Codes.validCpt("99213"))
     assert(!Codes.validCpt("9921"))
     assert(!Codes.validCpt("A9213"))
-    assert(Codes.validIcd10("E11.9"))
-    assert(Codes.validIcd10("A00"))
-    assert(Codes.validIcd10("e11.9"))              // case-insensitive
-    assert(!Codes.validIcd10("U07.1"))             // U excluded from [A-TV-Z]
-    assert(!Codes.validIcd10("123"))
-    assert(Codes.validHcpcs("J1100"))
-    assert(!Codes.validHcpcs("j1100"))
-    assert(Codes.validNdc("12345-6789-01"))
-    assert(Codes.validNdc("12345678901"))
-    assert(!Codes.validNdc("1234-56-789"))
-    assert(Codes.validPos("11"))
-    assert(!Codes.validPos("35"))
-    assert(Codes.normalizePhone("(555) 123-4567").contains("5551234567"))
-    assert(Codes.normalizePhone("555.123.4567").contains("5551234567"))
-    assert(Codes.normalizePhone("12345").isEmpty)
-    assert(Codes.validSsn("123-45-6789"))
-    assert(!Codes.validSsn("000-45-6789"))
-    assert(!Codes.validSsn("666-45-6789"))
-    assert(!Codes.validSsn("923-45-6789"))
-    assert(!Codes.validSsn("123-00-6789"))
   }
 
   test("placeholder patterns (pattern_detector.py:151-170)") {
@@ -119,10 +97,8 @@ class CodesPatternsSpec extends AnyFunSuite {
   }
 
   test("round numbers + suspicion scoring") {
-    assert(Patterns.isSuspiciousRoundNumber(1000.0, "currency"))
-    assert(!Patterns.isSuspiciousRoundNumber(1001.0, "currency"))
     // one critical placeholder = 0.8 >= 0.70 threshold
-    assert(Patterns.isLikelyHallucination(Seq("N/A", "Alice")))
+    assert(Patterns.suspicionScore(Seq("N/A", "Alice")) >= Patterns.hallucinationThreshold)
     // clean record scores 0
     assert(Patterns.suspicionScore(Seq("Alice Smith", "42.17")) == 0.0)
     // score capped at 1.0

@@ -133,7 +133,11 @@ class ExtractJobSpec extends AnyFunSuite with SparkSpec {
     // file, before each of the 4 manifest commits, and after the heavy write
     // of the group that holds doc 0. Doc 0 is a 100x mega-doc: at
     // heavyWeight 5000 it takes the heavy branch in whichever run processes
-    // its bucket.
+    // its bucket. One more state per groupSize has no hook: a crash in the
+    // middle of a sweep (point None), which leaves the last group's
+    // manifests revoked and its data dir deleted but its metrics dir in
+    // place. It is built by hand after a clean run, and resumed one bucket
+    // per group, so a metrics dir the sweep missed would count twice.
     val nDocs = 200
     val mega = DocGen.docIdStr(0)
     val megaBucket = Math.floorMod(graft.functions.Hashing.fnv1a64(mega), 4L).toInt
@@ -146,15 +150,27 @@ class ExtractJobSpec extends AnyFunSuite with SparkSpec {
       heavyPoint = CrashPoint.AfterHeavyWrite(megaBucket / g) -> megaBucket / g * g
       manifestPoints = (0 to 3).map(c => CrashPoint.BeforeManifest(c) -> c / g * g)
       // each point with the number of buckets the crashed run leaves committed
-      (point, kept) <- groupPoints ++ (heavyPoint +: manifestPoints)
+      (point, kept) <- (groupPoints ++ (heavyPoint +: manifestPoints)).map {
+        case (p, k) => (Some(p), k)
+      } :+ (None -> (4 - g))
     } yield (g, point, kept)
     for ((g, point, kept) <- crashes) scratch { out =>
-      val at = s"groupSize $g, crash at $point"
+      val at = s"groupSize $g, crash at ${point.getOrElse("mid-sweep")}"
       val cfg = ExtractJob.Config(nBuckets = 4, groupSize = g, heavyWeight = 5000L,
-        runId = "k1", crashAt = Some(point))
-      intercept[ExtractJob.SimulatedCrash](ExtractJob.run(spark, docs(nDocs), out, cfg))
+        runId = "k1", crashAt = point)
+      point match {
+        case Some(_) =>
+          intercept[ExtractJob.SimulatedCrash](ExtractJob.run(spark, docs(nDocs), out, cfg))
+        case None =>
+          ExtractJob.run(spark, docs(nDocs), out, cfg)
+          val last = kept until 4
+          val group = s"group=${last.mkString("-")}"
+          last.foreach(new LocalManifestStore(out).revoke)
+          org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(out, "data", group).toFile)
+          assert(Files.isDirectory(Paths.get(out, "metrics", group)), at)
+      }
       val resumed = ExtractJob.run(spark, docs(nDocs), out,
-        cfg.copy(crashAt = None, runId = "k2"))
+        cfg.copy(crashAt = None, runId = "k2", groupSize = if (point.isEmpty) 1 else g))
       // the sweep revokes a torn group, so only whole groups stay committed
       assert(resumed.skippedBuckets == (0 until kept), at)
       val data = spark.read.parquet(s"$out/data")
@@ -183,18 +199,27 @@ class ExtractJobSpec extends AnyFunSuite with SparkSpec {
     val hostile = Seq(
       Doc("null_spans", null),
       Doc("null_element", Seq(null, graft.model.Span("pdf_text", "Hello world.", "", 1))),
-      Doc("only_nulls", Seq(null, null)))
+      Doc("only_nulls", Seq(null, null)),
+      Doc("null_ref_mega", Seq(graft.model.Span("pdf_text", "x" * 6000, null, 0))))
     val input = docs(nDocs).union(hostile.toDS())
+    // A doc's reference weight: the UTF-8 bytes of each non-null text and
+    // media_ref over its non-null spans. It is heavy iff the weight is at
+    // least heavyWeight, whatever the nulls around the bytes.
+    def weight(d: Doc): Long = Option(d.spans).toSeq.flatten.filter(_ != null)
+      .flatMap(s => Seq(s.text, s.media_ref)).filter(_ != null)
+      .map(_.getBytes("UTF-8").length.toLong).sum
     scratch { out =>
-      val cfg = ExtractJob.Config(nBuckets = 4, groupSize = 2, runId = "n1")
+      val cfg = ExtractJob.Config(nBuckets = 4, groupSize = 2, heavyWeight = 5000L, runId = "n1")
       val stats = ExtractJob.run(spark, input, out, cfg)
       val total = nDocs + hostile.length
       assert(stats.nDocs == total)
+      assert(stats.heavyDocs == input.collect().count(weight(_) >= cfg.heavyWeight))
       val data = spark.read.parquet(s"$out/data")
       assert(data.count() == total)
       val got = data.filter($"doc_id".isin(hostile.map(_.doc_id): _*))
         .select("doc_id", "n_spans", "n_errors").as[(String, Int, Int)].collect().toSet
-      assert(got == Set(("null_spans", 0, 0), ("null_element", 1, 0), ("only_nulls", 0, 0)))
+      assert(got == Set(("null_spans", 0, 0), ("null_element", 1, 0), ("only_nulls", 0, 0),
+        ("null_ref_mega", 1, 0)))
       val store = new LocalManifestStore(out)
       val perBucket = data.groupBy("bucket").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap

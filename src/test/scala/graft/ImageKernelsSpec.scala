@@ -4,124 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.ImageKernels
 import graft.functions.ImageKernels.Gray
 
-/** Kernel goldens mirroring the reference's
-  * tests/unit/test_phase5_preprocessing.py:102-280 (despeckle component
-  * drop + glyph survival, orientation upright / blank-page safety) plus
-  * Otsu and opening contracts.
+/** Pixel-grid goldens: the PNG codec round-trip, decoded-pixel quality
+  * (image_enhancer.py:855-928 contract) and the 2x2 box downsample.
   */
 class ImageKernelsSpec extends AnyFunSuite {
-
-  private def white(w: Int, h: Int) = Gray(w, h, Array.fill(w * h)(255))
-
-  test("Otsu separates a bimodal histogram between its modes") {
-    val px = Array.tabulate(64 * 64)(i => if (i % 64 < 32) 30 else 220)
-    val thr = ImageKernels.otsuThreshold(Gray(64, 64, px))
-    assert(thr >= 30 && thr < 220)
-    val bin = ImageKernels.binarize(Gray(64, 64, px), thr)
-    assert(bin.px.count(_ == 0) == 64 * 32 && bin.px.count(_ == 255) == 64 * 32)
-  }
-
-  test("despeckle removes isolated pixels; the glyph largely survives") {
-    // mirror of test_despeckle_removes_isolated_pixels: 100x100 white
-    // canvas, a 20x20 glyph, 5 single-pixel speckles
-    val img = white(100, 100)
-    for (y <- 40 until 60; x <- 40 until 60) img.px(y * 100 + x) = 0
-    Seq((5, 5), (15, 80), (80, 10), (90, 90), (33, 7))
-      .foreach { case (y, x) => img.px(y * 100 + x) = 0 }
-    val before = img.px.count(_ == 0)
-    val cleaned = ImageKernels.despeckle(img)
-    val after = cleaned.px.count(_ == 0)
-    assert(after < before, "despeckle should remove pixels")
-    assert(after >= 350, "glyph (~400 px) should largely survive")
-    // the speckles specifically are gone
-    Seq((5, 5), (15, 80), (80, 10), (90, 90), (33, 7))
-      .foreach { case (y, x) => assert(cleaned(y, x) == 255) }
-  }
-
-  test("opening removes 1px speckles and preserves a 3x3 block") {
-    val img = white(32, 32)
-    img.px(5 * 32 + 5) = 0 // isolated dark pixel
-    for (y <- 20 until 23; x <- 20 until 23) img.px(y * 32 + x) = 0
-    // invert so foreground (dark content) is the max domain of dilation
-    val opened = ImageKernels.invert(
-      ImageKernels.opening(ImageKernels.invert(img)))
-    assert(opened(5, 5) == 255, "isolated speckle survives opening")
-    assert(opened(21, 21) == 0, "block interior must survive opening")
-  }
-
-  test("orientation: upright text-band page never reports 180; blank page is 0") {
-    // mirror of test_upright_returns_zero: bands in the upper part, blank
-    // lower; 0 or 90 acceptable, 180 must not be returned
-    val page = ImageKernels.syntheticPage(3, 1)
-    val rot = ImageKernels.classifyOrientation(page)
-    assert(rot != 180, s"letterhead heuristic must block 180, got $rot")
-    // mirror of test_blank_page_returns_zero_safely
-    assert(ImageKernels.classifyOrientation(white(100, 100)) == 0)
-  }
-
-  test("CLAHE boosts local contrast but stays bounded on flat regions") {
-    // low-contrast page: values compressed into [100, 140]
-    val px = Array.tabulate(64 * 64) { i =>
-      val y = i / 64
-      100 + (if (y % 8 < 4) (i % 40) else 40 - (i % 40)) % 41
-    }
-    val img = Gray(64, 64, px)
-    def stddev(g: Gray): Double = {
-      val m = g.px.map(_.toDouble).sum / g.px.length
-      math.sqrt(g.px.map(v => (v - m) * (v - m)).sum / g.px.length)
-    }
-    val eq = ImageKernels.clahe(img)
-    assert(eq.px.forall(v => v >= 0 && v <= 255))
-    assert(stddev(eq) > stddev(img) * 1.5, "local contrast should expand")
-    // clip limit bounds amplification: a FLAT image maps ~identity
-    // (unclipped AHE would blow a flat tile to the extremes); 256x256 so
-    // tiles have enough area for the redistribution to be smooth
-    val flat = Gray(256, 256, Array.fill(256 * 256)(120))
-    val flatEq = ImageKernels.clahe(flat)
-    assert(flatEq.px.forall(v => math.abs(v - 120) <= 4),
-      s"flat region amplified: ${flatEq.px.min}..${flatEq.px.max}")
-    // deterministic
-    assert(ImageKernels.clahe(img).px.sameElements(eq.px))
-  }
-
-  test("deskew recovers a planted 3-degree skew; straight pages are untouched") {
-    val page = ImageKernels.syntheticPage(5, 1, 96, 96)
-    val skewed = ImageKernels.rotate(page, 3.0)
-    val est = ImageKernels.estimateSkewAngle(skewed)
-    assert(math.abs(est - 3.0) <= 0.5, s"estimated $est for a +3.0 skew")
-    // the corrected page's sheared-at-0 profile is sharp again (the
-    // deskew success criterion of the estimator's own metric)
-    val fixed = ImageKernels.deskew(skewed)
-    def profile0(g: Gray): Double =
-      ImageKernels.shearProfileScore(
-        ImageKernels.binarizeInv(g, ImageKernels.otsuThreshold(g)), 0.0)
-    assert(profile0(fixed) > profile0(skewed) * 2,
-      "deskew should restore horizontal text bands")
-    // sub-0.5-degree estimates are skipped: never churn a straight page
-    assert(ImageKernels.deskew(page).px.sameElements(page.px))
-  }
-
-  test("NLM denoise removes impulse noise, preserves edges and flat regions") {
-    val w = 48; val h = 48
-    val clean = Array.tabulate(w * h)(i => if (i % w < w / 2) 80 else 180)
-    // moderate +-25 perturbations on ~1/7 of pixels — the grain NLM at
-    // strength 10 is built for (extreme impulses are despeckle's job)
-    val noisy = clean.clone()
-    noisy.indices.foreach { i =>
-      if ((i * 31) % 7 == 0) noisy(i) = clean(i) + (if (i % 2 == 0) 25 else -25)
-    }
-    def mse(a: Array[Int], b: Array[Int]): Double =
-      a.indices.map(i => { val d = a(i) - b(i); d.toDouble * d }).sum / a.length
-    val den = ImageKernels.nlMeansDenoise(Gray(w, h, noisy))
-    assert(mse(den.px, clean) < mse(noisy, clean) * 0.5,
-      s"noise not reduced: ${mse(den.px, clean)} vs ${mse(noisy, clean)}")
-    // the step edge survives (NLM's point over a box blur)
-    val mid = h / 2 * w
-    assert(den.px(mid + w / 2 - 3) < 110 && den.px(mid + w / 2 + 2) > 150)
-    // flat input passes through identically
-    val flat = ImageKernels.nlMeansDenoise(Gray(16, 16, Array.fill(256)(100)))
-    assert(flat.px.forall(_ == 100))
-  }
 
   test("PNG encode/decode round-trips pixels exactly through javax.imageio") {
     val page = ImageKernels.syntheticPage(17L, 3L)
@@ -147,37 +33,6 @@ class ImageKernelsSpec extends AnyFunSuite {
     val qp = ImageKernels.qualityOf(ImageKernels.syntheticPage(5L, 9L))
     assert(qp.lapVar > 100.0 && !qp.lowContrast && !qp.isDark)
     assert(qp.qualityScore > 50.0 && qp.qualityScore <= 100.0)
-  }
-
-  test("enhance runs the full default plan on real decoded PNG pixels") {
-    // decode -> enhance must behave identically to enhance on the source
-    // grid (decode is lossless), pinning the whole x29-side pipeline
-    val page = ImageKernels.syntheticPage(41L, 2L, 32, 32)
-    val decoded = ImageKernels.decodePng(ImageKernels.encodePng(page))
-    val direct = ImageKernels.enhance(page, "deskew+otsu+open+despeckle")
-    val viaPng = ImageKernels.enhance(decoded, "deskew+otsu+open+despeckle")
-    assert(viaPng.px.sameElements(direct.px))
-    // and the decoded default-path CLAHE output stays a valid gray image
-    val clahe = ImageKernels.enhance(decoded, "clahe")
-    assert(clahe.px.forall(v => v >= 0 && v <= 255))
-  }
-
-  test("enhance executes the x05 fax plan deterministically") {
-    val page = ImageKernels.syntheticPage(7, 2)
-    val out = ImageKernels.enhance(page, "deskew+otsu+open+despeckle")
-    assert(out.px.forall(v => v == 0 || v == 255), "fax plan output is binary")
-    // lower-half speckles are gone; some glyph band content survives
-    val w = out.width
-    val lowerBlack = (out.height / 2 until out.height)
-      .flatMap(y => (0 until w).map(x => out(y, x))).count(_ == 0)
-    assert(lowerBlack == 0, "despeckle must clear isolated lower-half speckles")
-    val upperBlack = (0 until out.height / 2)
-      .flatMap(y => (0 until w).map(x => out(y, x))).count(_ == 0)
-    assert(upperBlack > 100, "glyph bands survive the chain")
-    // determinism: same ref-derived page -> byte-identical output
-    val again = ImageKernels.enhance(ImageKernels.syntheticPage(7, 2),
-      "deskew+otsu+open+despeckle")
-    assert(out.px.sameElements(again.px))
   }
 
   test("2x2 box downsample: hand-computed 4x4 case, exact mean preservation on pages") {

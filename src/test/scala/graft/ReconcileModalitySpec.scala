@@ -39,19 +39,6 @@ class ReconcileModalitySpec extends AnyFunSuite {
     assert(Reconcile.similarity("100", "120") == 0.50)         // rel < 0.25
     assert(Reconcile.similarity("$1,234.56", "1234.56") == 1.0) // currency-normalized
     assert(Reconcile.similarity("(500)", "-500") == 1.0)
-    assert(Reconcile.comparisonResult(0.99) == "exact_match")
-    assert(Reconcile.comparisonResult(0.90) == "fuzzy_match")
-    assert(Reconcile.comparisonResult(0.60) == "partial_match")
-    assert(Reconcile.comparisonResult(0.10) == "mismatch")
-  }
-
-  test("merge strategies (dual_pass.py:482-531)") {
-    assert(Reconcile.mergeValues("prefer_pass2", "a", "b", 0.9, 0.1, "fuzzy_match").contains("b"))
-    assert(Reconcile.mergeValues("prefer_longer", "long value", "x", 0.1, 0.9, "fuzzy_match").contains("long value"))
-    assert(Reconcile.mergeValues("higher_confidence", "a", "b", 0.4, 0.8, "mismatch").contains("b"))
-    assert(Reconcile.mergeValues("require_agreement", "a", "b", 0.9, 0.9, "mismatch").isEmpty)
-    assert(Reconcile.mergeValues("require_agreement", "a", "b", 0.9, 0.9, "fuzzy_match").contains("a"))
-    assert(Reconcile.mergeValues("prefer_pass2", "a", "a", 0.9, 0.9, "exact_match").contains("a"))
   }
 
   test("tiebreaker ladder (test_reconciler.py tiers)") {
@@ -109,17 +96,5 @@ class ReconcileModalitySpec extends AnyFunSuite {
       Some(Analysis(hasHandwriting = true, layoutType = "form")), fax)
     assert(all == all.sorted && all.contains(Printed) && all.contains(Fax)
       && all.contains(Form) && all.contains(Handwritten))
-  }
-
-  test("apply_overrides semantics") {
-    import Modality._
-    val derived = Seq(Printed, Table)
-    assert(applyOverrides(derived, None) == derived)
-    assert(applyOverrides(derived, Some(Nil)) == derived)
-    val o = applyOverrides(derived, Some(Seq(Fax)))
-    assert(o.contains(Fax) && o.contains(Printed) && !o.contains(Table))
-    assert(applyOverrides(Seq(Printed), Some(Seq("not-a-mode", "also-fake"))) == Seq(Printed))
-    val partial = applyOverrides(Seq(Printed), Some(Seq(Handwritten, "garbage", Fax)))
-    assert(partial.contains(Handwritten) && partial.contains(Fax))
   }
 }
