@@ -80,6 +80,60 @@ object Dates {
   def normalizeDate(s: String): Option[String] =
     parseDate(s).map(_.format(DateTimeFormatter.ISO_LOCAL_DATE))
 
+  def isValidDate(s: String): Boolean = parseDate(s).isDefined
+
+  /** Signed day difference d2 - d1; None if either unparseable. */
+  def dateDifferenceDays(d1: String, d2: String): Option[Long] =
+    for (a <- parseDate(d1); b <- parseDate(d2))
+      yield java.time.temporal.ChronoUnit.DAYS.between(a, b)
+
+  /** True if the parsed dates are non-strictly ascending. */
+  def datesInOrder(ds: Seq[String]): Boolean = {
+    val parsed = ds.flatMap(parseDate)
+    if (parsed.length != ds.length) return false
+    parsed.sliding(2).forall {
+      case Seq(a, b) => !a.isAfter(b)
+      case _ => true
+    }
+  }
+
+  /** Date plausibility window used by the hallucination detector
+    * (pattern_detector.py:221-223): year >= 1900 and not more than
+    * 2 years past `asOf`.
+    */
+  def isPlausibleDate(s: String, asOf: LocalDate): Boolean =
+    parseDate(s).exists { d =>
+      d.getYear >= 1900 && !d.isAfter(asOf.plusDays(365L * 2))
+    }
+
+  /** Age in whole years as of a date, adjusting for a birthday not yet
+    * reached (date_utils.py:214-250). None when the birth date is
+    * unparseable.
+    */
+  def calculateAge(birthDate: String, asOf: LocalDate): Option[Int] =
+    parseDate(birthDate).map { b =>
+      val raw = asOf.getYear - b.getYear
+      val beforeBirthday = asOf.getMonthValue < b.getMonthValue ||
+        (asOf.getMonthValue == b.getMonthValue && asOf.getDayOfMonth < b.getDayOfMonth)
+      if (beforeBirthday) raw - 1 else raw
+    }
+
+  /** Parse "start <sep> end" date ranges; the separator ladder and the
+    * single-date fallback mirror date_utils.py:118-157.
+    */
+  def parseDateRange(s: String): (Option[LocalDate], Option[LocalDate]) = {
+    if (s == null || s.isEmpty) return (None, None)
+    val seps = Seq(" - ", "-", " to ", " through ")
+    seps.find(s.contains) match {
+      case Some(sep) =>
+        val Array(a, b) = s.split(java.util.regex.Pattern.quote(sep), 2)
+        (parseDate(a.trim), parseDate(b.trim))
+      case None =>
+        val d = parseDate(s)
+        (d, d)
+    }
+  }
+
   /** PDF `D:YYYYMMDDHHmmSS` date prefix parse
     * (reference pdf_processor.py:816-838): take the date part only.
     */

@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.text.Normalizer
+
 /** String scalar library, semantics pinned to the reference's
   * src/utils/string_utils.py (behavior reproduced from public repo study;
   * implementation is original Scala).
@@ -63,6 +65,44 @@ object Strings {
     count
   }
 
+  private val namePrefixes =
+    Seq("DR.", "DR", "MR.", "MR", "MRS.", "MRS", "MS.", "MS", "MISS")
+  private val nameSuffixes = Seq(
+    "MD", "M.D.", "DO", "D.O.", "NP", "N.P.", "PA", "P.A.", "RN", "R.N.",
+    "PHD", "PH.D.", "JR", "JR.", "SR", "SR.", "II", "III", "IV")
+
+  /** Normalize a person name to "LAST, FIRST MI".
+    * Reference: string_utils.py:36-109. Single-pass prefix strip, suffix strip
+    * (both " SUF" and ", SUF" endings), then FIRST LAST -> LAST, FIRST.
+    */
+  def normalizeName(name: String): String = {
+    if (name == null || name.isEmpty) return ""
+    var n = normalizeWhitespace(name.toUpperCase)
+    namePrefixes.foreach { p => if (n.startsWith(p + " ")) n = n.substring(p.length + 1) }
+    nameSuffixes.foreach { s =>
+      if (n.endsWith(" " + s)) n = n.substring(0, n.length - s.length - 1)
+      else if (n.endsWith(", " + s)) n = n.substring(0, n.length - s.length - 2)
+    }
+    n = n.trim
+    if (n.contains(", ")) return n
+    val parts = n.split(" ").filter(_.nonEmpty)
+    if (parts.length >= 2) s"${parts.last}, ${parts.dropRight(1).mkString(" ")}"
+    else n
+  }
+
+  private val numberRe = "-?\\d+(?:\\.\\d+)?".r
+  private val intRe = "-?\\d+".r
+
+  /** All integer/decimal literals in order. Reference: string_utils.py:112-131. */
+  def extractNumbers(text: String): Seq[String] =
+    if (text == null || text.isEmpty) Seq.empty
+    else numberRe.findAllIn(text).toSeq
+
+  /** All integers in order. Reference: string_utils.py:134-148. */
+  def extractIntegers(text: String): Seq[Long] =
+    if (text == null || text.isEmpty) Seq.empty
+    else intRe.findAllIn(text).map(_.toLong).toSeq
+
   /** Parse a currency string to a 2+-scale decimal; None on failure.
     * Handles `$1,234.56`, parenthesized negatives `(500.00)`, trailing `-` or
     * `CR` negatives, and `$£€¥` symbols. Reference: string_utils.py:151-202.
@@ -85,6 +125,25 @@ object Strings {
       val d = BigDecimal(v)
       Some(if (neg) -d else d)
     } catch { case _: NumberFormatException => None }
+  }
+
+  /** Truncate to max length at a word boundary with a suffix.
+    * Reference: string_utils.py:205-244.
+    */
+  def truncateText(
+      text: String,
+      maxLength: Int,
+      suffix: String = "...",
+      wordBoundary: Boolean = true): String = {
+    if (text == null || text.length <= maxLength) return if (text == null) null else text
+    val truncLen = maxLength - suffix.length
+    if (truncLen <= 0) return suffix.take(maxLength)
+    var t = text.take(truncLen)
+    if (wordBoundary) {
+      val lastSpace = t.lastIndexOf(' ')
+      if (lastSpace > 0) t = t.take(lastSpace)
+    }
+    t.replaceAll("\\s+$", "") + suffix
   }
 
   /** Classic Levenshtein DP. Reference: string_utils.py:246-277. In Spark
@@ -124,6 +183,21 @@ object Strings {
     1.0 - levenshtein(a, b).toDouble / maxLen
   }
 
+  /** Fuzzy match at a threshold. Reference: string_utils.py:280-321. */
+  def fuzzyMatch(s1: String, s2: String, threshold: Double = 0.8): Boolean = {
+    val e1 = s1 == null || s1.isEmpty
+    val e2 = s2 == null || s2.isEmpty
+    if (e1 || e2) return e1 == e2
+    similarityRatio(s1, s2) >= threshold
+  }
+
+  /** NFD-normalize and drop combining marks. Reference: string_utils.py:354-378. */
+  def removeDiacritics(text: String): String = {
+    if (text == null || text.isEmpty) return ""
+    val norm = Normalizer.normalize(text, Normalizer.Form.NFD)
+    norm.filter(c => Character.getType(c) != Character.NON_SPACING_MARK)
+  }
+
   /** Strip control chars, normalize smart quotes, drop zero-width chars.
     * Reference: string_utils.py:381-416.
     */
@@ -158,4 +232,98 @@ object Strings {
     if (c == '“' || c == '”') '"'
     else if (c == '‘' || c == '’') '\''
     else c
+
+  /** Extract text between two markers. Reference: string_utils.py:419-462. */
+  def extractBetween(text: String, start: String, end: String): Option[String] = {
+    if (text == null || start == null || end == null || start.isEmpty || end.isEmpty)
+      return None
+    val si = text.indexOf(start)
+    if (si < 0) return None
+    val from = si + start.length
+    val ei = text.indexOf(end, from)
+    if (ei < 0) return None
+    Some(text.substring(from, ei))
+  }
+
+  /** Pad/truncate to a fixed length (string_utils.py:463-490). */
+  def padString(text: String, length: Int, padChar: Char = ' ',
+      align: String = "left"): String = {
+    val t = if (text == null) "" else text
+    if (t.length >= length) return t.take(length)
+    val deficit = length - t.length
+    align match {
+      case "left" => t + padChar.toString * deficit
+      case "right" => padChar.toString * deficit + t
+      case _ => // center: python str.center puts the extra char on the right
+        val l = deficit / 2
+        padChar.toString * l + t + padChar.toString * (deficit - l)
+    }
+  }
+
+  /** Regex split with trimmed non-empty segments; optionally keep the
+    * delimiter via lookahead (string_utils.py:492-517).
+    */
+  def splitOnPattern(text: String, pattern: String,
+      keepDelimiter: Boolean = false): Seq[String] = {
+    if (text == null || text.isEmpty) return Seq.empty
+    val parts =
+      if (keepDelimiter) text.split(s"(?=$pattern)", -1)
+      else text.split(pattern, -1)
+    parts.toIndexedSeq.map(_.trim).filter(_.nonEmpty)
+  }
+
+  /** Null-safe stringify (string_utils.py:536-553). */
+  def safeString(value: Any, default: String = ""): String =
+    if (value == null) default
+    else try String.valueOf(value) catch { case _: Exception => default }
+
+  /** Boolean field coercion (multi_record.py:284-349 ladder's boolean arm):
+    * {true, yes, y, 1, checked, x, on} -> true; {false, no, n, 0, unchecked,
+    * off, ""} -> false; anything else unparseable (None).
+    */
+  def coerceBoolean(value: String): Option[Boolean] = {
+    if (value == null) return None
+    value.trim.toLowerCase match {
+      case "true" | "yes" | "y" | "1" | "checked" | "x" | "on" => Some(true)
+      case "false" | "no" | "n" | "0" | "unchecked" | "off" | "" => Some(false)
+      case _ => None
+    }
+  }
+
+  /** PHI masking patterns (hash_utils.py:151-176): (regex, replacement,
+    * type), applied as a sequential replace cascade.
+    */
+  val phiPatterns: Seq[(java.util.regex.Pattern, String, String)] = Seq(
+    ("\\b\\d{3}[-\\s]?\\d{2}[-\\s]?\\d{4}\\b", "***-**-****", "SSN"),
+    ("\\b\\(?\\d{3}\\)?[-.\\s]?\\d{3}[-.\\s]?\\d{4}\\b", "(***) ***-****", "PHONE"),
+    ("\\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Z|a-z]{2,}\\b", "****@****.***", "EMAIL"),
+    ("\\b(?:\\d{1,2}[-/]\\d{1,2}[-/]\\d{2,4}|\\d{4}[-/]\\d{1,2}[-/]\\d{1,2})\\b",
+      "**/**/****", "DATE"),
+    ("\\b1[A-Z0-9]{10}\\b", "***********", "MEDICARE_ID"),
+    ("\\bMRN[:\\s]*[A-Z0-9]{6,12}\\b", "MRN: ********", "MRN"),
+    ("\\b[12]\\d{9}\\b", "**********", "NPI"),
+    ("\\b(?:\\d{4}[-\\s]?){3,4}\\d{1,4}\\b", "****-****-****-****", "CREDIT_CARD"),
+    ("\\b(?:Account|Acct)[:\\s#]*[A-Z0-9]{6,15}\\b", "Account: ********", "ACCOUNT"),
+    ("\\b(?:Member|Subscriber)[:\\s#]*[A-Z0-9]{6,15}\\b", "Member: ********", "MEMBER_ID"))
+    .map { case (p, r, t) =>
+      (java.util.regex.Pattern.compile(p, java.util.regex.Pattern.CASE_INSENSITIVE), r, t)
+    }
+
+  /** Mask PHI in text; returns (masked text, detected (type, position)
+    * pairs). Sequential-replace semantics of hash_utils.py:179-222:
+    * detections are found against the ORIGINAL text per pattern, masking is
+    * applied cumulatively.
+    */
+  def maskSensitiveData(text: String): (String, Seq[(String, Int)]) = {
+    if (text == null) return ("", Seq.empty)
+    var masked = text
+    val detected = Seq.newBuilder[(String, Int)]
+    phiPatterns.foreach { case (re, repl, kind) =>
+      val m = re.matcher(text)
+      while (m.find()) detected += ((kind, m.start()))
+      masked = re.matcher(masked).replaceAll(
+        java.util.regex.Matcher.quoteReplacement(repl))
+    }
+    (masked, detected.result())
+  }
 }

@@ -58,9 +58,34 @@ class DatesSpec extends AnyFunSuite {
 
   test("helpers") {
     assert(Dates.normalizeDate("01/15/2024").contains("2024-01-15"))
-    assert(Dates.parseDate("2024-02-29").isDefined)      // leap
-    assert(Dates.parseDate("2023-02-29").isEmpty)
+    assert(Dates.isValidDate("2024-02-29"))      // leap
+    assert(!Dates.isValidDate("2023-02-29"))
+    assert(Dates.dateDifferenceDays("01/01/2024", "01/31/2024").contains(30L))
+    assert(Dates.datesInOrder(Seq("01/01/2024", "01/02/2024", "01/02/2024")))
+    assert(!Dates.datesInOrder(Seq("01/02/2024", "01/01/2024")))
+    val asOf = LocalDate.of(2026, 8, 16)
+    assert(Dates.isPlausibleDate("01/01/2024", asOf))
+    assert(!Dates.isPlausibleDate("01/01/1899", asOf))
+    assert(!Dates.isPlausibleDate("01/01/2031", asOf))
     assert(Dates.parsePdfDate("D:20240115120000").contains(LocalDate.of(2024, 1, 15)))
     assert(Dates.parsePdfDate("garbage").isEmpty)
+  }
+
+  test("calculate_age adjusts for unreached birthdays (date_utils.py:214-250)") {
+    val asOf = LocalDate.of(2024, 6, 15)
+    assert(Dates.calculateAge("01/15/1990", asOf).contains(34))
+    assert(Dates.calculateAge("12/15/1990", asOf).contains(33)) // birthday later in year
+    assert(Dates.calculateAge("06/15/1990", asOf).contains(34)) // birthday today
+    assert(Dates.calculateAge("not a date", asOf).isEmpty)
+  }
+
+  test("parse_date_range: separators + single-date fallback (date_utils.py:118-157)") {
+    assert(Dates.parseDateRange("01/01/2024 - 01/31/2024") ==
+      (Some(LocalDate.of(2024, 1, 1)), Some(LocalDate.of(2024, 1, 31))))
+    assert(Dates.parseDateRange("01/01/2024 to 01/31/2024") ==
+      (Some(LocalDate.of(2024, 1, 1)), Some(LocalDate.of(2024, 1, 31))))
+    val single = Dates.parseDateRange("01/15/2024")
+    assert(single._1 == single._2 && single._1.contains(LocalDate.of(2024, 1, 15)))
+    assert(Dates.parseDateRange("") == (None, None))
   }
 }

@@ -1,4 +1,5 @@
 package graft
+// (PHI-masking / padding / coercion additions are covered at the bottom)
 
 import graft.functions.Strings
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,6 +15,26 @@ class StringsSpec extends AnyFunSuite {
     assert(Strings.normalizeWhitespace("hello world") == "hello world")
   }
 
+  test("normalize_name goldens") {
+    assert(Strings.normalizeName("John Smith") == "SMITH, JOHN")
+    assert(Strings.normalizeName("Smith, John A") == "SMITH, JOHN A")
+    assert(Strings.normalizeName("Dr. John Smith") == "SMITH, JOHN")
+    assert(Strings.normalizeName("John Smith MD") == "SMITH, JOHN")
+    assert(Strings.normalizeName("Smith") == "SMITH")
+    assert(Strings.normalizeName("") == "")
+    assert(Strings.normalizeName("John A Smith") == "SMITH, JOHN A")
+    assert(Strings.normalizeName("DR. JOHN SMITH MD") == "SMITH, JOHN")
+  }
+
+  test("extract_numbers goldens") {
+    assert(Strings.extractNumbers("Total $150.00 for 3 items") == Seq("150.00", "3"))
+    assert(Strings.extractNumbers("Balance: -42.50") == Seq("-42.50"))
+    assert(Strings.extractNumbers("hello world").isEmpty)
+    assert(Strings.extractNumbers("").isEmpty)
+    assert(Strings.extractIntegers("Page 1 of 10") == Seq(1L, 10L))
+    assert(Strings.extractIntegers("offset -5") == Seq(-5L))
+  }
+
   test("clean_currency goldens") {
     assert(Strings.cleanCurrency("$1,234.56").contains(BigDecimal("1234.56")))
     assert(Strings.cleanCurrency("($500.00)").contains(BigDecimal("-500.00")))
@@ -26,13 +47,26 @@ class StringsSpec extends AnyFunSuite {
     assert(Strings.cleanCurrency("abc").isEmpty)
   }
 
+  test("truncate_text goldens") {
+    assert(Strings.truncateText("Hi", 10) == "Hi")
+    assert(Strings.truncateText("Hello World Foo Bar", 10).endsWith("..."))
+    assert(Strings.truncateText("Hello World", 8) == "Hello...")
+  }
+
   test("levenshtein and similarity") {
     assert(Strings.levenshtein("kitten", "sitting") == 3)
     assert(Strings.levenshtein("", "abc") == 3)
     assert(Strings.levenshtein("abc", "abc") == 0)
+    assert(Strings.fuzzyMatch("Smith", "Smyth"))
+    assert(!Strings.fuzzyMatch("John", "Jane"))
     assert(Strings.similarityRatio("abc", "abc") == 1.0)
     assert(Strings.similarityRatio("", "") == 1.0)
     assert(Strings.similarityRatio("a", "") == 0.0)
+  }
+
+  test("remove_diacritics golden") {
+    assert(Strings.removeDiacritics("José García") == "Jose Garcia")
+    assert(Strings.removeDiacritics("") == "")
   }
 
   test("clean_ocr_text: control chars, smart quotes, zero-width") {
@@ -40,5 +74,54 @@ class StringsSpec extends AnyFunSuite {
     assert(Strings.cleanOcrText("“quoted” ‘x’") == "\"quoted\" 'x'")
     assert(Strings.cleanOcrText("a\u200bb\ufeffc") == "abc")
     assert(Strings.cleanOcrText("line1\nline2") == "line1\nline2") // \n kept
+  }
+
+  test("extract_between golden") {
+    assert(Strings.extractBetween("Name: John Smith, Age:", "Name: ", ", Age:")
+      .contains("John Smith"))
+    assert(Strings.extractBetween("no markers", "a:", "b:").isEmpty)
+  }
+
+  test("pad_string alignment + truncation (string_utils.py:463-490)") {
+    assert(Strings.padString("ab", 5) == "ab   ")
+    assert(Strings.padString("ab", 5, '0', "right") == "000ab")
+    assert(Strings.padString("ab", 5, '-', "center") == "-ab--")
+    assert(Strings.padString("abcdef", 3) == "abc") // truncates over-length
+  }
+
+  test("split_on_pattern trims, drops blanks, optional delimiter keep") {
+    assert(Strings.splitOnPattern("a, b,, c", ",") == Seq("a", "b", "c"))
+    assert(Strings.splitOnPattern("", ",").isEmpty)
+    assert(Strings.splitOnPattern("x1y2z", "\\d", keepDelimiter = true) ==
+      Seq("x", "1y", "2z"))
+  }
+
+  test("safe_string + boolean coercion (multi_record ladder)") {
+    assert(Strings.safeString(null, "d") == "d")
+    assert(Strings.safeString(42) == "42")
+    assert(Strings.coerceBoolean("Yes").contains(true))
+    assert(Strings.coerceBoolean(" X ").contains(true))
+    assert(Strings.coerceBoolean("checked").contains(true))
+    assert(Strings.coerceBoolean("no").contains(false))
+    assert(Strings.coerceBoolean("").contains(false))
+    assert(Strings.coerceBoolean("maybe").isEmpty)
+    assert(Strings.coerceBoolean(null).isEmpty)
+  }
+
+  test("mask_sensitive_data masks PHI patterns (hash_utils.py:151-222)") {
+    val (m1, d1) = Strings.maskSensitiveData("SSN: 123-45-6789")
+    assert(m1 == "SSN: ***-**-****")
+    assert(d1.exists(_._1 == "SSN"))
+    // \b\(? cannot start at "(" (no word boundary before it) — the opening
+    // paren survives, exactly as the reference's Python regex behaves
+    val (m2, _) = Strings.maskSensitiveData("call (555) 123-4567 now")
+    assert(m2 == "call ((***) ***-**** now")
+    assert(Strings.maskSensitiveData("call 555-123-4567 now")._1 ==
+      "call (***) ***-**** now")
+    val (m3, d3) = Strings.maskSensitiveData("mail a.b@x.org re 2024-01-15")
+    assert(m3.contains("****@****.***") && m3.contains("**/**/****"))
+    assert(d3.map(_._1).toSet == Set("EMAIL", "DATE"))
+    // clean text passes through untouched
+    assert(Strings.maskSensitiveData("plain words only")._1 == "plain words only")
   }
 }
